@@ -40,7 +40,8 @@ def start_spark(work: str, cores: int, traced: bool):
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     conf = {
         "spark.ui.showConsoleProgress": "false",
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
+        # no /tmp/hsperfdata_<user> file: the JVM writes nothing outside `work`
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
     }
     if traced:
