@@ -45,6 +45,14 @@ def source_hash(extra: Path, params: str) -> str:
     return h.hexdigest()[:16]
 
 
+def cpu_steal() -> tuple[int, int]:
+    """(steal, all) CPU jiffies since boot, from /proc/stat. Timings on a
+    virtual machine drift with the share the hypervisor steals."""
+    with open("/proc/stat") as f:
+        v = [int(x) for x in f.readline().split()[1:]]
+    return v[7], sum(v)
+
+
 def dir_bytes(path) -> int:
     return sum(f.stat().st_size for f in Path(path).rglob("*") if f.is_file())
 

@@ -3,7 +3,9 @@ arrival schedules. Everything is a pure function of the seed and the sizes,
 drawn with numpy and written before any timing starts.
 
 Corpus shape (a code corpus, like the engine's own fixtures):
-- a pronounceable vocabulary drawn with Zipf(s=1.1) term frequencies;
+- a pronounceable vocabulary drawn with Zipf(s=1.1) term frequencies (an
+  exponent near the ~1 of Zipf's law for word frequencies in text, chosen,
+  not fitted to a corpus);
 - a title line of three terms, then the body;
 - `ref://repo/path-stem` link tokens with preferential attachment to low
   doc indices (the PageRank graph);
@@ -180,15 +182,16 @@ def one_edit(rng, w: str) -> str:
     return w[:p] + str(pool[int(rng.integers(0, len(pool)))]) + w[p + 1:]
 
 
-# class shares of the query streams: the term classes rank through
+# Query classes exist for layer coverage: the term classes rank through
 # operators.wand only; the rich ones add phrase, fuzzy expansion, snippets
-# and exact repeats (the result cache)
-TERM_MIX = {"or_head": 0.3, "or_mid": 0.25, "and": 0.2, "paged": 0.1, "tail1": 0.15}
-SERVE_MIX = {"or_head": 0.15, "or_mid": 0.15, "and": 0.1, "paged": 0.05, "tail1": 0.1,
-             "phrase": 0.15, "fuzzy": 0.1, "highlight": 0.12, "repeat": 0.08}
-ALL_CLASSES = list(SERVE_MIX)
+# and exact repeats (the result cache). No query log of this engine exists,
+# so the shares are not taken from traffic: every class of a stream gets an
+# equal share. Term counts of 1-4 per query bracket the ~2.35-term mean of a
+# published web query log (Silverstein et al., SIGIR Forum 33(1), 1999).
+TERM_CLASSES = ["or_head", "or_mid", "and", "paged", "tail1"]
+ALL_CLASSES = [*TERM_CLASSES, "phrase", "fuzzy", "highlight", "repeat"]
 # classes whose ranking runs through SegmentSearcher.search_local
-WAND_CLASSES = [*TERM_MIX, "fuzzy", "highlight"]
+WAND_CLASSES = [*TERM_CLASSES, "fuzzy", "highlight"]
 
 
 def term_query(rng, corpus: Corpus, cls: str) -> dict:
@@ -233,22 +236,21 @@ def rich_query(rng, corpus: Corpus, cls: str) -> dict:
     raise ValueError(cls)
 
 
-def query_stream(rng, corpus: Corpus, mix: dict, n: int) -> list[tuple[str, dict]]:
-    """n (class, params) pairs drawn with the class shares of `mix`. Only
-    the `repeat` class repeats an earlier query; every other query is
-    distinct."""
-    names = list(mix)
-    draws = rng.choice(len(names), n, p=np.array([mix[c] for c in names]))
+def query_stream(rng, corpus: Corpus, classes: list[str], n: int) -> list[tuple[str, dict]]:
+    """n (class, params) pairs in a seeded order, each of `classes` an equal
+    share (counts differ by at most one), so a seed changes the queries but
+    not the class counts. Only the `repeat` class repeats an earlier query;
+    every other query is distinct."""
     out: list[tuple[str, dict]] = []
     seen: set[tuple] = set()
-    for d in draws:
-        cls = names[d]
+    for d in rng.permutation(np.arange(n) % len(classes)):
+        cls = classes[d]
         if cls == "repeat":
             if out:
                 out.append(("repeat", out[int(rng.integers(0, len(out)))][1]))
                 continue
             cls = "highlight"
-        make = term_query if cls in TERM_MIX else rich_query
+        make = term_query if cls in TERM_CLASSES else rich_query
         while True:
             params = make(rng, corpus, cls)
             key = tuple(sorted(params.items()))

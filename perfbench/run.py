@@ -20,7 +20,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from common import PACKAGE, ROOT, SERVE_SCRIPT, WORK  # noqa: E402
+from common import PACKAGE, ROOT, SERVE_SCRIPT, WORK, cpu_steal, log  # noqa: E402
 
 WORKLOADS = ("serve", "index_pipeline")
 
@@ -67,7 +67,7 @@ def per_layer_units() -> dict[str, str]:
     u.update({"spark.pagerank.jobs_per_iter": "count", "spark.dist_term.jobs_per_query": "count",
               "build_docs_per_s": "1/s", "add_docs_s": "s", "pagerank_s": "s", "dedup_s": "s",
               "store_bytes_per_input_byte": "ratio", "dist_term_p50_ms": "ms",
-              "dist_phrase_p50_ms": "ms"})
+              "dist_phrase_p50_ms": "ms", "dist_phrase.deleted_hits": "count"})
     return u
 
 
@@ -95,6 +95,7 @@ def main() -> int:
     os.environ["TMPDIR"] = str(WORK / "tmp")
     sys.path.insert(0, str(ROOT))
     traced = bool(args.trace)
+    steal0, all0 = cpu_steal()
     if args.workload == "index_pipeline":
         import pipeline
 
@@ -103,6 +104,8 @@ def main() -> int:
         import serving
 
         res = serving.run(args.seed, args.seconds, traced)
+    steal1, all1 = cpu_steal()
+    log(f"CPU steal during the run: {100 * (steal1 - steal0) / max(1, all1 - all0):.1f}%")
     if traced:
         units = per_layer_units()
         layers = res["layers"]

@@ -9,8 +9,8 @@ parameters. `--seed` draws the query streams and the arrival schedules.
 
 An untraced run starts the server three times; set-up is the median
 start (spawn until /health answers).
-1. Closed loop, one client: UNLOADED distinct queries, the ladder's own
-   first (see `closed_loop_set`), sent one at a time. Their latencies are
+1. Closed loop, one client: UNLOADED queries, the ladder's own first (see
+   `closed_loop_set`), sent one at a time. Their latencies are
    p50_ms / p95_ms (the zero-load end of the ladder) and their responses are
    the unloaded reference.
    rss_peak_mb is this server's VmHWM afterwards. It first gets untimed
@@ -53,7 +53,7 @@ N_UNITS = 4
 # run; the SLO is p95 <= LIMIT_MS with no growing backlog
 RATES = [5, 10, 20, 30]
 LIMIT_MS = 500.0
-UNLOADED = 200  # closed-loop queries, the ladder's own first
+UNLOADED = 216  # closed-loop queries, 24 per class, the ladder's own first
 MAX_LAG_MS = 20.0
 
 
@@ -150,7 +150,7 @@ def schedule(rng, base, seconds: float):
         times.append(t)
         rungs += [i] * len(t)
     due = np.concatenate(times)
-    stream = gen.query_stream(rng, base, gen.SERVE_MIX, len(due) + 2 * UNLOADED)
+    stream = gen.query_stream(rng, base, gen.ALL_CLASSES, len(due) + 2 * UNLOADED)
     plan = [(Shot(float(t), rung, url_of(p, rid)), cls, p)
             for rid, (t, rung, (cls, p)) in enumerate(zip(due, rungs, stream))]
     return plan, stream[len(due):]
@@ -166,23 +166,23 @@ def warmup(rng, base) -> list[str]:
         w = next(x for x in words if x[0] == c)
         urls.append(url_of({"q": gen.one_edit(rng, w), "fuzzy": "1", "prefix": "1"}))
     rest = [c for c in gen.ALL_CLASSES if c not in ("fuzzy", "repeat")]
-    mix = dict.fromkeys(rest, 1.0 / len(rest))
-    urls += [url_of(p) for _, p in gen.query_stream(rng, base, mix, 2 * len(rest))]
+    urls += [url_of(p) for _, p in gen.query_stream(rng, base, rest, 2 * len(rest))]
     return urls
 
 
 def closed_loop_set(plan, extra) -> tuple[list, dict]:
-    """The closed-loop pass: UNLOADED distinct queries with a fixed count per
-    class (SERVE_MIX shares without `repeat`), the ladder's own queries
-    first, so its p95 never depends on how many slow-class queries a seed
-    happened to draw. Returns ([(rid, params)], {rid: class})."""
-    shares = {c: w for c, w in gen.SERVE_MIX.items() if c != "repeat"}
-    quota = {c: round(UNLOADED * w / sum(shares.values())) for c, w in shares.items()}
+    """The closed-loop pass: UNLOADED queries, an equal count per class, the
+    ladder's own queries first, so its p95 never depends on how many
+    slow-class queries a seed happened to draw. A `repeat` is taken only
+    once the query it repeats is in the pass, so each one is a result-cache
+    hit: the pass and the warm-up stay below SearchApp.RESULT_CACHE_CAP
+    (256). Returns ([(rid, params)], {rid: class})."""
+    quota = dict.fromkeys(gen.ALL_CLASSES, UNLOADED // len(gen.ALL_CLASSES))
     cands = [(rid, cls, p) for rid, (_, cls, p) in enumerate(plan)]
     cands += [(len(plan) + j, cls, p) for j, (cls, p) in enumerate(extra)]
     seen, picks, cls_of = set(), [], {}
     for rid, cls, p in cands:
-        if cls == "repeat" or url_of(p) in seen or not quota[cls]:
+        if not quota[cls] or (url_of(p) in seen) != (cls == "repeat"):
             continue
         seen.add(url_of(p))
         quota[cls] -= 1
@@ -192,17 +192,18 @@ def closed_loop_set(plan, extra) -> tuple[list, dict]:
     return picks, cls_of
 
 
-def closed_loop(server: Server, picks) -> tuple[dict, dict]:
+def closed_loop(server: Server, picks) -> tuple[dict, dict, int]:
     """Send `picks` [(rid, params)] one at a time: ({rid: latency ms, inf on
-    an HTTP error}, {url: response body of each successful request})."""
-    lat, ref = {}, {}
+    an HTTP error}, {url: first successful response body}, failed requests:
+    HTTP errors and repeats answered unlike the first time)."""
+    lat, ref, failed = {}, {}, 0
     for rid, p in picks:
         t = time.perf_counter()
         status, body = server.client.get(url_of(p, rid))
         lat[rid] = (time.perf_counter() - t) * 1e3 if status == 200 else float("inf")
-        if status == 200:
-            ref[url_of(p)] = body
-    return lat, ref
+        if status != 200 or ref.setdefault(url_of(p), body) != body:
+            failed += 1
+    return lat, ref, failed
 
 
 def ladder(server: Server, plan) -> dict:
@@ -266,15 +267,15 @@ def check(plan, ref: dict[str, bytes]) -> int:
 
 
 def closed_loop_run(store: str, warm: list[str], picks, spans: str | None = None) -> dict:
-    """A fresh server: warm-up, then the closed loop over `picks`: latencies
-    and responses (see closed_loop), server CPU ms per query, VmHWM and the
-    start time."""
+    """A fresh server: warm-up, then the closed loop over `picks`: latencies,
+    responses and failures (see closed_loop), server CPU ms per query, VmHWM
+    and the start time."""
     srv = Server(store, spans=spans)
     try:
         srv.warm(warm)
         cpu0 = srv.stats.cpu_s()
-        lat, ref = closed_loop(srv, picks)
-        return {"lat": lat, "ref": ref,
+        lat, ref, failed = closed_loop(srv, picks)
+        return {"lat": lat, "ref": ref, "failed": failed,
                 "cpu_ms_per_query": (srv.stats.cpu_s() - cpu0) * 1e3 / len(picks),
                 "hwm_mb": srv.stats.status()["VmHWM"] / 1024, "start_s": srv.start_s}
     finally:
@@ -307,7 +308,7 @@ def run(seed: int, seconds: float, traced: bool) -> dict:
     cl = closed_loop_run(store, warm, picks)
     lat, ref = cl["lat"], cl["ref"]
     starts = [cl["start_s"]]
-    failed_ref = len(picks) - len(ref)
+    failed_ref = cl["failed"]
     out = {"attempted": len(picks)}
     if not traced:
         res, start_s = _ladder_run(store, plan)
@@ -330,8 +331,8 @@ def run(seed: int, seconds: float, traced: bool) -> dict:
         loaded = _spans(path)
         rs = rung_stats(res["shots"])
         out["attempted"] += len(picks) + len(plan)
-        out["failed"] = (failed_ref + sum(tcl["ref"].get(u) != ref[u] for u in ref)
-                         + check(plan, ref))
+        out["failed"] = (failed_ref + tcl["failed"] + check(plan, ref)
+                         + sum(tcl["ref"].get(u, ref[u]) != ref[u] for u in ref))
         layers.update(admission_layers(loaded))
         layers.update(rs)
         layers.update({
@@ -369,7 +370,8 @@ def _self_ms(span, children) -> float:
 
 def serve_layers(cls_of: dict, client_ms: dict, spans_doc) -> dict:
     """Per-class layer times from the spans of a closed-loop pass; client_ms
-    maps each request id to its client-side latency."""
+    maps each request id to its client-side latency. Only spans of the
+    pass's requests count (warm-up requests carry no id)."""
     spans = spans_doc["spans"]
     by_parent = defaultdict(list)
     for s in spans:
@@ -379,8 +381,10 @@ def serve_layers(cls_of: dict, client_ms: dict, spans_doc) -> dict:
     gsm_ms, gsm_n, n_local = 0.0, 0, 0
     for s in spans:
         rid, sid, parent, name = s[0], s[1], s[2], s[3]
+        if rid not in cls_of:
+            continue
         ms = (s[5] - s[4]) * 1e3
-        cls = cls_of.get(rid, "none")
+        cls = cls_of[rid]
         if name == "serve.search" and parent is None:
             searches += 1
             kids = by_parent[sid]
