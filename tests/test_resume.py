@@ -100,7 +100,7 @@ def test_multiunit_and_wand_match_exact(spark, corpus, tmp_path_factory):
     )
     exact_or = ranked(idx.search_terms(terms, k=10, mode="or"))
     assert ranked(searcher.search_terms(terms, k=10, mode="or", algorithm="wand")) == exact_or
-    assert ranked(searcher.search_terms(terms, k=10, mode="or", algorithm="exact")) == exact_or
+    assert ranked(searcher.search_terms(terms, k=10, mode="or", algorithm="taat")) == exact_or
 
 
 def test_resume_after_corpus_change_rebuilds_all(spark, corpus, tmp_path_factory):
@@ -762,7 +762,7 @@ def test_decode_cache_rank_parity_and_eviction(spark, corpus, tmp_path_factory):
     local = SegmentSearcher.open_local(out)
 
     cases = [(["t0", "t1"], "or", "auto"), (["t0", "t1"], "and", "auto"),
-             (["t0", "t1", "t2"], "or", "wand"), (["module", "t3"], "or", "exact"),
+             (["t0", "t1", "t2"], "or", "wand"), (["module", "t3"], "or", "taat"),
              (["t5", "zzznope"], "or", "auto"), (["t40"], "or", "auto")]
     want = {}
     for terms, mode, algo in cases:

@@ -111,8 +111,8 @@ def _exact(idx, terms, mode, k=10):
 
 
 def _wand(searcher, terms, mode, k=10, algorithm="wand"):
-    """Default algorithm='wand' so the pruning loop itself is what's tested;
-    the auto/exact path is asserted separately."""
+    """Default algorithm='wand' so the block-max pruning itself is what's
+    tested; the auto/taat paths are asserted separately."""
     return [
         (r["doc_id"], r["score"])
         for r in searcher.search_terms(terms, k=k, mode=mode, algorithm=algorithm).collect()
@@ -127,7 +127,7 @@ def _assert_same(a, b, terms, mode):
 
 def test_wand_head_terms(idx, searcher):
     for mode in ("or", "and"):
-        for algo in ("wand", "exact", "auto", "wand_loop"):
+        for algo in ("wand", "taat", "auto"):
             _assert_same(
                 _exact(idx, QUERY_TERMS_HEAD, mode),
                 _wand(searcher, QUERY_TERMS_HEAD, mode, algorithm=algo),
@@ -430,22 +430,54 @@ def test_decode_cache_default_cap_ram_derived(monkeypatch):
     assert _default_decode_cache_postings() == 12345
 
 
-def test_search_local_taat_and_grouping_parity(spark, tmp_path_factory):
-    """The serving-tier routing knobs must never change answers: TAAT
-    (head-dominated exhaustive), block-max wand, exact, per-(shard, unit)
-    vs shard-only grouping, and the distributed path all rank and score
-    identically on the same written store."""
-    from ucuddle_search_engine_spark.operators import wand as W
-    from ucuddle_search_engine_spark.plans.build_index import (
-        build_index_resumable,
-        load_searcher,
-    )
-    from ucuddle_search_engine_spark.synth import synth_corpus
+def test_bad_algorithm_raises():
+    """An `algorithm` outside auto/taat/wand — a typo, or a retired scorer
+    name — fails loudly before any read or Spark job: the searcher below
+    has no store behind it, so anything past validation would crash on
+    None instead of raising ValueError."""
+    bare = SegmentSearcher(None, None, None)
+    for algo in ("exact", "wand_loop", "wnad"):
+        with pytest.raises(ValueError, match="algorithm"):
+            bare.search_terms(["t0", "t1"], mode="or", algorithm=algo)
+        with pytest.raises(ValueError, match="algorithm"):
+            bare.search_local(["t0", "t1"], mode="or", algorithm=algo)
+
+
+@pytest.fixture(scope="module")
+def written_store(spark, tmp_path_factory):
+    """A 400-doc, 2-unit written store for the serving-tier tests."""
+    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable
 
     corpus = synth_corpus(spark, 400, partitions=4).cache()
     out = str(tmp_path_factory.mktemp("idx_taat"))
     build_index_resumable(spark, corpus, out, n_units=2, write_postings=True)
+    return out
 
+
+def test_or_scores_independent_of_cache_state(written_store):
+    """An OR query's scores must not depend on what earlier queries left in
+    the decode cache: a cold OR on a fresh searcher and the same OR after
+    an AND over its terms filled the scored-chain memos return bit-identical
+    (doc_id, score) lists — compared with ==, no rounding. Mid-df pairs:
+    neither head-dominated nor wide, so nothing but cache state separates
+    the two runs."""
+    for terms in (["t40", "t100"], ["t55", "t65"], ["t80", "t200"]):
+        cold = SegmentSearcher.open_local(written_store).search_local(
+            terms, k=10, mode="or")
+        warm = SegmentSearcher.open_local(written_store)
+        assert warm.search_local(terms, k=10, mode="and")
+        assert warm.search_local(terms, k=10, mode="or") == cold, terms
+        assert len(cold) == 10
+
+
+def test_search_local_taat_and_grouping_parity(spark, written_store):
+    """The serving-tier routing knobs must never change answers: TAAT,
+    block-max wand, per-(shard, unit) vs shard-only grouping, and the
+    distributed path all rank and score identically on the same written
+    store."""
+    from ucuddle_search_engine_spark.plans.build_index import load_searcher
+
+    out = written_store
     dist = load_searcher(spark, out).prepare()
     local = SegmentSearcher.open_local(out)
 
@@ -460,26 +492,23 @@ def test_search_local_taat_and_grouping_parity(spark, tmp_path_factory):
         got_auto = run(terms, mode)
         got_taat = run(terms, mode, algorithm="taat")
         got_wand = run(terms, mode, algorithm="wand")
-        got_exact = run(terms, mode, algorithm="exact")
         assert got_auto == want, (terms, mode, "auto")
         assert got_taat == want, (terms, mode, "taat")
         assert got_wand == want, (terms, mode, "wand")
-        assert got_exact == want, (terms, mode, "exact")
 
     # grouping granularity: force per-(shard, unit) fan-out and shard-only
-    # collapse on the same query — identical answers
+    # collapse on the same block-max query — identical answers
     q = ["t0", "t1"]
     want = run(q, "or")
-    old_pu, old_td = SegmentSearcher.PER_UNIT_MIN_POSTINGS, W.TAAT_DENSITY
+    old = SegmentSearcher.PER_UNIT_MIN_POSTINGS, SegmentSearcher.FINE_GROUP_MIN_POSTINGS
     try:
         SegmentSearcher.PER_UNIT_MIN_POSTINGS = 0
-        W.TAAT_DENSITY = 10.0  # never taat → per-unit wand/exact groups
-        assert run(q, "or") == want
+        SegmentSearcher.FINE_GROUP_MIN_POSTINGS = 0  # per-unit wand groups
+        assert run(q, "or", algorithm="wand") == want
         SegmentSearcher.PER_UNIT_MIN_POSTINGS = 1 << 60  # always shard-only
-        assert run(q, "or") == want
+        assert run(q, "or", algorithm="wand") == want
     finally:
-        SegmentSearcher.PER_UNIT_MIN_POSTINGS = old_pu
-        W.TAAT_DENSITY = old_td
+        SegmentSearcher.PER_UNIT_MIN_POSTINGS, SegmentSearcher.FINE_GROUP_MIN_POSTINGS = old
 
     # per-term chain cache: warm hit returns the same object; absent terms
     # cache an empty entry; eviction keeps the budget

@@ -1,18 +1,20 @@
 """Query execution over the compressed segment store: per-shard top-k with
-block-max WAND (OR queries) and sorted-merge intersection (AND queries), then
-a global k-way merge — the native re-implementation of what the reference
-delegates to ES scatter-gather (3 shards, crawler/functs_with_elastic.go:75;
-per-shard top-20 heaps implied by size:20 at web/elastic_interaction.py:21).
+an exhaustive term-at-a-time scan or block-max pruning (OR queries) and
+block-interval-pruned intersection (AND queries), then a global k-way merge —
+the native re-implementation of what the reference delegates to ES
+scatter-gather (3 shards, crawler/functs_with_elastic.go:75; per-shard top-20
+heaps implied by size:20 at web/elastic_interaction.py:21).
 
 Correctness contract: rank- and score-identical to operators/bm25.InvertedIndex
-(tests/test_wand.py). Because shards partition documents disjointly, the global
-top-k is contained in the union of per-shard top-k — the merge is exact.
+(tests/test_segments_wand.py). Because shards partition documents disjointly,
+the global top-k is contained in the union of per-shard top-k — the merge is
+exact.
 
 Scale posture: the only shuffle is segments.filter(term ∈ q) → groupBy(shard);
 the filter is a pruned parquet scan (partitioned by shard, term-sorted row
-groups), each shard task decodes only the query terms' blocks, and WAND skips
-blocks whose max_impact bound cannot beat the running threshold θ. Driver
-traffic is |q| idf rows + S·k candidate rows.
+groups), each shard task decodes only the query terms' blocks, and block-max
+skips blocks whose max_impact bound cannot beat the running threshold θ.
+Driver traffic is |q| idf rows + S·k candidate rows.
 """
 
 from __future__ import annotations
@@ -28,8 +30,6 @@ from pyspark.sql import functions as F
 
 from ..functions.varbyte import decode_doc_ids_concat, vb_decode_concat
 from .bm25 import B, K1, DEFAULT_BOOSTS
-
-INF = np.iinfo(np.int64).max
 
 # Stored block bounds (max_impact) and live contributions are computed from
 # avgdl values that may differ at the last ULP (e.g. cstats persisted through
@@ -415,154 +415,6 @@ class DecodeCache:
             self._n -= len(d)
 
 
-class _PList:
-    """One (term, field) decoded posting list with block metadata."""
-
-    __slots__ = ("docs", "tfs", "dls", "weight_idf", "avgdl", "block_ends", "block_ubs", "cur", "ub")
-
-    def __init__(self, blocks, weight_idf: float, avgdl: float,
-                 dead: np.ndarray | None = None,
-                 cache: "DecodeCache | None" = None, ckey: tuple | None = None):
-        if isinstance(blocks, _ChainCols):  # already block_no-sorted
-            doc_b, tf_b, dl_b = blocks.doc_bytes, blocks.tf_bytes, blocks.dl_bytes
-            ns = blocks.ns
-            ubs = blocks.max_impact * weight_idf * (1.0 + UB_EPS)
-        else:
-            blocks = blocks.sort_values("block_no")
-            doc_b = list(blocks["doc_bytes"])
-            tf_b = list(blocks["tf_bytes"])
-            dl_b = list(blocks["dl_bytes"])
-            ns = blocks["n"].to_numpy(np.int64)
-            ubs = blocks["max_impact"].to_numpy(np.float64) * weight_idf * (1.0 + UB_EPS)
-        if cache is not None:
-            self.docs, self.tfs, self.dls = cache.get_many(
-                ckey, range(len(ns)), doc_b, tf_b, dl_b,
-            )
-        else:
-            # one vectorized decode pass over ALL the chain's blocks (a Python
-            # decode call per block dominated latency at 10⁴+ blocks per query)
-            self.docs = decode_doc_ids_concat(doc_b)[0].astype(np.int64)
-            self.tfs = vb_decode_concat(tf_b)[0].astype(np.int64)
-            self.dls = vb_decode_concat(dl_b)[0].astype(np.int64)
-        self.weight_idf = weight_idf
-        self.avgdl = avgdl
-        self.block_ends = np.cumsum(ns) - 1  # index of last posting per block
-        self.block_ubs = ubs
-        if dead is not None and len(dead) and len(self.docs):
-            # Tombstones (ES soft-delete until merge): drop dead postings BEFORE
-            # any top-k cut; block upper bounds over the superset stay valid.
-            alive = ~np.isin(self.docs, dead)
-            if not alive.all():
-                alive_cum = np.cumsum(alive)
-                ends_alive = alive_cum[self.block_ends]
-                keep = np.diff(np.concatenate(([0], ends_alive))) > 0
-                self.docs, self.tfs, self.dls = self.docs[alive], self.tfs[alive], self.dls[alive]
-                self.block_ends = (ends_alive - 1)[keep]
-                self.block_ubs = self.block_ubs[keep]
-        if len(self.docs) > 1 and not (self.docs[1:] > self.docs[:-1]).all():
-            # Defensive: a chain whose block_no order is not doc order (e.g. a
-            # store mixing several builds without a unit column) would break
-            # searchsorted advancing. Re-sort and collapse block metadata to a
-            # single block — correct, just coarser skipping.
-            order = np.argsort(self.docs, kind="stable")
-            self.docs, self.tfs, self.dls = self.docs[order], self.tfs[order], self.dls[order]
-            self.block_ends = np.array([len(self.docs) - 1], dtype=np.int64)
-            self.block_ubs = np.array([self.block_ubs.max()], dtype=np.float64)
-        self.cur = 0
-        self.ub = float(self.block_ubs.max()) if len(self.block_ubs) else 0.0
-
-    def doc(self) -> int:
-        return int(self.docs[self.cur]) if self.cur < len(self.docs) else INF
-
-    def advance_to(self, target: int) -> None:
-        self.cur += int(np.searchsorted(self.docs[self.cur:], target, side="left"))
-
-    def score_cur(self) -> float:
-        tf = float(self.tfs[self.cur])
-        dl = float(self.dls[self.cur])
-        return self.weight_idf * tf / (tf + K1 * (1 - B + B * dl / self.avgdl))
-
-    def block_of_cur(self) -> int:
-        return int(np.searchsorted(self.block_ends, self.cur, side="left"))
-
-    def cur_block_ub(self) -> float:
-        return float(self.block_ubs[self.block_of_cur()])
-
-    def cur_block_end_doc(self) -> int:
-        return int(self.docs[self.block_ends[self.block_of_cur()]])
-
-
-def _wand_or(lists: list[_PList], k: int) -> list[tuple[int, float]]:
-    """Block-max WAND (Ding & Suel-style dynamic pruning) top-k, exact scores.
-
-    θ is the k-th best score so far; pruning is strict (<), so score ties are
-    never dropped and the (score desc, doc_id asc) tie-break stays exact.
-    """
-    import heapq
-
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of current top-k
-    theta = -math.inf
-
-    def offer(doc: int, score: float) -> None:
-        nonlocal theta
-        item = (score, -doc)
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-        if len(heap) == k:
-            theta = heap[0][0]
-
-    lists = [L for L in lists if len(L.docs)]
-    while True:
-        live = [L for L in lists if L.doc() != INF]
-        if not live:
-            break
-        live.sort(key=lambda L: L.doc())
-        # pivot: smallest prefix whose ub sum could beat θ
-        acc = 0.0
-        pivot_i = None
-        for i, L in enumerate(live):
-            acc += L.ub
-            if acc > theta or (len(heap) < k):
-                pivot_i = i
-                break
-        if pivot_i is None:
-            break  # no doc can beat θ anymore
-        pivot_doc = live[pivot_i].doc()
-        if live[0].doc() == pivot_doc:
-            # extend the pivot group over every list sitting on pivot_doc, so
-            # the block bound covers the doc's full potential score
-            while pivot_i + 1 < len(live) and live[pivot_i + 1].doc() == pivot_doc:
-                pivot_i += 1
-            group = live[: pivot_i + 1]
-            for L in group:
-                L.advance_to(pivot_doc)
-            block_bound = sum(L.cur_block_ub() for L in group if L.doc() != INF)
-            if len(heap) == k and block_bound < theta:
-                # skip to the nearest block boundary, capped by the next
-                # suffix list's doc (beyond which its ub joins the bound)
-                target = min(
-                    (L.cur_block_end_doc() + 1 for L in group if L.doc() != INF),
-                    default=pivot_doc + 1,
-                )
-                if pivot_i + 1 < len(live):
-                    target = min(target, live[pivot_i + 1].doc())
-                target = max(target, pivot_doc + 1)
-                for L in group:
-                    L.advance_to(target)
-                continue
-            score = 0.0
-            for L in group:
-                if L.doc() == pivot_doc:
-                    score += L.score_cur()
-                    L.advance_to(pivot_doc + 1)
-            offer(pivot_doc, score)
-        else:
-            live[0].advance_to(pivot_doc)
-    return sorted(((-d, s) for s, d in heap), key=lambda x: (-x[1], x[0]))[:k]
-
-
 class _ChainCols:
     """One (shard[, unit], field) slice of a term's posting chain as plain
     numpy/list columns, PRE-SORTED by block_no — the serving tier's
@@ -633,12 +485,12 @@ class _BlockList:
         self.avgdl = avgdl
         self._sparse = None  # lazy range-max sparse table (range_max_ub_vec)
         self._starts = None  # lazy posting offsets per block (full-chain gather)
-        # Defensive (mirrors _PList): block_no order must be doc order with
-        # DISJOINT ranges or range_max_ub's searchsorted silently
-        # underestimates bounds and block-max pruning drops true top-k docs
-        # (e.g. a store mixing several builds without a unit column). Sort by
-        # min_doc; if ranges still interleave, every range query must see the
-        # global max (single-interval bound) — coarser pruning, never wrong.
+        # Defensive: block_no order must be doc order with DISJOINT ranges or
+        # range_max_ub's searchsorted silently underestimates bounds and
+        # block-max pruning drops true top-k docs (e.g. a store mixing
+        # several builds without a unit column). Sort by min_doc; if ranges
+        # still interleave, every range query must see the global max
+        # (single-interval bound) — coarser pruning, never wrong.
         self._range_exact = True
         if len(self.min_docs) > 1:
             if not (self.min_docs[1:] >= self.min_docs[:-1]).all():
@@ -864,6 +716,43 @@ WIDE_OR_LISTS = 48
 #: bincount over the shard's full doc span) is strictly faster there
 TAAT_DENSITY = 0.4
 
+#: the values search_terms and search_local accept for `algorithm`
+ALGORITHMS = ("auto", "taat", "wand")
+
+
+def _check_algorithm(algorithm: str) -> None:
+    if algorithm not in ALGORITHMS:
+        raise ValueError(f"algorithm must be one of {ALGORITHMS}, got {algorithm!r}")
+
+
+def _choose_or_algorithm(algorithm: str, sum_df: int, nterms: int, n_docs: int,
+                         round_dp: int | None, warm=None) -> str:
+    """The one place an OR query's kernel is picked: "taat" (_taat_or) or
+    "wand" (_blockmax_or_numpy). Both are exact, so the choice moves cost,
+    never rankings. Decided once per QUERY from its Σdf over the (term,
+    field) stats — deciding per scoring group would demote a head query to
+    the unpruned kernel wherever its per-group slice falls under the
+    threshold (measured 7× slower at 5M docs).
+
+    TAAT whenever pruning cannot pay or is not allowed: round_dp (rounding
+    under block-max pruning would need inflated bounds), small selections
+    (< WAND_MIN_POSTINGS), head-dominated ones (Σdf ≥ TAAT_DENSITY ×
+    nterms × n_docs: every block holds near-uniform impacts), and — on the
+    serving path — when `warm()` reports every scored chain already in the
+    memo, so there is no decode left for block-max to skip (a warm 3-term
+    mid-frequency OR at 5M docs measured ~600 ms block-max vs ~30 ms
+    TAAT)."""
+    if round_dp is not None or algorithm == "taat":
+        return "taat"
+    if algorithm == "wand":
+        return "wand"
+    if sum_df < SegmentSearcher.WAND_MIN_POSTINGS \
+            or sum_df >= TAAT_DENSITY * nterms * n_docs:
+        return "taat"
+    if warm is not None and warm():
+        return "taat"
+    return "wand"
+
 
 def _taat_or(lists: list["_BlockList"], k: int,
              dead: np.ndarray | None = None,
@@ -1045,9 +934,10 @@ def _dense_and(blists_by_term: dict[str, list["_BlockList"]], k: int,
     ((doc - mn) // stride — valid because one scoring group holds one shard's
     single residue class): a per-term presence vector, an == nterms mask,
     and per-chain contribution adds in the SAME chain order and with the
-    SAME float expression as _intersect_and — bit-identical scores. Returns
-    None (caller falls back to block-interval pruning) when the id space
-    disproves the stride assumption or is too sparse for dense vectors."""
+    SAME float expression as _intersect_and_blocks — bit-identical scores.
+    Returns None (caller falls back to block-interval pruning) when the id
+    space disproves the stride assumption or is too sparse for dense
+    vectors."""
     entries = [(L._ckey, L.weight_idf, L.avgdl, L.doc_bytes, L.tf_bytes, L.dl_bytes)
                for ls in blists_by_term.values() for L in ls]
     parts = cache.get_scored_many(entries)
@@ -1111,14 +1001,15 @@ def _dense_and(blists_by_term: dict[str, list["_BlockList"]], k: int,
 def _intersect_and_blocks(blists_by_term: dict[str, list[_BlockList]], k: int,
                           dead: np.ndarray | None = None,
                           round_dp: int | None = None) -> list[tuple[int, float]]:
-    """AND top-k with block-interval pruning: a doc in the intersection must
-    lie inside some block of EVERY query term, so a block of term t whose doc
-    range overlaps no block range of some other term can be skipped without
-    decoding. For rare-term ∧ head-term queries this skips most of the head
-    term's blocks — the dominant AND shape at scale. Decoded survivors then
-    intersect exactly as before."""
-    from types import SimpleNamespace
-
+    """AND semantics (minimum_should_match 100%) with block-interval
+    pruning: a doc in the intersection must lie inside some block of EVERY
+    query term, so a block of term t whose doc range overlaps no block range
+    of some other term can be skipped without decoding. For rare-term ∧
+    head-term queries this skips most of the head term's blocks — the
+    dominant AND shape at scale. Decoded survivors then go through a
+    sorted-merge intersection of per-term doc sets (union across fields per
+    term) and exact scoring — the posting-intersection join J1
+    (SURVEY.md §2.3)."""
     # disjoint merged intervals per TERM (union over its field/unit lists)
     merged = {}
     for t, ls in blists_by_term.items():
@@ -1128,7 +1019,8 @@ def _intersect_and_blocks(blists_by_term: dict[str, list[_BlockList]], k: int,
             return []
         merged[t] = _merge_intervals(los, his)
 
-    out_lists: dict[str, list] = {}
+    # term → [(docs, tfs, dls, list)] over the surviving blocks
+    decoded: dict[str, list] = {}
     for t, ls in blists_by_term.items():
         others = [merged[o] for o in merged if o != t]
         for L in ls:
@@ -1144,73 +1036,36 @@ def _intersect_and_blocks(blists_by_term: dict[str, list[_BlockList]], k: int,
                     break
             idxs = np.flatnonzero(keep)
             if len(idxs) == 0:
-                docs = np.empty(0, np.int64)
-                tfs = dls = np.empty(0, np.int64)
+                docs = tfs = dls = np.empty(0, np.int64)
             else:
                 docs, tfs, dls = L.decode_raw(idxs)
                 if dead is not None and len(dead) and len(docs):
                     alive = ~np.isin(docs, dead)
                     docs, tfs, dls = docs[alive], tfs[alive], dls[alive]
                 if len(docs) > 1 and not (docs[1:] > docs[:-1]).all():
-                    order = np.argsort(docs, kind="stable")  # defensive (see _PList)
+                    # defensive: a chain whose block_no order is not doc
+                    # order would break the searchsorted probes below
+                    order = np.argsort(docs, kind="stable")
                     docs, tfs, dls = docs[order], tfs[order], dls[order]
-            out_lists.setdefault(t, []).append(
-                SimpleNamespace(docs=docs, tfs=tfs, dls=dls,
-                                weight_idf=L.weight_idf, avgdl=L.avgdl)
-            )
-    return _intersect_and(out_lists, k, round_dp=round_dp)
-
-
-def _exact_or_numpy(lists: list[_PList], k: int, round_dp: int | None = None,
-                    stride: int = 1) -> list[tuple[int, float]]:
-    """Vectorized disjunctive top-k: concatenate all decoded postings, one
-    np.unique + scatter-add, lexsort top-k. No pruning, but ~100× less Python
-    overhead per posting than the WAND loop — wins whenever the lists are
-    short enough that skipping can't pay for itself (the auto policy).
-    round_dp: round scores BEFORE the cut so k-boundary ties break by doc_id
-    exactly like a rounded-score oracle."""
-    if not lists:
+            decoded.setdefault(t, []).append((docs, tfs, dls, L))
+    if not decoded:
         return []
-    docs_all = np.concatenate([L.docs for L in lists])
-    contribs = np.concatenate(
-        [
-            L.weight_idf * (L.tfs / (L.tfs + K1 * (1 - B + B * L.dls / L.avgdl)))
-            for L in lists
-        ]
-    )
-    uniq, scores = _aggregate_scores(docs_all, contribs, stride=stride)
-    if round_dp is not None:
-        scores = np.round(scores, round_dp)  # BEFORE the cut (tie-break contract)
-    order = _topk_order(uniq, scores, k)
-    return [(int(uniq[i]), float(scores[i])) for i in order]
-
-
-def _intersect_and(lists_by_term: dict[str, list[_PList]], k: int,
-                   round_dp: int | None = None) -> list[tuple[int, float]]:
-    """AND semantics (minimum_should_match 100%): sorted-merge intersection of
-    per-term doc sets (union across fields per term), then exact scoring of
-    survivors — the posting-intersection join J1 (SURVEY.md §2.3)."""
-    term_docs = []
-    for t, ls in lists_by_term.items():
-        docs = ls[0].docs if len(ls) == 1 else np.unique(np.concatenate([L.docs for L in ls]))
-        term_docs.append(docs)
-    if not term_docs:
-        return []
+    term_docs = [ps[0][0] if len(ps) == 1 else np.unique(np.concatenate([p[0] for p in ps]))
+                 for ps in decoded.values()]
     common = term_docs[0]
     for d in sorted(term_docs[1:], key=len):
         common = common[np.isin(common, d, assume_unique=True)]
         if len(common) == 0:
             return []
     scores = np.zeros(len(common), dtype=np.float64)
-    for ls in lists_by_term.values():
-        for L in ls:
-            if len(L.docs) == 0:
+    for ps in decoded.values():
+        for docs, tfs, dls, L in ps:
+            if len(docs) == 0:
                 continue
-            pos = np.searchsorted(L.docs, common)
-            pos = np.clip(pos, 0, len(L.docs) - 1)
-            hit = L.docs[pos] == common
-            tf = L.tfs[pos[hit]].astype(np.float64)
-            dl = L.dls[pos[hit]].astype(np.float64)
+            pos = np.clip(np.searchsorted(docs, common), 0, len(docs) - 1)
+            hit = docs[pos] == common
+            tf = tfs[pos[hit]].astype(np.float64)
+            dl = dls[pos[hit]].astype(np.float64)
             scores[hit] += L.weight_idf * tf / (tf + K1 * (1 - B + B * dl / L.avgdl))
     if round_dp is not None:
         scores = np.round(scores, round_dp)
@@ -1219,90 +1074,63 @@ def _intersect_and(lists_by_term: dict[str, list[_PList]], k: int,
 
 
 def _score_shard_rows(pdf: pd.DataFrame, widf: dict, avgdl: dict, mode: str, k: int,
-                      nterms: int, algorithm: str, dead, round_dp, wand_min: int,
-                      cache: "DecodeCache | None" = None,
-                      cache_shard: object = None, stride: int = 1) -> list:
-    """Block rows of ONE shard → top-k [(doc_id, score)]. Shared verbatim by
-    the distributed path (applyInPandas closure) and the driver-side serving
-    path (SegmentSearcher.search_local) so both return identical rankings.
-    `cache` (serving path only) memoizes decoded blocks across queries, keyed
-    per (shard, term, field[, unit]) chain."""
+                      nterms: int, algorithm: str, dead, round_dp,
+                      stride: int = 1) -> list:
+    """Block rows of ONE shard → top-k [(doc_id, score)] — the distributed
+    path's applyInPandas body, scoring through the same _score_chains as
+    the driver-side serving path, so both return identical rankings."""
     if len(pdf) == 0:
         return []
     # Stores written unit-by-unit (plans/build_index.py) reuse block_no
     # ranges across units with overlapping doc ranges; each unit's chain IS
-    # doc-sorted, so build one list per (term, field, unit) — WAND/intersect/
-    # exact all handle multiple lists per term.
+    # doc-sorted, so build one list per (term, field, unit) — every scorer
+    # handles multiple lists per term.
     gcols = ["term", "field", "unit"] if "unit" in pdf.columns else ["term", "field"]
     groups = []
     for gkey, g in pdf.groupby(gcols, sort=False):
-        t, f = gkey[0], gkey[1]
-        key = (t, int(f))
-        if key not in widf:
-            continue
-        ck = (cache_shard, *gkey) if cache is not None else None
-        groups.append((t, key, g, ck))
-    return _score_chains(groups, widf, avgdl, mode, k, nterms, algorithm,
-                         dead, round_dp, wand_min, cache=cache, stride=stride)
+        key = (gkey[0], int(gkey[1]))
+        if key in widf:
+            groups.append((key[0], _BlockList(g, widf[key], avgdl[key])))
+    return _score_chains(groups, mode, k, nterms, algorithm, dead, round_dp,
+                         stride=stride)
 
 
-def _score_chains(groups: list, widf: dict, avgdl: dict, mode: str, k: int,
-                  nterms: int, algorithm: str, dead, round_dp, wand_min: int,
-                  cache: "DecodeCache | None" = None, stride: int = 1) -> list:
-    """Core scorer over prebuilt chains — each group entry is
-    (term, (term, field), block-frame, cache-key[, _BlockList]): the serving
-    tier feeds it straight from its per-term chain cache (no per-query pandas
-    groupby) and may attach a MEMOIZED _BlockList view (5th slot) so the
-    block-metadata extraction from the pandas frame — ~60 ms of GIL-held work
-    per 58-chain fuzzy group, serialized across the 24-shard scoring pool —
-    is paid once per chain instead of once per query. The pdf form above
-    derives 4-tuples on the fly. Identical rankings either way; the _PList
-    branches always rebuild from the frame (their per-block cache ordinals
-    must follow the frame's block_no sort, not a view's defensive re-sort)."""
+def _score_chains(groups: list[tuple[str, _BlockList]], mode: str, k: int,
+                  nterms: int, algorithm: str, dead, round_dp,
+                  stride: int = 1) -> list:
+    """Core scorer over one scoring group's (term, _BlockList) chains. OR
+    queries run the kernel the caller resolved through _choose_or_algorithm
+    ("taat" or "wand"); AND queries ignore it. The serving tier feeds
+    MEMOIZED _BlockList views (attached to its DecodeCache) straight from
+    its per-term chain cache, so the block-metadata extraction is paid once
+    per chain instead of once per query."""
     if not groups:
         return []
-    total = sum(int(e[4].ns.sum()) if len(e) > 4 else int(e[2]["n"].sum())
-                for e in groups)
-
-    def bl(e) -> _BlockList:
-        if len(e) > 4:
-            return e[4]
-        _, key, g, ck = e
-        return _BlockList(g, widf[key], avgdl[key], cache=cache, ckey=ck)
-
     if mode == "and":
         # block-interval pruning: skip decoding blocks that overlap no block
         # range of some other query term
         blists_by_term: dict[str, list[_BlockList]] = {}
-        for e in groups:
-            blists_by_term.setdefault(e[0], []).append(bl(e))
+        for t, L in groups:
+            blists_by_term.setdefault(t, []).append(L)
         if len(blists_by_term) < nterms:
             return []
-        if cache is not None and total <= AND_DENSE_MAX_POSTINGS:
+        cache = groups[0][1]._cache
+        if cache is not None and \
+                sum(int(L.ns.sum()) for _, L in groups) <= AND_DENSE_MAX_POSTINGS:
             # serving tier, cache-sized selection: dense AND over the scored
             # chain memos (see _dense_and) — warm queries are pure gathers
             res = _dense_and(blists_by_term, k, dead, round_dp, stride, cache)
             if res is not None:
                 return res
         return _intersect_and_blocks(blists_by_term, k, dead=dead, round_dp=round_dp)
-    if algorithm == "taat":
-        # exhaustive disjunction (head-dominated queries, see TAAT_DENSITY):
-        # every chain fully decoded through the scored-chain memo, ONE dense
-        # aggregate over the whole group — the caller groups by shard only,
-        # so the bincount spans the shard's doc range once per query
-        return _taat_or([bl(e) for e in groups], k, dead=dead, round_dp=round_dp,
-                        stride=stride)
-    if round_dp is None and (algorithm == "wand" or (algorithm == "auto" and total >= wand_min)):
+    lists = [L for _, L in groups]
+    if algorithm == "wand":
         # vectorized block-max scorer: decodes only blocks whose interval
         # bound can beat θ (numpy-blocked, no per-posting loop)
-        return _blockmax_or_numpy([bl(e) for e in groups], k, dead=dead, stride=stride)
-    if algorithm == "wand_loop":
-        flat = [_PList(g, widf[key], avgdl[key], dead=dead, cache=cache, ckey=ck)
-                for _, key, g, ck, *_ in groups]
-        return _wand_or(flat, k)
-    flat = [_PList(g, widf[key], avgdl[key], dead=dead, cache=cache, ckey=ck)
-            for _, key, g, ck, *_ in groups]
-    return _exact_or_numpy(flat, k, round_dp=round_dp, stride=stride)
+        return _blockmax_or_numpy(lists, k, dead=dead, stride=stride)
+    # exhaustive disjunction: every chain fully decoded (through the
+    # scored-chain memo on the serving tier), ONE dense aggregate per group
+    return _taat_or(lists, k, dead=dead, round_dp=round_dp, stride=stride)
 
 
 class SegmentSearcher:
@@ -1455,10 +1283,10 @@ class SegmentSearcher:
         tt = ds.to_table(filter=flt, columns=["term", "field", "df"])
         return zip(tt["term"].to_pylist(), tt["field"].to_pylist(), tt["df"].to_pylist())
 
-    # below this many postings per shard, the plain vectorized scan wins on
-    # overhead; above it the block-max scorer's skipped decodes pay off
-    # (BENCH/wand_micro.json: parity at ~0.8M, widening with size — both are
-    # numpy-blocked now, so the crossover is shallow either way)
+    # below this many selected postings (a query's Σdf) an OR query is
+    # scored by exhaustive TAAT; above it the block-max scorer's skipped
+    # decodes pay off (BENCH/wand_micro.json measured the crossover against
+    # the retired exact scan: parity at ~0.8M, widening with size)
     WAND_MIN_POSTINGS = 500_000
     #: below this many selected postings a query is scored in shard-only
     #: groups — finer (shard, unit) fan-out only pays once chains are big
@@ -1484,8 +1312,11 @@ class SegmentSearcher:
         (shards partition docs disjointly), then the merge skips offset.
         round_dp: boundary-stable mode — scores are rounded BEFORE every
         top-k cut (per shard and at the merge) so ties break by doc_id
-        exactly like a rounded-score oracle; OR queries route to the exact
-        scorer (rounding under block-max pruning would need inflated bounds)."""
+        exactly like a rounded-score oracle; OR queries route to TAAT
+        (rounding under block-max pruning would need inflated bounds).
+        algorithm: "auto", "taat" or "wand" (OR queries; see
+        _choose_or_algorithm) — anything else raises ValueError."""
+        _check_algorithm(algorithm)
         if offset:
             inner = self.search_terms(terms, k=offset + k, mode=mode, algorithm=algorithm,
                                       round_dp=round_dp)
@@ -1522,6 +1353,11 @@ class SegmentSearcher:
         )
         boosts = self.boosts
         nterms = len(terms)
+        if mode != "and":
+            # resolved once per QUERY on the driver, not per shard group
+            algorithm = _choose_or_algorithm(
+                algorithm, sum(stats.values()), nterms,
+                max((coll[f][0] for f in fields if f in coll), default=0), round_dp)
 
         matched = self.segments.filter(
             F.col("term").isin(terms) & F.col("field").isin(list(boosts))
@@ -1533,15 +1369,12 @@ class SegmentSearcher:
 
             matched = matched.filter(F.col("tb").isin(term_buckets(terms)))
 
-        wand_min = SegmentSearcher.WAND_MIN_POSTINGS
-
         stride = self.num_shards or 1
 
         def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             dead = b_dead.value if b_dead is not None else None
             top = _score_shard_rows(pdf, b_widf.value, b_avgdl.value, mode, k,
-                                    nterms, algorithm, dead, round_dp, wand_min,
-                                    stride=stride)
+                                    nterms, algorithm, dead, round_dp, stride=stride)
             return pd.DataFrame(top, columns=["doc_id", "score"]).astype(
                 {"doc_id": "int64", "score": "float64"})
 
@@ -1684,9 +1517,11 @@ class SegmentSearcher:
         query active so the background arena top-up yields the memory bus
         (functions/mem), and fires the idle-time top-up AFTER the active
         mark drops — launching it before query_end would make it abort
-        against our own query."""
+        against our own query. Rejects an `algorithm` outside ALGORITHMS
+        before any read."""
         from ..functions import mem
 
+        _check_algorithm(algorithm)
         self._ensure_serving_posture()
         with mem.admission():  # bounded execution width (see mem.admission)
             mem.query_begin()
@@ -1777,43 +1612,23 @@ class SegmentSearcher:
                     if self._decode_cache is None:
                         self._decode_cache = DecodeCache(self.DECODE_CACHE_POSTINGS)
             cache = self._decode_cache
-            # Resolve auto at QUERY level from the total selected postings:
-            # the wand-vs-exact break-even is a property of the query's
-            # chains, not of how many (shard, unit) slices they span —
-            # deciding per group would demote every head query to the exact
-            # scorer once the per-group slice falls under the threshold
-            # (measured 7× slower at 5M docs).
-            n_docs_max = max(coll[f][0] for f in fields if f in coll)
-            if algorithm == "auto" and mode != "and" \
-                    and total_sel >= TAAT_DENSITY * nterms * n_docs_max:
-                # head-dominated: block-max can't prune, go exhaustive; group
-                # by SHARD ONLY so the dense bincount runs once per shard
-                # over its full doc span instead of a sort-merge per unit
-                algorithm = "taat"
-            elif algorithm == "auto" and mode != "and" and cache.scored_cached_all(
-                [((sh, t, f) if u is None else (sh, t, f, u),
-                  widf[(t, f)], avgdl[(t, f)])
-                 for t in terms for (sh, u, f, _g, _n, _s) in chains_by_term.get(t, ())
-                 if (t, f) in widf]
-            ):
-                # warm-memo shortcut: every chain's scored array is already
-                # resident, so there is no decode work left for block-max to
-                # prune — its per-block seed/θ bookkeeping would be pure
-                # overhead (measured ~600 ms vs ~30 ms on a warm 3-term
-                # mid-frequency OR at 5M docs). Exhaustive TAAT over the
-                # memos is exact, so rankings are unchanged.
-                algorithm = "taat"
-            elif algorithm == "auto" and round_dp is None \
-                    and total_sel >= SegmentSearcher.WAND_MIN_POSTINGS:
-                algorithm = "wand"
+            if mode != "and":
+                algorithm = _choose_or_algorithm(
+                    algorithm, sum(stats.values()), nterms,
+                    max(coll[f][0] for f in fields if f in coll), round_dp,
+                    warm=lambda: cache.scored_cached_all(
+                        [((sh, t, f) if u is None else (sh, t, f, u),
+                          widf[(t, f)], avgdl[(t, f)])
+                         for t in terms
+                         for (sh, u, f, _g, _n, _s) in chains_by_term.get(t, ())
+                         if (t, f) in widf]))
             # Shard-parallel scoring: (shard, unit) groups are doc-disjoint —
             # shards partition doc_id by hash, and a live doc's postings for
             # a term live in exactly one unit (updates tombstone the prior
             # unit's row; summing tf across units would mis-score BM25's
             # nonlinear tf term anyway) — so per-group top-(offset+k) heaps
             # merge by a plain sort, no cross-group score summing.
-            # DecodeCache is lock-safe; keys stay (shard, term, field, unit)
-            # — identical to the pdf-groupby path's.
+            # DecodeCache is lock-safe.
             # small selections collapse to shard-only groups: per-group fixed
             # overhead (list/cache assembly) dominates tiny chains. The
             # criterion is postings PER FINE GROUP, not total — a fixed total
@@ -1824,6 +1639,8 @@ class SegmentSearcher:
             fine_keys = {(sh, u) for t in terms
                          for (sh, u, f, _g, _n, _s) in chains_by_term.get(t, ())
                          if (t, f) in widf}
+            # TAAT groups by SHARD ONLY: its dense bincount then runs once
+            # per shard over the full doc span, not once per unit
             per_unit = algorithm != "taat" \
                 and total_sel >= SegmentSearcher.PER_UNIT_MIN_POSTINGS \
                 and total_sel >= SegmentSearcher.FINE_GROUP_MIN_POSTINGS * max(1, len(fine_keys))
@@ -1848,10 +1665,10 @@ class SegmentSearcher:
                         L = _BlockList(g, widf[key], avgdl[key],
                                        cache=cache, ckey=ck)
                         slot.append(L)
-                    groups.setdefault(gk, []).append((t, key, g, ck, L))
+                    groups.setdefault(gk, []).append((t, L))
 
-            # Wide-OR cold prefill: when every group will decode its chains
-            # EXHAUSTIVELY anyway (explicit taat, or a >WIDE_OR_LISTS
+            # OR cold prefill: when every group will decode its chains
+            # EXHAUSTIVELY anyway (taat, or a >WIDE_OR_LISTS
             # disjunction that _blockmax_or_numpy reroutes to taat), fill the
             # scored-chain memo for ALL groups in ONE batched decode+score
             # pass up front. 24 pool threads each running their own decode
@@ -1866,15 +1683,13 @@ class SegmentSearcher:
                 cache.get_scored_many(
                     [(L._ckey, L.weight_idf, L.avgdl,
                       L.doc_bytes, L.tf_bytes, L.dl_bytes)
-                     for v in groups.values() for _, _, _, _, L in v])
+                     for v in groups.values() for _, L in v])
 
             stride = self.num_shards or 1
 
             def run_group(chains):
-                return _score_chains(chains, widf, avgdl, mode, offset + k,
-                                     nterms, algorithm, dead, round_dp,
-                                     SegmentSearcher.WAND_MIN_POSTINGS,
-                                     cache=cache, stride=stride)
+                return _score_chains(chains, mode, offset + k, nterms,
+                                     algorithm, dead, round_dp, stride=stride)
 
             # Pool only when per-GROUP work is numpy-dominated (big decoded
             # selections release the GIL for long spans). Small/medium
@@ -1936,18 +1751,11 @@ class SegmentSearcher:
     SEG_CACHE_BYTES = _default_seg_cache_bytes()
     _SEG_ROW_OVERHEAD = 200
 
-    @classmethod
-    def _chain_bytes(cls, chains: list) -> int:
-        """Resident-byte charge for one term's cached chain list."""
-        total = 0
-        for _, _, _, g, _, _ in chains:
-            if isinstance(g, _ChainCols):
-                total += g.nbytes  # precomputed vectorized at build
-                continue
-            total += cls._SEG_ROW_OVERHEAD * len(g)
-            for col in ("doc_bytes", "tf_bytes", "dl_bytes"):
-                total += int(g[col].map(len).sum())
-        return total
+    @staticmethod
+    def _chain_bytes(chains: list) -> int:
+        """Resident-byte charge for one term's cached chain list (each
+        _ChainCols precomputes its own at build)."""
+        return sum(g.nbytes for _, _, _, g, _, _ in chains)
 
     def _term_chains(self, terms: list[str], fields: list[int]) -> dict:
         """term → [(shard, unit|None, field, chain-frame, n_postings)] from
