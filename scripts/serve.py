@@ -6,10 +6,12 @@ any Spark job on the hot path:
   cstats.json, tombstones),
 - analyze the query with THE STORE'S analyzer (analyzer.json — the
   search_analyzer == index analyzer pin, crawler/functs_with_elastic.go:85-94),
-- rank via search_local (directory-pruned pyarrow read + the same numpy
-  scorers the distributed path uses — identical ranking, ms latency),
-- fetch the k hit titles from the docs dataset (row-group-pruned id filter),
-  capitalized like the reference does (C6, web/elastic_interaction.py:84).
+- rank via search_local (keyed row-group reads through the view's resident
+  parquet footers + the same numpy scorers the distributed path uses —
+  identical ranking, ms latency),
+- fetch the k hit titles from the docs files (the row groups holding the
+  ids, through the same footers), capitalized like the reference does (C6,
+  web/elastic_interaction.py:84).
 
 stdlib http.server only — no framework dependencies.
 
@@ -22,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import sys
 import time
@@ -31,10 +34,7 @@ from urllib.parse import parse_qs, urlparse
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from ucuddle_search_engine_spark.operators.wand import (  # noqa: E402
-    SegmentSearcher,
-    pa_points_filter,
-)
+from ucuddle_search_engine_spark.operators.wand import SegmentSearcher  # noqa: E402
 
 
 def _load_analyzer_py(store_dir: str):
@@ -213,7 +213,7 @@ class SearchApp:
         with self._lock:
             missing = [c for c in firsts if c not in view.vocab_buckets]
         if missing:
-            tt = ds.to_table(filter=pa_points_filter("p1", missing),
+            tt = ds.to_table(filter=pds.field("p1").isin(missing),
                              columns=["term", "df", "p1"])
             got = {c: {} for c in missing}
             for t, d, c in zip(tt["term"].to_pylist(), tt["df"].to_pylist(),
@@ -382,7 +382,7 @@ class SearchApp:
                 hits = phrase_search_local(
                     self.store_dir, terms, k=k + offset,
                     dead=np.asarray(ts, dtype=np.int64) if ts else None,
-                    cache=view.phrase_cache,
+                    cache=view.phrase_cache, files=view.searcher.files,
                 )[offset:]
                 return self._hydrate(view, terms, hits, highlight)
             # no positional sidecar: degrade the quoted query to AND (every
@@ -425,39 +425,30 @@ class SearchApp:
     def _hydrate(self, view: _StoreView, terms: list[str],
                  hits: list[tuple[int, float]], highlight: bool) -> list[dict]:
         """Ranked (doc_id, score) pairs → response rows: titles/repo/path from
-        the docs dataset (row-group-pruned id filter) and, when asked,
+        the docs files (the row groups holding the ids) and, when asked,
         bolded snippets from the positional sidecar — shared by the term and
         phrase paths."""
         if not hits:
             return []
-        import pyarrow.dataset as pds
-
+        files = view.searcher.files
         ids = [d for d, _ in hits]
         want_snippets = highlight and os.path.isdir(os.path.join(self.store_dir, "postings"))
         cols = ["doc_id", "title", "repo", "path"] + (["content"] if want_snippets else [])
-        tbl = view.searcher._dataset("docs").to_table(
-            filter=pa_points_filter("doc_id", ids), columns=cols,
-        )
-        meta = {row["doc_id"]: row for row in tbl.to_pylist()}
+        meta = {row["doc_id"]: row for row in files.read("docs", "doc_id", ids, cols).to_pylist()}
         snippets: dict[int, str] = {}
         if want_snippets:
             # bolded densest-window snippets from the positional sidecar —
             # same _snippet the distributed highlight path uses (C7); the
-            # sidecar read is a term+id-filtered pushdown scan, never the corpus
+            # sidecar read is the query terms' row groups, never the corpus
             from ucuddle_search_engine_spark.operators.highlight import _snippet
 
-            pt_ds = view.searcher._dataset("postings")  # memoized, per view
-            flt = (pa_points_filter("term", terms) & pa_points_filter("doc_id", ids)
-                   & (pds.field("field") == 0))
-            if "tb" in pt_ds.schema.names:
-                # round-4 sidecars carry the term-bucket partition — prune to
-                # |q| of 64 directories before any footer is read
-                from ucuddle_search_engine_spark.functions.hashing import term_buckets
+            import pyarrow as pa
+            import pyarrow.compute as pc
 
-                flt = flt & pds.field("tb").isin(term_buckets(terms))
-            pt = pt_ds.to_table(filter=flt, columns=["doc_id", "positions"])
+            pt = files.read("postings", "term", terms, ["term", "doc_id", "field", "positions"], [0])
+            pt = pt.filter(pc.is_in(pt["doc_id"], value_set=pa.array(ids)))
             pos: dict[int, list[int]] = {}
-            for row in pt.to_pylist():
+            for row in pt.select(["doc_id", "positions"]).to_pylist():
                 pos.setdefault(row["doc_id"], []).extend(row["positions"])
             for d, p in pos.items():
                 m = meta.get(d)
@@ -599,7 +590,8 @@ def make_handler(app: SearchApp):
                 else:
                     self.send_error(404)
                     return
-            except Exception as e:  # pragma: no cover - defensive
+            except Exception as e:
+                logging.getLogger("serve").exception("500 on %s", self.path)
                 self.send_error(500, str(e))
                 return
             payload = json.dumps(body).encode()
@@ -623,6 +615,7 @@ def main() -> None:
                     help="treat --index as a per-language RoutedStores root")
     ap.add_argument("--port", type=int, default=8080)
     args = ap.parse_args()
+    logging.basicConfig(level=logging.INFO, format="%(asctime)s %(levelname)s %(message)s")
     app = RoutedSearchApp(args.index) if args.routed else SearchApp(args.index)
     # block on the startup arena pre-touch before taking traffic: this box
     # faults anonymous pages at ~5.4 s/GB (any parallelism) but reuses hot

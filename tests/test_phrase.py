@@ -154,3 +154,37 @@ def test_phrase_local_rank_engine_and_fallback(spark, tmp_path_factory):
         pq.write_table(t, f)
     assert P.phrase_search_local(out, phrase, k=5) == want
     assert (out, 0) in P._RANK_INVALID
+
+
+def test_phrase_search_written_applies_tombstones(spark, tmp_path_factory):
+    """A tombstoned doc that holds the phrase leaves the distributed phrase
+    top-k (match set and phrase df), which then equals the serving top-k
+    over the same tombstones."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ucuddle_search_engine_spark.operators.phrase import phrase_search_local
+    from ucuddle_search_engine_spark.operators.wand import SegmentSearcher
+    from ucuddle_search_engine_spark.plans.build_index import (
+        build_index_resumable,
+        phrase_search_written,
+    )
+    from ucuddle_search_engine_spark.synth import synth_corpus
+
+    out = str(tmp_path_factory.mktemp("idx_phrase_dead"))
+    build_index_resumable(spark, synth_corpus(spark, 200, partitions=2), out,
+                          n_units=1, write_postings=True)
+    phrase = ["t0", "t1"]
+    top = phrase_search_written(spark, out, phrase, k=5).collect()[0]["doc_id"]
+    os.makedirs(os.path.join(out, "tombstones"))
+    pq.write_table(pa.table({"doc_id": pa.array([top], pa.int64())}),
+                   os.path.join(out, "tombstones", "part-0.parquet"))
+    got = [(r["doc_id"], round(r["score"], 9)) for r in
+           phrase_search_written(spark, out, phrase, k=5).collect()]
+    assert got and top not in [d for d, _ in got]
+    dead = np.asarray(SegmentSearcher.open_local(out).tombstones, dtype=np.int64)
+    assert got == [(d, round(s, 9)) for d, s in
+                   phrase_search_local(out, phrase, k=5, dead=dead)]

@@ -9,8 +9,9 @@ both ways —
   pruned : partitionBy(tb) + sortWithinPartitions(term) + p1
            (plans.build_index.write_tstats, the round-4 layout)
 
-— then measures the serving tier's cold lookup path (pyarrow dataset filter,
-exactly what SegmentSearcher._read_tstats_local runs) for single terms and
+— then measures a cold lookup through a pyarrow dataset filter (the path
+SegmentSearcher._read_tstats_local took before it moved to resident footers,
+operators/storefiles) for single terms and
 4-term queries, plus the one-off cost of the round-3 eager open (materialize
 the whole dictionary into a dict) for contrast. Writes BENCH/vocab_lookup.json.
 
@@ -45,7 +46,7 @@ def term_of(i: int) -> str:
 
 
 def lookup_pruned(path: str, terms: list[str]) -> int:
-    """The serving tier's cold lookup (SegmentSearcher._read_tstats_local)."""
+    """A tb-pruned cold lookup through a pyarrow dataset filter."""
     import pyarrow.dataset as pds
 
     ds = pds.dataset(path, partitioning="hive")

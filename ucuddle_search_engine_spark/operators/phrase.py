@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bm25 import B, K1, idf_col, tf_norm_col
+from .storefiles import StoreFiles
 
 
 def phrase_match_join(postings: DataFrame, terms: list[str], field: int = 0) -> DataFrame:
@@ -244,12 +245,14 @@ class PhraseKeysCache:
 
 def phrase_search_local(store_dir: str, terms: list[str], k: int = 10,
                         field: int = 0, dead=None,
-                        cache: PhraseKeysCache | None = None) -> list[tuple[int, float]]:
+                        cache: PhraseKeysCache | None = None,
+                        files=None) -> list[tuple[int, float]]:
     """Serving-tier quoted-phrase top-k over a written store's positional
-    sidecar — pyarrow pruned read + numpy adjacency, NO Spark job (the
+    sidecar — keyed row-group read + numpy adjacency, NO Spark job (the
     match_phrase analogue of SegmentSearcher.search_local). Bit-identical
-    scores and ordering to phrase_search_written: the read prunes to the
-    phrase terms' tb directories and term-sorted row groups, adjacency is a
+    scores and ordering to phrase_search_written: the read touches only the
+    phrase terms' row groups, through `files` (the view's StoreFiles; a
+    fresh one for this call when None), adjacency is a
     sorted-key merge ((doc_id << 32) | position composite keys — "a b" holds
     at start position p iff key(doc,p)+1 is among b's keys), and the
     PhraseQuery pseudo-term BM25 replicates idf_col/tf_norm_col's float op
@@ -287,7 +290,7 @@ def phrase_search_local(store_dir: str, terms: list[str], k: int = 10,
         mem.query_begin()
         try:
             return _phrase_search_local_impl(store_dir, terms, k, field,
-                                             dead, cache)
+                                             dead, cache, files)
         finally:
             mem.query_end()
             # idle-time arena re-warm AFTER the active mark drops: a cold
@@ -298,23 +301,23 @@ def phrase_search_local(store_dir: str, terms: list[str], k: int = 10,
 
 
 def _phrase_search_local_impl(store_dir: str, terms: list[str], k: int,
-                              field: int, dead, cache) -> list[tuple[int, float]]:
+                              field: int, dead, cache, files) -> list[tuple[int, float]]:
     import math
 
     import numpy as np
 
-    root = os.path.join(store_dir, "postings")
+    files = files or StoreFiles(store_dir)
     res = None
     if field == 0 and len(terms) < 250 and (store_dir, field) not in _RANK_INVALID:
         offsets = _token_offsets(store_dir, cache)
         if offsets is not None:
-            loaded = _load_entries(root, terms, field, cache, offsets)
+            loaded = _load_entries(files, terms, field, cache, offsets)
             if loaded is None:  # a position overflowed its doc span
                 _RANK_INVALID.add((store_dir, field))
             else:
                 res = _match_rank(loaded, terms, offsets)
     if res is None:
-        loaded = _load_entries(root, terms, field, cache, None)
+        loaded = _load_entries(files, terms, field, cache, None)
         res = _match_key(loaded, terms)
     uniq, tf, first_docs, first_dls = res
     if not len(uniq):
@@ -392,10 +395,11 @@ def _token_offsets(store_dir: str, cache):
     return offsets
 
 
-def _load_entries(root: str, terms: list[str], field: int, cache,
+def _load_entries(files, terms: list[str], field: int, cache,
                   offsets):
     """Per-distinct-term sidecar entries, LRU-cached: cache hits skip the
-    read, misses share ONE tb-/row-group-pruned scan. Key form (offsets is
+    read, misses share ONE keyed read of their row groups (`files`, a
+    storefiles.StoreFiles). Key form (offsets is
     None): (sorted (doc<<32)|pos keys, docs, doclens). Rank form: (sorted
     token ranks, docs, per-row tfs, doclens, packed rank bitmap) — returns
     None if any position falls outside its doc's offsets span (docs.doclen
@@ -403,9 +407,6 @@ def _load_entries(root: str, terms: list[str], field: int, cache,
     to fall back to key form."""
     import numpy as np
     import pyarrow.compute as pc
-    import pyarrow.dataset as pds
-
-    from ..functions.hashing import term_buckets
 
     form = "k" if offsets is None else "r"
     total = int(offsets[-1]) if offsets is not None else 0
@@ -427,18 +428,8 @@ def _load_entries(root: str, terms: list[str], field: int, cache,
         # table's real size after the read, which only touches the delta.
         mem.retain_arrow_memory()
         arena = mem.prefault_async(max(total * 4, 512 << 20))
-        d = pds.dataset(root, format="parquet", partitioning="hive")
-        # OR-of-equalities, not isin: parquet row-group stats pruning skips
-        # to each term's contiguous run only for ==/OR guarantees (see
-        # wand.pa_points_filter) — on the term-major sidecar this is the
-        # difference between reading the phrase terms and the whole bucket
-        from .wand import pa_points_filter
-
-        flt = pa_points_filter("term", need) & (pds.field("field") == field)
-        if "tb" in d.schema.names:
-            flt = flt & pds.field("tb").isin(term_buckets(need))
-        tab = d.to_table(filter=flt,
-                         columns=["term", "doc_id", "positions", "doclen"])
+        tab = files.read("postings", "term", need,
+                         ["term", "doc_id", "positions", "doclen", "field"], [field])
         # ~3 position-width copies live at the build's peak (delta, cumsum
         # out, ranks sum) + per-term bitmap + the pack windows' bool
         # buffers; async so the touch overlaps the sort below

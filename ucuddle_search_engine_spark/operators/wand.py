@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.varbyte import decode_doc_ids_concat, vb_decode_concat
 from .bm25 import B, K1, DEFAULT_BOOSTS
+from .storefiles import StoreFiles
 
 # Stored block bounds (max_impact) and live contributions are computed from
 # avgdl values that may differ at the last ULP (e.g. cstats persisted through
@@ -40,32 +41,6 @@ UB_EPS = 1e-9
 
 
 _GSM_POOL = None
-
-
-#: above this many values, pa_points_filter falls back to isin — a huge OR
-#: expression costs more to build/evaluate per row group than the residual
-#: pruning it buys (a full-vocabulary fuzzy expansion scans its buckets anyway)
-_POINTS_OR_CAP = 512
-
-
-def pa_points_filter(col: str, values):
-    """Equality-set dataset filter `col ∈ values`, built as an OR of ==
-    comparisons. Semantically identical to pds.field(col).isin(values), but
-    parquet row-group statistics pruning evaluates ==/OR guarantees and NOT
-    isin (measured on a term-major 5M-doc store: a 58-term isin kept 31/31
-    row groups per file — a full-bucket decompress, 17.6 s — while the same
-    58 terms as an OR kept 4/31), so the OR form turns wide point-lookup
-    reads from bucket-sized to value-sized. Partition-column (directory)
-    pruning handles isin fine — this matters for ROW-GROUP stats only."""
-    import functools
-    import operator
-
-    import pyarrow.dataset as pds
-
-    vals = sorted(set(values))
-    if not vals or len(vals) > _POINTS_OR_CAP:
-        return pds.field(col).isin(vals)
-    return functools.reduce(operator.or_, (pds.field(col) == v for v in vals))
 
 
 def _gsm_pool():
@@ -1177,6 +1152,7 @@ class SegmentSearcher:
         self._term_memo: dict[tuple[str, int], float | None] = {}
         self._memo_lock = threading.Lock()
         self._pds: dict[str, object] = {}
+        self.files = StoreFiles(store_dir) if store_dir is not None else None
         self._decode_cache: DecodeCache | None = None  # built on first search_local
         self._pool = None  # lazy shard-parallel scoring pool (search_local)
         import collections
@@ -1272,15 +1248,7 @@ class SegmentSearcher:
                 for r in self.tstats_lookup_df(missing, fields).collect()]
 
     def _read_tstats_local(self, missing: list[str], fields: list[int]):
-        import pyarrow.dataset as pds
-
-        from ..functions.hashing import term_buckets
-
-        ds = self._dataset("tstats")
-        flt = pa_points_filter("term", missing) & pds.field("field").isin(sorted(fields))
-        if "tb" in ds.schema.names:
-            flt = flt & pds.field("tb").isin(term_buckets(missing))
-        tt = ds.to_table(filter=flt, columns=["term", "field", "df"])
+        tt = self.files.read("tstats", "term", missing, ["term", "field", "df"], fields)
         return zip(tt["term"].to_pylist(), tt["field"].to_pylist(), tt["df"].to_pylist())
 
     # below this many selected postings (a query's Σdf) an OR query is
@@ -1431,6 +1399,7 @@ class SegmentSearcher:
         obj._term_memo = {}
         obj._memo_lock = threading.Lock()
         obj._pds = {}
+        obj.files = StoreFiles(store_dir)
         obj._decode_cache = None
         obj._pool = None
         import collections
@@ -1481,33 +1450,16 @@ class SegmentSearcher:
         return self
 
     def _dataset(self, rel: str):
-        """Memoized pyarrow dataset handle for <store>/<rel> — discovery
-        (file listing + partition inference) costs ~10 ms on a 256-file store
-        and would otherwise be paid on EVERY serving query. The serving tier
-        reopens the searcher on a store-generation change (scripts/serve.py),
-        so a cached handle can never go stale."""
+        """Memoized pyarrow dataset handle for <store>/<rel>, for the
+        once-per-view whole-bucket tstats scans of fuzzy expansion (keyed
+        reads go through self.files). The serving tier reopens the searcher
+        on a store-generation change (scripts/serve.py), so a cached handle
+        can never go stale."""
         import pyarrow.dataset as pds
 
         if rel not in self._pds:
-            ds = pds.dataset(os.path.join(self.store_dir, rel), partitioning="hive")
-            # mixed-width block_no guard: a store whose units were written
-            # both before and after the int32→int64 block_no widening holds
-            # both parquet types under one dataset, and pds.dataset() adopts
-            # the FIRST fragment's schema — if that happens to be an int32
-            # unit, the int64 fragments would fail (or unsafely downcast) at
-            # scan time. Pin the dataset schema to int64; int32 fragments
-            # upcast losslessly.
-            import pyarrow as pa
-
-            if "block_no" in ds.schema.names and pa.types.is_int32(
-                ds.schema.field("block_no").type
-            ):
-                idx = ds.schema.get_field_index("block_no")
-                ds = pds.dataset(
-                    os.path.join(self.store_dir, rel), partitioning="hive",
-                    schema=ds.schema.set(idx, pa.field("block_no", pa.int64())),
-                )
-            self._pds[rel] = ds
+            self._pds[rel] = pds.dataset(os.path.join(self.store_dir, rel),
+                                         partitioning="hive")
         return self._pds[rel]
 
     def search_local(self, terms: list[str], k: int = 20, mode: str = "and",
@@ -1542,10 +1494,10 @@ class SegmentSearcher:
                            algorithm: str = "auto", offset: int = 0,
                            round_dp: int | None = None) -> list[tuple[int, float]]:
         """The serving-tier read path: identical ranking to search_terms, but
-        executed entirely driver-side — a pyarrow dataset read of the
-        directory-pruned store (tb partition filter + term row-group
-        predicate) feeding the same per-shard numpy scorers. No Spark job, so
-        latency is file-read + decode (ms), not job scheduling (~1 s floor).
+        executed entirely driver-side — keyed reads of the query terms' row
+        groups through the view's resident footers (self.files) feeding the
+        same per-shard numpy scorers. No Spark job, so latency is file-read
+        + decode (ms), not job scheduling (~1 s floor).
 
         This is how the 1000-executor picture serves queries too: the INDEX
         is built by Spark; point reads hit the layout directly (the reference
@@ -1553,8 +1505,6 @@ class SegmentSearcher:
         a written store (store_dir set — load_searcher does)."""
         if self.store_dir is None:
             raise ValueError("search_local needs a written store (store_dir)")
-        import pyarrow.dataset as pds
-
         terms = sorted(set(terms))
         fields = sorted(self.boosts)
         if self._tstats_cache is not None:
@@ -1759,14 +1709,12 @@ class SegmentSearcher:
 
     def _term_chains(self, terms: list[str], fields: list[int]) -> dict:
         """term → [(shard, unit|None, field, chain-frame, n_postings)] from
-        the segments dataset, LRU-cached per term: repeat queries skip the
-        to_table read, the arrow→pandas conversion AND the per-query groupby
-        (which together cost ~200 ms/query on a 5M-doc store's head terms).
-        Terms absent from the store cache an empty list — absence is an
-        answer too. Frames are immutable once built (threads share them)."""
-        import pyarrow.dataset as pds
-
-        from ..functions.hashing import term_buckets
+        the segments files, LRU-cached per term: repeat queries skip the
+        row-group read and the chain build (which together cost ~200
+        ms/query on a 5M-doc store's head terms). Terms absent from the
+        store cache an empty list — absence is an answer too. Frames are
+        immutable once built (threads share them)."""
+        import pyarrow.compute as pc
 
         out: dict = {}
         with self._memo_lock:
@@ -1780,11 +1728,7 @@ class SegmentSearcher:
                     missing.append(t)
         if not missing:
             return out
-        data = self._dataset("segments")
-        flt = pa_points_filter("term", missing) & pds.field("field").isin(fields)
-        if "tb" in data.schema.names:
-            flt = flt & pds.field("tb").isin(term_buckets(missing))
-        tab = data.to_table(filter=flt)
+        tab = self.files.read("segments", "term", missing, fields=fields)
         built: dict[str, list] = {t: [] for t in missing}
         if tab.num_rows:
             # group (term, shard[, unit], field) rows into _ChainCols chains
@@ -1793,8 +1737,6 @@ class SegmentSearcher:
             # a 12 s cold 58-term fuzzy fill at 5M docs (profiled; decode
             # itself was 2 s). Arrow dictionary-encode factorizes the term
             # strings C-side so the sort keys are all integers.
-            import pyarrow.compute as pc
-
             has_unit = "unit" in tab.schema.names
             term_d = pc.dictionary_encode(tab.column("term")).combine_chunks()
             tid = term_d.indices.to_numpy()

@@ -554,10 +554,15 @@ def phrase_search_written(spark: SparkSession, out_dir: str, phrase: list[str],
     the term-partitioned sidecar, adjacency is the position-join chain of
     operators/phrase, scoring is the PhraseQuery pseudo-term BM25. The corpus
     is never re-read or re-tokenized. Phrase terms must already be analyzed
-    with the store's analyzer (load_analyzer)."""
+    with the store's analyzer (load_analyzer). Tombstoned docs are dropped
+    from the postings before matching, so they leave both the match set and
+    the phrase df (as phrase_search_local(dead=...) does)."""
     from ..operators.phrase import phrase_search
 
     post = read_postings_sidecar(spark, out_dir, phrase)
+    ts_path = os.path.join(out_dir, "tombstones")
+    if os.path.isdir(ts_path):
+        post = post.join(spark.read.parquet(ts_path).select("doc_id"), "doc_id", "left_anti")
     docs = spark.read.parquet(os.path.join(out_dir, "docs"))
     dstats = docs.select("doc_id", F.lit(field).alias("field"), "doclen")
     with open(os.path.join(out_dir, "cstats.json")) as f:
