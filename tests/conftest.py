@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -22,3 +23,36 @@ def spark():
 @pytest.fixture(scope="session")
 def documents(spark):
     return spark.read.parquet(f"{SF_TINY}/documents.parquet").cache()
+
+
+@pytest.fixture(scope="session")
+def built_store(spark, tmp_path_factory):
+    """Factory for written stores: built_store(n_docs, partitions, **build_kw)
+    returns the path of a private copy of the store that build_index_resumable
+    writes for synth_corpus(spark, n_docs, partitions) with build_kw (at
+    `dest` when given). Each distinct store is built once per session, so
+    tests that serve, tombstone or rewrite the same store share one Spark
+    build; every caller may mutate its copy."""
+    import inspect
+    import shutil
+
+    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable
+    from ucuddle_search_engine_spark.synth import synth_corpus
+
+    built: dict[tuple, str] = {}
+    sig = inspect.signature(build_index_resumable)
+
+    def get(n_docs: int, partitions: int, dest: str | None = None, **build_kw) -> str:
+        args = sig.bind_partial(**build_kw)
+        args.apply_defaults()  # equal builds share a key however they are spelled
+        key = (n_docs, partitions, tuple(sorted((k, repr(v)) for k, v in args.arguments.items())))
+        if key not in built:
+            src = str(tmp_path_factory.mktemp("built_store"))
+            build_index_resumable(spark, synth_corpus(spark, n_docs, partitions=partitions),
+                                  src, **build_kw)
+            built[key] = src
+        dest = dest or os.path.join(str(tmp_path_factory.mktemp("store")), "store")
+        shutil.copytree(built[key], dest)
+        return dest
+
+    return get

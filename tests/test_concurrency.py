@@ -34,13 +34,8 @@ def _run(local: SegmentSearcher, terms, mode):
     return [(d, round(s, 9)) for d, s in local.search_local(terms, k=10, mode=mode)]
 
 
-def test_search_local_concurrent_parity(spark, tmp_path_factory):
-    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable
-    from ucuddle_search_engine_spark.synth import synth_corpus
-
-    corpus = synth_corpus(spark, 400, partitions=4).cache()
-    out = str(tmp_path_factory.mktemp("idx_conc"))
-    build_index_resumable(spark, corpus, out, n_units=2, write_postings=True)
+def test_search_local_concurrent_parity(built_store):
+    out = built_store(400, 4, n_units=2, write_postings=True)
 
     # single-threaded reference on a FRESH searcher (its own caches)
     ref_searcher = SegmentSearcher.open_local(out)

@@ -12,11 +12,7 @@ import os
 import pytest
 
 from ucuddle_search_engine_spark.operators.wand import SegmentSearcher
-from ucuddle_search_engine_spark.plans.build_index import (
-    build_index_resumable,
-    upgrade_segments_layout,
-)
-from ucuddle_search_engine_spark.synth import synth_corpus
+from ucuddle_search_engine_spark.plans.build_index import upgrade_segments_layout
 
 QUERIES = ((["t0", "t1"], "or"), (["t0", "t1", "t2", "t3"], "or"),
            (["t5", "t40"], "and"), (["t123"], "or"))
@@ -28,12 +24,8 @@ def _ranked(store, terms, mode):
 
 
 @pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
-    corpus = synth_corpus(spark, 300, partitions=4).cache()
-    out = str(tmp_path_factory.mktemp("idx_layout"))
-    build_index_resumable(spark, corpus, out, n_units=2, write_postings=True)
-    corpus.unpersist()
-    return out
+def store(built_store):
+    return built_store(300, 4, n_units=2, write_postings=True)
 
 
 def test_segments_written_term_major(store):

@@ -48,20 +48,16 @@ def test_phrase_search_scored(idx, doc_texts):
     assert _py_phrase_tf(doc_texts[out[0]["doc_id"]], phrase) > 0
 
 
-def test_phrase_search_over_written_store(spark, tmp_path_factory):
+def test_phrase_search_over_written_store(spark, built_store):
     """Quoted-phrase top-k straight from a WRITTEN store's positional sidecar
     must equal the in-memory phrase engine — the corpus is never re-read."""
     from pyspark.sql import functions as F
 
-    from ucuddle_search_engine_spark.plans.build_index import (
-        build_index_resumable,
-        phrase_search_written,
-    )
+    from ucuddle_search_engine_spark.plans.build_index import phrase_search_written
     from ucuddle_search_engine_spark.synth import synth_corpus
 
     corpus = synth_corpus(spark, 300, partitions=4).cache()
-    out = str(tmp_path_factory.mktemp("idx_phrase"))
-    build_index_resumable(spark, corpus, out, n_units=2, write_postings=True)
+    out = built_store(300, 4, n_units=2, write_postings=True)
 
     idx = InvertedIndex.build(corpus, num_shards=3)
     phrase = ["t0", "t1"]
@@ -113,7 +109,7 @@ def test_phrase_search_over_written_store(spark, tmp_path_factory):
     assert len(tiny._d) <= 2  # the current query's terms at most, never growth
 
 
-def test_phrase_local_rank_engine_and_fallback(spark, tmp_path_factory):
+def test_phrase_local_rank_engine_and_fallback(built_store):
     """The content-field rank-bitmap engine must (a) actually engage on a
     healthy store, (b) agree exactly with the forced sorted-key engine, and
     (c) permanently fall back — with identical results — when docs.doclen
@@ -123,12 +119,8 @@ def test_phrase_local_rank_engine_and_fallback(spark, tmp_path_factory):
     import pyarrow.parquet as pq
 
     from ucuddle_search_engine_spark.operators import phrase as P
-    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable
-    from ucuddle_search_engine_spark.synth import synth_corpus
 
-    corpus = synth_corpus(spark, 200, partitions=2).cache()
-    out = str(tmp_path_factory.mktemp("idx_rank"))
-    build_index_resumable(spark, corpus, out, n_units=1, write_postings=True)
+    out = built_store(200, 2, n_units=1, write_postings=True)
 
     phrase = ["t0", "t1"]
     want = P.phrase_search_local(out, phrase, k=5)
@@ -156,7 +148,7 @@ def test_phrase_local_rank_engine_and_fallback(spark, tmp_path_factory):
     assert (out, 0) in P._RANK_INVALID
 
 
-def test_phrase_search_written_applies_tombstones(spark, tmp_path_factory):
+def test_phrase_search_written_applies_tombstones(spark, built_store):
     """A tombstoned doc that holds the phrase leaves the distributed phrase
     top-k (match set and phrase df), which then equals the serving top-k
     over the same tombstones."""
@@ -168,15 +160,9 @@ def test_phrase_search_written_applies_tombstones(spark, tmp_path_factory):
 
     from ucuddle_search_engine_spark.operators.phrase import phrase_search_local
     from ucuddle_search_engine_spark.operators.wand import SegmentSearcher
-    from ucuddle_search_engine_spark.plans.build_index import (
-        build_index_resumable,
-        phrase_search_written,
-    )
-    from ucuddle_search_engine_spark.synth import synth_corpus
+    from ucuddle_search_engine_spark.plans.build_index import phrase_search_written
 
-    out = str(tmp_path_factory.mktemp("idx_phrase_dead"))
-    build_index_resumable(spark, synth_corpus(spark, 200, partitions=2), out,
-                          n_units=1, write_postings=True)
+    out = built_store(200, 2, n_units=1, write_postings=True)
     phrase = ["t0", "t1"]
     top = phrase_search_written(spark, out, phrase, k=5).collect()[0]["doc_id"]
     os.makedirs(os.path.join(out, "tombstones"))

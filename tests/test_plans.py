@@ -98,14 +98,8 @@ def test_written_store_partition_pruning(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def written_store(spark, tmp_path_factory):
-    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable
-
-    out = str(tmp_path_factory.mktemp("idx_layout"))
-    corpus = synth_corpus(spark, 300, partitions=4)
-    build_index_resumable(spark, corpus, out, n_units=2, num_shards=3,
-                          write_postings=True)
-    return out
+def written_store(built_store):
+    return built_store(300, 4, n_units=2, num_shards=3, write_postings=True)
 
 
 def test_postings_sidecar_lookup_prunes(spark, written_store):

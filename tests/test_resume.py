@@ -70,24 +70,22 @@ def test_manifest_metrics_and_noop_rerun(spark, corpus, tmp_path_factory):
     assert again["completed_units"] == 0
 
 
-def test_written_index_queryable(spark, corpus, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("idx_query"))
-    build_index_resumable(spark, corpus, out, n_units=N_UNITS)
+def test_written_index_queryable(spark, built_store):
+    out = built_store(N_DOCS, 4, n_units=N_UNITS)
     searcher = load_searcher(spark, out)
     res = searcher.search_terms(["t0", "t1"], k=5, mode="or").collect()
     assert 0 < len(res) <= 5
     assert all(r["score"] > 0 for r in res)
 
 
-def test_multiunit_and_wand_match_exact(spark, corpus, tmp_path_factory):
+def test_multiunit_and_wand_match_exact(spark, corpus, built_store):
     """Regression: stores written with n_units>1 reuse block_no ranges across
     units (overlapping doc ranges per (shard,term,field)); AND intersection
     and WAND skipping must still match the exact in-memory engine — the
     searcher builds one posting chain per (term, field, unit)."""
     from ucuddle_search_engine_spark.operators.bm25 import InvertedIndex
 
-    out = str(tmp_path_factory.mktemp("idx_multiunit"))
-    build_index_resumable(spark, corpus, out, n_units=N_UNITS)
+    out = built_store(N_DOCS, 4, n_units=N_UNITS)
     searcher = load_searcher(spark, out)
     idx = InvertedIndex.build(corpus, num_shards=3)
     terms = ["t0", "t1"]
@@ -156,12 +154,11 @@ def test_auto_shards_and_geometry_invalidation(spark, corpus, tmp_path_factory):
     assert res2["completed_units"] == 0
 
 
-def test_tombstoned_docs_vanish_from_results(spark, corpus, tmp_path_factory):
+def test_tombstoned_docs_vanish_from_results(spark, built_store):
     """delete-docs writes tombstones; search anti-filters them BEFORE the
     top-k cut (successor docs fill the slots), scores keep corpus-global
     stats — ES soft-delete-until-merge semantics."""
-    out = str(tmp_path_factory.mktemp("idx_tomb"))
-    build_index_resumable(spark, corpus, out, n_units=N_UNITS)
+    out = built_store(N_DOCS, 4, n_units=N_UNITS)
     terms = ["t0", "t1"]
     pre = load_searcher(spark, out)  # opened before any tombstone exists
     dead = [r["doc_id"] for r in pre.search_terms(terms, k=2, mode="or").collect()]
@@ -295,14 +292,13 @@ def test_added_at_in_store(spark, corpus, tmp_path_factory):
     assert docs.filter(F.col("added_at") >= F.lit("2024-01-02 00:00:00").cast("timestamp")).count() == 0
 
 
-def test_search_local_matches_spark_path(spark, corpus, tmp_path_factory):
+def test_search_local_matches_spark_path(spark, built_store):
     """The driver-side serving path (pyarrow read, no Spark job) must return
     exactly the distributed ranking — same scorers, same store, including
     tombstone filtering and pagination."""
-    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable, load_searcher
+    from ucuddle_search_engine_spark.plans.build_index import load_searcher
 
-    out = str(tmp_path_factory.mktemp("idx_local"))
-    build_index_resumable(spark, corpus, out, n_units=N_UNITS)
+    out = built_store(N_DOCS, 4, n_units=N_UNITS)
     s = load_searcher(spark, out).prepare()
 
     cases = [(["t0", "t1"], "or"), (["t0", "t1"], "and"), (["module", "t3"], "or"),
@@ -343,7 +339,7 @@ def test_search_local_matches_spark_path(spark, corpus, tmp_path_factory):
     assert got == want
 
 
-def test_serve_http_tier(spark, corpus, tmp_path_factory):
+def test_serve_http_tier(spark, built_store):
     """The stdlib-HTTP serving tier (scripts/serve.py) answers /search with
     the exact distributed-path ranking plus doc metadata, with no Spark job
     on the hot path (SegmentSearcher.open_local never touches a session)."""
@@ -359,10 +355,9 @@ def test_serve_http_tier(spark, corpus, tmp_path_factory):
         from serve import SearchApp, make_handler
     finally:
         sys.path.remove(sys_path_added)
-    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable, load_searcher
+    from ucuddle_search_engine_spark.plans.build_index import load_searcher
 
-    out = str(tmp_path_factory.mktemp("idx_serve"))
-    build_index_resumable(spark, corpus, out, n_units=2)
+    out = built_store(N_DOCS, 4, n_units=2)
     app = SearchApp(out)
     srv = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(app))
     port = srv.server_address[1]
@@ -452,14 +447,12 @@ def test_admin_add_docs_upsert(spark, tmp_path_factory, monkeypatch):
         assert got == want, (terms, mode)
 
 
-def test_open_local_reads_tombstones(spark, corpus, tmp_path_factory):
+def test_open_local_reads_tombstones(spark, built_store):
     """The Spark-free store open (serving tier) must pick up tombstones too —
     a deleted doc can never be served."""
     from ucuddle_search_engine_spark.operators.wand import SegmentSearcher
-    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable
 
-    out = str(tmp_path_factory.mktemp("idx_local_tomb"))
-    build_index_resumable(spark, corpus, out, n_units=2)
+    out = built_store(N_DOCS, 4, n_units=2)
     pre = SegmentSearcher.open_local(out)
     dead = [d for d, _ in pre.search_local(["t0"], k=2, mode="or")]
     spark.createDataFrame([(i,) for i in dead], "doc_id long").write.mode("append").parquet(
@@ -470,7 +463,7 @@ def test_open_local_reads_tombstones(spark, corpus, tmp_path_factory):
     assert not set(dead) & {d for d, _ in s.search_local(["t0"], k=10, mode="or")}
 
 
-def test_serve_highlighted_snippets(spark, corpus, tmp_path_factory):
+def test_serve_highlighted_snippets(corpus, built_store):
     """/search?highlight=1 over a store with the positional sidecar returns
     bolded densest-window snippets (C7) — computed Spark-free from the
     sidecar + stored content, never re-reading the corpus."""
@@ -482,10 +475,8 @@ def test_serve_highlighted_snippets(spark, corpus, tmp_path_factory):
         from serve import SearchApp
     finally:
         _sys.path.remove(scripts)
-    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable
 
-    out = str(tmp_path_factory.mktemp("idx_serve_hl"))
-    build_index_resumable(spark, corpus, out, n_units=2, write_postings=True)
+    out = built_store(N_DOCS, 4, n_units=2, write_postings=True)
     app = SearchApp(out)
     hits = app.search("t0 t1", k=5, mode="or", highlight=True)
     assert hits and all("snippet" in h for h in hits)
@@ -504,7 +495,7 @@ def test_serve_highlighted_snippets(spark, corpus, tmp_path_factory):
     assert got == want
 
 
-def test_serve_fuzzy_matches_spark_fuzzy(spark, corpus, tmp_path_factory):
+def test_serve_fuzzy_matches_spark_fuzzy(spark, built_store):
     """Serving-tier fuzzy (?fuzzy=1): the pure-Python expansion must equal the
     Spark expand_terms on the same dictionary, and the fuzzy ranking must
     match fuzzy_search over the loaded store."""
@@ -521,10 +512,9 @@ def test_serve_fuzzy_matches_spark_fuzzy(spark, corpus, tmp_path_factory):
         expand_terms_py,
         fuzzy_search,
     )
-    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable, load_searcher
+    from ucuddle_search_engine_spark.plans.build_index import load_searcher
 
-    out = str(tmp_path_factory.mktemp("idx_serve_fz"))
-    build_index_resumable(spark, corpus, out, n_units=2)
+    out = built_store(N_DOCS, 4, n_units=2)
     s = load_searcher(spark, out).prepare()
     qterms = ["modul", "t00"]  # 1-edit typos
 
@@ -542,7 +532,7 @@ def test_serve_fuzzy_matches_spark_fuzzy(spark, corpus, tmp_path_factory):
     assert [(h["doc_id"], h["score"]) for h in hits] == want and hits
 
 
-def test_serve_columnar_fuzzy_expansion_equivalence(spark, corpus, tmp_path_factory):
+def test_serve_columnar_fuzzy_expansion_equivalence(spark, tmp_path_factory, built_store):
     """Stores persisting tlen/bagsig (write_tstats): the serving tier's
     columnar expansion (_expand_columnar — numpy prefilters over scan output,
     no Python pass over the vocabulary) must produce EXACTLY expand_terms_py's
@@ -559,8 +549,7 @@ def test_serve_columnar_fuzzy_expansion_equivalence(spark, corpus, tmp_path_fact
     from ucuddle_search_engine_spark.operators.fuzzy import expand_terms_py
     from ucuddle_search_engine_spark.plans.build_index import upgrade_tstats
 
-    out = str(tmp_path_factory.mktemp("idx_colfz"))
-    build_index_resumable(spark, corpus, out, n_units=2)
+    out = built_store(N_DOCS, 4, n_units=2)
 
     app = SearchApp(out)
     view = app._view
@@ -610,13 +599,12 @@ def test_serve_columnar_fuzzy_expansion_equivalence(spark, corpus, tmp_path_fact
         [(h["doc_id"], h["score"]) for h in h_legacy] and h_up
 
 
-def test_open_local_lazy_and_memo_lru(spark, corpus, tmp_path_factory):
+def test_open_local_lazy_and_memo_lru(spark, built_store):
     """A store written in the tb-partitioned tstats layout opens WITHOUT
     materializing the dictionary (serving RAM is O(memo cap), not
     O(vocabulary)); cold terms resolve through pruned reads into a bounded
     LRU memo, and the ranking equals the eager/prepared path exactly."""
-    out = str(tmp_path_factory.mktemp("idx_lazy"))
-    build_index_resumable(spark, corpus, out, n_units=2)
+    out = built_store(N_DOCS, 4, n_units=2)
     from ucuddle_search_engine_spark.operators.wand import SegmentSearcher
 
     local = SegmentSearcher.open_local(out)
@@ -646,7 +634,7 @@ def test_open_local_lazy_and_memo_lru(spark, corpus, tmp_path_factory):
     assert got == want
 
 
-def test_serve_hot_reload(spark, corpus, tmp_path_factory):
+def test_serve_hot_reload(spark, corpus, tmp_path_factory, built_store):
     """ES-refresh analogue: the serving tier notices a store-generation change
     (tombstones written in place; a merged store swapped into the served
     path) and reopens WITHOUT a restart — new writes become searchable."""
@@ -661,8 +649,7 @@ def test_serve_hot_reload(spark, corpus, tmp_path_factory):
         _sys.path.remove(scripts)
 
     root = str(tmp_path_factory.mktemp("serve_reload"))
-    served = os.path.join(root, "store")
-    build_index_resumable(spark, corpus, served, n_units=2)
+    served = built_store(N_DOCS, 4, dest=os.path.join(root, "store"), n_units=2)
     app = SearchApp(served)
     hits = app.search("t0 t1", k=5, mode="or")
     assert hits
@@ -688,7 +675,7 @@ def test_serve_hot_reload(spark, corpus, tmp_path_factory):
     assert any(h["path"] == "xq/new.py" for h in hits3)
 
 
-def test_serve_fuzzy_prefix_band_parity(spark, corpus, tmp_path_factory):
+def test_serve_fuzzy_prefix_band_parity(spark, built_store):
     """?fuzzy=1&prefix=1 (ES prefix_length): the serving tier loads ONLY the
     query terms' first-char vocabulary buckets and must rank exactly like the
     Spark fuzzy path with the same prefix_length."""
@@ -702,8 +689,7 @@ def test_serve_fuzzy_prefix_band_parity(spark, corpus, tmp_path_factory):
         _sys.path.remove(scripts)
     from ucuddle_search_engine_spark.operators.fuzzy import fuzzy_search
 
-    out = str(tmp_path_factory.mktemp("idx_serve_fzp"))
-    build_index_resumable(spark, corpus, out, n_units=2)
+    out = built_store(N_DOCS, 4, n_units=2)
     s = load_searcher(spark, out)
     qterms = ["modul", "t00"]
 
@@ -719,7 +705,7 @@ def test_serve_fuzzy_prefix_band_parity(spark, corpus, tmp_path_factory):
     assert app._vocab_full is None
 
 
-def test_serve_result_cache(spark, corpus, tmp_path_factory):
+def test_serve_result_cache(spark, built_store):
     """Request cache: a repeat query is served without touching the store;
     a store-generation change (tombstone) drops the cache with the reopen."""
     import sys as _sys
@@ -731,8 +717,7 @@ def test_serve_result_cache(spark, corpus, tmp_path_factory):
     finally:
         _sys.path.remove(scripts)
 
-    out = str(tmp_path_factory.mktemp("serve_cache"))
-    build_index_resumable(spark, corpus, out, n_units=2)
+    out = built_store(N_DOCS, 4, n_units=2)
     app = SearchApp(out)
     first = app.search("t0 t1", k=5, mode="or")
     assert first and ("t0 t1", 5, "or", False, False, 0, 0) in app._result_cache
@@ -749,15 +734,14 @@ def test_serve_result_cache(spark, corpus, tmp_path_factory):
     assert top not in [h["doc_id"] for h in fresh]
 
 
-def test_decode_cache_rank_parity_and_eviction(spark, corpus, tmp_path_factory):
+def test_decode_cache_rank_parity_and_eviction(spark, built_store):
     """The serving tier's decoded-block cache must never change a ranking:
     cold pass == warm pass == the Spark path, across modes/algorithms,
     pagination, and tombstones; a tiny cache cap (forced eviction, including
     mid-request) still returns identical results."""
     from ucuddle_search_engine_spark.operators.wand import SegmentSearcher
 
-    out = str(tmp_path_factory.mktemp("idx_dcache"))
-    build_index_resumable(spark, corpus, out, n_units=2)
+    out = built_store(N_DOCS, 4, n_units=2)
     ref = load_searcher(spark, out).prepare()
     local = SegmentSearcher.open_local(out)
 
@@ -804,7 +788,7 @@ def test_decode_cache_rank_parity_and_eviction(spark, corpus, tmp_path_factory):
     assert got == got2 and not set(dead) & set(got)
 
 
-def test_serve_concurrent_requests_and_reload(spark, corpus, tmp_path_factory):
+def test_serve_concurrent_requests_and_reload(spark, built_store):
     """Hammer the threaded serving tier from 8 threads (mixed query shapes,
     fuzzy prefix included, tiny decode-cache cap to force eviction churn)
     while the store generation changes mid-flight: zero exceptions, and every
@@ -820,8 +804,7 @@ def test_serve_concurrent_requests_and_reload(spark, corpus, tmp_path_factory):
     finally:
         _sys.path.remove(scripts)
 
-    out = str(tmp_path_factory.mktemp("serve_conc"))
-    build_index_resumable(spark, corpus, out, n_units=2)
+    out = built_store(N_DOCS, 4, n_units=2)
     app = SearchApp(out)
     app.searcher.DECODE_CACHE_POSTINGS = 512  # force cache churn
     pre = tuple((h["doc_id"], h["score"]) for h in app.search("t0 t1", k=5, mode="or"))
@@ -865,7 +848,7 @@ def test_serve_concurrent_requests_and_reload(spark, corpus, tmp_path_factory):
     assert observed <= {pre, post}, observed
 
 
-def test_serve_quoted_phrase(spark, corpus, tmp_path_factory):
+def test_serve_quoted_phrase(spark, built_store):
     """A quoted query ("t0 t1") routes to the Spark-free phrase path over the
     positional sidecar — same ranking as phrase_search_written — and the
     highlight/pagination plumbing still applies. Unquoted "t0 t1" must NOT
@@ -878,13 +861,9 @@ def test_serve_quoted_phrase(spark, corpus, tmp_path_factory):
         from serve import SearchApp
     finally:
         _sys.path.remove(scripts)
-    from ucuddle_search_engine_spark.plans.build_index import (
-        build_index_resumable,
-        phrase_search_written,
-    )
+    from ucuddle_search_engine_spark.plans.build_index import phrase_search_written
 
-    out = str(tmp_path_factory.mktemp("idx_serve_phrase"))
-    build_index_resumable(spark, corpus, out, n_units=2, write_postings=True)
+    out = built_store(N_DOCS, 4, n_units=2, write_postings=True)
     app = SearchApp(out)
 
     want = [(r["doc_id"], round(r["score"], 6)) for r in

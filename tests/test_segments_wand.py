@@ -444,14 +444,9 @@ def test_bad_algorithm_raises():
 
 
 @pytest.fixture(scope="module")
-def written_store(spark, tmp_path_factory):
+def written_store(built_store):
     """A 400-doc, 2-unit written store for the serving-tier tests."""
-    from ucuddle_search_engine_spark.plans.build_index import build_index_resumable
-
-    corpus = synth_corpus(spark, 400, partitions=4).cache()
-    out = str(tmp_path_factory.mktemp("idx_taat"))
-    build_index_resumable(spark, corpus, out, n_units=2, write_postings=True)
-    return out
+    return built_store(400, 4, n_units=2, write_postings=True)
 
 
 def test_or_scores_independent_of_cache_state(written_store):

@@ -20,8 +20,6 @@ import pytest
 
 from ucuddle_search_engine_spark.operators.phrase import phrase_search_local
 from ucuddle_search_engine_spark.operators.wand import SegmentSearcher
-from ucuddle_search_engine_spark.plans.build_index import build_index_resumable
-from ucuddle_search_engine_spark.synth import synth_corpus
 
 QUERIES = ((["t0", "t1"], "or"), (["t0", "t1", "t2", "t3"], "or"),
            (["t5", "t40"], "and"), (["t123"], "or"), (["t7", "zzzabsent"], "or"))
@@ -38,12 +36,8 @@ def _serve():
 
 
 @pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
-    corpus = synth_corpus(spark, 300, partitions=4).cache()
-    out = str(tmp_path_factory.mktemp("idx_storefiles"))
-    build_index_resumable(spark, corpus, out, n_units=2, write_postings=True)
-    corpus.unpersist()
-    return out
+def store(built_store):
+    return built_store(300, 4, n_units=2, write_postings=True)
 
 
 def _answers(store):
