@@ -6,11 +6,12 @@ any Spark job on the hot path:
   cstats.json, tombstones),
 - analyze the query with THE STORE'S analyzer (analyzer.json — the
   search_analyzer == index analyzer pin, crawler/functs_with_elastic.go:85-94),
-- rank via search_local (keyed row-group reads through the view's resident
-  parquet footers + the same numpy scorers the distributed path uses —
-  identical ranking, ms latency),
-- fetch the k hit titles from the docs files (the row groups holding the
-  ids, through the same footers), capitalized like the reference does (C6,
+- rank via search_local (keyed reads from the view's resident decoded row
+  groups — operators/storefiles: each row group is decoded once, on first
+  touch — + the same numpy scorers the distributed path uses — identical
+  ranking, ms latency),
+- fetch the k hit titles from the docs rows (the row groups holding the
+  ids, resident the same way), capitalized like the reference does (C6,
   web/elastic_interaction.py:84).
 
 stdlib http.server only — no framework dependencies.
@@ -425,9 +426,10 @@ class SearchApp:
     def _hydrate(self, view: _StoreView, terms: list[str],
                  hits: list[tuple[int, float]], highlight: bool) -> list[dict]:
         """Ranked (doc_id, score) pairs → response rows: titles/repo/path from
-        the docs files (the row groups holding the ids) and, when asked,
-        bolded snippets from the positional sidecar — shared by the term and
-        phrase paths."""
+        the docs rows and, when asked, bolded snippets from the positional
+        sidecar — shared by the term and phrase paths. Both are keyed reads
+        of the view's resident row groups (decoded once per view, so a warm
+        highlight costs slices, not a docs `content` and sidecar decode)."""
         if not hits:
             return []
         files = view.searcher.files
@@ -439,7 +441,7 @@ class SearchApp:
         if want_snippets:
             # bolded densest-window snippets from the positional sidecar —
             # same _snippet the distributed highlight path uses (C7); the
-            # sidecar read is the query terms' row groups, never the corpus
+            # sidecar read is the query terms' rows, never the corpus
             from ucuddle_search_engine_spark.operators.highlight import _snippet
 
             import pyarrow as pa

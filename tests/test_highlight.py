@@ -4,12 +4,18 @@ from stored postings positions."""
 
 from __future__ import annotations
 
+import random
 import re
+import time
 
 import pytest
 
 from ucuddle_search_engine_spark.operators.bm25 import InvertedIndex
+from ucuddle_search_engine_spark.functions.analyze import _PY_TOKEN_RE
 from ucuddle_search_engine_spark.operators.highlight import (
+    POST,
+    PRE,
+    SNIPPET_TOKENS,
     _snippet,
     capitalize_title,
     highlight_hits,
@@ -34,6 +40,61 @@ def test_snippet_window_ellipsis():
     assert "<b>w50</b>" in s
     assert s.startswith("… ") and s.endswith(" …")
     assert "w0 " not in s
+
+
+def _snippet_quadratic(text, match_pos, window=SNIPPET_TOKENS):
+    """The O(m²) densest-window scan _snippet used before its linear
+    rewrite, kept verbatim as the output oracle."""
+    if not match_pos:
+        return ""
+    spans = [m.span() for m in _PY_TOKEN_RE.finditer(text.lower())]
+    match_set = {p for p in match_pos if p < len(spans)}
+    if not match_set:
+        return ""
+    ordered = sorted(match_set)
+    best_start, best_hits = ordered[0], 1
+    for i, p in enumerate(ordered):
+        hits = sum(1 for q in ordered[i:] if q < p + window)
+        if hits > best_hits:
+            best_start, best_hits = p, hits
+    w0 = max(0, best_start - 3)
+    w1 = min(len(spans), w0 + window)
+    out = ["… "] if w0 > 0 else []
+    cursor = spans[w0][0]
+    for tpos in range(w0, w1):
+        s, e = spans[tpos]
+        out.append(text[cursor:s])
+        tok = text[s:e]
+        out.append(f"{PRE}{tok}{POST}" if tpos in match_set else tok)
+        cursor = e
+    if w1 < len(spans):
+        out.append(" …")
+    return "".join(out)
+
+
+def test_snippet_linear_scan_matches_quadratic():
+    """The linear densest-window scan renders byte-identical snippets to the
+    quadratic one: random position sets (duplicates, out-of-range positions,
+    ties between equally dense windows, several window widths), and a long
+    doc with ~6,000 matches, where it must also be far faster."""
+    rng = random.Random(7)
+    for _ in range(400):
+        n = rng.randint(1, 300)
+        text = " ".join(rng.choice(["Alpha", "beta,", "GAMMA", "d-e", "ψ"])
+                        for _ in range(n))
+        pos = [rng.randrange(n + 20) for _ in range(rng.randint(0, 60))]
+        window = rng.choice([1, 2, 5, SNIPPET_TOKENS, 50])
+        assert _snippet(text, pos, window) == _snippet_quadratic(text, pos, window)
+    text = " ".join(f"tok{i % 97}" for i in range(8000))
+    pos = sorted(rng.sample(range(8000), 6000))
+    t0 = time.perf_counter()
+    want = _snippet_quadratic(text, pos)
+    t_quadratic = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    got = _snippet(text, pos)
+    t_linear = time.perf_counter() - t0
+    assert got == want and "<b>" in got
+    assert t_linear < t_quadratic / 5, (t_linear, t_quadratic)
 
 
 def test_capitalize_title(spark):

@@ -1,7 +1,8 @@
-"""Keyed serving reads through resident parquet footers (operators/storefiles):
-after warm-up the hot path runs no pyarrow dataset scan; mixed block_no
-widths, footers without statistics and empty units keep every ranking; a
-500 from the HTTP tier is logged with its traceback."""
+"""Keyed serving reads from resident decoded row groups (operators/storefiles):
+after warm-up the hot path runs no pyarrow dataset scan and a repeat read no
+Parquet decode; a 1-byte residency budget and racing cold reads keep every
+answer; mixed block_no widths, footers without statistics and empty units
+keep every ranking; a 500 from the HTTP tier is logged with its traceback."""
 
 from __future__ import annotations
 
@@ -18,7 +19,9 @@ import pyarrow.dataset as pds
 import pyarrow.parquet as pq
 import pytest
 
+from ucuddle_search_engine_spark.operators import storefiles
 from ucuddle_search_engine_spark.operators.phrase import phrase_search_local
+from ucuddle_search_engine_spark.operators.storefiles import StoreFiles
 from ucuddle_search_engine_spark.operators.wand import SegmentSearcher
 
 QUERIES = ((["t0", "t1"], "or"), (["t0", "t1", "t2", "t3"], "or"),
@@ -78,6 +81,108 @@ def test_hot_path_runs_no_dataset_scan_after_warmup(store, monkeypatch):
     monkeypatch.setattr(app._view.searcher, "_pds", {
         rel: Handle() for rel in ("segments", "tstats", "postings", "docs")})
     assert [app.search(**kw) for kw in fresh] == want
+
+
+# the serving tier's five read shapes: tstats lookup, segment chains, phrase
+# and highlight sidecar reads, docs fetch with snippet text
+TERMS = ["t0", "t1", "t5", "t40", "t123", "zzzabsent"]
+READS = (("tstats", "term", TERMS, ["term", "field", "df"], [0, 1]),
+         ("segments", "term", TERMS, None, [0, 1]),
+         ("postings", "term", TERMS, ["term", "doc_id", "positions", "doclen", "field"], [0]),
+         ("postings", "term", TERMS, ["term", "doc_id", "field", "positions"], [0]),
+         ("docs", "doc_id", list(range(0, 300, 7)),
+          ["doc_id", "title", "repo", "path", "content"], None))
+
+
+def _same(a, b):
+    return a.column_names == b.column_names and a.to_pydict() == b.to_pydict()
+
+
+def test_warm_repeat_read_decodes_nothing(store, monkeypatch):
+    """Once a read has decoded its row groups, repeating it — or reading a
+    subset of its keys or columns — performs zero Parquet decodes and
+    returns the same rows."""
+    files = StoreFiles(store)
+    want = [files.read(*r) for r in READS]
+    assert all(t.num_rows for t in want)
+    decodes = []
+    orig = pq.ParquetFile.read_row_groups
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups",
+                        lambda *a, **kw: decodes.append(a[1]) or orig(*a, **kw))
+    assert all(_same(files.read(*r), w) for r, w in zip(READS, want))
+    files.read("segments", "term", ["t1"], ["term", "block_no"], [0])
+    files.read("docs", "doc_id", [7, 14], ["doc_id", "title"])
+    assert decodes == []
+
+
+def test_one_byte_budget_keeps_answers(store, monkeypatch):
+    """With UCUDDLE_SEG_CACHE_BYTES=1 every read evicts what the previous
+    one decoded: search_local, phrase and highlight answers still equal the
+    default budget's, and after every row-group fetch the resident bytes are
+    within the budget or held by one over-budget row group."""
+    want = _answers(store)
+    seen = []
+    orig = StoreFiles._group
+
+    def checked(self, *a, **kw):
+        g = orig(self, *a, **kw)
+        assert self._bytes == sum(x.nbytes for x in self._groups.values())
+        assert self._bytes <= self.budget or len(self._groups) == 1
+        seen.append(self.budget)
+        return g
+
+    monkeypatch.setattr(StoreFiles, "_group", checked)
+    monkeypatch.setenv("UCUDDLE_SEG_CACHE_BYTES", "1")
+    assert _answers(store) == want
+    assert seen and set(seen) == {1}
+
+
+def test_racing_cold_reads_agree(store, monkeypatch):
+    """More threads than cores decode the same cold row groups at once —
+    for the same or for different column sets, with a tiny switch interval
+    — and still publish one consistent resident copy (its byte charge equal
+    to what it holds), each thread getting the same rows as a lone reader,
+    cold and then warm."""
+    n, ids = 8, list(range(0, 300, 7))
+    rounds = [[READS[1]] * 4, [READS[2]] * 4, [READS[4]] * 4,
+              [("docs", "doc_id", ids, cols) for cols in (
+                  ["doc_id", "title"], ["doc_id", "content"], ["repo", "doc_id", "path"],
+                  ["doc_id", "title", "repo", "path", "content"])],
+              [("segments", "term", TERMS, cols, [0]) for cols in (
+                  None, ["term", "shard", "block_no"], ["term", "doc_bytes"], ["unit", "term"])]]
+    gate, first = threading.Barrier(n), threading.local()
+    orig = storefiles._decode
+
+    def decode(*a, **kw):  # each thread's first decode waits for the others'
+        if not getattr(first, "done", False):
+            first.done = True
+            gate.wait(timeout=60)
+        return orig(*a, **kw)
+
+    switch = sys.getswitchinterval()
+    try:
+        sys.setswitchinterval(1e-5)
+        for reads in rounds:
+            want = [StoreFiles(store).read(*r) for r in reads]
+            files, got = StoreFiles(store), [None] * n
+
+            def run(i, reads=reads, files=files):
+                got[i] = [files.read(*reads[i % 4]) for _ in range(2)]
+
+            monkeypatch.setattr(storefiles, "_decode", decode)
+            gate.reset()
+            ts = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+            for t in ts:
+                t.start()
+            for t in ts:
+                t.join(timeout=120)
+            monkeypatch.undo()
+            assert not any(t.is_alive() for t in ts)
+            assert all(g is not None and _same(g[0], want[i % 4]) and _same(g[1], want[i % 4])
+                       for i, g in enumerate(got)), reads
+            assert files._bytes == sum(g.nbytes for g in files._groups.values())
+    finally:
+        sys.setswitchinterval(switch)
 
 
 def _rewrite_segments(root, unit, **write):

@@ -1,12 +1,16 @@
 """Process-level memory posture for the serving tier.
 
-This box (and any fresh Linux container) serves anonymous-page faults at
-~5-7 s per GB single-threaded with transparent hugepages in `madvise` mode —
-measured: a 1.1 GB fresh ndarray costs ~7 s to first-touch serially but only
-~1.5 s when 16 threads fault disjoint ranges, and ~0.2 s when the pages were
-already faulted into the glibc heap. A cold phrase-cache fill at 5M docs
-allocates several GB of numpy temporaries, so allocation faults — not
-compute — dominated the cold latency (measured 17 s of a 31 s fill).
+Anonymous-page first-touch cost depends on the host. The 32-core VM this
+module was tuned on served faults at ~5-7 s per GB single-threaded with
+transparent hugepages in `madvise` mode — measured there: a 1.1 GB fresh
+ndarray cost ~7 s to first-touch serially but only ~1.5 s when 16 threads
+faulted disjoint ranges, and ~0.2 s when the pages were already faulted
+into the glibc heap; a cold phrase-cache fill at 5M docs allocated several
+GB of numpy temporaries, so allocation faults — not compute — dominated its
+cold latency (17 s of a 31 s fill). On a 4-core, 15 GB box a fresh 512 MiB
+numpy fill first-touches at 0.2-1.2 s/GiB (the first fill of a process is
+the slowest) and re-touching faulted pages costs ~0.12 s/GiB, so the fault
+cost the touch-ahead below hides is 5-25x smaller there.
 
 Two fixes, both glibc/Linux-only and silently skipped elsewhere:
 
@@ -17,11 +21,11 @@ Two fixes, both glibc/Linux-only and silently skipped elsewhere:
   The trade-off — freed memory is retained by the process — is the standard
   serving-tier allocator posture (jemalloc/mimalloc behave the same way by
   default), bounded by peak working set, fine on a dedicated search box.
-- ``prefault(nbytes)``: touch-ahead of the heap arena. Measured on this
-  box, fault cost is ~5.4 s/GB at ANY parallelism (1 thread, 16-thread
-  memset, 32-thread MADV_POPULATE_WRITE all land 5.4-6.3 s/GB — the
-  kernel/hypervisor serializes zero-page allocation), while REUSING
-  already-faulted arena pages costs ~0.16 s/GB. So the only lever is WHEN
+- ``prefault(nbytes)``: touch-ahead of the heap arena. Measured on the
+  32-core VM, fault cost was ~5.4 s/GB at ANY parallelism (1 thread,
+  16-thread memset, 32-thread MADV_POPULATE_WRITE all landed 5.4-6.3 s/GB —
+  the kernel/hypervisor serialized zero-page allocation), while REUSING
+  already-faulted arena pages cost ~0.16 s/GB. So the only lever is WHEN
   the faults happen: ``startup_warm()`` pays them once at store-open (the
   JVM ``-XX:+AlwaysPreTouch`` posture), and every query after that reuses
   hot pages. A module-level high-water mark makes repeat calls no-ops.
@@ -285,12 +289,13 @@ def prefault(nbytes: int, threads: int = 16, yield_to_queries: bool = False) -> 
         arena = np.empty(delta, dtype=np.uint8)
         page = 4096
         # yield path: small strips + ONE worker. Fault throughput is
-        # serialized by the kernel at ~5.4 s/GB at ANY parallelism (see
-        # module docstring), so extra workers buy nothing — but each worker
-        # finishes its in-flight strip after a query starts, so N workers ×
-        # strip is the bandwidth stolen from that query (16 × 32 MB ≈ 0.5 GB
-        # ≈ 2.7 s of serialized faults, measured as 1.5-2.5× warm-latency
-        # inflation on the classes that followed a cache-growing one).
+        # serialized by the kernel at ANY parallelism (~5.4 s/GB on the
+        # 32-core VM, see module docstring), so extra workers buy nothing —
+        # but each worker finishes its in-flight strip after a query
+        # starts, so N workers × strip is the bandwidth stolen from that
+        # query (16 × 32 MB ≈ 0.5 GB ≈ 2.7 s of serialized faults, measured
+        # as 1.5-2.5× warm-latency inflation on the classes that followed a
+        # cache-growing one).
         if yield_to_queries:
             threads = 1
             strip = 8 * 1024 * 1024
@@ -336,7 +341,7 @@ def startup_warm_bytes(store_dir) -> int:
     buffers, PLUS half the phrase keys-cache budget (its resident entries
     are what consumed the original, decode-only target: a heavy phrase class
     left the next cold query ~10 GB of fresh faults at 5.4 s/GB — 83 s
-    user-visible, measured) — but never more than the store's own on-disk
+    user-visible, measured on the 32-core VM) — but never more than the store's own on-disk
     bytes (decoded live arrays roughly trade compression against the
     un-decoded docs/positions share). Capped at 24 GB; tiny test
     stores land under prefault's 64 MB floor and cost nothing. Startup pays
@@ -367,8 +372,9 @@ def startup_warm_bytes(store_dir) -> int:
 
 def startup_warm(store_dir) -> threading.Thread:
     """Pre-touch the serving arena for a store view, asynchronously — the
-    once-per-process answer to this box's ~5.4 s/GB anonymous-fault cost
-    (ES index warmers / JVM AlwaysPreTouch do the same). Returns the thread;
+    once-per-process answer to the anonymous-fault cost (~5.4 s/GB on the
+    32-core VM, 0.2-1.2 s/GiB on a 4-core box; see the module docstring).
+    ES index warmers / JVM AlwaysPreTouch do the same. Returns the thread;
     join() it (e.g. before binding the serving port) to start fully warm.
     Also records the target for idle-time top-ups (topup_async)."""
     n = startup_warm_bytes(store_dir)
@@ -388,7 +394,8 @@ def set_topup_target(nbytes: int) -> None:
 def topup_async() -> None:
     """Debounced idle-time arena re-warm: as live cache data (decode cache,
     phrase keys) grows, it OCCUPIES previously-free hot pages, so the next
-    distinct query's temporaries would fault fresh ones at ~5.4 s/GB —
+    distinct query's temporaries would fault fresh ones (~5.4 s/GB on the
+    32-core VM) —
     measured 26-28 s on a fuzzy query issued right after a 5M-doc phrase
     fill. Serving boxes idle between queries; calling this at the END of a
     query restores the free-arena target in the background, off every

@@ -49,12 +49,15 @@ def _snippet(text: str, match_pos: list[int], window: int = SNIPPET_TOKENS) -> s
     if not match_set:
         return ""
     ordered = sorted(match_set)
-    # densest window: maximize matches inside a window of SNIPPET_TOKENS tokens
-    best_start, best_hits = ordered[0], 1
+    # densest window: maximize matches inside a window of SNIPPET_TOKENS
+    # tokens (the first such start wins). Two pointers: the window's end
+    # index j only moves forward, so the scan is linear in the matches.
+    best_start, best_hits, j = ordered[0], 1, 0
     for i, p in enumerate(ordered):
-        hits = sum(1 for q in ordered[i:] if q < p + window)
-        if hits > best_hits:
-            best_start, best_hits = p, hits
+        while j < len(ordered) and ordered[j] < p + window:
+            j += 1
+        if j - i > best_hits:
+            best_start, best_hits = p, j - i
     w0 = max(0, best_start - 3)
     w1 = min(len(spans), w0 + window)
     out = []

@@ -421,20 +421,9 @@ def _load_entries(files, terms: list[str], field: int, cache,
     if need:
         from ..functions import mem
 
-        # allocation faults, not compute, dominated the cold fill (measured
-        # 17 s of 31 s at 5M docs): fault the heap arena on 16 threads
-        # BEHIND the Arrow scan+sort below, so the numpy build lands on hot
-        # pages. Floor estimate now (token space is known); refined to the
-        # table's real size after the read, which only touches the delta.
         mem.retain_arrow_memory()
-        arena = mem.prefault_async(max(total * 4, 512 << 20))
         tab = files.read("postings", "term", need,
                          ["term", "doc_id", "positions", "doclen", "field"], [field])
-        # ~3 position-width copies live at the build's peak (delta, cumsum
-        # out, ranks sum) + per-term bitmap + the pack windows' bool
-        # buffers; async so the touch overlaps the sort below
-        arena2 = mem.prefault_async(3 * tab.column("positions").nbytes
-                                    + len(need) * (total // 8) + (300 << 20))
         # NO global sort/take: a (term, doc_id) Table.sort_by gathers the
         # whole 2 GB positions column through Arrow take (measured 8-10 s at
         # 5M docs, the single largest cold stage). Instead each term argsorts
@@ -448,8 +437,6 @@ def _load_entries(files, terms: list[str], field: int, cache,
         lens_all = pc.list_value_length(posl).to_numpy(zero_copy_only=False)
         loff = np.concatenate(([0], np.cumsum(lens_all, dtype=np.int64)))
         tcol = tab.column("term")
-        arena.join()
-        arena2.join()
 
     def build(t: str):
         tmask = pc.equal(tcol, t).combine_chunks().to_numpy(

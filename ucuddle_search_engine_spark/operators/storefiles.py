@@ -1,4 +1,5 @@
-"""Keyed reads over one store view's parquet files, from resident footers.
+"""Keyed reads over one store view's parquet files, from resident decoded
+row groups.
 
 Serving reads are point lookups on a sort key: terms in segments, tstats and
 the positional sidecar, doc ids in docs. A view's files are immutable, so the
@@ -6,14 +7,25 @@ reader lists each subdir once and parses each footer once, the first time a
 read touches its partition directory (the `tb` term bucket, or the whole
 subdir for unbucketed files such as docs), keeping per row group [min, max]
 of the key — Delta Lake's data skipping from per-file statistics. A read
-opens only the row groups whose range holds a wanted key. A store swap opens
-a new view with a new reader, so footers never go stale.
+touches only the row groups whose range holds a wanted key.
+
+Each (file, row group, column) is decoded at most once, on first touch, and
+kept resident: rows sorted by key when not already in that order (docs
+rows are in range-partition order), a key → row-run index,
+block_no as int64 and the hive unit/tb columns attached. A read is then
+index lookups plus zero-copy slices: the fixed cost of a Parquet decode call
+(~0.3–0.8 ms whatever its row count) is paid once per row group, not once
+per request. Resident bytes (Arrow nbytes plus the index) are LRU-bounded by
+the RAM-derived `_default_seg_cache_bytes()`. A store swap opens a new view
+with a new reader, so nothing resident goes stale.
 """
 
 from __future__ import annotations
 
 import bisect
+import collections
 import os
+import sys
 import threading
 
 import numpy as np
@@ -22,12 +34,36 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 
+def _default_seg_cache_bytes() -> int:
+    """Default bound of the serving tier's byte-charged caches: the per-term
+    chain cache (SegmentSearcher._seg_chains) and each view's resident row
+    groups (StoreFiles). RAM-derived like the decode cache: ~3% of physical
+    RAM, floored at 256 MB, capped at 8 GB. The round-6 motivation is a
+    wide-OR working set: a 58-term fuzzy expansion on a 5M-doc store carries
+    ~720k block rows / ~0.5 GB of chains — over the old fixed 500k-ROW
+    budget, so the LRU swept 100% cold on every warm query and each query
+    re-paid the Arrow read + groupby + _BlockList builds (~2.5 s/query,
+    measured). Override: UCUDDLE_SEG_CACHE_BYTES env var."""
+    env = os.environ.get("UCUDDLE_SEG_CACHE_BYTES")
+    if env:
+        return max(1, int(env))
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return 256 << 20
+    return min(max(256 << 20, ram // 32), 8 << 30)
+
+
 class StoreFiles:
     def __init__(self, store_dir: str):
         self.store_dir = store_dir
+        self.budget = _default_seg_cache_bytes()
         self._lock = threading.Lock()
         self._listed: dict[str, dict] = {}  # rel → {tb | None: [(path, hive)]}
-        self._parsed: dict[tuple, list] = {}  # (rel, tb, key) → [(path, hive, md, ranges)]
+        self._parsed: dict[tuple, list] = {}  # (rel, tb, key) → [(path, hive, md, names, ranges)]
+        self._groups: collections.OrderedDict = collections.OrderedDict()  # (path, rg) → _Group
+        self._bytes = 0  # Σ _Group.nbytes over self._groups
+        self._empty: dict[tuple, pa.Table] = {}
 
     def _list(self, rel: str) -> dict:
         """Data files of <store>/<rel> grouped by their tb directory, with
@@ -46,23 +82,64 @@ class StoreFiles:
         return groups
 
     def _footers(self, rel: str, tb, key: str) -> list:
+        """Parsed footers of one tb directory: the disk parse runs outside
+        the reader lock, so concurrent reads never wait behind it; a racing
+        parse of the same directory is dropped at publish."""
+        got = self._parsed.get((rel, tb, key))
+        if got is not None:
+            return got
+        listed = self._listed.get(rel)
+        if listed is None:
+            listed = self._list(rel)
+            with self._lock:
+                listed = self._listed.setdefault(rel, listed)
+        got = []
+        for path, hive in listed.get(tb, ()):
+            md = pq.read_metadata(path)
+            got.append((path, hive, md, md.schema.to_arrow_schema().names, _key_ranges(md, key)))
         with self._lock:
-            if rel not in self._listed:
-                self._listed[rel] = self._list(rel)
-            got = self._parsed.get((rel, tb, key))
-            if got is None:
-                got = self._parsed[(rel, tb, key)] = [
-                    (path, hive, md, _key_ranges(md, key))
-                    for path, hive in self._listed[rel].get(tb, ())
-                    for md in (pq.read_metadata(path),)]
-        return got
+            return self._parsed.setdefault((rel, tb, key), got)
+
+    def _group(self, path: str, hive: dict, md, names: list, rg: int, key: str,
+               cols: list[str]) -> "_Group":
+        """Row group `rg` of `path` with at least `cols` resident. Decodes
+        (outside the lock) only what is not resident yet; a racing decoder's
+        columns merge into whichever entry was published first."""
+        gk = (path, rg)
+        with self._lock:
+            g = self._groups.get(gk)
+            if g is not None:
+                self._groups.move_to_end(gk)
+                miss = [c for c in cols if c not in g.names]
+                if not miss:
+                    return g
+        if g is None:
+            need = list(dict.fromkeys(
+                [key] + (["field"] if "field" in names else []) + cols))
+            g = _Group(_decode(path, hive, md, [rg], need), key, hive)
+            new = g.t
+        else:
+            new = _prep(_decode(path, hive, md, [rg], miss), g.order)
+        with self._lock:
+            cur = self._groups.get(gk)
+            if cur is None:
+                cur = self._groups[gk] = g
+                self._bytes += g.nbytes
+            else:
+                self._groups.move_to_end(gk)
+            self._bytes += cur.add(new)
+            # a single over-budget row group still serves its read
+            while self._bytes > self.budget and len(self._groups) > 1:
+                self._bytes -= self._groups.popitem(last=False)[1].nbytes
+        return cur
 
     def read(self, rel: str, key: str, values, columns: list[str] | None = None,
              fields=None) -> pa.Table:
         """Rows of <store>/<rel> whose `key` is in `values` (and `field` in
         `fields` when given), as `columns` (default: all, the hive columns
         unit/tb included; block_no as int64). Term reads touch only the
-        terms' tb directories."""
+        terms' tb directories. Rows come in key order per row group, not
+        in file order."""
         vals = sorted(set(values))
         plan: dict = {}
         if key == "term":
@@ -71,34 +148,117 @@ class StoreFiles:
             for v in vals:
                 plan.setdefault(term_buckets([v])[0], []).append(v)
         plan[None] = vals  # unbucketed files (docs, flat layouts)
-        parts = []
+        pieces = []
         for tb, vs in plan.items():
-            for path, hive, md, ranges in self._footers(rel, tb, key):
-                rgs = [i for i, r in enumerate(ranges) if r is None
-                       or bisect.bisect_left(vs, r[0]) < bisect.bisect_right(vs, r[1])]
-                if rgs:
-                    t = _read(path, hive, md, rgs, columns)
-                    keep = pc.is_in(t[key], value_set=pa.array(vs))
-                    if fields is not None:
-                        keep = pc.and_(keep, pc.is_in(t["field"], pa.array(fields, t["field"].type)))
-                    parts.append((t.filter(keep), hive))
-        if not parts:  # no row group holds a key: any file of the subdir types the answer
+            for path, hive, md, names, ranges in self._footers(rel, tb, key):
+                out = columns if columns is not None else names + list(hive)
+                for rg, r in enumerate(ranges):
+                    lo, hi = (0, len(vs)) if r is None else (
+                        bisect.bisect_left(vs, r[0]), bisect.bisect_right(vs, r[1]))
+                    if lo == hi:
+                        continue
+                    g = self._group(path, hive, md, names, rg, key, out)
+                    pieces += g.rows(out, vs[lo:hi], fields)
+        if not pieces:  # no row holds a key: any file of the subdir types the answer
+            return self._none(rel, key, columns)
+        return pa.concat_tables(pieces)
+
+    def _none(self, rel: str, key: str, columns) -> pa.Table:
+        """The empty answer, typed like the subdir's files (memoized)."""
+        ek = (rel, key, None if columns is None else tuple(columns))
+        hit = self._empty.get(ek)
+        if hit is None:
             anyf = next((f for fs in self._listed[rel].values() for f in fs), None)
             if anyf is None:
-                return pa.table({c: pa.nulls(0) for c in columns or ()})
-            parts = [(_read(*anyf, pq.read_metadata(anyf[0]), [], columns), anyf[1])]
-        # rows are filtered per file (only matches stay resident); the
-        # concat, cast and hive columns run once per read, since each Arrow
-        # call costs Python overhead and a GIL re-take
-        t = pa.concat_tables([p for p, _ in parts], promote_options="permissive")
-        if "block_no" in t.column_names:
-            t = t.set_column(t.schema.get_field_index("block_no"), "block_no",
-                             t["block_no"].cast(pa.int64()))
-        for k in parts[0][1]:
-            if columns is None or k in columns:
-                t = t.append_column(k, pa.array(np.repeat(
-                    np.array([h[k] for _, h in parts], np.int32), [p.num_rows for p, _ in parts])))
-        return t if columns is None else t.select(columns)
+                hit = pa.table({c: pa.nulls(0) for c in columns or ()})
+            else:
+                path, hive = anyf
+                md = pq.read_metadata(path)
+                out = columns if columns is not None else \
+                    md.schema.to_arrow_schema().names + list(hive)
+                t = _decode(path, hive, md, [], list(dict.fromkeys([key] + out)))
+                hit = _Group(t, key, hive).table(out)
+            self._empty[ek] = hit
+        return hit
+
+
+class _Group:
+    """One resident row group: `t` holds its decoded columns in key order
+    (block_no as int64, the hive columns attached), `order` the permutation
+    from file order (None when the file was already sorted). The row-run
+    index is columnar: `keys` holds each run's key, sorted, and run i spans
+    rows starts[i]:starts[i + 1]. `fld` is the field column (None without
+    one) and `fields` its distinct values."""
+
+    __slots__ = ("t", "names", "order", "keys", "starts", "fld", "fields", "nbytes", "tables")
+
+    def __init__(self, t: pa.Table, key: str, hive: dict):
+        n = t.num_rows
+        ks = t.column(key).combine_chunks()
+        runs = pc.run_end_encode(ks)
+        self.order = None
+        if pc.any(pc.less(runs.values[1:], runs.values[:-1])).as_py():
+            self.order = pc.sort_indices(ks)
+            runs = pc.run_end_encode(ks.take(self.order))
+        t = _prep(t, self.order)
+        for k, v in hive.items():
+            t = t.append_column(k, pa.array(np.full(n, v, np.int32)))
+        self.t, self.names = t, set(t.schema.names)
+        self.keys = runs.values.to_numpy(zero_copy_only=False)
+        self.starts = np.concatenate(([0], runs.run_ends.to_numpy()))
+        self.fld = t.column("field").to_numpy() if "field" in self.names else None
+        self.fields = set() if self.fld is None else set(pc.unique(t.column("field")).to_pylist())
+        self.tables: dict[tuple, pa.Table] = {}
+        # string keys are Python objects: ~49 B of header each beyond their
+        # characters (exact for ASCII)
+        self.nbytes = t.get_total_buffer_size() + self.keys.nbytes + self.starts.nbytes + (
+            runs.values.get_total_buffer_size() + 49 * len(self.keys)
+            if self.keys.dtype == object else 0)
+
+    def add(self, t: pa.Table) -> int:
+        """Attach the columns of `t` (already in key order) not yet
+        resident; returns the bytes added."""
+        added = 0
+        for c in t.schema.names:
+            if c not in self.names:
+                self.t = self.t.append_column(c, t.column(c))
+                self.names.add(c)
+                added += t.column(c).get_total_buffer_size()
+        self.nbytes += added
+        return added
+
+    def table(self, out: list[str]) -> pa.Table:
+        """The resident columns `out` as one table (zero-copy, memoized)."""
+        t = self.tables.get(tuple(out))
+        if t is None:
+            t = self.tables.setdefault(tuple(out), self.t.select(out))
+        return t
+
+    def rows(self, out: list[str], vs: list, fields) -> list[pa.Table]:
+        """Rows of the keys `vs` (sorted) whose field is in `fields` (None:
+        any), as `out`: a zero-copy slice per key run, filtered only when
+        the row group holds a field outside `fields`."""
+        t, got = self.table(out), []
+        mask = fields is not None and not self.fields <= set(fields)
+        for v in vs:
+            i = int(self.keys.searchsorted(v))
+            if i == len(self.keys) or self.keys[i] != v:
+                continue
+            a, b = int(self.starts[i]), int(self.starts[i + 1])
+            if mask:
+                m = np.isin(self.fld[a:b], fields)
+                if not m.any():
+                    continue
+            got.append(t.slice(a, b - a) if not mask or m.all()
+                       else t.slice(a, b - a).filter(pa.array(m)))
+        return got
+
+
+def _prep(t: pa.Table, order) -> pa.Table:
+    """Decoded columns in key order, block_no as int64."""
+    t = t if order is None else t.take(order)
+    i = t.schema.get_field_index("block_no")
+    return t if i < 0 else t.set_column(i, "block_no", t.column(i).cast(pa.int64()))
 
 
 def _key_ranges(md, key: str) -> list:
@@ -109,8 +269,7 @@ def _key_ranges(md, key: str) -> list:
     return [(st.min, st.max) if st is not None and st.has_min_max else None for st in stats]
 
 
-def _read(path: str, hive: dict, md, rgs: list[int], columns) -> pa.Table:
+def _decode(path: str, hive: dict, md, rgs: list[int], columns: list[str]) -> pa.Table:
     with pq.ParquetFile(path, metadata=md) as pf:
-        return pf.read_row_groups(
-            rgs, columns=None if columns is None else [c for c in columns if c not in hive],
-            use_threads=False)
+        return pf.read_row_groups(rgs, columns=[c for c in columns if c not in hive],
+                                  use_threads=False)

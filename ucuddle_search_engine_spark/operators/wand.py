@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.varbyte import decode_doc_ids_concat, vb_decode_concat
 from .bm25 import B, K1, DEFAULT_BOOSTS
-from .storefiles import StoreFiles
+from .storefiles import StoreFiles, _default_seg_cache_bytes
 
 # Stored block bounds (max_impact) and live contributions are computed from
 # avgdl values that may differ at the last ULP (e.g. cstats persisted through
@@ -70,26 +70,6 @@ def _default_decode_cache_postings() -> int:
     except (ValueError, OSError, AttributeError):
         return 16_000_000
     return min(max(16_000_000, ram // 20 // 24), 512_000_000)
-
-
-def _default_seg_cache_bytes() -> int:
-    """Default per-term chain-cache bound (SegmentSearcher._seg_chains),
-    charged in ACTUAL resident bytes — compressed postings + block-metadata
-    row overhead. RAM-derived like the decode cache: ~3% of physical RAM,
-    floored at 256 MB, capped at 8 GB. The round-6 motivation is a wide-OR
-    working set: a 58-term fuzzy expansion on a 5M-doc store carries ~720k
-    block rows / ~0.5 GB of chains — over the old fixed 500k-ROW budget, so
-    the LRU swept 100% cold on every warm query and each query re-paid the
-    Arrow read + groupby + _BlockList builds (~2.5 s/query, measured).
-    Override: UCUDDLE_SEG_CACHE_BYTES env var."""
-    env = os.environ.get("UCUDDLE_SEG_CACHE_BYTES")
-    if env:
-        return max(1, int(env))
-    try:
-        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (ValueError, OSError, AttributeError):
-        return 256 << 20
-    return min(max(256 << 20, ram // 32), 8 << 30)
 
 
 class DecodeCache:
@@ -1494,10 +1474,11 @@ class SegmentSearcher:
                            algorithm: str = "auto", offset: int = 0,
                            round_dp: int | None = None) -> list[tuple[int, float]]:
         """The serving-tier read path: identical ranking to search_terms, but
-        executed entirely driver-side — keyed reads of the query terms' row
-        groups through the view's resident footers (self.files) feeding the
-        same per-shard numpy scorers. No Spark job, so latency is file-read
-        + decode (ms), not job scheduling (~1 s floor).
+        executed entirely driver-side — keyed reads of the query terms' rows
+        from the view's resident decoded row groups (self.files) feeding the
+        same per-shard numpy scorers. No Spark job, so latency is a
+        first-touch row-group decode at worst (ms), not job scheduling
+        (~1 s floor).
 
         This is how the 1000-executor picture serves queries too: the INDEX
         is built by Spark; point reads hit the layout directly (the reference
@@ -1709,11 +1690,13 @@ class SegmentSearcher:
 
     def _term_chains(self, terms: list[str], fields: list[int]) -> dict:
         """term → [(shard, unit|None, field, chain-frame, n_postings)] from
-        the segments files, LRU-cached per term: repeat queries skip the
-        row-group read and the chain build (which together cost ~200
-        ms/query on a 5M-doc store's head terms). Terms absent from the
-        store cache an empty list — absence is an answer too. Frames are
-        immutable once built (threads share them)."""
+        the segments rows (self.files: each row group decoded once, then
+        index lookups plus slices), LRU-cached per term: repeat queries skip
+        the read and the chain build (which together cost ~200 ms/query on a
+        5M-doc store's head terms, when each read still decoded its row
+        groups). Terms absent from the store cache an empty list — absence
+        is an answer too. Frames are immutable once built (threads share
+        them)."""
         import pyarrow.compute as pc
 
         out: dict = {}
