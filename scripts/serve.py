@@ -28,7 +28,6 @@ import json
 import logging
 import os
 import sys
-import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
 from urllib.parse import parse_qs, urlparse
@@ -106,9 +105,10 @@ class SearchApp:
         self._gen = gen
 
     def warm(self) -> "SearchApp":
-        """Join the store's startup arena pre-touch (see SegmentSearcher.warm)
-        so the first queries don't pay this box's ~5.4 s/GB fault cost."""
-        self._view.searcher.warm()
+        """Returns self: the store view opens in __init__ and nothing is left
+        to wait for before taking traffic (the serving tier pre-touches no
+        memory; see functions/mem). Kept so `SearchApp(dir).warm()` callers
+        keep working."""
         return self
 
     # -- back-compat accessors (tests + introspection) -----------------------
@@ -516,7 +516,7 @@ class RoutedSearchApp:
         # per-language stores reload themselves (SearchApp._maybe_reload);
         # this catches routing.json itself changing (a language added/removed).
         # Lock + re-check: concurrent requests must not each rebuild every
-        # per-language SearchApp (multi-second tstats opens + warm threads)
+        # per-language SearchApp (multi-second tstats opens)
         try:
             if os.stat(os.path.join(self.root_dir, "routing.json")).st_mtime_ns \
                     != self._routing_mtime:
@@ -548,13 +548,6 @@ class RoutedSearchApp:
 
     def n_docs(self) -> int:
         return sum(a.n_docs() for a in self.apps.values())
-
-    def warm(self) -> "RoutedSearchApp":
-        # the arena high-water mark is process-global, so joining every
-        # store's pre-touch costs max(sizes), not the sum
-        for a in self.apps.values():
-            a.warm()
-        return self
 
 
 def make_handler(app: SearchApp):
@@ -619,13 +612,6 @@ def main() -> None:
     args = ap.parse_args()
     logging.basicConfig(level=logging.INFO, format="%(asctime)s %(levelname)s %(message)s")
     app = RoutedSearchApp(args.index) if args.routed else SearchApp(args.index)
-    # block on the startup arena pre-touch before taking traffic: this box
-    # faults anonymous pages at ~5.4 s/GB (any parallelism) but reuses hot
-    # arena pages at ~0.16 s/GB, so the first queries shouldn't pay it
-    t0 = time.time()
-    app.warm()
-    if time.time() - t0 > 1:
-        print(f"arena warmup {time.time() - t0:.1f}s")
     srv = ThreadingHTTPServer(("127.0.0.1", args.port), make_handler(app))
     print(f"serving {args.index} on http://127.0.0.1:{args.port}  (/search?q=...&k=10&mode=or)")
     srv.serve_forever()

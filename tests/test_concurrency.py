@@ -2,9 +2,11 @@
 ThreadingHTTPServer whose handlers call SegmentSearcher.search_local directly
 (no app-level serialization around the engine), so every shared structure the
 read path touches — the seg-chain cache, DecodeCache full-chain/scored-chain
-memos, the phrase keys cache, the arena top-up state — must tolerate many
+memos, the phrase keys cache, the admission gate — must tolerate many
 in-flight queries. This pins rank parity under sustained 16-way concurrency
-on a mixed workload, including deliberate cold (cache-filling) overlap.
+on a mixed workload, including deliberate cold (cache-filling) overlap, plus
+the admission gate's parsing and holder count and the scoring fan-out's
+response to that count.
 
 The reference serves concurrent users through Flask/gunicorn in front of
 Elasticsearch (web-interaction tier); here the engine itself is the
@@ -13,7 +15,11 @@ concurrent surface, so the race check lives at this level.
 
 from __future__ import annotations
 
+import contextlib
 import threading
+import time
+
+import pytest
 
 from ucuddle_search_engine_spark.operators.wand import SegmentSearcher
 
@@ -130,3 +136,114 @@ def test_fair_gate_width_and_fifo_handoff():
     assert peak[0] == 1
     assert served == list(range(8))  # FIFO: service order == arrival order
     assert g._active == 0 and not g._waiters
+
+
+def test_admission_parsing_and_count(monkeypatch):
+    """mem.admission() builds its gate once from UCUDDLE_MAX_INFLIGHT_QUERIES:
+    0 gives an unbounded gate that still counts its holders, a malformed
+    value warns and falls back to width 2, and active_queries() follows a
+    bounded gate's holders — through a handoff to a waiter — back to 0."""
+    from ucuddle_search_engine_spark.functions import mem
+
+    def fresh(env: str):
+        monkeypatch.setattr(mem, "_ADMIT_SEM", None)
+        monkeypatch.setenv("UCUDDLE_MAX_INFLIGHT_QUERIES", env)
+        return mem.admission()
+
+    g = fresh("0")
+    with contextlib.ExitStack() as holders:
+        for n in range(1, 6):
+            holders.enter_context(mem.admission())
+            assert mem.active_queries() == n
+    assert mem.active_queries() == 0
+    assert mem.admission() is g
+
+    with pytest.warns(UserWarning, match="not an int"):
+        g = fresh("two")
+    assert g._width == 2
+
+    g = fresh("2")
+    entered, release = threading.Event(), threading.Event()
+
+    def third():
+        with mem.admission():
+            entered.set()
+            release.wait(10)
+
+    t = threading.Thread(target=third)
+    with g, g:
+        assert mem.active_queries() == 2
+        t.start()
+        deadline = time.monotonic() + 10
+        while not g._waiters:  # queued behind the two holders
+            assert time.monotonic() < deadline
+            time.sleep(0.001)
+        assert not entered.is_set()
+    assert entered.wait(10)
+    assert mem.active_queries() == 1  # the slot was handed over, not freed
+    release.set()
+    t.join(10)
+    assert not t.is_alive()
+    assert mem.active_queries() == 0 and not g._waiters
+
+
+def test_fanout_narrows_when_queries_arrive_mid_query(built_store, monkeypatch):
+    """The scoring fan-out re-reads mem.active_queries() at every refill. A
+    query that starts beside one other query on 32 cores may keep
+    (32 // 4) // 2 = 4 (shard, unit) groups in flight; once the count rises
+    to 8 mid-query, every later submission leaves at most max(2, 8 // 8) = 2
+    in flight. The answer equals the unpooled one."""
+    import concurrent.futures as cf
+
+    from ucuddle_search_engine_spark.functions import mem
+    from ucuddle_search_engine_spark.operators import wand
+
+    out = built_store(400, 4, n_units=2, write_postings=True)  # 3 shards × 2 units
+    terms = ["t0", "t1", "t2", "t3"]
+    want = SegmentSearcher.open_local(out).search_local(terms, k=10, mode="or",
+                                                        algorithm="wand")
+
+    local = SegmentSearcher.open_local(out)
+    for knob in ("POOL_MIN_POSTINGS", "PER_UNIT_MIN_POSTINGS", "FINE_GROUP_MIN_POSTINGS"):
+        monkeypatch.setattr(SegmentSearcher, knob, 0)  # pool every (shard, unit) group
+    monkeypatch.setattr(wand.os, "cpu_count", lambda: 32)
+    active = [2]
+    monkeypatch.setattr(mem, "active_queries", lambda: active[0])
+
+    lock = threading.Lock()
+    in_flight = [0]
+    after_rise: list[int] = []
+    score = wand._score_chains
+
+    def counted_score(*a, **kw):
+        try:
+            return score(*a, **kw)
+        finally:
+            with lock:
+                in_flight[0] -= 1
+
+    monkeypatch.setattr(wand, "_score_chains", counted_score)
+
+    class CountingPool:
+        def __init__(self):
+            self.ex = cf.ThreadPoolExecutor(4)
+            self.submitted = 0
+
+        def submit(self, fn, *a):
+            with lock:
+                in_flight[0] += 1
+                self.submitted += 1
+                if active[0] == 8:
+                    after_rise.append(in_flight[0])
+                if self.submitted == 4:
+                    active[0] = 8  # six more queries admitted mid-query
+            return self.ex.submit(fn, *a)
+
+    local._pool = pool = CountingPool()
+    try:
+        got = local.search_local(terms, k=10, mode="or", algorithm="wand")
+    finally:
+        pool.ex.shutdown()
+    assert pool.submitted >= 6, pool.submitted
+    assert after_rise and max(after_rise) <= 2, after_rise
+    assert [(d, round(s, 9)) for d, s in got] == [(d, round(s, 9)) for d, s in want]

@@ -104,17 +104,8 @@ def timed(fn, n_warm: int = N_WARM):
 def bench_store(spark, n_docs: int) -> dict:
     store = STORES[n_docs]
     searcher = SegmentSearcher.open_local(store)
-    # join the startup arena pre-touch OUTSIDE the per-query timings and
-    # report it: a real serving process pays this once before binding the
-    # port (serve.py main does exactly that) — this box faults anonymous
-    # pages at ~5.4 s/GB no matter the parallelism, so an unwarmed "cold"
-    # number would measure the box's fault path, not the engine
-    t0 = time.time()
-    searcher.warm()
-    warm_s = round(time.time() - t0, 1)
     dist = load_searcher(spark, store).prepare()
 
-    out_meta = {"startup_warm_s": warm_s}
     plain = {
         "or2_head": (["t0", "t1"], "or", 0),
         "or4_head": (["t0", "t1", "t2", "t3"], "or", 0),
@@ -124,7 +115,7 @@ def bench_store(spark, n_docs: int) -> dict:
         "and_mixed": (["t7", "t900", "t12000"], "and", 0),
         "paged": (["t0", "t1"], "or", 40),
     }
-    out: dict = dict(out_meta)
+    out: dict = {}
     for name, (terms, mode, offset) in plain.items():
         # rank parity vs the distributed path, asserted before timing
         want = [(r["doc_id"], round(r["score"], 9)) for r in
@@ -163,7 +154,7 @@ def bench_store(spark, n_docs: int) -> dict:
     # serving-tier fuzzy, prefix_length=1 (first-char bucket expansion)
     from serve import SearchApp
 
-    app = SearchApp(store).warm()  # no-op: the process arena is already hot
+    app = SearchApp(store)
     out["fuzzy_prefix1"] = timed(
         lambda: app._search_uncached(app._view, "t123x t45", 10, "or", False, True, 1, 0),
         n_warm=3,
@@ -177,7 +168,7 @@ def bench_routed(spark, n_docs: int) -> dict | None:
         return None
     from serve import RoutedSearchApp
 
-    app = RoutedSearchApp(root).warm()
+    app = RoutedSearchApp(root)
     q_ru = "как " + "t0 t1".translate(str.maketrans(TRANSLIT_SRC, TRANSLIT_DST))
     hits = app.search(q_ru, k=10)
     assert hits and all(h["lang"] == "ru" for h in hits), "ru routing must hit"
@@ -231,7 +222,7 @@ def main() -> None:
     sizes = [int(a) for a in args] or [1_000_000]
 
     if n_runs > 1:
-        # fresh process per run: arena/cache state is ordering-dependent
+        # fresh process per run: cache state is ordering-dependent
         # within a process, so each repeat must start from the same state
         per_run: list[dict] = []
         for r in range(n_runs):

@@ -7,9 +7,9 @@ construction; here the engine itself is the concurrent surface
 (ThreadingHTTPServer → search_local), so QPS-vs-concurrency is an engine
 property worth pinning.
 
-Protocol: lazy open_local + startup warm() on the 1M store, one untimed pass
-over the 24-query mix to fill chain/scored-chain memos (warm serving is the
-steady state a long-running box sits in), then for each concurrency level c
+Protocol: open_local on the 1M store, one untimed pass over the 24-query mix
+to fill chain/scored-chain memos (warm serving is the steady state a
+long-running box sits in), then for each concurrency level c
 in {1, 2, 4, 8, 16, 32}: c threads each run the full mix ROUNDS times with a
 start barrier; wall-clock QPS plus per-request p50/p95 are reported. Every
 response is compared against the single-threaded reference — a race that
@@ -72,7 +72,7 @@ def main() -> None:
     store = sys.argv[1] if len(sys.argv) > 1 else STORE
     out_path = sys.argv[2] if len(sys.argv) > 2 else \
         "/root/repo/BENCH/throughput.json"
-    local = SegmentSearcher.open_local(store).warm()
+    local = SegmentSearcher.open_local(store)
     n_docs = next(iter(local._coll.values()))[0]
 
     def run(terms, mode):

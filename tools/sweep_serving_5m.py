@@ -75,7 +75,7 @@ def measure(local, c: int) -> dict:
 
 
 def main() -> None:
-    local = SegmentSearcher.open_local(STORE).warm()
+    local = SegmentSearcher.open_local(STORE)
     # untimed warm pass
     for t, m in QUERY_MIX:
         local.search_local(t, k=10, mode=m)

@@ -55,17 +55,19 @@ def phrase_match(postings: DataFrame, terms: list[str], field: int = 0,
                  num_buckets: int | None = None) -> DataFrame:
     """(doc_id, phrase_tf) for docs containing the exact term sequence —
     the production path: ONE shuffle of the phrase terms' (pruned) postings
-    on a doc-id bucket, then the serving tier's sorted-key adjacency merge
-    ((doc_id << 32) | position composite keys, operators/phrase
-    _match_key) runs vectorized inside an applyInPandas per bucket.
+    on doc_id (`repartition(num_buckets, doc_id)`), then a sorted-key
+    adjacency merge over (doc_id << 32) | position composite keys (the
+    serving tier's _match_key algorithm, inlined) runs vectorized in a
+    `mapInArrow` over each partition.
 
     Scale shape: the scan prunes to the |q| phrase terms (tb directories +
     pushed term predicate on written sidecars), each (term, doc) row is
     shuffled exactly once (the join-chain alternative re-shuffles per phrase
-    position — measured 10× slower warm at 1M docs), buckets are hash-disjoint
-    in doc_id so every doc's adjacency is decided wholly inside one task, and
-    per-task memory is O(Σ pruned postings / num_buckets). Bit-identical
-    phrase_tf to phrase_match_join (parity-tested)."""
+    position — measured 10× slower warm at 1M docs), partitions are
+    hash-disjoint in doc_id so every doc's adjacency is decided wholly
+    inside one task, and per-task memory is O(Σ pruned postings /
+    num_buckets). Bit-identical phrase_tf to phrase_match_join
+    (parity-tested)."""
     if not terms:
         raise ValueError("empty phrase")
     spark = postings.sparkSession
@@ -282,22 +284,11 @@ def phrase_search_local(store_dir: str, terms: list[str], k: int = 10,
                                 "(build with write_postings=True)")
     from ..functions import mem
 
-    # bounded admission + query-in-flight mark: at most N serving queries
-    # execute at once (mem.admission — same gate as search_local), and the
-    # background arena top-up yields (aborts its touch loop) while we run,
-    # instead of competing for memory bandwidth
+    # bounded admission: at most N serving queries execute at once
+    # (mem.admission — same gate as search_local)
     with mem.admission():
-        mem.query_begin()
-        try:
-            return _phrase_search_local_impl(store_dir, terms, k, field,
-                                             dead, cache, files)
-        finally:
-            mem.query_end()
-            # idle-time arena re-warm AFTER the active mark drops: a cold
-            # fill grows the live key cache, eating free hot pages — restore
-            # the target in the background; no-op while other queries remain
-            # in flight (functions/mem)
-            mem.topup_async()
+        return _phrase_search_local_impl(store_dir, terms, k, field,
+                                         dead, cache, files)
 
 
 def _phrase_search_local_impl(store_dir: str, terms: list[str], k: int,
@@ -419,9 +410,6 @@ def _load_entries(files, terms: list[str], field: int, cache,
                 loaded[t] = hit
         need = [t for t in need if t not in loaded]
     if need:
-        from ..functions import mem
-
-        mem.retain_arrow_memory()
         tab = files.read("postings", "term", need,
                          ["term", "doc_id", "positions", "doclen", "field"], [field])
         # NO global sort/take: a (term, doc_id) Table.sort_by gathers the

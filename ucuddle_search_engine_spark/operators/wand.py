@@ -1112,17 +1112,6 @@ class SegmentSearcher:
         # what in-memory and legacy stores get.
         self.num_shards: int | None = _read_store_meta(store_dir).get("num_shards") \
             if store_dir is not None else None
-        self._warm_thread = None
-        # serving-tier memory posture is DEFERRED to the first search_local
-        # call: the allocator flip (trim/mmap disabled → freed memory
-        # retained for the process lifetime) and the multi-GB arena
-        # pre-touch only benefit the driver-side serving path, and a
-        # searcher constructed for DISTRIBUTED queries (load_searcher →
-        # search_terms, scoring runs in executors) must not spend tens of
-        # seconds of background faulting and pin ~12% of the Spark driver's
-        # RAM for a path it never runs. open_local — the serving
-        # constructor — applies it eagerly at open instead.
-        self._mem_deferred = store_dir is not None
         self._coll: dict | None = None
         self._tstats_cache: dict | None = None
         # per-term memo for the no-prepare() path: repeat queries never
@@ -1387,47 +1376,13 @@ class SegmentSearcher:
         obj._seg_chains = collections.OrderedDict()
         obj._seg_bytes = 0
         obj._seg_costs = {}
-        # same startup pre-touch as the Spark-backed constructor (this path
-        # skips __init__): pay the ~5.4 s/GB fault cost at open, off the
-        # query path. Async — join via warm() before taking traffic.
+        # allocator posture at open, so the serving tier's request threads
+        # start under one glibc arena (a Spark-constructed searcher gets it
+        # at its first admission instead)
         from ..functions import mem
 
-        mem.enable_heap_reuse()
-        mem.retain_arrow_memory()
-        obj._warm_thread = mem.startup_warm(store_dir)
-        obj._mem_deferred = False  # posture applied eagerly just above
+        mem.serving_posture()
         return obj
-
-    def _ensure_serving_posture(self) -> None:
-        """Apply the serving-tier memory posture on FIRST serving use of a
-        Spark-constructed searcher (allocator heap-reuse + async arena
-        pre-touch — see __init__'s deferral rationale; measured 3.4 s vs
-        10-22 s warm on a 58-chain fuzzy OR at 5M docs without it, and a
-        truly-cold 5M first query was 57 s of which ~26 s was mid-query
-        arena faulting). open_local applies the same posture eagerly, so
-        this is a no-op on serving-tier searchers."""
-        if not getattr(self, "_mem_deferred", False):
-            return
-        with self._memo_lock:
-            if not self._mem_deferred:
-                return
-            from ..functions import mem
-
-            mem.enable_heap_reuse()
-            mem.retain_arrow_memory()
-            self._warm_thread = mem.startup_warm(self.store_dir)
-            self._mem_deferred = False
-
-    def warm(self) -> "SegmentSearcher":
-        """Block until the startup arena pre-touch finishes (serving
-        processes call this before binding the port; benches call it so
-        per-query numbers reflect a warmed server, with the warm cost
-        reported separately)."""
-        t = getattr(self, "_warm_thread", None)
-        if t is not None:
-            t.join()
-            self._warm_thread = None
-        return self
 
     def _dataset(self, rel: str):
         """Memoized pyarrow dataset handle for <store>/<rel>, for the
@@ -1445,30 +1400,16 @@ class SegmentSearcher:
     def search_local(self, terms: list[str], k: int = 20, mode: str = "and",
                      algorithm: str = "auto", offset: int = 0,
                      round_dp: int | None = None) -> list[tuple[int, float]]:
-        """Query-in-flight wrapper around the serving read path: marks the
-        query active so the background arena top-up yields the memory bus
-        (functions/mem), and fires the idle-time top-up AFTER the active
-        mark drops — launching it before query_end would make it abort
-        against our own query. Rejects an `algorithm` outside ALGORITHMS
-        before any read."""
+        """Admission-gated serving read path (_search_local_impl): at most
+        mem.admission()'s width of queries execute at once. Rejects an
+        `algorithm` outside ALGORITHMS before any read."""
         from ..functions import mem
 
         _check_algorithm(algorithm)
-        self._ensure_serving_posture()
-        with mem.admission():  # bounded execution width (see mem.admission)
-            mem.query_begin()
-            try:
-                return self._search_local_impl(terms, k=k, mode=mode,
-                                               algorithm=algorithm, offset=offset,
-                                               round_dp=round_dp)
-            finally:
-                mem.query_end()
-                # idle-time arena re-warm: cache growth during THIS query
-                # consumed free hot pages; restore the free-arena target in
-                # the background so the next distinct query doesn't fault at
-                # ~5.4 s/GB. No-op while OTHER queries remain in flight
-                # (functions/mem) — the last one to end re-arms it.
-                mem.topup_async()
+        with mem.admission():
+            return self._search_local_impl(terms, k=k, mode=mode,
+                                           algorithm=algorithm, offset=offset,
+                                           round_dp=round_dp)
 
     def _search_local_impl(self, terms: list[str], k: int = 20, mode: str = "and",
                            algorithm: str = "auto", offset: int = 0,
@@ -1508,28 +1449,7 @@ class SegmentSearcher:
             widf[(t, f)] = self.boosts[f] * math.log(1.0 + (n - df_ + 0.5) / (df_ + 0.5))
             avgdl[(t, f)] = float(coll[f][1])
 
-        # fault the heap arena for the cold decode BEHIND the Arrow chain
-        # read (same overlap as the phrase fill): a cold wide-OR expansion
-        # decodes Σdf postings into fresh numpy arrays (scored memos
-        # ~16 B/posting + transient decode buffers), and this box touches
-        # anonymous pages at ~1.3-1.6 s/GB even on 16 threads. Sized to the
-        # terms whose chains are NOT already cached — the old Σdf-over-ALL-
-        # terms target (×96, 10 GB cap) re-fired on every warm query once
-        # the caches legitimately owned the arena (free < target forever),
-        # and its join made a 10 GB shortfall a ~13 s SYNCHRONOUS stall on
-        # cold queries after a heavy phrase class (measured: bench cold
-        # fuzzy 15.4 s of which the scan was 3.8 s). The 2 GB cap bounds
-        # the worst post-scan wait to ~1 s; deeper misses fault inline in
-        # the GIL-released decode kernels at the same serialized rate.
-        from ..functions import mem
-
-        est_miss = sum(df for (t, _f), df in stats.items()
-                       if t not in self._seg_chains)
-        arena = mem.prefault_async(min(int(est_miss) * 24, 2 << 30)) \
-            if est_miss > 4e6 else None
         chains_by_term = self._term_chains(terms, fields)
-        if arena is not None:
-            arena.join()
 
         dead = np.asarray(self.tombstones, dtype=np.int64) if self.tombstones else None
         nterms = len(terms)
@@ -1635,37 +1555,35 @@ class SegmentSearcher:
                 # Adaptive per-query fan-out width (r7, VERDICT directive 4):
                 # the pool itself stays all-cores wide, but when OTHER
                 # queries are executing (mem.active_queries > 1) this query
-                # submits in waves of cores // (2 × active) — the 5M sweep
-                # (BENCH/serving_sweep_5m.json) measured 2 queries × 8
-                # threads at 25.2 QPS p95 406 ms vs 17.6 QPS p95 702 ms
-                # when both fanned to all 32 (thread thrash), while a LONE
-                # query keeps the full width (fuzzy warm 0.6 s at 32 vs
-                # 1.0-1.1 s at a fixed 8). Wave quota, not pool width, so
-                # both regimes get their measured optimum.
+                # keeps at most cores // (4 × active) groups in flight (at
+                # least 2): scoring is GIL-convoy bound past ~cores/4 live
+                # threads, so that budget is split across the active
+                # queries. The 5M sweep (BENCH/serving_sweep_5m.json,
+                # 32-core VM) measured 2 queries × 8 threads at 25.2 QPS p95
+                # 406 ms vs 17.6 QPS p95 702 ms when both fanned to all 32
+                # (thread thrash), while a LONE query keeps the full width
+                # (fuzzy warm 0.6 s at 32 vs 1.0-1.1 s at a fixed 8). The
+                # count is re-read at every refill, so a query that started
+                # alone narrows as soon as others are admitted.
                 import concurrent.futures as _cf
                 import itertools as _it
 
                 from ..functions import mem as _mem
 
-                work = list(groups.values())
-                act = _mem.active_queries()
                 cores = os.cpu_count() or 8
-                # under concurrency the sweep optimum (pool 8 TOTAL on 32
-                # cores for 2 queries) says the scoring path is GIL-convoy
-                # bound past ~cores/4 live threads — so split that budget
-                # across the active queries, don't give each a slice of all
-                # cores
-                quota = len(work) if act <= 1 else max(2, (cores // 4) // act)
                 pool = self._scoring_pool()
-                it = iter(work)
-                futs = {pool.submit(run_group, w)
-                        for w in _it.islice(it, quota)}
-                while futs:
+                it = iter(groups.values())
+                futs: set = set()
+                while True:
+                    act = _mem.active_queries()
+                    quota = len(groups) if act <= 1 else max(2, (cores // 4) // act)
+                    futs.update(pool.submit(run_group, w)
+                                for w in _it.islice(it, max(0, quota - len(futs))))
+                    if not futs:
+                        break
                     done, futs = _cf.wait(futs, return_when=_cf.FIRST_COMPLETED)
                     for f in done:
                         tops.extend(f.result())
-                    futs.update(pool.submit(run_group, w)
-                                for w in _it.islice(it, len(done)))
             else:
                 for chains in groups.values():
                     tops.extend(run_group(chains))
