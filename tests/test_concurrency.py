@@ -5,8 +5,8 @@ read path touches — the seg-chain cache, DecodeCache full-chain/scored-chain
 memos, the phrase keys cache, the admission gate — must tolerate many
 in-flight queries. This pins rank parity under sustained 16-way concurrency
 on a mixed workload, including deliberate cold (cache-filling) overlap, plus
-the admission gate's parsing and holder count and the scoring fan-out's
-response to that count.
+the admission gate's parsing and holder count, and checks that a query runs
+wholly on its request thread (the gate is the only source of parallelism).
 
 The reference serves concurrent users through Flask/gunicorn in front of
 Elasticsearch (web-interaction tier); here the engine itself is the
@@ -141,7 +141,7 @@ def test_fair_gate_width_and_fifo_handoff():
 def test_admission_parsing_and_count(monkeypatch):
     """mem.admission() builds its gate once from UCUDDLE_MAX_INFLIGHT_QUERIES:
     0 gives an unbounded gate that still counts its holders, a malformed
-    value warns and falls back to width 2, and active_queries() follows a
+    value warns and falls back to width 2, and the holder count follows a
     bounded gate's holders — through a handoff to a waiter — back to 0."""
     from ucuddle_search_engine_spark.functions import mem
 
@@ -154,8 +154,8 @@ def test_admission_parsing_and_count(monkeypatch):
     with contextlib.ExitStack() as holders:
         for n in range(1, 6):
             holders.enter_context(mem.admission())
-            assert mem.active_queries() == n
-    assert mem.active_queries() == 0
+            assert g._active == n
+    assert g._active == 0
     assert mem.admission() is g
 
     with pytest.warns(UserWarning, match="not an int"):
@@ -172,7 +172,7 @@ def test_admission_parsing_and_count(monkeypatch):
 
     t = threading.Thread(target=third)
     with g, g:
-        assert mem.active_queries() == 2
+        assert g._active == 2
         t.start()
         deadline = time.monotonic() + 10
         while not g._waiters:  # queued behind the two holders
@@ -180,70 +180,41 @@ def test_admission_parsing_and_count(monkeypatch):
             time.sleep(0.001)
         assert not entered.is_set()
     assert entered.wait(10)
-    assert mem.active_queries() == 1  # the slot was handed over, not freed
+    assert g._active == 1  # the slot was handed over, not freed
     release.set()
     t.join(10)
     assert not t.is_alive()
-    assert mem.active_queries() == 0 and not g._waiters
+    assert g._active == 0 and not g._waiters
 
 
-def test_fanout_narrows_when_queries_arrive_mid_query(built_store, monkeypatch):
-    """The scoring fan-out re-reads mem.active_queries() at every refill. A
-    query that starts beside one other query on 32 cores may keep
-    (32 // 4) // 2 = 4 (shard, unit) groups in flight; once the count rises
-    to 8 mid-query, every later submission leaves at most max(2, 8 // 8) = 2
-    in flight. The answer equals the unpooled one."""
+def test_serving_queries_start_no_threads(built_store, monkeypatch):
+    """A serving query runs wholly on the thread that admitted it: cold TAAT
+    OR, AND, block-max OR and a cold 2-term phrase (keys cache filling)
+    submit no pool task and start no thread, and answer like an unpatched
+    searcher."""
     import concurrent.futures as cf
 
-    from ucuddle_search_engine_spark.functions import mem
-    from ucuddle_search_engine_spark.operators import wand
+    from ucuddle_search_engine_spark.operators.phrase import (
+        PhraseKeysCache,
+        phrase_search_local,
+    )
 
-    out = built_store(400, 4, n_units=2, write_postings=True)  # 3 shards × 2 units
-    terms = ["t0", "t1", "t2", "t3"]
-    want = SegmentSearcher.open_local(out).search_local(terms, k=10, mode="or",
-                                                        algorithm="wand")
+    out = built_store(400, 4, n_units=2, write_postings=True)
+    queries = [(["t0", "t1", "t2", "t3"], "or", "taat"), (["t5", "t40"], "and", "auto"),
+               (["t0", "t1"], "or", "wand")]
+    ref = SegmentSearcher.open_local(out)
+    want = [ref.search_local(t, k=10, mode=m, algorithm=a) for t, m, a in queries]
+    want_phrase = phrase_search_local(out, ["t0", "t1"], k=5, cache=PhraseKeysCache())
+    assert want_phrase
 
-    local = SegmentSearcher.open_local(out)
-    for knob in ("POOL_MIN_POSTINGS", "PER_UNIT_MIN_POSTINGS", "FINE_GROUP_MIN_POSTINGS"):
-        monkeypatch.setattr(SegmentSearcher, knob, 0)  # pool every (shard, unit) group
-    monkeypatch.setattr(wand.os, "cpu_count", lambda: 32)
-    active = [2]
-    monkeypatch.setattr(mem, "active_queries", lambda: active[0])
+    def refuse(*a, **kw):
+        raise AssertionError("a serving query started a thread")
 
-    lock = threading.Lock()
-    in_flight = [0]
-    after_rise: list[int] = []
-    score = wand._score_chains
-
-    def counted_score(*a, **kw):
-        try:
-            return score(*a, **kw)
-        finally:
-            with lock:
-                in_flight[0] -= 1
-
-    monkeypatch.setattr(wand, "_score_chains", counted_score)
-
-    class CountingPool:
-        def __init__(self):
-            self.ex = cf.ThreadPoolExecutor(4)
-            self.submitted = 0
-
-        def submit(self, fn, *a):
-            with lock:
-                in_flight[0] += 1
-                self.submitted += 1
-                if active[0] == 8:
-                    after_rise.append(in_flight[0])
-                if self.submitted == 4:
-                    active[0] = 8  # six more queries admitted mid-query
-            return self.ex.submit(fn, *a)
-
-    local._pool = pool = CountingPool()
-    try:
-        got = local.search_local(terms, k=10, mode="or", algorithm="wand")
-    finally:
-        pool.ex.shutdown()
-    assert pool.submitted >= 6, pool.submitted
-    assert after_rise and max(after_rise) <= 2, after_rise
-    assert [(d, round(s, 9)) for d, s in got] == [(d, round(s, 9)) for d, s in want]
+    monkeypatch.setattr(cf.ThreadPoolExecutor, "submit", refuse)
+    monkeypatch.setattr(threading.Thread, "start", refuse)
+    local = SegmentSearcher.open_local(out)  # all caches cold
+    got = [local.search_local(t, k=10, mode=m, algorithm=a) for t, m, a in queries]
+    got_phrase = phrase_search_local(out, ["t0", "t1"], k=5, cache=PhraseKeysCache(),
+                                     files=local.files)
+    assert got == want and all(want)
+    assert got_phrase == want_phrase

@@ -48,6 +48,33 @@ def test_phrase_search_scored(idx, doc_texts):
     assert _py_phrase_tf(doc_texts[out[0]["doc_id"]], phrase) > 0
 
 
+@pytest.mark.parametrize("num_buckets", [1, 4])
+def test_phrase_match_doc_ids_past_2_31(spark, num_buckets):
+    """phrase_match packs (doc << 32) | position keys per partition. Doc ids
+    at and past 2³¹ and 2³² must neither overflow nor alias a small id in
+    the same partition (raw 2³²+7 << 32 wraps onto doc 7's keys): the result
+    equals the join-chain oracle, including a phrase that spans two such
+    docs' positions only under aliasing."""
+    from ucuddle_search_engine_spark.operators.phrase import phrase_match_join
+    from ucuddle_search_engine_spark.schema import POSTINGS_SCHEMA
+
+    big, huge, far = 2**31 + 5, 2**32 + 7, 2**33
+    rows = [
+        ("a", 7, 0, 1, [0]), ("b", 7, 0, 1, [5]),  # no phrase in doc 7
+        ("a", huge, 0, 1, [4]), ("b", huge, 0, 1, [1]),  # none in huge either
+        ("a", big, 0, 2, [1, 3]), ("b", big, 0, 2, [2, 9]),
+        ("a", far, 0, 2, [0, 2]), ("b", far, 0, 2, [1, 3]),
+    ]
+    postings = spark.createDataFrame(rows, schema=POSTINGS_SCHEMA)
+    for phrase, exp in ((["a", "b"], {big: 1, far: 2}), (["b", "a"], {big: 1, far: 1})):
+        want = {r["doc_id"]: r["phrase_tf"]
+                for r in phrase_match_join(postings, phrase).collect()}
+        got = {r["doc_id"]: r["phrase_tf"]
+               for r in phrase_match(postings, phrase, num_buckets=num_buckets).collect()}
+        assert want == exp, phrase
+        assert got == want, phrase
+
+
 def test_phrase_search_over_written_store(spark, built_store):
     """Quoted-phrase top-k straight from a WRITTEN store's positional sidecar
     must equal the in-memory phrase engine — the corpus is never re-read."""

@@ -391,22 +391,7 @@ def test_get_scored_many_bit_identical(segments):
     for (wd, wc), (gd, gc) in zip(want, got_mix):
         assert np.array_equal(wd, gd) and np.array_equal(wc, gc)
     assert cold._n <= cold.max_postings
-
-    # forced multi-part fan-out (the 5M cold-fill path: parts decode on
-    # their own threads) is bit-identical to the single-part pass — chains
-    # are independent streams and the scoring broadcast is elementwise
-    part = DecodeCache()
-    old_min, old_max = DecodeCache.GSM_PART_MIN_BLOCKS, DecodeCache.GSM_MAX_PARTS
-    try:
-        DecodeCache.GSM_PART_MIN_BLOCKS, DecodeCache.GSM_MAX_PARTS = 1, 3
-        got_part = part.get_scored_many(list(chains))
-    finally:
-        DecodeCache.GSM_PART_MIN_BLOCKS, DecodeCache.GSM_MAX_PARTS = old_min, old_max
-    for (wd, wc), (gd, gc) in zip(want, got_part):
-        assert np.array_equal(wd, gd) and np.array_equal(wc, gc)
-    # memo populated by the parts, same keys as the serial path
-    assert part.get_scored_many(list(chains)) is not None
-    assert {k[1] for k in part._d} == {"__scored__"}
+    assert {k[1] for k in cold._d} == {"__scored__"}  # scored memo only
 
 
 def test_decode_cache_default_cap_ram_derived(monkeypatch):
@@ -467,9 +452,8 @@ def test_or_scores_independent_of_cache_state(written_store):
 
 def test_search_local_taat_and_grouping_parity(spark, written_store):
     """The serving-tier routing knobs must never change answers: TAAT,
-    block-max wand, per-(shard, unit) vs shard-only grouping, and the
-    distributed path all rank and score identically on the same written
-    store."""
+    block-max wand and the distributed path all rank and score identically
+    on the same written store."""
     from ucuddle_search_engine_spark.plans.build_index import load_searcher
 
     out = written_store
@@ -491,19 +475,9 @@ def test_search_local_taat_and_grouping_parity(spark, written_store):
         assert got_taat == want, (terms, mode, "taat")
         assert got_wand == want, (terms, mode, "wand")
 
-    # grouping granularity: force per-(shard, unit) fan-out and shard-only
-    # collapse on the same block-max query — identical answers
+    # block-max wand over the shard groups answers like auto
     q = ["t0", "t1"]
-    want = run(q, "or")
-    old = SegmentSearcher.PER_UNIT_MIN_POSTINGS, SegmentSearcher.FINE_GROUP_MIN_POSTINGS
-    try:
-        SegmentSearcher.PER_UNIT_MIN_POSTINGS = 0
-        SegmentSearcher.FINE_GROUP_MIN_POSTINGS = 0  # per-unit wand groups
-        assert run(q, "or", algorithm="wand") == want
-        SegmentSearcher.PER_UNIT_MIN_POSTINGS = 1 << 60  # always shard-only
-        assert run(q, "or", algorithm="wand") == want
-    finally:
-        SegmentSearcher.PER_UNIT_MIN_POSTINGS, SegmentSearcher.FINE_GROUP_MIN_POSTINGS = old
+    assert run(q, "or", algorithm="wand") == run(q, "or")
 
     # per-term chain cache: warm hit returns the same object; absent terms
     # cache an empty entry; eviction keeps the budget

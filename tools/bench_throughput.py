@@ -5,7 +5,9 @@ sustains with many in flight. The reference's web tier is Flask in front of a
 3-shard Elasticsearch (web-interaction/), which serves concurrent users by
 construction; here the engine itself is the concurrent surface
 (ThreadingHTTPServer → search_local), so QPS-vs-concurrency is an engine
-property worth pinning.
+property worth pinning. Each query runs wholly on its client thread, and
+mem.admission() caps how many execute at once: the client count c and that
+width are the only parallelism.
 
 Protocol: open_local on the 1M store, one untimed pass over the 24-query mix
 to fill chain/scored-chain memos (warm serving is the steady state a
@@ -133,9 +135,9 @@ def main() -> None:
             "qps": round(n_req / wall, 1),
             "p50_ms": round(statistics.median(lat_sorted) * 1000, 1),
             "p95_ms": round(lat_sorted[int(0.95 * (len(lat_sorted) - 1))] * 1000, 1),
-            # the admission queue is FIFO (threading.Condition wakes waiters
-            # in arrival order), but closed-loop clients re-enter immediately
-            # — p99/max expose any starvation the p95 hides
+            # the admission queue is FIFO (a releasing holder hands its slot
+            # to the oldest waiter), but closed-loop clients re-enter
+            # immediately — p99/max expose any starvation the p95 hides
             "p99_ms": round(lat_sorted[int(0.99 * (len(lat_sorted) - 1))] * 1000, 1),
             "max_ms": round(lat_sorted[-1] * 1000, 1),
         }

@@ -1,10 +1,11 @@
-"""Admission-width × per-query-pool-width sweep on the 5M store (VERDICT r6
-directive 4). The width-2 admission optimum was measured on the 1M 3-shard
-store; the 5M store has 10 shards and ~5× the per-query head work, so the
-joint optimum may differ. One process, one WARM searcher (memos survive
-across combos — steady-state serving is what the directive grades); between
-combos the admission gate and the scoring pool are rebuilt from the combo's
-values. Writes BENCH/serving_sweep_5m.json.
+"""Admission-width sweep on the 5M store: for each gate width, QPS and
+per-request latency at each client concurrency level. Each query runs on its
+client thread, so the admission width (UCUDDLE_MAX_INFLIGHT_QUERIES in the
+serving tier) is the only parallelism knob. One process, one WARM searcher
+(memos survive across widths — steady-state serving is what this measures);
+between widths the admission gate is rebuilt. Every response is
+parity-checked against a single-threaded reference. Writes
+BENCH/serving_sweep_5m.json.
 
 Run: python tools/sweep_serving_5m.py [store]
 """
@@ -21,8 +22,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-import os  # noqa: E402
-
 from ucuddle_search_engine_spark.functions import mem  # noqa: E402
 from ucuddle_search_engine_spark.operators.wand import SegmentSearcher  # noqa: E402
 from bench_throughput import QUERY_MIX  # noqa: E402  (the 24-query 5M mix)
@@ -30,8 +29,7 @@ from bench_throughput import QUERY_MIX  # noqa: E402  (the 24-query 5M mix)
 STORE = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.data/store_5m"
 LEVELS = [8, 32]
 ROUNDS = 1
-ADMISSIONS = [2, 4, 8]
-POOLS = [32, 16, 8]
+ADMISSIONS = [1, 2, 4, 8]
 
 
 def measure(local, c: int) -> dict:
@@ -81,19 +79,13 @@ def main() -> None:
         local.search_local(t, k=10, mode=m)
     out: dict = {"store": STORE, "levels": LEVELS, "rounds": ROUNDS, "combos": {}}
     for adm in ADMISSIONS:
-        for pool in POOLS:
-            # rebuild the gate + pool for this combo (sweep-only surgery; the
-            # serving tier sets these once at startup from env)
-            mem._ADMIT_SEM = mem._FairGate(adm)
-            os.environ["UCUDDLE_QUERY_POOL_WIDTH"] = str(pool)
-            old = local._pool
-            local._pool = None
-            if old is not None:
-                old.shutdown(wait=True)
-            key = f"adm{adm}_pool{pool}"
-            row = {str(c): measure(local, c) for c in LEVELS}
-            out["combos"][key] = row
-            print(key, json.dumps(row), flush=True)
+        # rebuild the gate for this width (sweep-only surgery; the serving
+        # tier builds it once, at first use, from env)
+        mem._ADMIT_SEM = mem._FairGate(adm)
+        key = f"adm{adm}"
+        row = {str(c): measure(local, c) for c in LEVELS}
+        out["combos"][key] = row
+        print(key, json.dumps(row), flush=True)
     with open("/root/repo/BENCH/serving_sweep_5m.json", "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))

@@ -13,7 +13,8 @@ Three pieces, all idempotent per process:
   fault multi-threaded already); disabling its dirty-page decay lets warm
   queries reuse pages instead of refaulting them.
 - ``admission()``: the FIFO gate that bounds how many serving queries
-  execute at once; ``active_queries()`` reads its holder count.
+  execute at once. It is the serving tier's only source of parallelism:
+  each admitted query runs wholly on its own request thread.
 
 ``serving_posture()`` applies the two allocator settings; ``open_local``
 calls it at store open and ``admission()`` on its first use.
@@ -78,20 +79,22 @@ def admission() -> _FairGate:
     """Bounded-admission gate for serving-tier queries (search_local /
     phrase_search_local): at most N queries EXECUTE concurrently; the rest
     wait on the gate (a GIL-free futex wait), exactly the ES
-    search-thread-pool-plus-queue posture. Rationale (BENCH/throughput.json,
-    1M docs, 24-query warm mix, 32-core VM): each query is already
-    internally parallel — the scoring pool fans (shard, unit) groups across
-    up to 32 threads — so stacking more QUERY threads on top oversubscribes
-    the same cores and convoys the GIL-held per-chain bookkeeping: measured
-    QPS peaked at concurrency 2 (66.2) and COLLAPSED to 29 at 8-32
-    in-flight, with p95 inflating 35 ms → 6.9 s. Closed-loop latency is
-    c/QPS regardless (Little's law), so capping execution width raises
-    throughput AND tightens the tail.
+    search-thread-pool-plus-queue posture: a query runs on the one thread
+    that was admitted, and throughput comes from queries running side by
+    side, not from splitting one. Stacking more query threads than the
+    cores can run convoys the GIL-held per-chain bookkeeping: on a 32-core
+    VM (BENCH/throughput.json, 1M docs, 24-query warm mix, when each query
+    still fanned out on its own scoring pool) QPS peaked at concurrency 2
+    (66.2) and COLLAPSED to 29 at 8-32 in-flight, with p95 inflating
+    35 ms → 6.9 s. Closed-loop latency is c/QPS regardless (Little's law),
+    so capping execution width raises throughput AND tightens the tail.
 
     Limit: UCUDDLE_MAX_INFLIGHT_QUERIES (0 = unbounded, the gate still
-    counts holders); default 2 — the measured optimum on the 32-core VM
-    (width 2: 86-88 QPS / p95 ~41 ms at 8-32 in flight; width 4: 63-75 QPS /
-    p95 131-195 ms). A malformed value warns and uses the default.
+    counts holders); default 2 — the measured optimum on that 32-core VM
+    with pooled queries (width 2: 86-88 QPS / p95 ~41 ms at 8-32 in flight;
+    width 4: 63-75 QPS / p95 131-195 ms). It has not been re-swept on a
+    4-core box or for single-threaded queries (ROADMAP item 4). A malformed
+    value warns and uses the default.
 
     First use also applies serving_posture(), which covers searchers that
     did not come from open_local."""
@@ -117,14 +120,6 @@ def admission() -> _FairGate:
     return _ADMIT_SEM
 
 
-def active_queries() -> int:
-    """Serving queries admitted right now (the gate's holder count; 0
-    before the first query). Read racily by the scoring fan-out's width
-    heuristic, which needs no more."""
-    gate = _ADMIT_SEM
-    return gate._active if gate is not None else 0
-
-
 def enable_heap_reuse() -> bool:
     """mallopt so glibc serves large allocations from the reusable heap
     instead of fresh mmaps. Idempotent; returns False on non-glibc."""
@@ -141,14 +136,15 @@ def enable_heap_reuse() -> bool:
             ok = (libc.mallopt(M_MMAP_THRESHOLD, 2**31 - 1) == 1
                   and libc.mallopt(M_TRIM_THRESHOLD, 2**31 - 1) == 1
                   and libc.mallopt(M_MMAP_MAX, 0) == 1)
-            # single arena: per-THREAD arenas (the scoring pool's) shrink
-            # their heaps back to the OS on free regardless of the main
-            # arena's trim threshold, so a 24-thread scorer re-faulted
-            # ~2 GB/query (measured 400-550k minor faults, warm latency
+            # single arena: per-THREAD arenas shrink their heaps back to
+            # the OS on free regardless of the main arena's trim threshold,
+            # so every request thread would re-fault its working set (on a
+            # 32-core VM a since-deleted 24-thread intra-query scorer
+            # re-faulted ~2 GB/query: 400-550k minor faults, warm latency
             # 10-22 s vs 2.6 s with one arena). Large-block mallocs under one
             # arena serialize on its lock, but the serving tier's blocks are
-            # few and big — measured net win. Threads that already mapped an
-            # arena keep it; call this before the pools spawn.
+            # few and big. Threads that already mapped an arena keep it;
+            # call this before the request threads spawn.
             libc.mallopt(M_ARENA_MAX, 1)
             _ENABLED = bool(ok)
             return _ENABLED

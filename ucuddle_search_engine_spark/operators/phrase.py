@@ -55,10 +55,11 @@ def phrase_match(postings: DataFrame, terms: list[str], field: int = 0,
                  num_buckets: int | None = None) -> DataFrame:
     """(doc_id, phrase_tf) for docs containing the exact term sequence —
     the production path: ONE shuffle of the phrase terms' (pruned) postings
-    on doc_id (`repartition(num_buckets, doc_id)`), then a sorted-key
-    adjacency merge over (doc_id << 32) | position composite keys (the
-    serving tier's _match_key algorithm, inlined) runs vectorized in a
-    `mapInArrow` over each partition.
+    on doc_id (`repartition(num_buckets, doc_id)`), then the sorted-key
+    adjacency kernel the serving tier's key engine also runs
+    (_adjacent_starts, over (doc ordinal << 32) | position composite keys,
+    where ordinals re-code the partition's doc ids densely so any 64-bit
+    doc_id is safe) runs vectorized in a `mapInArrow` over each partition.
 
     Scale shape: the scan prunes to the |q| phrase terms (tb directories +
     pushed term predicate on written sidecars), each (term, doc) row is
@@ -103,11 +104,15 @@ def phrase_match(postings: DataFrame, terms: list[str], field: int = 0,
         present = {t: i for i, t in enumerate(vocab)}
         if any(t not in present for t in tlist):
             return
-        docs_np = tbl.column("doc_id").combine_chunks().to_numpy()
+        # doc ids → dense partition ordinals before packing: a raw doc_id
+        # ≥ 2³¹ shifted left by 32 overflows int64 (and ≥ 2³² collides with
+        # a small id); ordinals are < the partition's row count
+        doc_ids, ordinal = np.unique(
+            tbl.column("doc_id").combine_chunks().to_numpy(), return_inverse=True)
         lst = tbl.column("positions").combine_chunks()
         counts = pc.list_value_length(lst).to_numpy().astype(np.int64)
         flat = pc.list_flatten(lst).to_numpy().astype(np.int64)
-        allk = (np.repeat(docs_np, counts) << 32) | flat
+        allk = (np.repeat(ordinal.astype(np.int64), counts) << 32) | flat
         code_rep = np.repeat(codes, counts)
         keys: dict[str, np.ndarray] = {}
         for t in dict.fromkeys(tlist):
@@ -116,19 +121,12 @@ def phrase_match(postings: DataFrame, terms: list[str], field: int = 0,
                 return
             kt.sort()
             keys[t] = kt
-        cur = keys[tlist[0]]
-        for i, t in enumerate(tlist[1:], start=1):
-            kt = keys[t]
-            probe = cur + i
-            idx = np.searchsorted(kt, probe)
-            ok = idx < len(kt)
-            ok[ok] = kt[idx[ok]] == probe[ok]
-            cur = cur[ok]
-            if not len(cur):
-                return
-        uniq, tf = np.unique(cur >> 32, return_counts=True)
+        cur = _adjacent_starts([keys[t] for t in tlist])
+        if not len(cur):
+            return
+        ords, tf = np.unique(cur >> 32, return_counts=True)
         yield pa.record_batch(
-            [pa.array(uniq.astype(np.int64)), pa.array(tf.astype(np.int64))],
+            [pa.array(doc_ids[ords].astype(np.int64)), pa.array(tf.astype(np.int64))],
             names=["doc_id", "phrase_tf"],
         )
 
@@ -415,7 +413,7 @@ def _load_entries(files, terms: list[str], field: int, cache,
         # NO global sort/take: a (term, doc_id) Table.sort_by gathers the
         # whole 2 GB positions column through Arrow take (measured 8-10 s at
         # 5M docs, the single largest cold stage). Instead each term argsorts
-        # its df-sized doc rows (5M int64 ≈ 0.4 s) and a fused chunk-parallel
+        # its df-sized doc rows (5M int64 ≈ 0.4 s) and a fused, chunked
         # expand+gather below writes the doc-ordered RANK values directly —
         # the positions column is only ever touched once, by the gather.
         doc_np = tab.column("doc_id").to_numpy(zero_copy_only=False)
@@ -456,17 +454,15 @@ def _load_entries(files, terms: list[str], field: int, cache,
         ranks = np.empty(n, dtype=dt)
         out_starts = np.cumsum(oc) - oc
         # fused expand+gather+base-add, ~2M values per chunk so the gather
-        # index and repeat temporaries stay cache-sized; chunks write
-        # disjoint output slices → thread-parallel (kernels release the GIL)
+        # index and repeat temporaries stay cache-sized; each chunk writes
+        # its own output slice
         cuts = np.unique(np.searchsorted(
             out_starts, np.arange(0, n + 2_000_000, 2_000_000)))
-
-        def fill(w: int) -> None:
-            c0, c1 = int(cuts[w]), int(cuts[w + 1])
+        for c0, c1 in zip(cuts[:-1].tolist(), cuts[1:].tolist()):
             ln = oc[c0:c1]
             m = int(ln.sum())
             if m == 0:
-                return
+                continue
             loc = np.cumsum(ln) - ln
             idx = np.arange(m, dtype=np.int64)
             idx -= np.repeat(loc, ln)
@@ -474,44 +470,20 @@ def _load_entries(files, terms: list[str], field: int, cache,
             seg = flat[idx].astype(dt, copy=False)
             seg += np.repeat(base[c0:c1], ln)
             ranks[out_starts[c0]: out_starts[c0] + m] = seg
-
-        if len(cuts) > 2:
-            list(_probe_pool().map(fill, range(len(cuts) - 1)))
-        elif len(cuts) == 2:
-            fill(0)
         if form == "k":
             entry = (ranks, sdocs, dls)
         else:
             entry = (ranks, sdocs, oc, dls, _pack_rank_bits(ranks, total))
         return entry
 
-    # per-term builds are independent (shared inputs are read-only slices);
-    # the numpy/arrow kernels inside release the GIL, so overlapping the two
-    # head terms of a phrase roughly halves the serial cumsum+pack chain.
-    # Runs on its own pool — build() itself waits on _probe_pool tasks, and
-    # sharing one pool could deadlock (all workers occupied by waiters)
-    if len(need) > 1:
-        entries = list(_entry_pool().map(build, need))
-    else:
-        entries = [build(t) for t in need]
-    for t, e in zip(need, entries):
+    for t in need:
+        e = build(t)
         if e is None:  # position outside doclen span → caller falls back
             return None
         loaded[t] = e
         if cache is not None:
             cache.put((t, field, form), e)
     return loaded
-
-
-_ENTRY_POOL = None
-
-
-def _entry_pool():
-    global _ENTRY_POOL
-    if _ENTRY_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-        _ENTRY_POOL = ThreadPoolExecutor(4, thread_name_prefix="phrase-entry")
-    return _ENTRY_POOL
 
 
 def _pack_rank_bits(ranks, total: int):
@@ -534,126 +506,66 @@ def _pack_rank_bits(ranks, total: int):
         # wrong dtype silently promotes (COPIES) the whole rank array each
         # call (measured 3 s of a 15 s cold fill at 1M docs)
         cuts = np.searchsorted(ranks, bounds.astype(ranks.dtype))
-
-        def pack_window(w: int) -> None:
+        for w in range(len(bounds) - 1):
             lo, hi = int(bounds[w]), int(bounds[w + 1])
             a, b = int(cuts[w]), int(cuts[w + 1])
             if a == b:
-                return
+                continue
             bits = np.zeros(hi - lo, dtype=bool)
             bits[ranks[a:b] - np.asarray(lo, dtype=ranks.dtype)] = True
             # lo is a multiple of 8·(chunk/8), so the packed slice aligns
             packed[lo // 8: lo // 8 + (hi - lo + 7) // 8] = np.packbits(
                 bits, bitorder="little")
-
-        # windows write DISJOINT packed slices with their own bool buffer —
-        # thread-parallel on the shared probe pool (scatter + packbits
-        # release the GIL; measured ~3× on a 4-window 1M-doc fill)
-        if len(bounds) > 2:
-            list(_probe_pool().map(pack_window, range(len(bounds) - 1)))
-        else:
-            pack_window(0)
     return packed
 
 
-def _match_key(loaded: dict, terms: list[str]):
-    """Sorted-key adjacency merge: phrase start keys survive term i iff
-    key+i is among term i's keys (binary search per candidate)."""
+def _adjacent_starts(keys: list):
+    """Sorted-key adjacency merge, the one kernel behind both the distributed
+    phrase_match and the serving key engine: keys[i] is the sorted
+    (doc << 32) | position array of the phrase's i-th term, and a start key
+    of keys[0] survives iff key+i is among keys[i] for every i (binary
+    search per candidate). Returns the surviving start keys, still sorted."""
     import numpy as np
 
-    _, first_docs, first_dls = loaded[terms[0]]
-    cur = loaded[terms[0]][0]  # candidate phrase START positions
-    for i, t in enumerate(terms[1:], start=1):
+    cur = keys[0]
+    for i, kt in enumerate(keys[1:], start=1):
         if not len(cur):
             break
-        kt = loaded[t][0]
         if not len(kt):
-            cur = cur[:0]
-            break
+            return cur[:0]
         probe = cur + i
         idx = np.searchsorted(kt, probe)
         ok = idx < len(kt)
         ok[ok] = kt[idx[ok]] == probe[ok]
         cur = cur[ok]
+    return cur
+
+
+def _match_key(loaded: dict, terms: list[str]):
+    """Key-form adjacency over the serving entries (_adjacent_starts)."""
+    import numpy as np
+
+    _, first_docs, first_dls = loaded[terms[0]]
+    cur = _adjacent_starts([loaded[t][0] for t in terms])
     # cur is a subset of the sorted first-term keys, so docs stay sorted
     uniq, tf = np.unique(cur >> 32, return_counts=True)
     return uniq, tf, first_docs, first_dls
 
 
-_PROBE_POOL = None
-
-
-def _probe_pool():
-    """Shared thread pool for the bitmap probe and mask compaction: numpy's
-    gather/ufunc kernels release the GIL on large arrays, and both stages
-    are memory-LATENCY-bound (random byte gathers into a bitmap bigger than
-    L3), so throughput scales with outstanding misses, i.e. threads. 4
-    threads measured 4.3× the monolithic expression on a 57M-candidate
-    head-head probe at 1M docs; at 5M docs (286M candidates, 274 MB bitmap)
-    the sweep measured 4→16 threads as a further ~1.35× on the full query
-    with no regression at 1M, and 32 as noise-dominated — so min(16, cpus)."""
-    global _PROBE_POOL
-    if _PROBE_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-        _PROBE_POOL = ThreadPoolExecutor(min(16, os.cpu_count() or 4),
-                                         thread_name_prefix="phrase-probe")
-    return _PROBE_POOL
-
-
-def _compact_masked(arrs: list, mask):
-    """[a[mask] for a in arrs], thread-parallel over disjoint chunks: numpy's
-    boolean indexing is a single-threaded pass (~340M elem/s measured — the
-    LARGEST single stage of a 5M-doc head-head phrase at 0.83 s), but
-    compaction is chunk-local given per-chunk output offsets, so count
-    (flatnonzero) per chunk, exclusive-sum the counts, then gather each
-    chunk into its output slice in parallel."""
-    import numpy as np
-
-    n = len(mask)
-    CH = 8 * 1024 * 1024
-    if n <= CH:
-        return [a[mask] for a in arrs]
-    bounds = list(range(0, n, CH)) + [n]
-    nch = len(bounds) - 1
-    idxs: list = [None] * nch
-
-    def count(i: int) -> None:
-        idxs[i] = np.flatnonzero(mask[bounds[i]:bounds[i + 1]])
-
-    list(_probe_pool().map(count, range(nch)))
-    offs = np.concatenate(([0], np.cumsum([len(ix) for ix in idxs])))
-    outs = [np.empty(int(offs[-1]), dtype=a.dtype) for a in arrs]
-
-    def gather(i: int) -> None:
-        lo, o0, o1 = bounds[i], offs[i], offs[i + 1]
-        for a, out in zip(arrs, outs):
-            np.take(a[lo:bounds[i + 1]], idxs[i], out=out[o0:o1])
-
-    list(_probe_pool().map(gather, range(nch)))
-    return outs
-
-
 def _probe_bits(cand_r, packed, shift: int, bit_lut):
     """hit[j] = bit (cand_r[j]+shift) of the packed little-endian bitmap.
-    Chunked so the idx/gather temporaries stay cache-sized, thread-parallel
-    on disjoint output slices."""
+    Chunked so the idx/gather temporaries stay cache-sized."""
     import numpy as np
 
     n = len(cand_r)
     rdt = cand_r.dtype.type
     out = np.empty(n, dtype=bool)
     CH = 4 * 1024 * 1024
-
-    def work(lo: int) -> None:
+    for lo in range(0, n, CH):
         hi = min(lo + CH, n)
         idx = cand_r[lo:hi] + rdt(shift)
         np.not_equal(packed[idx >> rdt(3)] & bit_lut[idx & rdt(7)], 0,
                      out=out[lo:hi])
-
-    if n > CH:
-        list(_probe_pool().map(work, range(0, n, CH)))
-    else:
-        work(0)
     return out
 
 
@@ -694,12 +606,11 @@ def _match_rank(loaded: dict, terms: list[str], offsets):
                     return empty, empty, sdocs, dls
         # uint8 LUT keeps the whole probe in uint8 (and ranks in uint32 when
         # the token space allows) — no int64 promotion of 10^7-10^8-element
-        # temporaries; chunked + thread-parallel (see _probe_bits)
+        # temporaries; chunked (see _probe_bits)
         hit = _probe_bits(cand_r, packed, i, bit_lut)
+        cand_r = cand_r[hit]
         if cand_doc is not None:
-            cand_r, cand_doc = _compact_masked([cand_r, cand_doc], hit)
-        else:
-            (cand_r,) = _compact_masked([cand_r], hit)
+            cand_doc = cand_doc[hit]
         if not len(cand_r):
             return empty, empty, sdocs, dls
     if cand_doc is None:

@@ -15,6 +15,13 @@ the filter is a pruned parquet scan (partitioned by shard, term-sorted row
 groups), each shard task decodes only the query terms' blocks, and block-max
 skips blocks whose max_impact bound cannot beat the running threshold θ.
 Driver traffic is |q| idf rows + S·k candidate rows.
+
+Serving posture (SegmentSearcher.search_local): the same scorers run
+driver-side with no Spark job, and each query runs on the one request thread
+that mem.admission() admitted — shards scored in order, cache misses decoded
+inline. Serving throughput comes from admitting several queries at once (as
+Elasticsearch runs each shard-level search on one search-pool thread), not
+from splitting one query across threads.
 """
 
 from __future__ import annotations
@@ -38,20 +45,6 @@ from .storefiles import StoreFiles, _default_seg_cache_bytes
 # relative margin before any pruning comparison — a few extra decoded blocks,
 # never a dropped k-boundary tie.
 UB_EPS = 1e-9
-
-
-_GSM_POOL = None
-
-
-def _gsm_pool():
-    """2-thread helper pool for get_scored_many's independent stream decodes
-    (docs/tfs run here, dls on the caller thread)."""
-    global _GSM_POOL
-    if _GSM_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _GSM_POOL = ThreadPoolExecutor(2, thread_name_prefix="gsm-decode")
-    return _GSM_POOL
 
 
 def _default_decode_cache_postings() -> int:
@@ -191,15 +184,8 @@ class DecodeCache:
         scoring group. Per-chain cache entries are sliced out as copies so
         eviction frees real memory (same contract as get_many).
 
-        Big miss sets additionally split into up to GSM_MAX_PARTS
-        block-balanced parts decoded on their own threads: chains are
-        independent byte streams and the per-chain scoring broadcast is
-        elementwise, so the partition leaves every array bit-identical while
-        the numpy kernels (which release the GIL) overlap — measured 7.4 s →
-        ~2.5 s on a 65M-posting cold fuzzy fill at 5M docs. Plain threads,
-        not a pool: parts must never queue behind another caller's parts (or
-        deadlock behind this method's own stream-overlap submissions to
-        _gsm_pool on the single-part path)."""
+        Misses decode on the calling thread (see the module docstring's
+        serving posture)."""
         out: list = [None] * len(entries)
         miss: list[int] = []
         for i, e in enumerate(entries):
@@ -211,53 +197,6 @@ class DecodeCache:
                 miss.append(i)
         if not miss:
             return out
-        total_blocks = sum(len(entries[i][3]) for i in miss)
-        nparts = min(self.GSM_MAX_PARTS,
-                     max(1, total_blocks // self.GSM_PART_MIN_BLOCKS))
-        if nparts > 1:
-            # greedy balance by block count (chain sizes are zipf-skewed)
-            order = sorted(miss, key=lambda i: -len(entries[i][3]))
-            parts: list[list[int]] = [[] for _ in range(nparts)]
-            loads = [0] * nparts
-            for i in order:
-                p = loads.index(min(loads))
-                parts[p].append(i)
-                loads[p] += len(entries[i][3])
-            import threading
-
-            ts = [threading.Thread(target=self._score_miss_part,
-                                   args=(entries, part, out))
-                  for part in parts[1:] if part]
-            for t in ts:
-                t.start()
-            self._score_miss_part(entries, parts[0], out)
-            for t in ts:
-                t.join()
-            return out
-        self._score_miss_part(entries, miss, out, overlap=True)
-        return out
-
-    #: cap on concurrent decode parts — beyond ~6 the allocator (single
-    #: glibc arena, see mem.enable_heap_reuse) and memory bandwidth saturate
-    #: (r7: env-tunable for per-box sweeps; 6 stays the measured default —
-    #: the 12/16-part sweep on this box did not beat it, see
-    #: BENCH/query_classes.json cold-fuzzy rows)
-    try:
-        GSM_MAX_PARTS = max(1, int(os.environ.get("UCUDDLE_GSM_MAX_PARTS", "6")))
-    except ValueError:
-        GSM_MAX_PARTS = 6
-    #: minimum blocks (~128 postings each) per part — below ~2M postings a
-    #: part's thread + join overhead outweighs the overlap
-    GSM_PART_MIN_BLOCKS = 16384
-
-    def _score_miss_part(self, entries: list, miss: list[int], out: list,
-                         overlap: bool = False) -> None:
-        """Decode + score one part of a get_scored_many miss set into `out`
-        (disjoint indices per part — no synchronization needed on the list;
-        cache puts take the instance lock). With overlap=True the three
-        streams fan out on _gsm_pool (single-part path only)."""
-        if not miss:
-            return
         doc_bufs: list = []
         tf_bufs: list = []
         dl_bufs: list = []
@@ -268,22 +207,9 @@ class DecodeCache:
             tf_bufs.extend(tb)
             dl_bufs.extend(lb)
             nblocks[j] = len(db)
-        if overlap:
-            # the three streams decode independently — overlap them on a
-            # small dedicated pool (the numpy kernels inside release the
-            # GIL; the byte-joins interleave). Dedicated so a scoring-pool
-            # caller can never deadlock against its own pool.
-            fd = _gsm_pool().submit(decode_doc_ids_concat, doc_bufs)
-            ft = _gsm_pool().submit(vb_decode_concat, tf_bufs)
-            dls_all = vb_decode_concat(dl_bufs)[0].astype(np.float64)
-            docs_all, cnt_blk = fd.result()
-            tfs_all = ft.result()[0].astype(np.float64)
-        else:
-            # multi-part caller: parts already overlap each other — inline
-            # streams keep thread count at nparts, not 3×nparts
-            docs_all, cnt_blk = decode_doc_ids_concat(doc_bufs)
-            tfs_all = vb_decode_concat(tf_bufs)[0].astype(np.float64)
-            dls_all = vb_decode_concat(dl_bufs)[0].astype(np.float64)
+        docs_all, cnt_blk = decode_doc_ids_concat(doc_bufs)
+        tfs_all = vb_decode_concat(tf_bufs)[0].astype(np.float64)
+        dls_all = vb_decode_concat(dl_bufs)[0].astype(np.float64)
         # per-chain posting counts from per-BLOCK counts (zero-block chains
         # included): chain j covers blocks [bo[j], bo[j+1])
         bo = np.concatenate(([0], np.cumsum(nblocks)))
@@ -301,6 +227,7 @@ class DecodeCache:
             self._put((e[0], "__scored__", float(e[1]), float(e[2])),
                       (docs, contrib, None))
             out[i] = (docs, contrib)
+        return out
 
     def get_many(self, ckey: tuple, ordinals, doc_bytes, tf_bytes, dl_bytes):
         """(docs, tfs, dls) concatenated over `ordinals` (block ids within one
@@ -1123,7 +1050,6 @@ class SegmentSearcher:
         self._pds: dict[str, object] = {}
         self.files = StoreFiles(store_dir) if store_dir is not None else None
         self._decode_cache: DecodeCache | None = None  # built on first search_local
-        self._pool = None  # lazy shard-parallel scoring pool (search_local)
         import collections
 
         self._seg_chains: "collections.OrderedDict[str, list]" = collections.OrderedDict()
@@ -1225,21 +1151,6 @@ class SegmentSearcher:
     # decodes pay off (BENCH/wand_micro.json measured the crossover against
     # the retired exact scan: parity at ~0.8M, widening with size)
     WAND_MIN_POSTINGS = 500_000
-    #: below this many selected postings a query is scored in shard-only
-    #: groups — finer (shard, unit) fan-out only pays once chains are big
-    #: (per-group fixed overhead + per-group θ convergence both cost; at 1M
-    #: docs a 0.8M-posting mid query measured 146 ms in 3 shard groups vs
-    #: 218 ms in 12 (shard, unit) groups)
-    PER_UNIT_MIN_POSTINGS = 2_000_000
-    #: ... and even above that total, only when the AVERAGE fine group
-    #: clears this many postings — per-group cost must be numpy-dominated
-    #: for the finer fan-out (and the pool) to pay
-    FINE_GROUP_MIN_POSTINGS = 200_000
-    #: below this many selected postings PER SCORING GROUP, search_local
-    #: scores the groups serially in the calling thread: the work is then
-    #: GIL-held Python (chain/frame bookkeeping), and a thread-pool fan-out
-    #: is a convoy, not a speedup (see the routing comment in search_local)
-    POOL_MIN_POSTINGS = 300_000
 
     def search_terms(self, terms: list[str], k: int = 20, mode: str = "and",
                      algorithm: str = "auto", offset: int = 0,
@@ -1370,7 +1281,6 @@ class SegmentSearcher:
         obj._pds = {}
         obj.files = StoreFiles(store_dir)
         obj._decode_cache = None
-        obj._pool = None
         import collections
 
         obj._seg_chains = collections.OrderedDict()
@@ -1401,8 +1311,9 @@ class SegmentSearcher:
                      algorithm: str = "auto", offset: int = 0,
                      round_dp: int | None = None) -> list[tuple[int, float]]:
         """Admission-gated serving read path (_search_local_impl): at most
-        mem.admission()'s width of queries execute at once. Rejects an
-        `algorithm` outside ALGORITHMS before any read."""
+        mem.admission()'s width of queries execute at once, each wholly on
+        its caller's thread. Rejects an `algorithm` outside ALGORITHMS
+        before any read."""
         from ..functions import mem
 
         _check_algorithm(algorithm)
@@ -1417,7 +1328,8 @@ class SegmentSearcher:
         """The serving-tier read path: identical ranking to search_terms, but
         executed entirely driver-side — keyed reads of the query terms' rows
         from the view's resident decoded row groups (self.files) feeding the
-        same per-shard numpy scorers. No Spark job, so latency is a
+        same per-shard numpy scorers, one shard after another on the calling
+        thread. No Spark job, so latency is a
         first-touch row-group decode at worst (ms), not job scheduling
         (~1 s floor).
 
@@ -1473,35 +1385,19 @@ class SegmentSearcher:
                          for t in terms
                          for (sh, u, f, _g, _n, _s) in chains_by_term.get(t, ())
                          if (t, f) in widf]))
-            # Shard-parallel scoring: (shard, unit) groups are doc-disjoint —
+            # One scoring group per shard, scored in order on this thread:
             # shards partition doc_id by hash, and a live doc's postings for
             # a term live in exactly one unit (updates tombstone the prior
             # unit's row; summing tf across units would mis-score BM25's
-            # nonlinear tf term anyway) — so per-group top-(offset+k) heaps
-            # merge by a plain sort, no cross-group score summing.
-            # DecodeCache is lock-safe.
-            # small selections collapse to shard-only groups: per-group fixed
-            # overhead (list/cache assembly) dominates tiny chains. The
-            # criterion is postings PER FINE GROUP, not total — a fixed total
-            # threshold tuned at 12 (shard, unit) slices exploded to 80
-            # undersized groups on a 10-shard × 8-unit store (measured 3-6×
-            # warm-latency inflation on mid-OR and mixed-AND classes, pure
-            # per-group Python overhead)
-            fine_keys = {(sh, u) for t in terms
-                         for (sh, u, f, _g, _n, _s) in chains_by_term.get(t, ())
-                         if (t, f) in widf}
-            # TAAT groups by SHARD ONLY: its dense bincount then runs once
-            # per shard over the full doc span, not once per unit
-            per_unit = algorithm != "taat" \
-                and total_sel >= SegmentSearcher.PER_UNIT_MIN_POSTINGS \
-                and total_sel >= SegmentSearcher.FINE_GROUP_MIN_POSTINGS * max(1, len(fine_keys))
+            # nonlinear tf term anyway) — so per-shard top-(offset+k) heaps
+            # merge by a plain sort, no cross-group score summing. TAAT's
+            # dense bincount runs once per shard over the full doc span.
             groups: dict = {}
             for t in terms:
                 for sh, u, f, g, _n, slot in chains_by_term.get(t, ()):
                     key = (t, f)
                     if key not in widf:
                         continue
-                    gk = (sh, u) if per_unit and u is not None else sh
                     ck = (sh, t, f) if u is None else (sh, t, f, u)
                     # memoized chain view (same lifetime/eviction as the
                     # chain-frame cache entry it rides in): the pandas
@@ -1516,18 +1412,14 @@ class SegmentSearcher:
                         L = _BlockList(g, widf[key], avgdl[key],
                                        cache=cache, ckey=ck)
                         slot.append(L)
-                    groups.setdefault(gk, []).append((t, L))
+                    groups.setdefault(sh, []).append((t, L))
 
             # OR cold prefill: when every group will decode its chains
-            # EXHAUSTIVELY anyway (taat, or a >WIDE_OR_LISTS
-            # disjunction that _blockmax_or_numpy reroutes to taat), fill the
-            # scored-chain memo for ALL groups in ONE batched decode+score
-            # pass up front. 24 pool threads each running their own decode
-            # convoy on the GIL and the allocator (measured 13.5 s cold for a
-            # 58-term fuzzy at 5M docs); one thread over the same bytes with
-            # the batched cache-blocked decoder takes ~4 s, after which the
-            # pool's group scoring is pure cache hits.
-            if cache is not None and mode != "and" and (
+            # EXHAUSTIVELY anyway (taat, or a >WIDE_OR_LISTS disjunction that
+            # _blockmax_or_numpy reroutes to taat), fill the scored-chain memo
+            # for ALL groups in ONE batched decode+score pass up front, so
+            # the group scoring below is pure cache hits.
+            if mode != "and" and (
                 algorithm == "taat"
                 or any(len(v) > WIDE_OR_LISTS for v in groups.values())
             ):
@@ -1537,56 +1429,9 @@ class SegmentSearcher:
                      for v in groups.values() for _, L in v])
 
             stride = self.num_shards or 1
-
-            def run_group(chains):
-                return _score_chains(chains, mode, offset + k, nterms,
-                                     algorithm, dead, round_dp, stride=stride)
-
-            # Pool only when per-GROUP work is numpy-dominated (big decoded
-            # selections release the GIL for long spans). Small/medium
-            # groups are dominated by per-chain Python (frame slicing,
-            # cache bookkeeping, block loops) which HOLDS the GIL — fanning
-            # those across 10+ threads is a convoy: measured on a 10-shard
-            # 5M-doc store, tail-term 27 ms serial vs ~210 ms pooled, 3-term
-            # AND 88 ms serial vs 1.4-3.1 s pooled, while head-TAAT or4 was
-            # 321 ms pooled vs 1.37 s serial.
-            if len(groups) > 1 and \
-                    total_sel >= SegmentSearcher.POOL_MIN_POSTINGS * len(groups):
-                # Adaptive per-query fan-out width (r7, VERDICT directive 4):
-                # the pool itself stays all-cores wide, but when OTHER
-                # queries are executing (mem.active_queries > 1) this query
-                # keeps at most cores // (4 × active) groups in flight (at
-                # least 2): scoring is GIL-convoy bound past ~cores/4 live
-                # threads, so that budget is split across the active
-                # queries. The 5M sweep (BENCH/serving_sweep_5m.json,
-                # 32-core VM) measured 2 queries × 8 threads at 25.2 QPS p95
-                # 406 ms vs 17.6 QPS p95 702 ms when both fanned to all 32
-                # (thread thrash), while a LONE query keeps the full width
-                # (fuzzy warm 0.6 s at 32 vs 1.0-1.1 s at a fixed 8). The
-                # count is re-read at every refill, so a query that started
-                # alone narrows as soon as others are admitted.
-                import concurrent.futures as _cf
-                import itertools as _it
-
-                from ..functions import mem as _mem
-
-                cores = os.cpu_count() or 8
-                pool = self._scoring_pool()
-                it = iter(groups.values())
-                futs: set = set()
-                while True:
-                    act = _mem.active_queries()
-                    quota = len(groups) if act <= 1 else max(2, (cores // 4) // act)
-                    futs.update(pool.submit(run_group, w)
-                                for w in _it.islice(it, max(0, quota - len(futs))))
-                    if not futs:
-                        break
-                    done, futs = _cf.wait(futs, return_when=_cf.FIRST_COMPLETED)
-                    for f in done:
-                        tops.extend(f.result())
-            else:
-                for chains in groups.values():
-                    tops.extend(run_group(chains))
+            for chains in groups.values():
+                tops.extend(_score_chains(chains, mode, offset + k, nterms,
+                                          algorithm, dead, round_dp, stride=stride))
         tops.sort(key=lambda x: (-x[1], x[0]))
         return tops[offset:offset + k]
 
@@ -1698,30 +1543,3 @@ class SegmentSearcher:
                 old_t, _ = self._seg_chains.popitem(last=False)
                 self._seg_bytes -= self._seg_costs.pop(old_t)
         return out
-
-    def _scoring_pool(self):
-        """Shared thread pool for per-(shard, unit) scoring — created once
-        per searcher (threads are reused across queries and across the
-        serving tier's own request threads; map() just enqueues)."""
-        if self._pool is None:
-            with self._memo_lock:
-                if self._pool is None:
-                    import concurrent.futures
-
-                    # r7: width env-tunable for the admission × pool sweep at
-                    # 5M (VERDICT r6 directive 4); default = all cores. The
-                    # CONCURRENT-query throttling the sweep motivated lives
-                    # at the submission site (adaptive wave quota from
-                    # mem.active_queries, above), not in the pool width — a
-                    # fixed narrow pool bought 25 QPS under load but doubled
-                    # a lone query's fuzzy fan-out latency.
-                    try:
-                        width = int(os.environ.get("UCUDDLE_QUERY_POOL_WIDTH", "0"))
-                    except ValueError:
-                        width = 0
-                    if width <= 0:
-                        width = min(32, os.cpu_count() or 8)
-                    self._pool = concurrent.futures.ThreadPoolExecutor(
-                        max_workers=width,
-                        thread_name_prefix="score")
-        return self._pool
