@@ -50,3 +50,15 @@ def test_hash_ids_dense_unique_stable(spark):
     b = _mapping(assign_doc_ids_hash(corpus.repartition(11), ["repo", "path"], num_buckets=64, num_partitions=9))
     assert a == b
     assert sorted(a.values()) == list(range(500))
+
+
+def test_prefix_thousands_of_buckets_equals_sort(spark):
+    """2048 range buckets: the per-row bucket lookup is a binary search over
+    one literal boundary array, not a chain of 2047 comparisons (which
+    overflows the 64 KB JIT method limit), and the ids still equal the sort
+    oracle."""
+    corpus = synth_corpus(spark, 2500, partitions=5).cache()
+    a = _mapping(assign_doc_ids_sort(corpus, ["repo", "path"]))
+    b = _mapping(assign_doc_ids_prefix(corpus, ["repo", "path"], num_partitions=2048))
+    assert a == b
+    assert sorted(b.values()) == list(range(2500))

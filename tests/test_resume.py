@@ -55,9 +55,32 @@ def test_crash_resume_identical(spark, corpus, tmp_path_factory):
     assert _index_content(spark, clean_dir) == _index_content(spark, crash_dir)
 
 
+#: Spark jobs of one build of `corpus` (N_UNITS units, no sidecar; AQE runs
+#: each exchange as a job of its own): 10 for pass 0 (corpus count, id
+#: sample, id bucket counts, the unit-stats aggregation that caches docs),
+#: 3 per unit (docs write; segments exchange + write) and 2 for the tstats
+#: write. The layout that counted and re-read its outputs ran 75.
+BUILD_JOB_BUDGET = 10 + 3 * N_UNITS + 2
+
+
 def test_manifest_metrics_and_noop_rerun(spark, corpus, tmp_path_factory):
+    import pyarrow.parquet as pq
+
     out = str(tmp_path_factory.mktemp("idx_metrics"))
-    build_index_resumable(spark, corpus, out, n_units=N_UNITS)
+    corpus.count()  # the cached corpus is materialized outside the budget
+    sc = spark.sparkContext
+    sc.setJobGroup("build_budget", "one resumable build")
+    try:
+        build_index_resumable(spark, corpus, out, n_units=N_UNITS)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("build_budget")
+    assert len(jobs) <= BUILD_JOB_BUDGET, f"build ran {len(jobs)} Spark jobs"
+
+    def parquet_rows(path):
+        return sum(pq.ParquetFile(os.path.join(r, f)).metadata.num_rows
+                   for r, _, fs in os.walk(path) for f in fs if f.endswith(".parquet"))
+
     with open(os.path.join(out, "manifest.jsonl")) as f:
         rows = [json.loads(x) for x in f]
     assert len(rows) == N_UNITS
@@ -65,6 +88,15 @@ def test_manifest_metrics_and_noop_rerun(spark, corpus, tmp_path_factory):
         assert r["status"] == "parsed"
         assert r["docs"] > 0 and r["terms"] > 0 and r["bytes"] > 0 and r["wall_ms"] >= 0
         assert r["input_fingerprint"] and r["input_fingerprint"] != "empty"
+        # per-write metrics observed on the writes match what is on disk
+        pid = r["partition_id"]
+        assert r["docs_rows"] == r["docs"] == parquet_rows(os.path.join(out, f"docs/unit={pid}"))
+        assert r["segments_rows"] == parquet_rows(os.path.join(out, f"segments/unit={pid}"))
+        assert r["docs_ms"] >= 0 and r["segments_ms"] >= 0
+        # approximate distinct count (HLL++, ~5% relative error by default)
+        exact = spark.read.parquet(os.path.join(out, f"segments/unit={pid}")) \
+            .select("term").distinct().count()
+        assert abs(r["terms"] - exact) <= 0.1 * exact + 1
     # second run: everything fingerprint-matches → zero units rebuilt
     again = build_index_resumable(spark, corpus, out, n_units=N_UNITS)
     assert again["completed_units"] == 0
@@ -239,14 +271,19 @@ def test_df_invariant_and_postings_sidecar(spark, corpus, tmp_path_factory):
 
 
 def test_unit_fingerprints_single_pass(spark, corpus):
-    """_unit_fingerprints must (a) agree with the per-unit _fingerprint
-    formula exactly and (b) launch exactly ONE Spark job — not one scan per
-    unit (the 100 TB regression this guards against)."""
-    from ucuddle_search_engine_spark.operators.postings import build_docs
+    """_unit_stats must (a) agree with the per-unit _fingerprint formula and
+    the collection_stats avg() exactly, and (b) launch exactly ONE Spark
+    aggregation — not one scan per unit (the 100 TB regression this guards
+    against)."""
+    from ucuddle_search_engine_spark.operators.postings import (
+        build_docs,
+        collection_stats,
+        doclens_from_docs,
+    )
     from ucuddle_search_engine_spark.plans.build_index import (
         _fingerprint,
         _unit_col,
-        _unit_fingerprints,
+        _unit_stats,
     )
 
     docs = build_docs(corpus, num_shards=3, scale_ids="prefix").withColumn(
@@ -257,7 +294,7 @@ def test_unit_fingerprints_single_pass(spark, corpus):
     sc = spark.sparkContext
     sc.setJobGroup("fp_single_pass", "unit fingerprints")
     try:
-        fps = _unit_fingerprints(docs, N_UNITS + 1)  # +1: an empty unit
+        fps, n_docs, cstats = _unit_stats(docs, N_UNITS + 1)  # +1: an empty unit
     finally:
         sc.setJobGroup(None, None)
     jobs = sc.statusTracker().getJobIdsForGroup("fp_single_pass")
@@ -270,7 +307,13 @@ def test_unit_fingerprints_single_pass(spark, corpus):
         for pid in range(N_UNITS + 1)
     }
     assert fps == want
-    assert fps[N_UNITS] == "empty"
+    assert fps[N_UNITS] == "empty" and n_docs[N_UNITS] == 0
+    assert sum(n_docs.values()) == N_DOCS
+    # bit-identical to the groupBy/avg collection stats (title first)
+    ref = collection_stats(doclens_from_docs(docs.drop("_unit"))).collect()
+    assert sorted(cstats, key=lambda r: r["field"]) == \
+        sorted((r.asDict() for r in ref), key=lambda r: r["field"])
+    assert [r["field"] for r in cstats] == [1, 0]
     docs.unpersist()
 
 

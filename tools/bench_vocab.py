@@ -91,8 +91,8 @@ def main() -> None:
     dic.write.mode("overwrite").parquet(flat)
     t_flat_write = time.time() - t0
     t0 = time.time()
-    write_tstats(spark.read.parquet(flat), BASE)  # writes BASE/tstats
-    os.rename(os.path.join(BASE, "tstats"), pruned_dir)
+    # one row per (term, field): df passes through as the block count n
+    write_tstats(spark.read.parquet(flat).withColumnRenamed("df", "n"), pruned_dir)
     t_pruned_write = time.time() - t0
 
     # probe sets: cold single terms + 4-term queries, all present in the dict

@@ -56,14 +56,20 @@ def md5_prefix_long_py(text: str, hex_digits: int = 15) -> int:
     return int(hashlib.md5(text.encode("utf-8")).hexdigest()[:hex_digits], 16)
 
 
-def term_buckets(terms, n_buckets: int | None = None) -> list[int]:
+#: `tb` partition fan-out of the term-keyed store outputs (segments, tstats,
+#: postings sidecar): a term lookup prunes to 1/TERM_BUCKETS of the files
+TERM_BUCKETS = 64
+
+
+def term_bucket_col(term: Column | str = "term") -> Column:
+    """Spark form of the term → `tb` directory mapping (term_buckets)."""
+    return F.pmod(md5_prefix_long(term), F.lit(TERM_BUCKETS)).cast("int")
+
+
+def term_buckets(terms, n_buckets: int = TERM_BUCKETS) -> list[int]:
     """Sorted distinct `tb` partition buckets for a set of terms — THE single
     definition of the term→directory mapping every pruned reader (segments,
     tstats, postings sidecar; Spark and pyarrow alike) must share with the
-    store writers. Change the bucketing here and writers/readers move in
-    lockstep instead of five call sites drifting."""
-    if n_buckets is None:
-        from ..plans.build_index import TERM_BUCKETS
-
-        n_buckets = TERM_BUCKETS
+    store writers (term_bucket_col). Change the bucketing here and
+    writers/readers move in lockstep instead of five call sites drifting."""
     return sorted({md5_prefix_long_py(t) % n_buckets for t in terms})

@@ -52,24 +52,24 @@ def bag_signature_py(term: str) -> int:
 
 
 def bag_signature_col(term) -> "F.Column":
-    """Build-side packed bag signature, pure Column expressions (16 short
-    array passes per term, JVM-side, build-time only). `ascii()` returns the
-    full code point of the first character, so binning matches ord(c) % 16
-    on the Python side for Cyrillic as well as ASCII."""
-    chars = F.filter(F.split(term, ""), lambda c: c != F.lit(""))
-    bins = F.transform(chars, lambda c: F.pmod(F.ascii(c), F.lit(BAG_BINS)))
+    """Build-side packed bag signature, ONE aggregate() pass over the
+    term's characters, JVM-side, build-time only. Each character bumps its
+    nibble by XOR-replacing the nibble's value (saturating at 15), so no
+    arithmetic carry or signed overflow can reach the top nibble. `ascii()`
+    returns the full code point of the first character, so binning matches
+    ord(c) % 16 on the Python side for Cyrillic as well as ASCII."""
 
-    def _bin_eq(i: int):
-        # single-parameter closure on purpose: a `lambda b, i=i:` default
-        # would make Spark treat it as the TWO-argument (element, index)
-        # form of filter() and silently bind the array index over i
-        return lambda b: b == F.lit(i)
+    def bump(acc, c):
+        shift = F.pmod(F.ascii(c), F.lit(BAG_BINS)) * 4
+        old = F.call_function("shiftrightunsigned", acc, shift).bitwiseAND(F.lit(15))
+        bumped = acc.bitwiseXOR(F.call_function("shiftleft", old, shift)).bitwiseXOR(
+            F.call_function("shiftleft", old + 1, shift))
+        return F.when((c == F.lit("")) | (old == 15), acc).otherwise(bumped)
 
-    sig = F.lit(0).cast("long")
-    for i in range(BAG_BINS):
-        cnt = F.size(F.filter(bins, _bin_eq(i)))
-        sig = sig + F.shiftleft(F.least(cnt, F.lit(15)).cast("long"), 4 * i)
-    return sig
+    # coalesce types the column non-null, as the stored tstats schema has it
+    # (terms are never null)
+    return F.coalesce(F.aggregate(F.split(term, ""), F.lit(0).cast("long"), bump),
+                      F.lit(0).cast("long"))
 
 
 def sig_nibbles(sigs: "np.ndarray") -> "np.ndarray":

@@ -37,7 +37,7 @@ _ID_MODES = {
 
 
 def build_docs(corpus: DataFrame, num_shards: int = 3, scale_ids: bool | str = False,
-               analyzer=None, ingest_ts=None) -> DataFrame:
+               analyzer=None, ingest_ts=None, n_rows: int | None = None) -> DataFrame:
     """Corpus (repo, path, commit, lang, content) → docs table.
 
     - doc_id: deterministic dense rank over (repo, path) — replaces the
@@ -54,12 +54,18 @@ def build_docs(corpus: DataFrame, num_shards: int = 3, scale_ids: bool | str = F
       ("docs added since X") filters on it against a built store. Defaults to
       the batch's wall clock; pass ingest_ts (a Column) for deterministic
       stamping in tests/oracles.
+
+    n_rows: the corpus row count when the caller already has it (saves the
+    'prefix' id path its own count job).
     """
     if isinstance(scale_ids, str):
         assign = _ID_MODES[scale_ids]
     else:
         assign = assign_doc_ids_prefix if scale_ids else assign_doc_ids_sort
-    docs = assign(corpus, ["repo", "path"])
+    if assign is assign_doc_ids_prefix:
+        docs = assign(corpus, ["repo", "path"], n_rows=n_rows)
+    else:
+        docs = assign(corpus, ["repo", "path"])
     first_line = F.trim(F.substring_index(F.col("content"), "\n", 1))
     basename = F.element_at(F.split(F.col("path"), "/"), -1)
     title = F.when(F.length(first_line) >= 3, first_line).otherwise(basename)

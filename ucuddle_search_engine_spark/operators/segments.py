@@ -10,15 +10,16 @@ Layout (SURVEY.md §4.3 custom #2, BASELINE.json north_star):
 - per (shard, term): doc-ordered blocks of ≤ block_size postings, each block a
   row: delta+varbyte doc ids, varbyte tfs, varbyte doclens, and block-max
   metadata (max_impact = max BM25 tf-norm in block, idf excluded) for WAND.
-- persisted as parquet partitioned by shard, sorted by (term, block_no) within
-  files → Catalyst partition pruning on shard + row-group min/max pruning on
-  term make a term lookup a pruned scan (pushdown via layout, §4.1).
+- persisted as parquet partitioned by `tb` (md5 term bucket), rows sorted by
+  (term, field, shard, block_no) within files → directory pruning on tb +
+  row-group min/max pruning on term make a term lookup a pruned scan
+  (pushdown via layout, §4.1).
 
-Scale posture: the encode shuffle keys on (shard, term); a head term's group
-is bounded by the shard's doc count (df_shard ≤ docs/S), NOT by global df —
-shard count grows with the corpus, so Zipf head terms cannot overwhelm one
-task. That is the explicit skew-splitting the north_rule requires, realized
-through the shard dimension.
+Scale posture: the encode exchange keys on tb, the same key the store is
+partitioned by, so the written layout costs no second exchange. A head
+term's postings stay in one task but are never materialized as one array:
+the encoder streams the sorted run and carries at most one doc-range chunk
+(block_size·BLOCKS_PER_CHUNK postings) between Arrow batches.
 """
 
 from __future__ import annotations
@@ -30,7 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.varbyte import decode_doc_ids, vb_decode, vb_encode_with_offsets
+from ..functions.hashing import TERM_BUCKETS, term_bucket_col
+from ..functions.varbyte import vb_encode_with_offsets
 from .bm25 import B, K1
 
 DEFAULT_BLOCK = 128
@@ -41,169 +43,189 @@ SEGMENT_COLS = (
 )
 
 
-def build_segments(
+#: encode_segments output: the block rows plus their `tb` term bucket
+ENCODED_COLS = "tb int, " + SEGMENT_COLS
+#: blocks per doc-range chunk: block_no = chunk·BLOCKS_PER_CHUNK + block index
+#: within the (shard, term, field, chunk) group. Blocks restart at chunk
+#: boundaries, so a group never holds more than block_size·BLOCKS_PER_CHUNK
+#: postings — the encoder's carry between Arrow batches stays bounded even
+#: for a Zipf-head term
+BLOCKS_PER_CHUNK = 512
+
+
+def tb_partitioned(df: DataFrame) -> DataFrame:
+    """Hash-partition on the `tb` term bucket for a tb-partitioned write.
+    The explicit width (≤ TERM_BUCKETS: more partitions would stay empty)
+    keeps AQE from coalescing the stage onto one task; each tb still lands
+    in exactly one partition, so the write leaves one file per tb."""
+    width = min(TERM_BUCKETS, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(max(1, width), "tb")
+
+
+def field_avgdl(cstats) -> dict[int, float]:
+    """{field: avgdl} from collection stats given as a DataFrame (one small
+    collect) or as already-collected rows/dicts."""
+    rows = cstats.collect() if isinstance(cstats, DataFrame) else cstats
+    return {int(r["field"]): float(r["avgdl"]) for r in rows}
+
+
+def encode_segments(
     postings: DataFrame,
     dstats: DataFrame | None,
-    cstats: DataFrame,
+    cstats,
     num_shards: int = 3,
     block_size: int = DEFAULT_BLOCK,
 ) -> DataFrame:
-    """postings (term, doc_id, field, tf[, doclen]) → compressed block rows.
+    """postings (term, doc_id, field, tf[, doclen]) → compressed block rows
+    with their `tb` term bucket (ENCODED_COLS), hash-partitioned by `tb` and
+    ordered (tb, term, field, shard, block_no) inside each partition — the
+    order the store writes, so a writer adds no exchange of its own.
+
+    Plan: ONE exchange on tb, a (tb, term, field, shard, doc_id) sort, and a
+    streaming mapInArrow encoder that cuts blocks out of the sorted run —
+    no per-group arrays are built on the JVM side.
 
     avgdl/doclen are folded in at build time so each block row carries its own
     exact max_impact (tf_norm is monotone ↑ in tf and ↓ in doclen, but we take
-    the max over the *actual* per-posting tf_norm — a tight bound).
+    the max over the *actual* per-posting tf_norm — a tight bound). cstats is
+    a DataFrame or collected rows (field_avgdl); postings of a field without
+    collection stats are dropped, as an inner join on field would.
 
     If postings already carry doclen (build_postings_fast), the doc-stats join
-    is skipped entirely — the build is scan → analyze → ONE shuffle → encode.
+    is skipped entirely.
     """
-    if "doclen" in postings.columns:
-        enriched = postings.join(F.broadcast(cstats), ["field"])
-    else:
-        enriched = postings.join(dstats, ["doc_id", "field"]).join(F.broadcast(cstats), ["field"])
-    # chunk = doc range slice: bounds any (shard, term) group to ≤ CHUNK_SPAN
-    # postings (head-term guard at any shard count) while keeping chunk doc
-    # ranges disjoint and increasing, so block_no = chunk·bpc + local stays a
-    # doc-ordered chain per (shard, term)
-    blocks_per_chunk = 512
-    chunk_span = block_size * blocks_per_chunk
-    enriched = (
-        enriched.withColumn("shard", F.pmod(F.col("doc_id"), F.lit(num_shards)).cast("int"))
-        .withColumn("chunk", (F.col("doc_id") / F.lit(chunk_span)).cast("long"))
-        .select("shard", "term", "field", "chunk", "doc_id", "tf", "doclen", "avgdl")
-    )
-
-    # ONE exchange, map-side combined: partial collect_list packs each input
-    # partition's postings for a (shard, term, field, chunk) group into arrays
-    # BEFORE the shuffle, so the exchange moves array rows (≈ #groups), not
-    # 10^8 scalar rows, and no cluster sort is needed at all — ordering happens
-    # vectorized in numpy inside the encoder.
-    grouped = (
-        enriched.groupBy("shard", "term", "field", "chunk")
-        .agg(
-            F.collect_list(F.struct("doc_id", "tf", "doclen")).alias("pl"),
-            F.first("avgdl").alias("avgdl"),
+    if "doclen" not in postings.columns:
+        postings = postings.join(dstats, ["doc_id", "field"])
+    avgdl = field_avgdl(cstats)
+    src = tb_partitioned(
+        postings.filter(F.col("field").isin(list(avgdl))).select(
+            term_bucket_col("term").alias("tb"),
+            F.pmod(F.col("doc_id"), F.lit(num_shards)).cast("int").alias("shard"),
+            "term", "field", "doc_id", "tf", "doclen",
         )
-        .select(
-            "shard", "term", "field", "chunk", "avgdl",
-            F.col("pl.doc_id").alias("docs"),
-            F.col("pl.tf").alias("tfs"),
-            F.col("pl.doclen").alias("dls"),
-        )
-    )
+    ).sortWithinPartitions("tb", "term", "field", "shard", "doc_id")
+    return src.mapInArrow(_encoder(avgdl, block_size), schema=ENCODED_COLS)
 
-    def encode(batches: "Iterator") -> "Iterator":
-        """Vectorized mapInArrow encoder over chunk-group rows (a group NEVER
-        spans rows, so no carry buffering): read the list columns' value
-        buffers directly (no per-row Python lists), numpy-sort within groups,
-        derive block boundaries, run ONE varbyte pass per stream, and emit the
-        per-block byte columns as Arrow BinaryArrays whose offsets index the
-        ONE encoded buffer — blocks partition it contiguously, so no per-block
-        bytes objects are ever materialized (the r7 rewrite: the previous
-        mapInPandas form spent ~0.9 s/batch-set on list-of-struct conversion
-        and O(#blocks) Python byte slicing)."""
+
+def build_segments(
+    postings: DataFrame,
+    dstats: DataFrame | None,
+    cstats,
+    num_shards: int = 3,
+    block_size: int = DEFAULT_BLOCK,
+) -> DataFrame:
+    """postings → compressed block rows (SEGMENT_COLS); encode_segments
+    without the `tb` column."""
+    return encode_segments(postings, dstats, cstats, num_shards, block_size).drop("tb")
+
+
+def _encoder(avgdl: dict[int, float], block_size: int):
+    """Streaming mapInArrow encoder over postings sorted by (tb, term, field,
+    shard, doc_id). A (shard, term, field, chunk) group is a contiguous run;
+    the run still open at a batch's end is carried into the next batch.
+    Per flushed slice: numpy block boundaries, ONE varbyte pass per stream,
+    and per-block byte columns emitted as Arrow BinaryArrays whose offsets
+    index the one encoded buffer — no per-block bytes objects."""
+    chunk_span = block_size * BLOCKS_PER_CHUNK
+
+    def group_starts(batch) -> np.ndarray:
+        import pyarrow.compute as pc
+
+        n = batch.num_rows
+        change = np.ones(n, dtype=bool)
+        if n > 1:
+            term = batch.column("term")
+            change[1:] = pc.not_equal(term.slice(1), term.slice(0, n - 1)).to_numpy(
+                zero_copy_only=False)
+            for name in ("field", "shard"):
+                v = batch.column(name).to_numpy()
+                change[1:] |= v[1:] != v[:-1]
+            chunk = batch.column("doc_id").to_numpy() // chunk_span
+            change[1:] |= chunk[1:] != chunk[:-1]
+        return np.flatnonzero(change)
+
+    def encode_slice(batch, gstarts: np.ndarray):
         import pyarrow as pa
-        # explicit: pyarrow does NOT auto-import its compute submodule, and a
-        # fresh (e.g. memory-bounded) Python worker that has never touched the
-        # pandas conversion path crashes on bare `pa.compute` (hit in the r7
-        # 5M store build; unit/bench workers had it transitively imported)
-        import pyarrow.compute  # noqa: F401
 
-        # bound the working set per pass: a 10k-group Arrow batch can hold
-        # tens of millions of postings at the 5M-doc scale; decode/encode in
-        # row slices of ≤ ~2M postings so peak numpy memory per worker stays
-        # ~50 MB regardless of batch geometry
-        MAX_POSTINGS_PER_PASS = 2_000_000
+        n = batch.num_rows
+        docs = batch.column("doc_id").to_numpy().astype(np.int64)
+        tfs = batch.column("tf").to_numpy().astype(np.int64)
+        dls = batch.column("doclen").to_numpy().astype(np.int64)
+        fields = batch.column("field").to_numpy()
+        av = np.empty(n, dtype=np.float64)
+        for f, a in avgdl.items():
+            av[fields == f] = a
+        impacts = tfs / (tfs + K1 * (1 - B + B * dls / av))
 
-        def slices(batch):
-            lens_all = pa.compute.list_value_length(batch.column("docs")).to_numpy().astype(np.int64)
-            start = 0
-            acc = 0
-            for i, ln in enumerate(lens_all):
-                if acc and acc + ln > MAX_POSTINGS_PER_PASS:
-                    yield batch.slice(start, i - start)
-                    start, acc = i, 0
-                acc += int(ln)
-            if start < batch.num_rows:
-                yield batch.slice(start, batch.num_rows - start)
+        lens = np.diff(np.append(gstarts, n))
+        block_in_group = (np.arange(n) - np.repeat(gstarts, lens)) // block_size
+        blk_change = np.zeros(n, dtype=bool)
+        blk_change[gstarts] = True
+        blk_change[1:] |= block_in_group[1:] != block_in_group[:-1]
+        bstarts = np.flatnonzero(blk_change)
+        bends = np.append(bstarts[1:], n)  # exclusive
 
-        def gen_batches(it):
-            for whole in it:
-                if whole.num_rows == 0:
-                    continue
-                yield from slices(whole)
+        deltas = docs.copy()
+        deltas[1:] -= docs[:-1]
+        deltas[bstarts] = docs[bstarts]  # absolute restart → self-contained blocks
+        dbuf, doffs = vb_encode_with_offsets(deltas.astype(np.uint64))
+        tbuf, toffs = vb_encode_with_offsets(tfs.astype(np.uint64))
+        lbuf, loffs = vb_encode_with_offsets(dls.astype(np.uint64))
 
-        for batch in gen_batches(batches):
-            nrows = batch.num_rows
-            if nrows == 0:
-                continue
-            docs_col = batch.column("docs")
-            lens = pa.compute.list_value_length(docs_col).to_numpy().astype(np.int64)
-            n = int(lens.sum())
-            if n == 0:
-                continue
-            row_of = np.repeat(np.arange(nrows), lens)
-            docs = docs_col.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            tfs = batch.column("tfs").flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            dls = batch.column("dls").flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            order = np.lexsort((docs, row_of))  # doc-sort within each group
-            docs, tfs, dls, row_of = docs[order], tfs[order], dls[order], row_of[order]
-            avgdl = batch.column("avgdl").to_numpy(zero_copy_only=False)[row_of]
-            impacts = tfs / (tfs + K1 * (1 - B + B * dls / avgdl))
-
-            gstarts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            pos_in_group = np.arange(n) - np.repeat(gstarts, lens)
-            block_in_group = pos_in_group // block_size
-            blk_change = np.empty(n, dtype=bool)
-            blk_change[0] = True
-            blk_change[1:] = (row_of[1:] != row_of[:-1]) | (block_in_group[1:] != block_in_group[:-1])
-            bstarts = np.flatnonzero(blk_change)
-            bends = np.append(bstarts[1:], n)  # exclusive
-
-            deltas = docs.copy()
-            deltas[1:] -= docs[:-1]
-            deltas[bstarts] = docs[bstarts]  # absolute restart → self-contained blocks
-            dbuf, doffs = vb_encode_with_offsets(deltas.astype(np.uint64))
-            tbuf, toffs = vb_encode_with_offsets(tfs.astype(np.uint64))
-            lbuf, loffs = vb_encode_with_offsets(dls.astype(np.uint64))
-
-            def bin_col(buf: np.ndarray, offs: np.ndarray) -> "pa.Array":
-                # blocks cover [0, n) contiguously, so the per-block byte
-                # ranges are one offsets array over the single encoded buffer
-                edges = np.ascontiguousarray(offs[np.append(bstarts, n)], dtype=np.int32)
-                return pa.Array.from_buffers(
-                    pa.binary(), len(bstarts),
-                    [None, pa.py_buffer(edges), pa.py_buffer(np.ascontiguousarray(buf, dtype=np.uint8))],
-                )
-
-            brow = row_of[bstarts]
-            brow_pa = pa.array(brow)
-            chunk = batch.column("chunk").to_numpy(zero_copy_only=False)[brow]
-            yield pa.record_batch(
-                [
-                    batch.column("shard").take(brow_pa),
-                    batch.column("term").take(brow_pa),
-                    batch.column("field").take(brow_pa),
-                    # long, NOT int32: block_no ~ doc_id / block_size, so an
-                    # int32 silently wraps past doc_id ≈ 2.7e11 — inside the
-                    # 10^12-doc posture ids.py targets — and a wrapped
-                    # block_no re-orders the chain sort, corrupting the
-                    # delta-decode (docs out of order, no error raised)
-                    pa.array((chunk * blocks_per_chunk + block_in_group[bstarts]).astype(np.int64)),
-                    pa.array((bends - bstarts).astype(np.int32)),
-                    pa.array(docs[bstarts]),
-                    pa.array(docs[bends - 1]),
-                    bin_col(dbuf, doffs),
-                    bin_col(tbuf, toffs),
-                    bin_col(lbuf, loffs),
-                    pa.array(np.maximum.reduceat(tfs, bstarts)),
-                    pa.array(np.maximum.reduceat(impacts, bstarts)),
-                ],
-                names=["shard", "term", "field", "block_no", "n", "min_doc", "max_doc",
-                       "doc_bytes", "tf_bytes", "dl_bytes", "max_tf", "max_impact"],
+        def bin_col(buf: np.ndarray, offs: np.ndarray) -> "pa.Array":
+            # blocks cover [0, n) contiguously, so the per-block byte
+            # ranges are one offsets array over the single encoded buffer
+            edges = np.ascontiguousarray(offs[np.append(bstarts, n)], dtype=np.int32)
+            return pa.Array.from_buffers(
+                pa.binary(), len(bstarts),
+                [None, pa.py_buffer(edges), pa.py_buffer(np.ascontiguousarray(buf, dtype=np.uint8))],
             )
 
-    return grouped.mapInArrow(encode, schema=SEGMENT_COLS)
+        first = pa.array(bstarts)
+        return pa.record_batch(
+            [
+                batch.column("tb").take(first),
+                batch.column("shard").take(first),
+                batch.column("term").take(first),
+                batch.column("field").take(first),
+                # long, NOT int32: block_no ~ doc_id / block_size, so an
+                # int32 silently wraps past doc_id ≈ 2.7e11 — inside the
+                # 10^12-doc posture ids.py targets — and a wrapped block_no
+                # re-orders the chain sort, corrupting the delta-decode
+                # (docs out of order, no error raised)
+                pa.array((docs[bstarts] // chunk_span * BLOCKS_PER_CHUNK
+                          + block_in_group[bstarts]).astype(np.int64)),
+                pa.array((bends - bstarts).astype(np.int32)),
+                pa.array(docs[bstarts]),
+                pa.array(docs[bends - 1]),
+                bin_col(dbuf, doffs),
+                bin_col(tbuf, toffs),
+                bin_col(lbuf, loffs),
+                pa.array(np.maximum.reduceat(tfs, bstarts)),
+                pa.array(np.maximum.reduceat(impacts, bstarts)),
+            ],
+            names=["tb", "shard", "term", "field", "block_no", "n", "min_doc", "max_doc",
+                   "doc_bytes", "tf_bytes", "dl_bytes", "max_tf", "max_impact"],
+        )
+
+    def encode(batches: "Iterator") -> "Iterator":
+        import pyarrow as pa
+
+        carry = None
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            if carry is not None:
+                batch = pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
+            gstarts = group_starts(batch)
+            last = int(gstarts[-1])
+            if last:
+                yield encode_slice(batch.slice(0, last), gstarts[gstarts < last])
+            carry = batch.slice(last)
+        if carry is not None:
+            yield encode_slice(carry, group_starts(carry))
+
+    return encode
 
 
 def decode_segment_rows(rows: pd.DataFrame) -> pd.DataFrame:

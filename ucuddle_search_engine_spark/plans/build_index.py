@@ -10,23 +10,37 @@ insert (crawler/main.go:305), and a restart resumes from unparsed rows
 - the corpus is split into WORK UNITS by a deterministic hash of `repo`
   (pmod(md5-prefix, n_units)) — stable across runs and partition counts;
 - manifest.jsonl rows: (partition_id, input_fingerprint, status, docs, terms,
-  bytes, wall_ms) — `status` ∈ pending|taken|parsed mirrors the reference's
-  boolean pair; the manifest file is committed atomically (tmp + rename);
+  bytes, wall_ms, and rows + wall ms of each write: docs_rows/docs_ms,
+  postings_rows/postings_ms, segments_rows/segments_ms) — `status` ∈
+  pending|taken|parsed mirrors the reference's boolean pair; the manifest
+  file is committed atomically (tmp + rename);
 - each unit's docs/segments go to their own subdirectory written with
   overwrite → idempotent commit (a re-run replaces, never duplicates);
 - resume = skip units whose manifest row is parsed AND whose input
   fingerprint still matches (anti-join semantics of F2/F3).
 
-Work layout per run:
-  pass 0 (global, deterministic): doc-id assignment + per-field collection
-         stats (N, avgdl) — these must be corpus-global for BM25/max_impact,
-         exactly like ES keeps index-level stats; recomputing on resume is
-         safe because the pass is a pure function of the corpus (the reference
-         analogously re-reads its id counter on restart,
-         task-manager/task_manager.py:123-129);
-  per unit: postings → doc stats → compressed segments → parquet append;
-  post:   global term stats (df) derived from the segment store itself
-          (Σ block n per term — a column-pruned parquet scan, no decode).
+Work layout per run — the driver never re-reads or re-counts what it has
+just computed:
+  pass 0 (global, deterministic): doc ids (operators/ids), then docs are
+         range-partitioned by (unit, doc_id) and cached. ONE aggregation
+         over the cache yields every unit's fingerprint and doc count plus
+         the per-field token sums that give the collection stats (N, avgdl)
+         — corpus-global for BM25/max_impact, exactly like ES keeps
+         index-level stats; recomputing on resume is safe because the pass
+         is a pure function of the corpus (the reference analogously
+         re-reads its id counter on restart, task-manager/task_manager.py:
+         123-129);
+  per unit: each written output costs one exchange at most —
+         positional sidecar (tb exchange, sort, write), docs (no exchange),
+         segments (encode_segments: tb exchange, sort, streaming encode,
+         write; from the sidecar read back, so each doc is tokenized once).
+         Row counts, the approximate distinct term count and wall times come
+         from DataFrame.observe on the writes, not from counting jobs;
+  post:  global term stats (df = Σ block n per term) from a column-pruned
+         read of the segment store, aggregated inside the one tb exchange
+         of the tstats write.
+  Read-backs carry the schema they were written with and list their
+  directories on the driver (no schema-inference or listing jobs).
 
 A killed build rerun produces identical index content to an uninterrupted one
 (tests/test_resume.py). The driver loop iterates unit ids only — O(units).
@@ -37,18 +51,16 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.analyze import tokenize_col
-from ..functions.hashing import md5_prefix_long
+from ..functions.hashing import TERM_BUCKETS, md5_prefix_long, term_bucket_col  # noqa: F401
 from ..operators.postings import FIELD_CONTENT, FIELD_TITLE, build_docs, build_postings_fast
-from ..operators.segments import build_segments
+from ..operators.segments import ENCODED_COLS, encode_segments, tb_partitioned
 from ..operators.wand import SegmentSearcher
-
-
-TERM_BUCKETS = 64  # segment-store partition fan-out per unit (directory pruning)
 #: parquet row-group target for segments/postings writes: ~1 MiB keeps each
 #: term's rows in a skippable run (row-group min/max pruning actually fires)
 #: while staying far above the footer-overhead floor for full scans
@@ -78,8 +90,10 @@ def auto_num_shards(n_docs: int) -> int:
     return max(3, min(MAX_AUTO_SHARDS, -(-int(n_docs) // DOCS_PER_SHARD)))
 
 
-def write_tstats(tstats: DataFrame, out_dir: str) -> None:
-    """Write the term-stats dictionary in the vocabulary-scale layout:
+def write_tstats(blocks: DataFrame, path: str) -> None:
+    """Aggregate term stats from segment block rows (term, field, n[, tb]) —
+    df = Σ n per (term, field) — and write the dictionary in the
+    vocabulary-scale layout to `path` (a store's tstats directory):
 
     - `tb` (md5 term bucket, same hash as the segment store) as a PARTITION
       directory — an exact-term lookup prunes to |q| of 64 directories before
@@ -95,21 +109,29 @@ def write_tstats(tstats: DataFrame, out_dir: str) -> None:
       columnar numpy over scan output, instead of a Python pass over the
       first-char bucket's vocabulary (the 5M-doc cold-fuzzy bottleneck).
 
+    The aggregation runs inside the write's one tb exchange: hash
+    partitioning on tb already clusters every (tb, term, field) group.
+
     This is what lets a 10⁸–10⁹-term vocabulary be served without ever
     materializing the dictionary (SegmentSearcher.open_local is lazy over this
     layout; cold terms cost one pruned read, not a full tstats scan)."""
     from ..operators.fuzzy import bag_signature_col
 
+    tb = F.col("tb") if "tb" in blocks.columns else term_bucket_col("term")
     (
-        tstats.withColumn("tb", F.pmod(md5_prefix_long("term"), F.lit(TERM_BUCKETS)).cast("int"))
-        .withColumn("p1", F.substring("term", 1, 1))
-        .withColumn("tlen", F.length("term"))
-        .withColumn("bagsig", bag_signature_col(F.col("term")))
-        .repartition("tb")
+        tb_partitioned(blocks.select(tb.alias("tb"), "term", "field", "n"))
+        .groupBy("tb", "term", "field")
+        .agg(F.sum("n").alias("df"))
+        .select(
+            "term", "field", "df", "tb",
+            F.substring("term", 1, 1).alias("p1"),
+            F.length("term").alias("tlen"),
+            bag_signature_col(F.col("term")).alias("bagsig"),
+        )
         .sortWithinPartitions("tb", "term", "field")
         .write.mode("overwrite")
         .partitionBy("tb")
-        .parquet(os.path.join(out_dir, "tstats"))
+        .parquet(path)
     )
 
 
@@ -163,28 +185,16 @@ def upgrade_tstats(spark: SparkSession, store_dir: str) -> bool:
     publish window is healed on the next call (_finish_interrupted_swap)."""
     import shutil
 
-    from ..operators.fuzzy import bag_signature_col
-
     path = os.path.join(store_dir, "tstats")
     _finish_interrupted_swap(path)
     cur = spark.read.parquet(path)
     if "bagsig" in cur.columns:
         return False
     tmp = path + ".upgrade"
-    base = cur.select("term", "field", "df")
-    # write_tstats recomputes tb/p1/tlen/bagsig and the per-bucket term sort
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        base.withColumn("tb", F.pmod(md5_prefix_long("term"), F.lit(TERM_BUCKETS)).cast("int"))
-        .withColumn("p1", F.substring("term", 1, 1))
-        .withColumn("tlen", F.length("term"))
-        .withColumn("bagsig", bag_signature_col(F.col("term")))
-        .repartition("tb")
-        .sortWithinPartitions("tb", "term", "field")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(tmp)
-    )
+    # one row per (term, field): summing df as the block count n leaves it
+    # unchanged, and write_tstats recomputes tb/p1/tlen/bagsig and the sort
+    write_tstats(cur.select("term", "field", F.col("df").alias("n")), tmp)
     _swap_upgraded(path)
     return True
 
@@ -217,12 +227,8 @@ def upgrade_segments_layout(spark: SparkSession, store_dir: str,
             md.row_group(0).total_byte_size > 4 * SEG_ROW_GROUP_BYTES
 
     done = 0
-    # tb leads each sort: the writer requires a per-task sort on its
-    # partition columns, and Catalyst's EliminateSorts would otherwise drop
-    # the inner term sort and re-sort by tb alone (observed: term runs
-    # scattered again)
-    for rel, sort_cols in (("segments", ["tb", "term", "field", "shard", "block_no"]),
-                           ("postings", ["tb", "term", "doc_id"])):
+    for rel, write in (("segments", lambda df, p: write_segments(tb_partitioned(df), p)),
+                       ("postings", write_postings_sidecar)):
         root = os.path.join(store_dir, rel)
         if not os.path.isdir(root):
             continue
@@ -235,15 +241,7 @@ def upgrade_segments_layout(spark: SparkSession, store_dir: str,
                 continue
             tmp = unit_path + ".upgrade"
             shutil.rmtree(tmp, ignore_errors=True)
-            (
-                spark.read.parquet(unit_path)
-                .repartition("tb")
-                .sortWithinPartitions(*sort_cols)
-                .write.mode("overwrite")
-                .option("parquet.block.size", SEG_ROW_GROUP_BYTES)
-                .partitionBy("tb")
-                .parquet(tmp)
-            )
+            write(spark.read.parquet(unit_path), tmp)
             _swap_upgraded(unit_path)
             done += 1
     return done
@@ -253,49 +251,157 @@ def _unit_col(n_units: int):
     return F.pmod(md5_prefix_long("repo"), F.lit(n_units)).cast("int")
 
 
+def _key_hash():
+    # decimal(38,0) sum: exact + order-insensitive + overflow-free up to
+    # ~8e19 rows of 60-bit values (a plain long sum overflows under ANSI)
+    return md5_prefix_long(F.concat_ws("/", "repo", "path", "commit")).cast("decimal(38,0)")
+
+
 def _fingerprint(corpus_unit: DataFrame) -> str:
     """Order-insensitive fingerprint of the unit's (repo, path, commit) set:
     count + sum of 60-bit md5 prefixes — a map-side-combined aggregate
     (O(1) driver data, no collect_list of the whole unit; the previous
     sort-and-sha form shipped every key to one reducer)."""
-    row = corpus_unit.agg(
-        F.count("*").alias("n"),
-        # decimal(38,0) sum: exact + order-insensitive + overflow-free up to
-        # ~8e19 rows of 60-bit values (a plain long sum overflows under ANSI)
-        F.sum(md5_prefix_long(F.concat_ws("/", "repo", "path", "commit")).cast("decimal(38,0)")).alias("s"),
-    ).first()
+    row = corpus_unit.agg(F.count("*").alias("n"), F.sum(_key_hash()).alias("s")).first()
     if not row["n"]:
         return "empty"
     return f"{row['n']}-{int(row['s']):x}"
 
 
-def _unit_fingerprints(docs: DataFrame, n_units: int) -> dict[int, str]:
-    """Every unit's fingerprint in ONE grouped-aggregation job (count + sum of
-    60-bit md5 prefixes, the same formula as _fingerprint). The per-unit
-    filter-and-aggregate variant launched n_units full corpus scans — at
-    100 TB × 64 units that is 64 corpus reads before any build work."""
-    fp_rows = docs.groupBy("_unit").agg(
-        F.count("*").alias("n"),
-        F.sum(
-            md5_prefix_long(F.concat_ws("/", "repo", "path", "commit")).cast("decimal(38,0)")
-        ).alias("s"),
-    ).collect()
-    by_unit = {int(r["_unit"]): f"{r['n']}-{int(r['s']):x}" for r in fp_rows}
-    return {pid: by_unit.get(pid, "empty") for pid in range(n_units)}
-
-
-def _global_field_stats(docs: DataFrame, analyzer=None) -> DataFrame:
-    """(field, n_docs, avgdl) over the whole corpus — matches
-    operators.postings.collection_stats semantics (docs with ≥1 token)."""
+def _field_stat_aggs(analyzer=None) -> list:
+    """Per-field (docs with ≥1 token, Σ tokens) aggregate columns c0/l0
+    (content: docs.doclen) and c1/l1 (title, analyzed here)."""
     ttoks = analyzer.tokens_col("title") if analyzer is not None else tokenize_col("title")
-    content = docs.select(F.lit(FIELD_CONTENT).alias("field"), F.col("doclen"))
-    title = docs.select(F.lit(FIELD_TITLE).alias("field"), F.size(ttoks).cast("long").alias("doclen"))
-    return (
-        content.unionByName(title)
-        .filter(F.col("doclen") > 0)
-        .groupBy("field")
-        .agg(F.count("*").alias("n_docs"), F.avg("doclen").alias("avgdl"))
+    out = []
+    for i, dl in enumerate((F.col("doclen"), F.size(ttoks).cast("long"))):
+        pos = F.when(dl > 0, dl)
+        out += [F.count(pos).alias(f"c{i}"), F.sum(pos).alias(f"l{i}")]
+    return out
+
+
+def _cstats_rows(c0: int, l0: int, c1: int, l1: int) -> list[dict]:
+    """(field, n_docs, avgdl) rows with operators.postings.collection_stats
+    semantics (docs with ≥1 token). avgdl = Σ doclen / n in double, which is
+    what Spark's avg computes: an integer sum below 2^53 is exact in double
+    whatever the summation order, so the value is bit-identical to avg().
+    Title first: the row order collection_stats' groupBy leaves in
+    cstats.json."""
+    rows = []
+    for field, c, tot in ((FIELD_TITLE, c1, l1), (FIELD_CONTENT, c0, l0)):
+        if c:
+            rows.append({"field": field, "n_docs": int(c), "avgdl": float(tot) / float(c)})
+    return rows
+
+
+def _field_stats(docs: DataFrame, analyzer=None) -> list[dict]:
+    """Collection stats rows over the whole docs table in one aggregation."""
+    r = docs.agg(*_field_stat_aggs(analyzer)).first()
+    return _cstats_rows(r["c0"], r["l0"] or 0, r["c1"], r["l1"] or 0)
+
+
+def _unit_stats(docs: DataFrame, n_units: int, analyzer=None):
+    """Every unit's fingerprint (count + sum of 60-bit md5 prefixes, the
+    _fingerprint formula) and doc count, plus the corpus-global collection
+    stats rows, from ONE grouped aggregation over `docs`. The per-unit
+    filter-and-aggregate variant launched n_units full corpus scans — at
+    100 TB × 64 units that is 64 corpus reads before any build work.
+    Returns (fingerprints, docs per unit, cstats rows)."""
+    rows = docs.groupBy("_unit").agg(
+        F.count("*").alias("n"), F.sum(_key_hash()).alias("s"), *_field_stat_aggs(analyzer)
+    ).collect()
+    by_unit = {int(r["_unit"]): r for r in rows}
+    fps = {pid: f"{by_unit[pid]['n']}-{int(by_unit[pid]['s']):x}" if pid in by_unit else "empty"
+           for pid in range(n_units)}
+    n_docs = {pid: int(by_unit[pid]["n"]) if pid in by_unit else 0 for pid in range(n_units)}
+    tot = [sum(r[k] or 0 for r in rows) for k in ("c0", "l0", "c1", "l1")]
+    return fps, n_docs, _cstats_rows(*tot)
+
+
+@contextmanager
+def _driver_listing(spark: SparkSession):
+    """List directories on the driver while opening a store read-back.
+    Spark lists in a parallel job above parallelPartitionDiscovery.threshold
+    (32) paths, and every store output has 64 tb directories per unit: that
+    job costs ~0.5 s per read-back, a local-disk walk a few ms. (The build
+    writes through the local filesystem anyway: os.makedirs, manifest,
+    os.walk byte counts.)"""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(2**31 - 1))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _read_back(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Re-open an output this process has just written: with the schema it
+    was written with (no footer-reading inference job) and a driver-side
+    listing (_driver_listing)."""
+    with _driver_listing(spark):
+        return spark.read.schema(schema).parquet(path)
+
+
+def _observed_write(write, df: DataFrame, *metrics) -> dict:
+    """Run write(df) with its row count (`rows`) and any extra aggregate
+    `metrics` observed on the rows written (DataFrame.observe: collected
+    by the write job itself, no extra job), plus its wall time (`ms`)."""
+    obs = Observation()
+    t0 = time.perf_counter()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics))
+    ms = int((time.perf_counter() - t0) * 1000)
+    return {**obs.get, "ms": ms}
+
+
+def write_postings_sidecar(postings: DataFrame, path: str) -> None:
+    """Positional postings sidecar (Lucene's .pos analogue) in the tb layout
+    of segments/tstats: a phrase/highlight lookup prunes to |q| of 64
+    directories and term-sorted ~1 MiB row groups instead of footer-scanning
+    every file. postings carry a `tb` column (term_bucket_col)."""
+    (
+        tb_partitioned(postings)
+        .sortWithinPartitions("tb", "term", "doc_id")
+        .write.mode("overwrite")
+        .option("parquet.block.size", SEG_ROW_GROUP_BYTES)
+        .partitionBy("tb")
+        .parquet(path)
     )
+
+
+def write_segments(blocks: DataFrame, path: str) -> None:
+    """Write encode_segments output as one tb-partitioned store directory.
+    Layout-as-pushdown, two levels: tb = md5-hash bucket of the term as a
+    PARTITION column (directory pruning: a query term touches
+    1/TERM_BUCKETS of the files) + TERM-MAJOR sorted rows in SMALL row
+    groups. Both halves matter: the original shard-major sort spread every
+    term across the whole file and Spark's default 128 MB parquet block made
+    each file ONE row group, so the term min/max stats spanned the full
+    bucket and a serving-tier chain read decompressed the entire bucket for
+    any term in it (a 58-term fuzzy expansion at 5M docs read ~5 GB to
+    extract 317 MB of chains). Term-major + ~1 MiB row groups give each term
+    a contiguous row-group run that pyarrow's stats pruning actually skips
+    to — the same treatment tstats got in round 4 (BENCH/vocab_lookup.json).
+
+    encode_segments already partitions by tb and emits rows in this order;
+    the sort here only states it, so the writer adds no sort or exchange of
+    its own (mapInArrow output carries no ordering). tb leads every store
+    sort: the writer needs its partition column sorted first, and Catalyst's
+    EliminateSorts would otherwise drop a term-only sort and re-sort by tb
+    alone (observed: term runs scattered again)."""
+    (
+        blocks.sortWithinPartitions("tb", "term", "field", "shard", "block_no")
+        .write.mode("overwrite")
+        .option("parquet.block.size", SEG_ROW_GROUP_BYTES)
+        .partitionBy("tb")
+        .parquet(path)
+    )
+
+
+def write_store_tstats(spark: SparkSession, out_dir: str) -> None:
+    """A written store's term stats from its own segment store (a
+    column-pruned read-back of the block rows; no decode)."""
+    blocks = _read_back(spark, os.path.join(out_dir, "segments"), f"{ENCODED_COLS}, unit int")
+    write_tstats(blocks, os.path.join(out_dir, "tstats"))
 
 
 class BuildManifest:
@@ -345,35 +451,46 @@ def build_index_resumable(
     distributed dense rank. The 'sort' oracle path funnels the WHOLE corpus
     through one window task AND leaves docs single-partition, crippling every
     downstream per-unit job; both paths produce identical ids (test_ids).
+
+    Manifest `terms` is the approximate distinct term count of the unit's
+    segment rows (approx_count_distinct, observed on the write; exact
+    DISTINCT aggregates cannot be observed).
     """
     os.makedirs(out_dir, exist_ok=True)
     manifest = BuildManifest(os.path.join(out_dir, "manifest.jsonl"))
 
+    # one count up front — parquet sources answer it from footer metadata —
+    # sizes the id sampling, the auto shard count and the docs slices below
+    n_rows = corpus.count()
     if num_shards == "auto":
-        # bounded docs-per-shard (see auto_num_shards). One count up front —
-        # parquet sources answer it from footer metadata, no data read — and
-        # it must precede build_docs, which assigns the shard column.
-        num_shards = auto_num_shards(corpus.count())
+        # bounded docs-per-shard (see auto_num_shards); it must precede
+        # build_docs, which assigns the shard column
+        num_shards = auto_num_shards(n_rows)
 
     # pass 0: global deterministic ids + collection stats
     docs = build_docs(corpus, num_shards=num_shards, scale_ids=scale_ids, analyzer=analyzer,
-                      ingest_ts=ingest_ts).withColumn(
+                      ingest_ts=ingest_ts, n_rows=n_rows).withColumn(
         "_unit", _unit_col(n_units)
     )
-    # r7 droop fix: range-partition the persisted docs by (_unit, doc_id) so
+    # r7 droop fix: partition the persisted docs by (_unit, doc_id range) so
     # every cached batch holds ONE unit. The per-unit jobs filter on _unit,
     # and Spark's in-memory batch-stat pruning then skips every other unit's
     # batches — without this, EVERY per-unit job (docs write, segments,
     # sidecar) re-scanned the whole corpus-sized cache, an
     # O(n_units × corpus) total that grew the 5M build superlinearly
     # (BENCH/scale_curve.json build_throughput_ratio_5m_vs_1m 0.72 in r6).
-    # n_units × defaultParallelism partitions keep each unit's slice as wide
-    # as the box. Boundaries are sampled once at materialization (the cache
-    # pins one physical plan, so evicted-batch recompute reuses them).
+    # defaultParallelism slices per unit keep each unit's slice as wide as
+    # the box. Doc ids are dense in [0, n_rows), so the slice of a doc is
+    # its id's share of that range: exact partition ids, no sampling pass
+    # over the corpus (repartitionByRange ran one, recomputing every
+    # projection above).
     par = spark.sparkContext.defaultParallelism
-    docs = docs.repartitionByRange(n_units * par, "_unit", "doc_id").persist()
-    cstats = _global_field_stats(docs, analyzer=analyzer).persist()
-    cstats.count()
+    slice_ = F.expr(f"(doc_id * {par}) div {max(n_rows, 1)}")
+    docs = docs.repartitionById(
+        n_units * par, (F.col("_unit") * par + slice_).cast("int")
+    ).persist()
+    # materializes the cache; fingerprints, unit sizes and cstats in one job
+    fps, unit_docs, cstats = _unit_stats(docs, n_units, analyzer=analyzer)
     if analyzer is not None:
         # persist the analyzer config so the QUERY side analyzes identically
         # after reload — the search_analyzer == index analyzer pin for stores
@@ -386,11 +503,10 @@ def build_index_resumable(
     t0 = time.time()
     # Resume safety: doc ids are a corpus-global dense rank and cstats are
     # corpus-global (baked into stored max_impact), so a CHANGED corpus makes
-    # every previously-built unit stale, not just the changed ones. Compute
-    # all unit fingerprints first; skip-on-resume is only allowed when the
+    # every previously-built unit stale, not just the changed ones. All unit
+    # fingerprints are known up front; skip-on-resume is only allowed when the
     # WHOLE corpus is unchanged (identical-corpus crash-resume). Any mismatch
     # → invalidate and rebuild all units.
-    fps = _unit_fingerprints(docs, n_units)
     # the stored layout is (corpus content × shard/block geometry): a resume
     # with a different num_shards/block_size must NOT skip "parsed" units
     # built under the old geometry — bake the geometry into the fingerprint
@@ -416,75 +532,40 @@ def build_index_resumable(
             continue  # resume: already built and whole corpus unchanged
         if fail_after_units is not None and done >= fail_after_units:
             docs.unpersist()
-            cstats.unpersist()
             return {"completed_units": done, "crashed": True, "wall_s": time.time() - t0}
         manifest.mark(pid, input_fingerprint=fp, status="taken")
         t1 = time.time()
         # fast path: per-doc termvectors carry doclen → scan → analyze →
-        # one map-side-combined shuffle → encode (see operators/segments.py)
+        # one tb exchange → sort → streaming encode (operators/segments.py)
         postings_u = build_postings_fast(docs_u, analyzer=analyzer)
         docs_path = os.path.join(out_dir, f"docs/unit={pid}")
         seg_path = os.path.join(out_dir, f"segments/unit={pid}")
         post_path = os.path.join(out_dir, f"postings/unit={pid}")
-        n_docs = docs_u.count()
+        n_docs = unit_docs[pid]
+        writes = {}
         if write_postings and n_docs:
-            # positional postings sidecar (Lucene's .pos analogue): lets a
-            # written index serve highlight (C7) and phrase queries without
-            # re-reading the corpus. Same tb layout as segments/tstats: a
-            # phrase/highlight lookup prunes to |q| of 64 directories and
-            # term-sorted row groups instead of footer-scanning every file.
-            # r7: written FIRST, and the segment encode below reads the
-            # written sidecar back (column-pruned: no positions) instead of
-            # re-running the analyzer — the old order tokenized every doc
+            # positional postings sidecar: lets a written index serve
+            # highlight (C7) and phrase queries without re-reading the
+            # corpus. r7: written FIRST, and the segment encode below reads
+            # the written sidecar back (column-pruned: no positions) instead
+            # of re-running the analyzer — the old order tokenized every doc
             # TWICE per unit (once for segments, once for the sidecar).
-            (
-                postings_u.withColumn(
-                    "tb", F.pmod(md5_prefix_long("term"), F.lit(TERM_BUCKETS)).cast("int")
-                )
-                .repartition("tb")
-                .sortWithinPartitions("tb", "term", "doc_id")
-                .write.mode("overwrite")
-                # small row groups for the same reason as segments: the
-                # phrase/highlight sidecar reads are term-pruned point scans
-                .option("parquet.block.size", SEG_ROW_GROUP_BYTES)
-                .partitionBy("tb")
-                .parquet(post_path)
-            )
-            postings_src = spark.read.parquet(post_path).select(
+            sidecar = postings_u.withColumn("tb", term_bucket_col("term"))
+            writes["postings"] = _observed_write(
+                lambda df: write_postings_sidecar(df, post_path), sidecar)
+            postings_src = _read_back(spark, post_path, sidecar.schema).select(
                 "term", "doc_id", "field", "tf", "doclen"
             )
         else:
             postings_src = postings_u
-        segs = build_segments(postings_src, None, cstats, num_shards=num_shards, block_size=block_size)
         # content is stored like ES stores _source: display + native highlight
         # (C7) straight from the written store
-        docs_u.write.mode("overwrite").parquet(docs_path)
-        # layout-as-pushdown, two levels: tb = md5-hash bucket of the term as a
-        # PARTITION column (directory pruning: a query term touches 1/TERM_BUCKETS
-        # of the files) + TERM-MAJOR sorted rows in SMALL row groups. Both
-        # halves matter: the original shard-major sort spread every term
-        # across the whole file and Spark's default 128 MB parquet block made
-        # each file ONE row group, so the term min/max stats spanned the full
-        # bucket and a serving-tier chain read decompressed the entire bucket
-        # for any term in it (a 58-term fuzzy expansion at 5M docs read ~5 GB
-        # to extract 317 MB of chains). Term-major + ~1 MiB row groups give
-        # each term a contiguous row-group run that pyarrow's stats pruning
-        # actually skips to — the same treatment tstats got in round 4
-        # (BENCH/vocab_lookup.json).
-        (
-            segs.withColumn("tb", F.pmod(md5_prefix_long("term"), F.lit(TERM_BUCKETS)).cast("int"))
-            .repartition("tb")
-            .sortWithinPartitions("tb", "term", "field", "shard", "block_no")
-            .write.mode("overwrite")
-            .option("parquet.block.size", SEG_ROW_GROUP_BYTES)
-            .partitionBy("tb")
-            .parquet(seg_path)
-        )
-        # an empty unit (units hash by repo — a skewed/singleton repo set can
-        # starve one) writes only a _SUCCESS marker; don't read it back
-        n_terms = (
-            spark.read.parquet(seg_path).select("term").distinct().count() if n_docs else 0
-        )
+        writes["docs"] = _observed_write(lambda df: df.write.mode("overwrite").parquet(docs_path),
+                                         docs_u)
+        blocks = encode_segments(postings_src, None, cstats, num_shards=num_shards,
+                                 block_size=block_size)
+        writes["segments"] = _observed_write(lambda df: write_segments(df, seg_path), blocks,
+                                             F.approx_count_distinct("term").alias("terms"))
         n_bytes = sum(
             os.path.getsize(os.path.join(r, f))
             for p in (docs_path, seg_path)
@@ -495,21 +576,19 @@ def build_index_resumable(
             pid,
             status="parsed",
             docs=n_docs,
-            terms=n_terms,
+            terms=int(writes["segments"]["terms"]),
             bytes=n_bytes,
             wall_ms=int((time.time() - t1) * 1000),
+            **{f"{name}_{k}": int(w[k]) for name, w in writes.items() for k in ("rows", "ms")},
         )
         done += 1
 
-    # post pass: global term stats from the segment store (column-pruned scan)
-    segs_all = spark.read.parquet(os.path.join(out_dir, "segments"))
-    tstats = segs_all.groupBy("term", "field").agg(F.sum("n").alias("df"))
-    write_tstats(tstats, out_dir)
+    write_store_tstats(spark, out_dir)
     # json.dump via repr round-trips doubles exactly (pandas to_json clips at
     # 15 significant digits, which would shift avgdl — and thus recomputed
     # scores — a ULP away from the stored max_impact bounds)
     with open(os.path.join(out_dir, "cstats.json"), "w") as f:
-        json.dump([r.asDict() for r in cstats.collect()], f)
+        json.dump(cstats, f)
     # geometry sidecar: lets the searcher map a modulo-sharded group's doc
     # ids onto dense LOCAL slots ((id - mn) // num_shards) — per-shard
     # aggregation arrays then scale with docs-per-shard, not corpus size
@@ -517,11 +596,9 @@ def build_index_resumable(
         json.dump({"num_shards": num_shards, "sharding": "mod",
                    "block_size": block_size}, f)
 
-    n_total = docs.count()
     docs.unpersist()
-    cstats.unpersist()
     stats = {
-        "n_docs": n_total,
+        "n_docs": sum(unit_docs.values()),
         "completed_units": done,
         "crashed": False,
         "wall_s": time.time() - t0,

@@ -27,15 +27,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_prefix_long
+from ..functions.hashing import term_bucket_col
 from ..operators.ids import assign_doc_ids_prefix
-from ..operators.segments import build_segments
+from ..operators.segments import encode_segments
 from .build_index import (
-    SEG_ROW_GROUP_BYTES,
-    TERM_BUCKETS,
-    _global_field_stats,
+    _driver_listing,
+    _field_stats,
+    _observed_write,
     load_analyzer,
-    write_tstats,
+    write_postings_sidecar,
+    write_segments,
+    write_store_tstats,
 )
 
 
@@ -163,24 +165,26 @@ def merge_many(spark: SparkSession, stores: list[str], out_dir: str,
         .persist()
     )
 
-    # fresh dense ids over the union, same determinism contract as a build
-    docs = assign_doc_ids_prefix(
-        winners.drop("doc_id", "shard", "_sidx"), key
-    ).withColumn("shard", F.pmod(F.col("doc_id"), F.lit(num_shards)).cast("int"))
-    cstats = _global_field_stats(docs, analyzer=analyzer).persist()
-    cstats.count()
+    # fresh dense ids over the union, same determinism contract as a build.
+    # The rows keep their input store and old id, so the old→new mapping is
+    # a projection of the cached result, not a join of two window passes
+    ided = assign_doc_ids_prefix(
+        winners.withColumnRenamed("doc_id", "old_id").drop("shard"), key
+    ).withColumn("shard", F.pmod(F.col("doc_id"), F.lit(num_shards)).cast("int")).persist()
+    cstats = _field_stats(ided, analyzer=analyzer)  # materializes the cache
+    winners.unpersist()
+    docs = ided.drop("old_id", "_sidx")
 
-    # old→new id mapping per input store (hash join on the uniform old id)
     def mapping(i: int) -> DataFrame:
-        keep = winners.filter(F.col("_sidx") == i)
-        return keep.select(F.col("doc_id").alias("old_id"), *key).join(
-            docs.select(F.col("doc_id").alias("new_id"), *key), key
-        ).select("old_id", "new_id")
+        return ided.filter(F.col("_sidx") == i).select("old_id", F.col("doc_id").alias("new_id"))
+
+    def read_input(store: str, sub: str) -> DataFrame:
+        with _driver_listing(spark):
+            return spark.read.parquet(os.path.join(store, sub))
 
     parts = []
     for i, store in enumerate(stores):
-        segs = spark.read.parquet(os.path.join(store, "segments"))
-        decoded = decode_store_postings(segs)
+        decoded = decode_store_postings(read_input(store, "segments"))
         # keep only surviving docs (conflict losers + tombstones drop here)
         m = mapping(i)
         parts.append(
@@ -191,17 +195,11 @@ def merge_many(spark: SparkSession, stores: list[str], out_dir: str,
     for p in parts[1:]:
         postings = postings.unionByName(p)
 
-    segs_out = build_segments(postings, None, cstats, num_shards=num_shards, block_size=block_size)
-    docs.write.mode("overwrite").parquet(os.path.join(out_dir, "docs/unit=0"))
-    (
-        segs_out.withColumn("tb", F.pmod(md5_prefix_long("term"), F.lit(TERM_BUCKETS)).cast("int"))
-        .repartition("tb")
-        .sortWithinPartitions("tb", "term", "field", "shard", "block_no")
-        .write.mode("overwrite")
-        .option("parquet.block.size", SEG_ROW_GROUP_BYTES)
-        .partitionBy("tb")
-        .parquet(os.path.join(out_dir, "segments/unit=0"))
-    )
+    n = _observed_write(lambda df: df.write.mode("overwrite").parquet(
+        os.path.join(out_dir, "docs/unit=0")), docs)["rows"]
+    write_segments(encode_segments(postings, None, cstats, num_shards=num_shards,
+                                   block_size=block_size),
+                   os.path.join(out_dir, "segments/unit=0"))
     # carry the positional sidecar through the merge when every input has one
     # (Lucene merges keep .pos): remap surviving docs' position rows to the
     # fresh ids and rewrite in the tb layout — highlight/phrase keep working
@@ -209,7 +207,7 @@ def merge_many(spark: SparkSession, stores: list[str], out_dir: str,
     if all(os.path.isdir(os.path.join(s, "postings")) for s in stores):
         pparts = []
         for i, store in enumerate(stores):
-            p = spark.read.parquet(os.path.join(store, "postings"))
+            p = read_input(store, "postings")
             m = mapping(i)
             pparts.append(
                 p.join(m, p["doc_id"] == m["old_id"]).select(
@@ -220,24 +218,12 @@ def merge_many(spark: SparkSession, stores: list[str], out_dir: str,
         pos = pparts[0]
         for pp in pparts[1:]:
             pos = pos.unionByName(pp)
-        (
-            pos.withColumn(
-                "tb", F.pmod(md5_prefix_long("term"), F.lit(TERM_BUCKETS)).cast("int")
-            )
-            .repartition("tb")
-            .sortWithinPartitions("tb", "term", "doc_id")
-            .write.mode("overwrite")
-            .option("parquet.block.size", SEG_ROW_GROUP_BYTES)
-            .partitionBy("tb")
-            .parquet(os.path.join(out_dir, "postings/unit=0"))
-        )
+        write_postings_sidecar(pos.withColumn("tb", term_bucket_col("term")),
+                               os.path.join(out_dir, "postings/unit=0"))
 
-    segs_all = spark.read.parquet(os.path.join(out_dir, "segments"))
-    write_tstats(
-        segs_all.groupBy("term", "field").agg(F.sum("n").alias("df")), out_dir
-    )
+    write_store_tstats(spark, out_dir)
     with open(os.path.join(out_dir, "cstats.json"), "w") as f:
-        json.dump([r.asDict() for r in cstats.collect()], f)
+        json.dump(cstats, f)
     with open(os.path.join(out_dir, "store_meta.json"), "w") as f:
         json.dump({"num_shards": num_shards, "sharding": "mod",
                    "block_size": block_size}, f)
@@ -246,7 +232,5 @@ def merge_many(spark: SparkSession, stores: list[str], out_dir: str,
 
         with open(os.path.join(out_dir, "analyzer.json"), "w") as f:
             json.dump(asdict(analyzer), f)
-    n = docs.count()
-    cstats.unpersist()
-    winners.unpersist()
+    ided.unpersist()
     return {"n_docs": n}

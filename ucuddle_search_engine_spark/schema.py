@@ -92,7 +92,11 @@ DOC_STATS_SCHEMA = T.StructType(
 
 # Checkpoint manifest — Spark-side equivalent of the reference's work queue
 # (link_id/taken/parsed, elastic-interaction/elastic_settings.go:106-126) and
-# its claim protocol (task-manager/task_manager.py:54-94).
+# its claim protocol (task-manager/task_manager.py:54-94). `terms` is the
+# approximate distinct term count of the unit's segment rows
+# (approx_count_distinct, observed on the segments write); the *_rows /
+# *_ms pairs are the rows and wall time of each write of the unit (postings
+# only when the positional sidecar is written).
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType(), False),
@@ -102,6 +106,11 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("terms", T.LongType(), True),
         T.StructField("bytes", T.LongType(), True),
         T.StructField("wall_ms", T.LongType(), True),
+        *(
+            T.StructField(f"{w}_{m}", T.LongType(), True)
+            for w in ("docs", "postings", "segments")
+            for m in ("rows", "ms")
+        ),
     ]
 )
 

@@ -86,20 +86,18 @@ def compact_streamed_postings(
     standard single-wide-exchange segment encode. The join key is the md5
     hash — uniformly distributed, no skew salting needed.
     """
-    segs, _docs, _dstats = _compact_parts(spark, corpus_dir, postings_dir,
-                                          num_shards, block_size)
-    return segs
+    docs = build_docs(spark.read.parquet(corpus_dir), num_shards=num_shards)
+    blocks, _cstats = _compact_parts(spark, docs, postings_dir, num_shards, block_size)
+    return blocks.drop("tb")
 
 
-def _compact_parts(spark, corpus_dir, postings_dir, num_shards, block_size):
-    """(segments, docs, dstats) for a compaction — one docs plan shared by
-    the segment encode, the docs write, and cstats, so a caller that
-    persists `docs` runs the corpus scan + dense-rank sort once instead of
-    once per action (compact_to_store does exactly that)."""
-    from ..operators.segments import build_segments
+def _compact_parts(spark, docs, postings_dir, num_shards, block_size):
+    """(encode_segments blocks, cstats rows) for a compaction over the
+    stream's docs table — one docs plan shared by the segment encode,
+    cstats and, in compact_to_store, the docs write (which caches docs
+    first, so the corpus scan + dense-rank sort run once)."""
+    from ..operators.segments import encode_segments
 
-    corpus = spark.read.parquet(corpus_dir)
-    docs = build_docs(corpus, num_shards=num_shards)
     mapping = docs.select(_stream_doc_key().alias("hash_id"), "doc_id")
     # recursiveFileLookup: the sink is epoch-partitioned for idempotent
     # retries (stream_postings); read the files flat so no epoch column
@@ -111,10 +109,12 @@ def _compact_parts(spark, corpus_dir, postings_dir, num_shards, block_size):
         .drop("hash_id")
     )
     dstats = doclens_from_docs(docs, fields={FIELD_CONTENT: "content"})
-    cstats = collection_stats(dstats)
-    segs = build_segments(remapped, dstats, cstats, num_shards=num_shards,
-                          block_size=block_size)
-    return segs, docs, dstats
+    # collected once: the avgdl baked into max_impact and cstats.json are
+    # then the same values by construction
+    cstats = [r.asDict() for r in collection_stats(dstats).collect()]
+    blocks = encode_segments(remapped, dstats, cstats, num_shards=num_shards,
+                             block_size=block_size)
+    return blocks, cstats
 
 
 def compact_to_store(
@@ -136,36 +136,22 @@ def compact_to_store(
     import json
     import os
 
-    from ..plans.build_index import SEG_ROW_GROUP_BYTES, TERM_BUCKETS, write_tstats
+    from ..plans.build_index import write_segments, write_tstats
 
     os.makedirs(out_dir, exist_ok=True)
-    segs, docs, dstats = _compact_parts(
-        spark, corpus_dir, postings_dir, num_shards, block_size)
-    # persist docs: its dense-rank plan is embedded in segs (id mapping +
-    # doclens) AND written below AND feeds cstats — caching it makes the
-    # corpus scan + global sort run once across all four actions instead
-    # of once each (CacheManager matches the shared logical plan)
-    docs = docs.persist()
-    segs = segs.persist()
-    (
-        segs.withColumn("tb", F.pmod(md5_prefix_long("term"), F.lit(TERM_BUCKETS)).cast("int"))
-        .repartition("tb")
-        .sortWithinPartitions("tb", "term", "field", "shard", "block_no")
-        .write.mode("overwrite")
-        .option("parquet.block.size", SEG_ROW_GROUP_BYTES)
-        .partitionBy("tb")
-        .parquet(os.path.join(out_dir, "segments/unit=0"))
-    )
-    tstats = segs.groupBy("term", "field").agg(F.sum("n").alias("df"))
-    write_tstats(tstats, out_dir)
+    docs = build_docs(spark.read.parquet(corpus_dir), num_shards=num_shards).persist()
+    blocks, cstats = _compact_parts(spark, docs, postings_dir, num_shards, block_size)
+    blocks = blocks.persist()
+    write_segments(blocks, os.path.join(out_dir, "segments/unit=0"))
+    write_tstats(blocks, os.path.join(out_dir, "tstats"))
     docs.write.mode("overwrite").parquet(os.path.join(out_dir, "docs/unit=0"))
-    # cstats.json must be EXACTLY what build_segments baked into max_impact
+    # cstats.json must be EXACTLY what the encoder baked into max_impact
     # (a diverging avgdl would shift recomputed scores a ULP off the stored
-    # block bounds) — so it comes from the same collection_stats plan
+    # block bounds) — the same collected rows
     with open(os.path.join(out_dir, "cstats.json"), "w") as f:
-        json.dump([r.asDict() for r in collection_stats(dstats).collect()], f)
+        json.dump(cstats, f)
     with open(os.path.join(out_dir, "store_meta.json"), "w") as f:
         json.dump({"num_shards": num_shards, "sharding": "mod",
                    "block_size": block_size}, f)
-    segs.unpersist()
+    blocks.unpersist()
     docs.unpersist()
