@@ -18,7 +18,7 @@ stdlib http.server only — no framework dependencies.
 
     python scripts/serve.py --index DIR [--port 8080]
     GET /search?q=free+text&k=10&mode=or   → JSON hits
-    GET /health                            → {"docs": N}
+    GET /health                            → {"docs": N, "resident": {cache: size}}
 """
 
 from __future__ import annotations
@@ -435,8 +435,9 @@ class SearchApp:
         files = view.searcher.files
         ids = [d for d, _ in hits]
         want_snippets = highlight and os.path.isdir(os.path.join(self.store_dir, "postings"))
-        cols = ["doc_id", "title", "repo", "path"] + (["content"] if want_snippets else [])
-        meta = {row["doc_id"]: row for row in files.read("docs", "doc_id", ids, cols).to_pylist()}
+        cols = ["title", "repo", "path"] + (["content"] if want_snippets else [])
+        docs = files.read("docs", "doc_id", ids, cols)
+        meta = dict(zip(docs.per_row(docs.keys).tolist(), docs.table.to_pylist()))
         snippets: dict[int, str] = {}
         if want_snippets:
             # bolded densest-window snippets from the positional sidecar —
@@ -447,10 +448,10 @@ class SearchApp:
             import pyarrow as pa
             import pyarrow.compute as pc
 
-            pt = files.read("postings", "term", terms, ["term", "doc_id", "field", "positions"], [0])
+            pt = files.read("postings", "term", terms, ["doc_id", "positions"], [0]).table
             pt = pt.filter(pc.is_in(pt["doc_id"], value_set=pa.array(ids)))
             pos: dict[int, list[int]] = {}
-            for row in pt.select(["doc_id", "positions"]).to_pylist():
+            for row in pt.to_pylist():
                 pos.setdefault(row["doc_id"], []).extend(row["positions"])
             for d, p in pos.items():
                 m = meta.get(d)
@@ -471,6 +472,13 @@ class SearchApp:
     def n_docs(self) -> int:
         self._maybe_reload()
         return int(self.searcher._coll[0][0]) if 0 in self.searcher._coll else 0
+
+    def resident(self) -> dict:
+        """The serving view's cache occupancy (see SegmentSearcher.resident),
+        plus the phrase-key cache's bytes."""
+        view = self._view
+        pc = view.phrase_cache
+        return {**view.searcher.resident(), "phrase_bytes": pc._n if pc else 0}
 
 
 class RoutedSearchApp:
@@ -549,6 +557,14 @@ class RoutedSearchApp:
     def n_docs(self) -> int:
         return sum(a.n_docs() for a in self.apps.values())
 
+    def resident(self) -> dict:
+        """Cache occupancy summed over the language stores."""
+        out: dict = {}
+        for a in self.apps.values():
+            for k, v in a.resident().items():
+                out[k] = out.get(k, 0) + v
+        return out
+
 
 def make_handler(app: SearchApp):
     class Handler(BaseHTTPRequestHandler):
@@ -556,7 +572,7 @@ def make_handler(app: SearchApp):
             u = urlparse(self.path)
             try:
                 if u.path == "/health":
-                    body = {"docs": app.n_docs()}
+                    body = {"docs": app.n_docs(), "resident": app.resident()}
                 elif u.path == "/search":
                     qs = parse_qs(u.query)
                     try:

@@ -9,6 +9,8 @@ import re
 import time
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from ucuddle_search_engine_spark.operators.bm25 import InvertedIndex
 from ucuddle_search_engine_spark.functions.analyze import _PY_TOKEN_RE
@@ -95,6 +97,58 @@ def test_snippet_linear_scan_matches_quadratic():
     t_linear = time.perf_counter() - t0
     assert got == want and "<b>" in got
     assert t_linear < t_quadratic / 5, (t_linear, t_quadratic)
+
+
+def _snippet_full_scan(text, match_pos, window=SNIPPET_TOKENS):
+    """_snippet as it was before its token scan stopped early: it
+    tokenizes the whole text. Kept verbatim as the output oracle."""
+    if not match_pos:
+        return ""
+    spans = [m.span() for m in _PY_TOKEN_RE.finditer(text.lower())]
+    match_set = {p for p in match_pos if p < len(spans)}
+    if not match_set:
+        return ""
+    ordered = sorted(match_set)
+    best_start, best_hits, j = ordered[0], 1, 0
+    for i, p in enumerate(ordered):
+        while j < len(ordered) and ordered[j] < p + window:
+            j += 1
+        if j - i > best_hits:
+            best_start, best_hits = p, j - i
+    w0 = max(0, best_start - 3)
+    w1 = min(len(spans), w0 + window)
+    out = []
+    if w0 > 0:
+        out.append("… ")
+    cursor = spans[w0][0]
+    for tpos in range(w0, w1):
+        s, e = spans[tpos]
+        out.append(text[cursor:s])
+        tok = text[s:e]
+        out.append(f"{PRE}{tok}{POST}" if tpos in match_set else tok)
+        cursor = e
+    if w1 < len(spans):
+        out.append(" …")
+    return "".join(out)
+
+
+# words and separators whose lower-casing changes length or maps outside
+# ASCII ('İ' lowers to two code points, the Kelvin sign to 'k')
+_PIECES = ["alpha", "Beta", "GAMMA", "d9", "x", "İstanbul", "\u212aelvin", "ΣΑΣ", "ψ",
+           "naïve", "42"]
+_SEPS = [" ", ", ", "-", "\n", " … ", "::", ""]
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(st.tuples(st.sampled_from(_PIECES), st.sampled_from(_SEPS)), max_size=120),
+       st.lists(st.integers(min_value=0, max_value=160), max_size=40),
+       st.sampled_from([1, 2, 5, SNIPPET_TOKENS, 50]))
+def test_snippet_early_stop_matches_full_scan(parts, pos, window):
+    """Stopping the token scan after the window renders byte-identical
+    snippets to tokenizing the whole text: random texts, position sets with
+    duplicates and positions past the last token, several window widths."""
+    text = "".join(w + sep for w, sep in parts)
+    assert _snippet(text, pos, window) == _snippet_full_scan(text, pos, window)
 
 
 def test_capitalize_title(spark):

@@ -2,19 +2,25 @@
 after warm-up the hot path runs no pyarrow dataset scan and a repeat read no
 Parquet decode; a 1-byte residency budget and racing cold reads keep every
 answer; mixed block_no widths, footers without statistics and empty units
-keep every ranking; a 500 from the HTTP tier is logged with its traceback."""
+keep every ranking; a 500 from the HTTP tier is logged with its traceback;
+/health reports the serving caches' occupancy. Spark-free cases on
+hand-written parquet check keyed reads against a pyarrow filter and that a
+resident row group holds payload columns only, charged at its exact bytes."""
 
 from __future__ import annotations
 
 import glob
 import http.client
 import os
+import random
 import shutil
 import sys
 import threading
 from http.server import ThreadingHTTPServer
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pds
 import pyarrow.parquet as pq
 import pytest
@@ -95,7 +101,8 @@ READS = (("tstats", "term", TERMS, ["term", "field", "df"], [0, 1]),
 
 
 def _same(a, b):
-    return a.column_names == b.column_names and a.to_pydict() == b.to_pydict()
+    return (a.table.equals(b.table) and a.keys == b.keys and a.hive == b.hive
+            and a.counts.tolist() == b.counts.tolist())
 
 
 def test_warm_repeat_read_decodes_nothing(store, monkeypatch):
@@ -246,3 +253,222 @@ def test_server_error_is_logged_with_traceback(store, caplog):
         srv.server_close()
     assert any(r.exc_info and r.exc_info[0] is RuntimeError for r in caplog.records)
     assert "Traceback" in caplog.text and "chain read failed" in caplog.text
+
+
+def test_health_reports_cache_occupancy(store):
+    """/health reports, beside the doc count, the resident row groups'
+    bytes and count, the chain cache's bytes, the DecodeCache's postings
+    and the phrase-key cache's bytes — zero on a fresh view, then exactly
+    what the caches hold once a term, a phrase and a highlight query ran."""
+    import json
+
+    serve = _serve()
+    app = serve.SearchApp(store)
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), serve.make_handler(app))
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+
+    def get(path):
+        conn = http.client.HTTPConnection("127.0.0.1", srv.server_address[1], timeout=60)
+        conn.request("GET", path)
+        resp = conn.getresponse()
+        assert resp.status == 200
+        return json.loads(resp.read())
+
+    try:
+        keys = {"storefiles_bytes", "storefiles_groups", "chain_bytes", "decode_postings",
+                "phrase_bytes"}
+        cold = get("/health")
+        assert cold["docs"] == 300 and cold["resident"] == dict.fromkeys(keys, 0)
+        for q in ("/search?q=t0+t1", "/search?q=%22t0+t1%22", "/search?q=t0+t2&highlight=1"):
+            assert get(q)
+        warm = get("/health")["resident"]
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    s = app.searcher
+    assert warm == {"storefiles_bytes": s.files._bytes, "storefiles_groups": len(s.files._groups),
+                    "chain_bytes": s._seg_bytes, "decode_postings": s._decode_cache._n,
+                    "phrase_bytes": app._view.phrase_cache._n}
+    assert all(warm.values()), warm
+
+
+# -- Spark-free: hand-written multi-row-group parquet ------------------------
+
+WORDS = ["a", "ab", "abc", "abd", "b", "zeta", "ж", "жук", "жукк", "я", "ёлка", "ёж", "ѳ"]
+
+
+def _write_rows(path, rows: dict, rg_rows: int, shuffle: random.Random | None, **write):
+    """One parquet file of `rows` (column → list) in `rg_rows`-row row
+    groups, row order shuffled when `shuffle` is given (else as given)."""
+    n = len(next(iter(rows.values())))
+    order = list(range(n))
+    if shuffle is not None:
+        shuffle.shuffle(order)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.table({c: [v[i] for i in order] for c, v in rows.items()}), path,
+                   row_group_size=rg_rows, **write)
+
+
+def _term_store(root, bucketed: bool) -> str:
+    """`postings`-like term files: units 0 and 1, each term on fields 0/1
+    with 1–3 rows per (term, field); bucketed → one file per <unit, tb>
+    directory as the store writes them, else one flat file per unit."""
+    from ucuddle_search_engine_spark.functions.hashing import term_buckets
+
+    rng = random.Random(11)
+    for unit in (0, 1):
+        files: dict[str, dict] = {}
+        for w in WORDS[unit::1 + unit]:
+            d = f"unit={unit}/tb={term_buckets([w])[0]}" if bucketed else f"unit={unit}"
+            rows = files.setdefault(d, {"term": [], "field": [], "v": [], "s": []})
+            for f in (0, 1):
+                for _ in range(rng.randint(1, 3)):
+                    rows["term"].append(w)
+                    rows["field"].append(f)
+                    rows["v"].append(rng.randrange(1 << 40))
+                    rows["s"].append(f"{w}/{f}/{len(rows['v'])}")
+        for i, (d, rows) in enumerate(sorted(files.items())):
+            _write_rows(os.path.join(root, "terms", d, "part-0.parquet"), rows, 3,
+                        rng if i % 2 else None)
+    return root
+
+
+def _doc_store(root, hive: bool) -> str:
+    """`docs`-like files keyed by int64 doc_id (ids interleaved across two
+    files, each unsorted), with a field column; the second file carries
+    statistics for `v` only, so its key column has none."""
+    rng = random.Random(5)
+    for i in (0, 1):
+        ids = list(range(i, 60, 2)) + [i + 7]  # one duplicated id per file
+        rows = {"doc_id": ids, "field": [d % 3 for d in ids],
+                "v": [d * 10 + i for d in ids], "s": [f"doc{d}" for d in ids]}
+        d = os.path.join(root, "docs", f"unit={i}" if hive else "", f"part-{i}.parquet")
+        _write_rows(d, rows, 7, rng, **({"write_statistics": ["v"]} if i else {}))
+    return root
+
+
+def _reference(root, rel, key, values, fields) -> pa.Table:
+    t = pds.dataset(os.path.join(root, rel), format="parquet", partitioning="hive").to_table()
+    keep = pc.is_in(t[key], value_set=pa.array(list(values), t.schema.field(key).type))
+    if fields is not None:
+        keep = pc.and_(keep, pc.is_in(t["field"], value_set=pa.array(fields, pa.int32())))
+    return t.filter(keep)
+
+
+def _rows(cols: dict) -> list:
+    return sorted(zip(*cols.values()))
+
+
+def _check(files, root, rel, key, values, columns, fields):
+    """read() equals the pyarrow filter once its key and hive values are
+    spread back over the rows; its payload holds no key or hive column."""
+    got = files.read(rel, key, values, columns, fields)
+    want = _reference(root, rel, key, values, fields)
+    cols = columns or want.column_names
+    assert got.table.column_names == [c for c in cols if c not in (key, "unit", "tb")]
+
+    def column(c):
+        if c == key:
+            return got.per_row(got.keys).tolist()
+        if c in ("unit", "tb"):
+            return got.per_row([h[c] for h in got.hive]).tolist()
+        return got.table.column(c).to_pylist()
+
+    rebuilt = {c: column(c) for c in cols}
+    assert _rows(rebuilt) == _rows(want.select(cols).to_pydict()), (rel, values, columns, fields)
+    assert got.num_rows == want.num_rows
+    if got.table.num_columns:
+        assert got.table.num_rows == got.num_rows
+    # runs are whole: every run's key is one of the values and non-empty
+    assert set(got.keys) <= set(values) and (got.counts > 0).all()
+
+
+TERM_READS = (
+    (["a", "abc", "ж", "ёлка", "ѳ"], None, None),             # ASCII + Cyrillic
+    (["ab", "abc"], ["s", "term", "v"], [0]),                  # a key that prefixes another
+    (["жук", "жукк", "ж"], ["term", "unit", "field"], [1]),
+    (["abd", "b", "нет", "zz", "ё"], ["v"], None),             # with absent keys
+    (["нет", "zz"], ["term", "v", "unit"], [0]),               # nothing found
+    (WORDS, ["field", "s"], [0, 1]),
+)
+
+
+@pytest.mark.parametrize("bucketed", [True, False], ids=["tb_dirs", "flat"])
+def test_term_reads_equal_pyarrow_filter(tmp_path, bucketed):
+    """Term reads over shuffled 3-row row groups — ASCII and Cyrillic keys,
+    a key that is a prefix of another, absent keys, field filters, key and
+    hive columns asked or not — equal a pyarrow dataset filter, cold and
+    then warm."""
+    root = _term_store(str(tmp_path), bucketed)
+    files = StoreFiles(root)
+    for _ in range(2):
+        for values, columns, fields in TERM_READS:
+            _check(files, root, "terms", "term", values, columns, fields)
+
+
+@pytest.mark.parametrize("hive", [True, False], ids=["hive", "flat"])
+def test_doc_id_reads_equal_pyarrow_filter(tmp_path, hive):
+    """int64 doc_id reads — with and without hive directories, with a
+    field filter, absent ids, duplicated ids across row groups, and one
+    file whose key column has no row-group statistics — equal a pyarrow
+    dataset filter."""
+    root = _doc_store(str(tmp_path), hive)
+    md = pq.read_metadata(os.path.join(root, "docs", "unit=1" if hive else "", "part-1.parquet"))
+    assert not md.row_group(0).column(0).is_stats_set
+    files = StoreFiles(root)
+    reads = ((list(range(0, 60, 5)), None, None),
+             ([7, 8, 9, 10**12], ["s", "doc_id"], [0, 2]),
+             ([3, 1, 4, 1, 5, 9, 2, 6], ["v", "field", *(["unit"] if hive else [])], [1]),
+             ([-1, 10**12], ["doc_id", "v"], None),
+             (list(range(60)), ["v"], [0]))
+    for _ in range(2):
+        for values, columns, fields in reads:
+            _check(files, root, "docs", "doc_id", values, columns, fields)
+
+
+def _resident_buffer_bytes(g) -> int:
+    """What `g` holds, counted from its objects: the Arrow buffers of its
+    table (each once) plus every numpy array it owns outright (a view into
+    one of those Arrow buffers is not counted twice)."""
+    bufs = {}
+    for col in g.t.columns:
+        for chunk in col.chunks:
+            for b in chunk.buffers():
+                if b is not None:
+                    bufs[b.address] = b.size
+    total = sum(bufs.values())
+    for name in type(g).__slots__:
+        a = getattr(g, name)
+        if isinstance(a, np.ndarray):
+            inside = any(addr <= a.ctypes.data < addr + size for addr, size in bufs.items())
+            total += 0 if inside else a.nbytes
+    return total
+
+
+def test_resident_groups_hold_payload_only_and_charge_exact_bytes(tmp_path):
+    """After term and doc_id reads, no resident row group holds the key
+    column, a hive column or an object-dtype array; its run index is numpy
+    (`S` UTF-8 bytes as wide as its longest key, or int64); and each
+    group's byte charge — and so the reader's total — equals the buffers it
+    actually holds, also after a later read attached more columns."""
+    root = _doc_store(_term_store(str(tmp_path), True), True)
+    files = StoreFiles(root)
+    files.read("terms", "term", WORDS, ["v"], [0])
+    files.read("docs", "doc_id", range(60), ["s"])
+    files.read("terms", "term", WORDS[:4], ["s", "term", "unit", "tb"])  # attaches `s`
+    files.read("docs", "doc_id", range(30), None)
+    assert files._groups
+    for (path, _), g in files._groups.items():
+        key = "term" if "/terms/" in path else "doc_id"
+        assert not {key, "unit", "tb"} & set(g.t.column_names), g.t.column_names
+        arrays = [getattr(g, s) for s in type(g).__slots__]
+        assert not any(isinstance(a, np.ndarray) and a.dtype == object for a in arrays)
+        if key == "term":
+            assert g.keys.dtype.kind == "S"
+            assert g.keys.dtype.itemsize == max(len(k) for k in g.keys)
+            assert [k.decode() for k in g.keys] == sorted({k.decode() for k in g.keys})
+        else:
+            assert g.keys.dtype == np.int64 and (np.diff(g.keys) > 0).all()
+        assert g.nbytes == _resident_buffer_bytes(g)
+    assert files._bytes == sum(g.nbytes for g in files._groups.values())
+    assert files.resident() == {"groups": len(files._groups), "bytes": files._bytes}

@@ -77,6 +77,42 @@ def test_streamed_compaction_equals_batch_store(spark, tmp_path):
     assert canon(compacted) == canon(batch)
 
 
+def _assert_docs_files_sorted(store: str) -> int:
+    """Every docs file of `store` reads sorted by doc_id; returns the rows."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(store, "docs", "**", "*.parquet"), recursive=True)
+    assert files, store
+    n = 0
+    for f in files:
+        ids = pq.read_table(f, columns=["doc_id"])["doc_id"].to_numpy()
+        assert (np.diff(ids) >= 0).all(), f
+        n += len(ids)
+    return n
+
+
+def test_write_docs_sorts_each_file_keeping_rows(spark, tmp_path):
+    """The shared docs writer: each output file of a shuffled, multi-
+    partition docs frame is sorted by doc_id, and the rows are unchanged."""
+    import glob
+    import os
+
+    from ucuddle_search_engine_spark.plans.build_index import write_docs
+
+    docs = spark.createDataFrame(
+        [((i * 7919) % 500, f"t{i}", f"c{i % 13}") for i in range(500)],
+        "doc_id long, title string, content string").repartition(4)
+    out = str(tmp_path / "docs")
+    write_docs(docs, out)
+    assert len(glob.glob(os.path.join(out, "*.parquet"))) > 1
+    assert _assert_docs_files_sorted(str(tmp_path)) == 500
+    got = spark.read.parquet(out)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, docs.collect()))
+
+
 def test_freshness_stream_compact_merge_serve(spark, tmp_path):
     """The FULL ES Refresh:'true' analogue (crawler/functs_with_elastic.go:321)
     in one chain: new docs arrive by streaming ingest → compaction produces a
@@ -141,10 +177,14 @@ def test_freshness_stream_compact_merge_serve(spark, tmp_path):
         # compaction point → a full servable delta store
         delta = str(tmp_path / "delta_store")
         compact_to_store(spark, fresh_dir, postings_out, delta, num_shards=3)
+        # built and compacted docs files are each sorted by doc_id
+        assert _assert_docs_files_sorted(served) == 80
+        assert _assert_docs_files_sorted(delta) == 3
 
         # merge into the served path; the swap IS the refresh
         merged_tmp = str(tmp_path / "merged_tmp")
         merge_many(spark, [served, delta], merged_tmp, num_shards=3)
+        assert _assert_docs_files_sorted(merged_tmp) == 83
         shutil.rmtree(served)
         os.rename(merged_tmp, served)
 

@@ -16,7 +16,7 @@ UDF. Nothing here scales with corpus size at query time.
 
 from __future__ import annotations
 
-
+import itertools
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -35,30 +35,45 @@ def capitalize_title(col: Column | str) -> Column:
     return F.concat(F.upper(F.substring(c, 1, 1)), c.substr(F.lit(2), F.length(c)))
 
 
-def _snippet(text: str, match_pos: list[int], window: int = SNIPPET_TOKENS) -> str:
-    """Densest-window snippet with matched tokens bolded.
-
-    match_pos are token positions from the postings (same tokenizer). Token
-    boundaries are re-derived with the shared regex on the ORIGINAL text so
-    the snippet preserves original casing/punctuation between tokens.
-    """
-    if not match_pos:
-        return ""
-    spans = [m.span() for m in _PY_TOKEN_RE.finditer(text.lower())]
-    match_set = {p for p in match_pos if p < len(spans)}
-    if not match_set:
-        return ""
-    ordered = sorted(match_set)
-    # densest window: maximize matches inside a window of SNIPPET_TOKENS
-    # tokens (the first such start wins). Two pointers: the window's end
-    # index j only moves forward, so the scan is linear in the matches.
+def _densest(ordered: list[int], window: int) -> int:
+    """Start of the first window of `window` tokens holding the most of the
+    sorted positions `ordered`. Two pointers: the window's end index j only
+    moves forward, so the scan is linear in the matches."""
     best_start, best_hits, j = ordered[0], 1, 0
     for i, p in enumerate(ordered):
         while j < len(ordered) and ordered[j] < p + window:
             j += 1
         if j - i > best_hits:
             best_start, best_hits = p, j - i
+    return best_start
+
+
+def _snippet(text: str, match_pos: list[int], window: int = SNIPPET_TOKENS) -> str:
+    """Densest-window snippet with matched tokens bolded.
+
+    match_pos are token positions from the postings (same tokenizer). Token
+    boundaries are re-derived with the shared regex on the ORIGINAL text so
+    the snippet preserves original casing/punctuation between tokens.
+    Positions past the text's last token are ignored. The token scan stops
+    once it has the tokens through the densest window's end and one token
+    past the rendered window (which decides the trailing " …"): when the
+    text holds that many, every position the render reads is a real token,
+    so the rest of the text cannot change the snippet.
+    """
+    if not match_pos:
+        return ""
+    ordered = sorted(set(match_pos))
+    best_start = _densest(ordered, window)
     w0 = max(0, best_start - 3)
+    need = max(best_start + window, w0 + window + 1)
+    spans = [m.span() for m in itertools.islice(_PY_TOKEN_RE.finditer(text.lower()), need)]
+    if len(spans) < need:  # the whole text: drop positions past its end
+        ordered = [p for p in ordered if p < len(spans)]
+        if not ordered:
+            return ""
+        best_start = _densest(ordered, window)
+        w0 = max(0, best_start - 3)
+    match_set = set(ordered)
     w1 = min(len(spans), w0 + window)
     out = []
     if w0 > 0:

@@ -408,8 +408,8 @@ def _load_entries(files, terms: list[str], field: int, cache,
                 loaded[t] = hit
         need = [t for t in need if t not in loaded]
     if need:
-        tab = files.read("postings", "term", need,
-                         ["term", "doc_id", "positions", "doclen", "field"], [field])
+        got = files.read("postings", "term", need, ["doc_id", "positions", "doclen"], [field])
+        tab = got.table
         # NO global sort/take: a (term, doc_id) Table.sort_by gathers the
         # whole 2 GB positions column through Arrow take (measured 8-10 s at
         # 5M docs, the single largest cold stage). Instead each term argsorts
@@ -422,12 +422,14 @@ def _load_entries(files, terms: list[str], field: int, cache,
         flat = posl.flatten().to_numpy(zero_copy_only=False)  # stored int32
         lens_all = pc.list_value_length(posl).to_numpy(zero_copy_only=False)
         loff = np.concatenate(([0], np.cumsum(lens_all, dtype=np.int64)))
-        tcol = tab.column("term")
+        # each term's rows: its key runs, in table order
+        runs: dict[str, list] = {}
+        for t, a, n in zip(got.keys, (np.cumsum(got.counts) - got.counts).tolist(),
+                           got.counts.tolist()):
+            runs.setdefault(t, []).append(np.arange(a, a + n))
 
     def build(t: str):
-        tmask = pc.equal(tcol, t).combine_chunks().to_numpy(
-            zero_copy_only=False)
-        rows = np.flatnonzero(tmask)
+        rows = np.concatenate(runs.get(t, [np.empty(0, np.int64)]))
         docs = doc_np[rows]
         o = np.argsort(docs, kind="stable")
         rows = rows[o]

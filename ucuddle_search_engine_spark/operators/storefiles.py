@@ -10,14 +10,20 @@ of the key — Delta Lake's data skipping from per-file statistics. A read
 touches only the row groups whose range holds a wanted key.
 
 Each (file, row group, column) is decoded at most once, on first touch, and
-kept resident: rows sorted by key when not already in that order (docs
-rows are in range-partition order), a key → row-run index,
-block_no as int64 and the hive unit/tb columns attached. A read is then
-index lookups plus zero-copy slices: the fixed cost of a Parquet decode call
-(~0.3–0.8 ms whatever its row count) is paid once per row group, not once
-per request. Resident bytes (Arrow nbytes plus the index) are LRU-bounded by
-the RAM-derived `_default_seg_cache_bytes()`. A store swap opens a new view
-with a new reader, so nothing resident goes stale.
+kept resident in key order (rows are sorted when the file is not). A
+resident row group holds payload columns only, block_no widened to int64.
+The key column becomes a run index of two numpy arrays: each key run's key
+(int64, or UTF-8 bytes as numpy `S`, whose bytewise order is Arrow's and
+Python's code-point order) and the runs' first rows. The hive partition
+values (unit, tb) are the file's constants, never columns. A read is
+vectorised index lookups plus zero-copy slices, answered as `Rows`: the
+payload rows plus their key runs (key, hive values, row count, in table
+order), so no read rebuilds a key or hive column per row. The fixed cost of
+a Parquet decode call (~0.3–0.8 ms whatever its row count) is paid once per
+row group, not once per request. Resident bytes (Arrow buffers plus the run
+index, exact) are LRU-bounded by the RAM-derived `_default_seg_cache_bytes()`.
+A store swap opens a new view with a new reader, so nothing resident goes
+stale.
 """
 
 from __future__ import annotations
@@ -25,7 +31,6 @@ from __future__ import annotations
 import bisect
 import collections
 import os
-import sys
 import threading
 
 import numpy as np
@@ -54,6 +59,28 @@ def _default_seg_cache_bytes() -> int:
     return min(max(256 << 20, ram // 32), 8 << 30)
 
 
+class Rows:
+    """A keyed read's answer. `table` holds the payload columns (the asked
+    columns minus the key and hive ones); its rows come in key runs, run i
+    being `counts[i]` rows of key `keys[i]` from a file whose hive partition
+    values are `hive[i]`, runs in table order."""
+
+    __slots__ = ("table", "keys", "hive", "counts")
+
+    def __init__(self, table: pa.Table, keys: list, hive: list, counts: list):
+        self.table, self.keys, self.hive = table, keys, hive
+        self.counts = np.asarray(counts, dtype=np.int64)
+
+    @property
+    def num_rows(self) -> int:
+        return int(self.counts.sum())
+
+    def per_row(self, values) -> np.ndarray:
+        """One value per run (say `keys`, or a hive value per run) → one
+        per row."""
+        return np.repeat(np.asarray(values), self.counts)
+
+
 class StoreFiles:
     def __init__(self, store_dir: str):
         self.store_dir = store_dir
@@ -64,6 +91,11 @@ class StoreFiles:
         self._groups: collections.OrderedDict = collections.OrderedDict()  # (path, rg) → _Group
         self._bytes = 0  # Σ _Group.nbytes over self._groups
         self._empty: dict[tuple, pa.Table] = {}
+
+    def resident(self) -> dict:
+        """Resident row groups: their count and exact bytes."""
+        with self._lock:
+            return {"groups": len(self._groups), "bytes": self._bytes}
 
     def _list(self, rel: str) -> dict:
         """Data files of <store>/<rel> grouped by their tb directory, with
@@ -102,9 +134,10 @@ class StoreFiles:
 
     def _group(self, path: str, hive: dict, md, names: list, rg: int, key: str,
                cols: list[str]) -> "_Group":
-        """Row group `rg` of `path` with at least `cols` resident. Decodes
-        (outside the lock) only what is not resident yet; a racing decoder's
-        columns merge into whichever entry was published first."""
+        """Row group `rg` of `path` with at least the payload columns `cols`
+        resident. Decodes (outside the lock) only what is not resident yet;
+        a racing decoder's columns merge into whichever entry was published
+        first."""
         gk = (path, rg)
         with self._lock:
             g = self._groups.get(gk)
@@ -116,7 +149,7 @@ class StoreFiles:
         if g is None:
             need = list(dict.fromkeys(
                 [key] + (["field"] if "field" in names else []) + cols))
-            g = _Group(_decode(path, hive, md, [rg], need), key, hive)
+            g = _Group(_decode(path, hive, md, [rg], need), key)
             new = g.t
         else:
             new = _prep(_decode(path, hive, md, [rg], miss), g.order)
@@ -134,12 +167,12 @@ class StoreFiles:
         return cur
 
     def read(self, rel: str, key: str, values, columns: list[str] | None = None,
-             fields=None) -> pa.Table:
+             fields=None) -> Rows:
         """Rows of <store>/<rel> whose `key` is in `values` (and `field` in
-        `fields` when given), as `columns` (default: all, the hive columns
-        unit/tb included; block_no as int64). Term reads touch only the
-        terms' tb directories. Rows come in key order per row group, not
-        in file order."""
+        `fields` when given), as the payload columns among `columns`
+        (default: every file column); the key and hive values come back per
+        run (see Rows). Term reads touch only the terms' tb directories.
+        Runs come in key order per row group, not in file order."""
         vals = sorted(set(values))
         plan: dict = {}
         if key == "term":
@@ -148,72 +181,73 @@ class StoreFiles:
             for v in vals:
                 plan.setdefault(term_buckets([v])[0], []).append(v)
         plan[None] = vals  # unbucketed files (docs, flat layouts)
-        pieces = []
+        pieces, keys, hives, counts = [], [], [], []
         for tb, vs in plan.items():
+            enc = None
             for path, hive, md, names, ranges in self._footers(rel, tb, key):
-                out = columns if columns is not None else names + list(hive)
+                payload = [c for c in (names if columns is None else columns)
+                           if c != key and c not in hive]
                 for rg, r in enumerate(ranges):
                     lo, hi = (0, len(vs)) if r is None else (
                         bisect.bisect_left(vs, r[0]), bisect.bisect_right(vs, r[1]))
                     if lo == hi:
                         continue
-                    g = self._group(path, hive, md, names, rg, key, out)
-                    pieces += g.rows(out, vs[lo:hi], fields)
-        if not pieces:  # no row holds a key: any file of the subdir types the answer
-            return self._none(rel, key, columns)
-        return pa.concat_tables(pieces)
+                    if enc is None:
+                        enc = _encode(vs)
+                    g = self._group(path, hive, md, names, rg, key, payload)
+                    for j, piece in g.rows(payload, enc[lo:hi], fields):
+                        pieces.append(piece)
+                        keys.append(vs[lo + j])
+                        hives.append(hive)
+                        counts.append(piece.num_rows)
+        # no row holds a key: any file of the subdir types the answer
+        table = pa.concat_tables(pieces) if pieces else self._none(rel, key, columns)
+        return Rows(table, keys, hives, counts)
 
     def _none(self, rel: str, key: str, columns) -> pa.Table:
-        """The empty answer, typed like the subdir's files (memoized)."""
+        """The empty payload table, typed like the subdir's files (memoized)."""
         ek = (rel, key, None if columns is None else tuple(columns))
         hit = self._empty.get(ek)
         if hit is None:
             anyf = next((f for fs in self._listed[rel].values() for f in fs), None)
             if anyf is None:
-                hit = pa.table({c: pa.nulls(0) for c in columns or ()})
+                hit = pa.table({})
             else:
                 path, hive = anyf
-                md = pq.read_metadata(path)
-                out = columns if columns is not None else \
-                    md.schema.to_arrow_schema().names + list(hive)
-                t = _decode(path, hive, md, [], list(dict.fromkeys([key] + out)))
-                hit = _Group(t, key, hive).table(out)
+                schema = pq.read_metadata(path).schema.to_arrow_schema()
+                out = columns if columns is not None else schema.names
+                hit = _prep(schema.empty_table().select(
+                    [c for c in out if c != key and c not in hive]), None)
             self._empty[ek] = hit
         return hit
 
 
 class _Group:
-    """One resident row group: `t` holds its decoded columns in key order
-    (block_no as int64, the hive columns attached), `order` the permutation
-    from file order (None when the file was already sorted). The row-run
-    index is columnar: `keys` holds each run's key, sorted, and run i spans
-    rows starts[i]:starts[i + 1]. `fld` is the field column (None without
-    one) and `fields` its distinct values."""
+    """One resident row group: `t` holds its decoded payload columns in key
+    order (block_no as int64), `order` the permutation from file order (None
+    when the file was already sorted). The run index is two numpy arrays:
+    `keys` holds each run's key, sorted (int64, or UTF-8 bytes as `S`), and
+    run i spans rows starts[i]:starts[i + 1]. `fld` is a zero-copy view of
+    the field column (None without one) and `fields` its distinct values.
+    `nbytes` is exact: the table's buffers plus the two index arrays."""
 
     __slots__ = ("t", "names", "order", "keys", "starts", "fld", "fields", "nbytes", "tables")
 
-    def __init__(self, t: pa.Table, key: str, hive: dict):
-        n = t.num_rows
+    def __init__(self, t: pa.Table, key: str):
         ks = t.column(key).combine_chunks()
         runs = pc.run_end_encode(ks)
         self.order = None
         if pc.any(pc.less(runs.values[1:], runs.values[:-1])).as_py():
             self.order = pc.sort_indices(ks)
             runs = pc.run_end_encode(ks.take(self.order))
-        t = _prep(t, self.order)
-        for k, v in hive.items():
-            t = t.append_column(k, pa.array(np.full(n, v, np.int32)))
+        t = _prep(t.drop_columns([key]), self.order)
         self.t, self.names = t, set(t.schema.names)
-        self.keys = runs.values.to_numpy(zero_copy_only=False)
-        self.starts = np.concatenate(([0], runs.run_ends.to_numpy()))
+        self.keys = _key_array(runs.values)
+        self.starts = np.concatenate(([0], runs.run_ends.to_numpy())).astype(np.int64)
         self.fld = t.column("field").to_numpy() if "field" in self.names else None
         self.fields = set() if self.fld is None else set(pc.unique(t.column("field")).to_pylist())
         self.tables: dict[tuple, pa.Table] = {}
-        # string keys are Python objects: ~49 B of header each beyond their
-        # characters (exact for ASCII)
-        self.nbytes = t.get_total_buffer_size() + self.keys.nbytes + self.starts.nbytes + (
-            runs.values.get_total_buffer_size() + 49 * len(self.keys)
-            if self.keys.dtype == object else 0)
+        self.nbytes = t.get_total_buffer_size() + self.keys.nbytes + self.starts.nbytes
 
     def add(self, t: pa.Table) -> int:
         """Attach the columns of `t` (already in key order) not yet
@@ -234,24 +268,43 @@ class _Group:
             t = self.tables.setdefault(tuple(out), self.t.select(out))
         return t
 
-    def rows(self, out: list[str], vs: list, fields) -> list[pa.Table]:
-        """Rows of the keys `vs` (sorted) whose field is in `fields` (None:
-        any), as `out`: a zero-copy slice per key run, filtered only when
-        the row group holds a field outside `fields`."""
+    def rows(self, out: list[str], enc: np.ndarray, fields) -> list[tuple[int, pa.Table]]:
+        """(j, rows) for each key enc[j] (sorted, `_encode`d) held here with
+        a field in `fields` (None: any), as `out`: a zero-copy slice per key
+        run, filtered only when the row group holds a field outside
+        `fields`."""
+        if not len(self.keys):
+            return []
+        i = self.keys.searchsorted(enc)
+        found = (self.keys.take(i, mode="clip") == enc).nonzero()[0]
+        if not len(found):
+            return []
+        i = i[found]
         t, got = self.table(out), []
         mask = fields is not None and not self.fields <= set(fields)
-        for v in vs:
-            i = int(self.keys.searchsorted(v))
-            if i == len(self.keys) or self.keys[i] != v:
-                continue
-            a, b = int(self.starts[i]), int(self.starts[i + 1])
+        for j, a, b in zip(found.tolist(), self.starts[i].tolist(), self.starts[i + 1].tolist()):
             if mask:
                 m = np.isin(self.fld[a:b], fields)
                 if not m.any():
                     continue
-            got.append(t.slice(a, b - a) if not mask or m.all()
-                       else t.slice(a, b - a).filter(pa.array(m)))
+            got.append((j, t.slice(a, b - a) if not mask or m.all()
+                        else t.slice(a, b - a).filter(pa.array(m))))
         return got
+
+
+def _key_array(values: pa.Array) -> np.ndarray:
+    """Run keys as one compact numpy array that owns its memory: int64, or
+    fixed-width UTF-8 bytes (`S`, the longest key's width) for strings."""
+    if pa.types.is_string(values.type) or pa.types.is_large_string(values.type):
+        return values.cast(pa.large_binary()).to_numpy(zero_copy_only=False).astype("S")
+    return values.to_numpy(zero_copy_only=False).astype(np.int64)
+
+
+def _encode(vs: list) -> np.ndarray:
+    """Sorted lookup values in the run index's dtype."""
+    if isinstance(vs[0], str):
+        return np.array([v.encode() for v in vs], dtype="S")
+    return np.array(vs, dtype=np.int64)
 
 
 def _prep(t: pa.Table, order) -> pa.Table:

@@ -1143,8 +1143,9 @@ class SegmentSearcher:
                 for r in self.tstats_lookup_df(missing, fields).collect()]
 
     def _read_tstats_local(self, missing: list[str], fields: list[int]):
-        tt = self.files.read("tstats", "term", missing, ["term", "field", "df"], fields)
-        return zip(tt["term"].to_pylist(), tt["field"].to_pylist(), tt["df"].to_pylist())
+        r = self.files.read("tstats", "term", missing, ["field", "df"], fields)
+        return zip(r.per_row(r.keys).tolist(), r.table["field"].to_pylist(),
+                   r.table["df"].to_pylist())
 
     # below this many selected postings (a query's Σdf) an OR query is
     # scored by exhaustive TAAT; above it the block-max scorer's skipped
@@ -1451,6 +1452,14 @@ class SegmentSearcher:
         _ChainCols precomputes its own at build)."""
         return sum(g.nbytes for _, _, _, g, _, _ in chains)
 
+    def resident(self) -> dict:
+        """Occupancy of the serving caches: the view's resident row groups
+        (StoreFiles), the chain cache's bytes, the DecodeCache's postings."""
+        files = self.files.resident() if self.files is not None else {"groups": 0, "bytes": 0}
+        dc = self._decode_cache
+        return {"storefiles_bytes": files["bytes"], "storefiles_groups": files["groups"],
+                "chain_bytes": self._seg_bytes, "decode_postings": dc._n if dc else 0}
+
     def _term_chains(self, terms: list[str], fields: list[int]) -> dict:
         """term → [(shard, unit|None, field, chain-frame, n_postings)] from
         the segments rows (self.files: each row group decoded once, then
@@ -1474,21 +1483,21 @@ class SegmentSearcher:
                     missing.append(t)
         if not missing:
             return out
-        tab = self.files.read("segments", "term", missing, fields=fields)
+        got = self.files.read("segments", "term", missing, fields=fields)
+        tab = got.table
         built: dict[str, list] = {t: [] for t in missing}
-        if tab.num_rows:
+        if got.num_rows:
             # group (term, shard[, unit], field) rows into _ChainCols chains
             # with ONE numeric lexsort + boundary slicing — no pandas: the
             # groupby-iterate + per-group frame this replaces cost ~10 s of
             # a 12 s cold 58-term fuzzy fill at 5M docs (profiled; decode
-            # itself was 2 s). Arrow dictionary-encode factorizes the term
-            # strings C-side so the sort keys are all integers.
-            has_unit = "unit" in tab.schema.names
-            term_d = pc.dictionary_encode(tab.column("term")).combine_chunks()
-            tid = term_d.indices.to_numpy()
-            tstrs = term_d.dictionary.to_pylist()
+            # itself was 2 s). The read's key runs give each row its term's
+            # index in `missing`, so the sort keys are all integers.
+            ti = {t: i for i, t in enumerate(missing)}
+            tid = got.per_row([ti[t] for t in got.keys])
+            units = [h.get("unit") for h in got.hive]
+            unit = None if None in units else got.per_row(units)
             shard = tab.column("shard").to_numpy()
-            unit = tab.column("unit").to_numpy() if has_unit else None
             field = tab.column("field").to_numpy()
             block_no = tab.column("block_no").to_numpy()
             # block_no ascending inside each chain (the order every scorer
@@ -1527,7 +1536,7 @@ class SegmentSearcher:
                 # final [] slot: lazily memoized _BlockList view (see
                 # search_local) — rides the cache entry so view and chain
                 # evict together
-                built[tstrs[int(tid[i0])]].append(
+                built[missing[int(tid[i0])]].append(
                     (int(shard[i0]),
                      int(unit[i0]) if unit is not None else None,
                      int(field[i0]), chain, int(chain.ns.sum()), []))

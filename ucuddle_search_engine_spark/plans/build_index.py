@@ -353,6 +353,16 @@ def _observed_write(write, df: DataFrame, *metrics) -> dict:
     return {**obs.get, "ms": ms}
 
 
+def write_docs(docs: DataFrame, path: str) -> None:
+    """Write one docs directory, each file sorted by doc_id. A file's row
+    groups then cover disjoint doc-id ranges, so a keyed docs read
+    (operators/storefiles) decodes only the row groups holding its ids, and
+    no resident row group needs a sort permutation (a file written in
+    shuffle-arrival order would make both happen). The sort stays within
+    each partition: no exchange, one file per partition as before."""
+    docs.sortWithinPartitions("doc_id").write.mode("overwrite").parquet(path)
+
+
 def write_postings_sidecar(postings: DataFrame, path: str) -> None:
     """Positional postings sidecar (Lucene's .pos analogue) in the tb layout
     of segments/tstats: a phrase/highlight lookup prunes to |q| of 64
@@ -560,8 +570,7 @@ def build_index_resumable(
             postings_src = postings_u
         # content is stored like ES stores _source: display + native highlight
         # (C7) straight from the written store
-        writes["docs"] = _observed_write(lambda df: df.write.mode("overwrite").parquet(docs_path),
-                                         docs_u)
+        writes["docs"] = _observed_write(lambda df: write_docs(df, docs_path), docs_u)
         blocks = encode_segments(postings_src, None, cstats, num_shards=num_shards,
                                  block_size=block_size)
         writes["segments"] = _observed_write(lambda df: write_segments(df, seg_path), blocks,
@@ -715,7 +724,7 @@ def add_docs_column(spark: SparkSession, out_dir: str, name: str, dtype: str,
         out = df.withColumn(name, F.lit(default).cast(dtype))
         tmp = path + ".upgrade"
         shutil.rmtree(tmp, ignore_errors=True)
-        out.write.mode("overwrite").parquet(tmp)
+        write_docs(out, tmp)
         _swap_upgraded(path)
 
 

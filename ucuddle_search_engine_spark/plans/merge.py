@@ -35,6 +35,7 @@ from .build_index import (
     _field_stats,
     _observed_write,
     load_analyzer,
+    write_docs,
     write_postings_sidecar,
     write_segments,
     write_store_tstats,
@@ -195,8 +196,8 @@ def merge_many(spark: SparkSession, stores: list[str], out_dir: str,
     for p in parts[1:]:
         postings = postings.unionByName(p)
 
-    n = _observed_write(lambda df: df.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "docs/unit=0")), docs)["rows"]
+    n = _observed_write(lambda df: write_docs(df, os.path.join(out_dir, "docs/unit=0")),
+                        docs)["rows"]
     write_segments(encode_segments(postings, None, cstats, num_shards=num_shards,
                                    block_size=block_size),
                    os.path.join(out_dir, "segments/unit=0"))

@@ -136,7 +136,7 @@ def compact_to_store(
     import json
     import os
 
-    from ..plans.build_index import write_segments, write_tstats
+    from ..plans.build_index import write_docs, write_segments, write_tstats
 
     os.makedirs(out_dir, exist_ok=True)
     docs = build_docs(spark.read.parquet(corpus_dir), num_shards=num_shards).persist()
@@ -144,7 +144,7 @@ def compact_to_store(
     blocks = blocks.persist()
     write_segments(blocks, os.path.join(out_dir, "segments/unit=0"))
     write_tstats(blocks, os.path.join(out_dir, "tstats"))
-    docs.write.mode("overwrite").parquet(os.path.join(out_dir, "docs/unit=0"))
+    write_docs(docs, os.path.join(out_dir, "docs/unit=0"))
     # cstats.json must be EXACTLY what the encoder baked into max_impact
     # (a diverging avgdl would shift recomputed scores a ULP off the stored
     # block bounds) — the same collected rows
