@@ -1,7 +1,7 @@
 """Concurrent serving-tier queries must be race-free: scripts/serve.py is a
 ThreadingHTTPServer whose handlers call SegmentSearcher.search_local directly
 (no app-level serialization around the engine), so every shared structure the
-read path touches — the seg-chain cache, DecodeCache full-chain/scored-chain
+read path touches — the seg-chain cache, the DecodeCache's scored-chain
 memos, the phrase keys cache, the admission gate — must tolerate many
 in-flight queries. This pins rank parity under sustained 16-way concurrency
 on a mixed workload, including deliberate cold (cache-filling) overlap, plus

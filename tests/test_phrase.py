@@ -75,6 +75,56 @@ def test_phrase_match_doc_ids_past_2_31(spark, num_buckets):
         assert got == want, phrase
 
 
+def test_phrase_local_key_engine_doc_ids_past_2_31(tmp_path):
+    """The serving key engine packs (doc ordinal << 32) | position keys, so
+    doc ids at and past 2³¹ and 2³² neither overflow nor alias a small id
+    (raw 2³²+7 << 32 wraps onto doc 7's keys). A hand-written sidecar with
+    the rows of test_phrase_match_doc_ids_past_2_31, the rank engine forced
+    off through _RANK_INVALID; no Spark."""
+    import json
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ucuddle_search_engine_spark.operators import phrase as P
+    from ucuddle_search_engine_spark.operators.bm25 import B, K1
+
+    big, huge, far = 2**31 + 5, 2**32 + 7, 2**33
+    rows = [
+        ("a", 7, [0]), ("b", 7, [5]),  # no phrase in doc 7
+        ("a", huge, [4]), ("b", huge, [1]),  # none in huge either
+        ("a", big, [1, 3]), ("b", big, [2, 9]),
+        ("a", far, [0, 2]), ("b", far, [1, 3]),
+    ]
+    store = str(tmp_path / "store")
+    (tmp_path / "store" / "postings").mkdir(parents=True)
+    pq.write_table(pa.table({
+        "term": pa.array([r[0] for r in rows]),
+        "field": pa.array([0] * len(rows), pa.int32()),
+        "doc_id": pa.array([r[1] for r in rows], pa.int64()),
+        "positions": pa.array([r[2] for r in rows], pa.list_(pa.int32())),
+        "doclen": pa.array([10] * len(rows), pa.int64()),
+    }), str(tmp_path / "store" / "postings" / "part-0.parquet"))
+    with open(tmp_path / "store" / "cstats.json", "w") as fh:
+        json.dump([{"field": 0, "n_docs": 4, "avgdl": 10.0}], fh)
+
+    P._RANK_INVALID.add((store, 0))
+    try:
+        for phrase, exp in ((["a", "b"], {big: 1, far: 2}), (["b", "a"], {big: 1, far: 1})):
+            df = float(len(exp))
+            idf = math.log(1.0 + (4.0 - df + 0.5) / (df + 0.5))
+            want = sorted(((d, idf * (tf / (tf + K1 * (1.0 - B + B * 10.0 / 10.0))))
+                           for d, tf in exp.items()), key=lambda x: (-x[1], x[0]))
+            got = P.phrase_search_local(store, phrase, k=10)
+            assert got == want, phrase
+            cache = P.PhraseKeysCache()
+            assert P.phrase_search_local(store, phrase, k=10, cache=cache) == want
+            assert P.phrase_search_local(store, phrase, k=10, cache=cache) == want  # warm
+    finally:
+        P._RANK_INVALID.discard((store, 0))
+
+
 def test_phrase_search_over_written_store(spark, built_store):
     """Quoted-phrase top-k straight from a WRITTEN store's positional sidecar
     must equal the in-memory phrase engine — the corpus is never re-read."""

@@ -53,22 +53,20 @@ def test_blocklist_range_bound_never_underestimates(blocks, lo, width):
     """range_max_ub / range_max_ub_vec must be >= the true max ub over
     intersecting blocks for ANY block layout — sorted, shuffled, or
     overlapping (the conservative fallback)."""
-    import pandas as pd
-
     from ucuddle_search_engine_spark.functions.varbyte import vb_encode as _ve
     from ucuddle_search_engine_spark.operators.wand import _BlockList
 
     hi = lo + width
-    rows = []
-    for i, (start, w, ub) in enumerate(blocks):
-        rows.append({
-            "block_no": i, "min_doc": start, "max_doc": start + w, "n": 1,
-            "max_impact": ub,
-            "doc_bytes": encode_doc_ids(np.asarray([start], np.uint64)),
-            "tf_bytes": _ve(np.asarray([1], np.uint64)),
-            "dl_bytes": _ve(np.asarray([10], np.uint64)),
-        })
-    L = _BlockList(pd.DataFrame(rows), weight_idf=1.0, avgdl=10.0)
+    # block i is block_no i: one posting at its range start
+    L = _BlockList(
+        np.ones(len(blocks), np.int64),
+        np.asarray([ub for _, _, ub in blocks], np.float64),
+        np.asarray([start for start, _, _ in blocks], np.int64),
+        np.asarray([start + w for start, w, _ in blocks], np.int64),
+        [encode_doc_ids(np.asarray([start], np.uint64)) for start, _, _ in blocks],
+        [_ve(np.asarray([1], np.uint64))] * len(blocks),
+        [_ve(np.asarray([10], np.uint64))] * len(blocks),
+        weight_idf=1.0, avgdl=10.0)
     true_max = max(
         (ub for (start, w, ub) in blocks if start + w >= lo and start <= hi),
         default=0.0,

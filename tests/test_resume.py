@@ -357,11 +357,10 @@ def test_search_local_matches_spark_path(spark, built_store):
     p2 = [(d, round(sc, 9)) for d, sc in s.search_local(["t0", "t1"], k=10, mode="or", offset=10)]
     assert full[10:] == p2
 
-    # WARM repeats: the decoded-block cache's full-chain and scored-chain
-    # memo paths (head terms select every block → get_full/get_scored; the
-    # seed/survivor split exercises the run-gather slice) must return
-    # bit-identical rankings on every repeat, and the cache must stay within
-    # its postings bound
+    # WARM repeats: the scored-chain memo (whole chains for TAAT and the
+    # dense AND; the block-max seed/survivor split exercises the run-gather
+    # slice) must return bit-identical rankings on every repeat, and the
+    # cache must stay within its postings bound
     for terms, mode in cases:
         want = [(d, round(sc, 9)) for d, sc in s.search_local(terms, k=10, mode=mode)]
         for _ in range(2):

@@ -178,6 +178,34 @@ def test_pagination(idx, searcher):
     assert s1 + s2 == sfull
 
 
+def _rows_blocklist(rows: list[dict], weight_idf: float = 1.0, avgdl: float = 10.0):
+    """A _BlockList over hand-written block rows given in block_no order."""
+    import numpy as np
+
+    from ucuddle_search_engine_spark.operators.wand import _BlockList
+
+    def col(c, dt):
+        return np.array([r[c] for r in rows], dtype=dt)
+
+    return _BlockList(col("n", np.int64), col("max_impact", np.float64),
+                      col("min_doc", np.int64), col("max_doc", np.int64),
+                      [r["doc_bytes"] for r in rows], [r["tf_bytes"] for r in rows],
+                      [r["dl_bytes"] for r in rows], weight_idf, avgdl)
+
+
+def _frame_blocklist(pdf, widf: float, avgdl: float, cache=None):
+    """The one _BlockList of a single-(shard, term, field) frame of segment
+    rows, through the chain builder both query paths use."""
+    import numpy as np
+
+    from ucuddle_search_engine_spark.operators.wand import _build_chains
+
+    t, f = pdf["term"].iloc[0], int(pdf["field"].iloc[0])
+    [(_, L)] = _build_chains(lambda c: pdf[c].to_numpy(), [t], np.zeros(len(pdf), np.int64),
+                             None, {(t, f): widf}, {(t, f): avgdl}, cache=cache)
+    return L
+
+
 def test_blocklist_unsorted_ranges_never_underestimate():
     """A _BlockList whose block_no order is NOT doc order (a store mixing
     builds without a unit column) must still give range_max_ub bounds that
@@ -185,10 +213,8 @@ def test_blocklist_unsorted_ranges_never_underestimate():
     unsorted min/max arrays silently underestimated and block-max OR pruning
     could drop true top-k docs."""
     import numpy as np
-    import pandas as pd
 
     from ucuddle_search_engine_spark.functions.varbyte import encode_doc_ids, vb_encode
-    from ucuddle_search_engine_spark.operators.wand import _BlockList
 
     rng = np.random.RandomState(7)
     # 8 disjoint doc ranges, deliberately shuffled w.r.t. block_no
@@ -205,7 +231,7 @@ def test_blocklist_unsorted_ranges_never_underestimate():
             "tf_bytes": vb_encode(np.array([1, 2, 1], np.int64)),
             "dl_bytes": vb_encode(np.array([10, 10, 10], np.int64)),
         })
-    L = _BlockList(pd.DataFrame(rows), weight_idf=1.0, avgdl=10.0)
+    L = _rows_blocklist(rows)
 
     mins = np.array([r[0] for r in ranges]); maxs = np.array([r[1] for r in ranges])
     ubs_true = np.array([0.1 + i for i in range(8)])
@@ -220,7 +246,7 @@ def test_blocklist_unsorted_ranges_never_underestimate():
     for i, r in enumerate(rows[4:]):
         r2 = dict(r); r2["min_doc"] = 10 + i * 90; r2["max_doc"] = 95 + i * 90
         rows2.append(r2)
-    L2 = _BlockList(pd.DataFrame(rows2), weight_idf=1.0, avgdl=10.0)
+    L2 = _rows_blocklist(rows2)
     assert not L2._range_exact  # interleaved ranges detected
     # conservative fallback: every range query sees the global max ub
     assert L2.range_max_ub(0, 5) == float(np.max(L2.ubs))
@@ -266,39 +292,44 @@ def test_head_term_skew_chunking(spark):
     segs.unpersist()
 
 
+def _one_chain(segments, term: str):
+    """One shard's block rows of `term` in field 0, as a pandas frame."""
+    pdf = segments.filter(f"term = '{term}' and field = 0").toPandas()
+    return pdf[pdf["shard"] == int(pdf["shard"].iloc[0])]
+
+
 def test_blocklist_cache_paths_identical(segments):
-    """_BlockList with a DecodeCache must return bit-identical arrays to the
-    uncached path for EVERY selection shape — full chain (get_full /
-    get_scored), contiguous and scattered partial selections (run-gather
-    slicing of the memoized chain vs per-block entries), cold and warm."""
+    """_BlockList.decode through a DecodeCache (slices of the memoized
+    whole-chain scored arrays) must return bit-identical (docs, contribs) to
+    the uncached decode of only the selected blocks, for EVERY selection
+    shape — full chain, contiguous run, scattered, single block — cold and
+    warm."""
     import numpy as np
 
-    from ucuddle_search_engine_spark.operators.wand import DecodeCache, _BlockList
+    from ucuddle_search_engine_spark.operators.wand import DecodeCache
 
-    pdf = segments.filter("term = 't0' and field = 0").toPandas()
-    pdf = pdf[pdf["shard"] == int(pdf["shard"].iloc[0])]
-    plain = _BlockList(pdf, 1.7, 300.0)
-    cache = DecodeCache()
-    cached = _BlockList(pdf, 1.7, 300.0, cache=cache, ckey=(0, "t0", 0))
+    pdf = _one_chain(segments, "t0")
+    plain = _frame_blocklist(pdf, 1.7, 300.0)
     n = len(plain.ubs)
     assert n >= 4, "fixture must span several blocks"
     rng = np.random.RandomState(3)
     sels = [
-        np.arange(n),                      # full → get_full / get_scored
+        np.arange(n),                      # full chain
         np.arange(0, n, 2),                # scattered, covers ~half
         np.sort(rng.choice(n, size=max(1, n // 3), replace=False)),
-        np.array([0]),                     # single block (per-block path)
+        np.array([0]),                     # single block
+        np.array([n - 1]),                 # last block
         np.arange(n // 2, n),              # one contiguous run
+        np.array([], dtype=np.int64),      # empty selection
     ]
     for sel in sels:
-        for meth in ("decode_raw", "decode"):
-            want = getattr(plain, meth)(sel)
-            for _ in range(2):  # cold fill, then warm hit
-                got = getattr(cached, meth)(sel)
-                assert len(want) == len(got)
-                for w, g in zip(want, got):
-                    assert np.array_equal(w, g), (meth, sel[:5], len(sel))
-    assert cache._n <= cache.max_postings
+        want = plain.decode(sel)
+        cache = DecodeCache()  # every shape starts cold
+        cached = _frame_blocklist(pdf, 1.7, 300.0, cache=cache)
+        for _ in range(2):  # cold fill, then warm hit
+            got = cached.decode(sel)
+            for w, g in zip(want, got):
+                assert w.dtype == g.dtype and np.array_equal(w, g), (sel[:5], len(sel))
 
 
 def test_wide_or_exhaustive_branch_parity(idx, searcher, monkeypatch):
@@ -323,75 +354,140 @@ def test_wide_or_exhaustive_branch_parity(idx, searcher, monkeypatch):
 
 
 def test_scored_memo_no_full_chain_retention(segments):
-    """get_scored on a cold chain must retain ONLY the scored entry (a wide
-    fuzzy OR would otherwise hold every chain twice and thrash the LRU cap) —
-    and still serve warm hits and bit-identical contributions."""
+    """Every DecodeCache entry is one whole chain's (docs, contribs) 2-tuple
+    keyed (chain key, weight_idf, avgdl), whatever selections filled it —
+    no per-block or unscored full-chain entries — and warm hits return the
+    same bit-identical contributions."""
     import numpy as np
 
-    from ucuddle_search_engine_spark.operators.wand import DecodeCache, _BlockList
+    from ucuddle_search_engine_spark.operators.wand import DecodeCache
 
-    pdf = segments.filter("term = 't0' and field = 0").toPandas()
-    pdf = pdf[pdf["shard"] == int(pdf["shard"].iloc[0])]
-    plain = _BlockList(pdf, 1.7, 300.0)
     cache = DecodeCache()
-    cached = _BlockList(pdf, 1.7, 300.0, cache=cache, ckey=(0, "t0", 0))
-    n = len(plain.ubs)
-    want = plain.decode(np.arange(n))
-    got_cold = cached.decode(np.arange(n))
-    keys = list(cache._d)
-    assert [k[1] for k in keys] == ["__scored__"], keys  # no __full__ entry
-    got_warm = cached.decode(np.arange(n))
-    for w, g1, g2 in zip(want, got_cold, got_warm):
-        assert np.array_equal(w, g1) and np.array_equal(w, g2)
-    # a later full decode re-decodes and caches __full__ independently
-    full = cached.decode_raw(np.arange(n))
-    assert np.array_equal(full[0], want[0])
-    assert any(k[1] == "__full__" for k in cache._d)
+    lists = [_frame_blocklist(_one_chain(segments, t), 1.7, 300.0, cache=cache)
+             for t in ("t0", "t1", "t2")]
+    n = len(lists[0].ubs)
+    lists[0].decode(np.array([0]))
+    lists[0].decode(np.arange(0, n, 2))
+    lists[1].decode(np.arange(len(lists[1].ubs)))
+    cache.get_scored_many(lists)
+    assert len(cache._d) == len(lists)
+    for L in lists:
+        v = cache._d[(L._ckey, float(L.weight_idf), float(L.avgdl))]
+        assert len(v) == 2 and v[0].dtype == np.int64 and v[1].dtype == np.float64
+        assert len(v[0]) == len(v[1]) == int(L.ns.sum())  # the whole chain
+        plain = _frame_blocklist(_one_chain(segments, L._ckey[1]), 1.7, 300.0)
+        want = plain.decode(np.arange(len(plain.ubs)))
+        for w, g in zip(want, L.decode(np.arange(len(L.ubs)))):
+            assert np.array_equal(w, g)
+    assert cache._n == sum(int(L.ns.sum()) for L in lists)
 
 
 def test_get_scored_many_bit_identical(segments):
     """The batched cold-fill scorer (DecodeCache.get_scored_many — one
     varbyte pass per stream over EVERY miss, per-chain weights expanded by
-    np.repeat) must produce bit-identical (docs, contribs) to per-chain
-    get_scored, for all-miss, all-hit, and mixed hit/miss batches, and leave
-    the memo serving the same warm entries."""
+    np.repeat) must produce bit-identical (docs, contribs) to the uncached
+    whole-chain _BlockList.decode, for all-miss, all-hit, and mixed hit/miss
+    batches."""
     import numpy as np
 
-    from ucuddle_search_engine_spark.operators.wand import DecodeCache, _BlockList
+    from ucuddle_search_engine_spark.operators.wand import DecodeCache
 
-    chains = []
+    frames = []
     for i, t in enumerate(["t0", "t1", "t2", "t50"]):
         pdf = segments.filter(f"term = '{t}' and field = 0").toPandas()
-        if pdf.empty:
-            continue
-        pdf = pdf[pdf["shard"] == int(pdf["shard"].iloc[0])]
-        widf, avgdl = 1.5 + 0.3 * i, 280.0 + 7.0 * i
-        L = _BlockList(pdf, widf, avgdl, ckey=(0, t, 0))
-        chains.append(((0, t, 0), widf, avgdl,
-                       L.doc_bytes, L.tf_bytes, L.dl_bytes))
-    assert len(chains) >= 3, "fixture must yield several distinct chains"
+        if not pdf.empty:
+            pdf = pdf[pdf["shard"] == int(pdf["shard"].iloc[0])]
+            frames.append((pdf, 1.5 + 0.3 * i, 280.0 + 7.0 * i))
+    assert len(frames) >= 3, "fixture must yield several distinct chains"
+    want = [_frame_blocklist(pdf, w, a).decode(np.arange(len(pdf)))
+            for pdf, w, a in frames]
 
-    ref_cache = DecodeCache()
-    want = [ref_cache.get_scored(*c) for c in chains]
+    def batch(cache):
+        return [_frame_blocklist(pdf, w, a, cache=cache) for pdf, w, a in frames]
 
-    # all-miss batch on a fresh cache
     cold = DecodeCache()
-    got = cold.get_scored_many(list(chains))
+    got = cold.get_scored_many(batch(cold))  # all-miss batch on a fresh cache
     for (wd, wc), (gd, gc) in zip(want, got):
         assert np.array_equal(wd, gd) and np.array_equal(wc, gc)
         assert gd.dtype == np.int64 and gc.dtype == np.float64
-    # warm: all-hit batch returns the memoized entries
-    again = cold.get_scored_many(list(chains))
+    again = cold.get_scored_many(batch(cold))  # warm: all-hit
     for (wd, wc), (gd, gc) in zip(want, again):
         assert np.array_equal(wd, gd) and np.array_equal(wc, gc)
-    # mixed: prefill one chain per-chain, batch the rest
     mixed = DecodeCache()
-    mixed.get_scored(*chains[1])
-    got_mix = mixed.get_scored_many(list(chains))
-    for (wd, wc), (gd, gc) in zip(want, got_mix):
+    lists = batch(mixed)
+    lists[1].decode(np.arange(len(lists[1].ubs)))  # one chain memoized first
+    for (wd, wc), (gd, gc) in zip(want, mixed.get_scored_many(lists)):
         assert np.array_equal(wd, gd) and np.array_equal(wc, gc)
     assert cold._n <= cold.max_postings
-    assert {k[1] for k in cold._d} == {"__scored__"}  # scored memo only
+
+
+def test_serving_and_distributed_chain_builders_agree(tmp_path):
+    """The serving tier (_term_chains over a written store's segments rows)
+    and the distributed path (_frame_chains over the same rows as a shuffled
+    pandas frame, unit as a column) build equal chains: the same (term,
+    chain key) order, block metadata, block bytes and weights, and
+    bit-identical decoded contributions. Hand-written rows over two units,
+    two shards and two fields; no Spark."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ucuddle_search_engine_spark.functions.varbyte import encode_doc_ids, vb_encode
+    from ucuddle_search_engine_spark.operators.wand import _frame_chains
+
+    rng = np.random.RandomState(11)
+    rows = []
+    for unit in (0, 1):
+        for t in ("ab", "cd", "ef"):
+            for shard in (0, 1):
+                for field in (0, 1):
+                    lo = unit * 10_000 + shard
+                    for b in range(int(rng.randint(1, 4))):
+                        docs = np.sort(rng.choice(np.arange(lo + b * 600, lo + b * 600 + 500, 2),
+                                                  size=int(rng.randint(1, 6)), replace=False))
+                        tfs = rng.randint(1, 5, len(docs))
+                        dls = rng.randint(5, 60, len(docs))
+                        rows.append({
+                            "unit": unit, "term": t, "shard": shard, "field": field,
+                            "block_no": b, "n": len(docs), "min_doc": int(docs[0]),
+                            "max_doc": int(docs[-1]),
+                            "max_impact": float(rng.uniform(0.1, 2.0)),
+                            "doc_bytes": encode_doc_ids(docs.astype(np.uint64)),
+                            "tf_bytes": vb_encode(tfs.astype(np.uint64)),
+                            "dl_bytes": vb_encode(dls.astype(np.uint64)),
+                        })
+    pdf = pd.DataFrame(rows).sample(frac=1.0, random_state=5).reset_index(drop=True)
+    store = tmp_path / "store"
+    for unit in (0, 1):
+        d = store / "segments" / f"unit={unit}"
+        d.mkdir(parents=True)
+        part = pdf[pdf["unit"] == unit].drop(columns="unit")
+        tab = pa.Table.from_pandas(part, preserve_index=False).cast(pa.schema([
+            ("term", pa.string()), ("shard", pa.int32()), ("field", pa.int32()),
+            ("block_no", pa.int32()), ("n", pa.int32()), ("min_doc", pa.int64()),
+            ("max_doc", pa.int64()), ("max_impact", pa.float64()),
+            ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary()), ("dl_bytes", pa.binary())]))
+        pq.write_table(tab, str(d / "part-0.parquet"), row_group_size=7)
+    terms = ["ab", "cd", "zz"]  # "ef" is not queried, "zz" is absent
+    widf = {(t, f): 1.25 + 0.5 * i + 0.1 * f for i, t in enumerate(terms) for f in (0, 1)}
+    avgdl = {(t, f): 30.0 + f for t in terms for f in (0, 1)}
+    s = SegmentSearcher(None, None, None, boosts={0: 1.0, 1: 0.5}, store_dir=str(store))
+    by_term = s._term_chains(terms, [0, 1], widf, avgdl)
+    serving = [(t, L) for t in terms for L in by_term[t]]
+    dist = _frame_chains(pdf[pdf["term"].isin(terms)], widf, avgdl)
+    assert len(serving) == len(dist) == 2 * 2 * 2 * 2  # terms × units × shards × fields
+    for (ts, a), (td, b) in zip(serving, dist):
+        assert (ts, a._ckey) == (td, b._ckey)
+        for attr in ("ubs", "min_docs", "max_docs", "ns"):
+            x, y = getattr(a, attr), getattr(b, attr)
+            assert x.dtype == y.dtype and np.array_equal(x, y), (a._ckey, attr)
+        for attr in ("doc_bytes", "tf_bytes", "dl_bytes", "weight_idf", "avgdl"):
+            assert getattr(a, attr) == getattr(b, attr), (a._ckey, attr)
+        for x, y in zip(a.decode(np.arange(len(a.ns))), b.decode(np.arange(len(b.ns)))):
+            assert np.array_equal(x, y)
+    assert by_term["zz"] == []
+    assert s._seg_bytes == sum(s._seg_costs.values()) > 0
 
 
 def test_decode_cache_default_cap_ram_derived(monkeypatch):
@@ -482,20 +578,24 @@ def test_search_local_taat_and_grouping_parity(spark, written_store):
     # per-term chain cache: warm hit returns the same object; absent terms
     # cache an empty entry; eviction keeps the budget
     fields = sorted(local.boosts)
-    c1 = local._term_chains(["t0"], fields)["t0"]
-    c2 = local._term_chains(["t0"], fields)["t0"]
+    widf, avgdl, _ = local._prologue(["t0", "t1", "t77", "t88", "zz9absent"], "or",
+                                     "auto", None, local=True)
+
+    def chains(t):
+        return local._term_chains([t], fields, widf, avgdl)[t]
+
+    c1, c2 = chains("t0"), chains("t0")
     assert c1 is c2 and len(c1) > 0
-    assert local._term_chains(["zz9absent"], fields)["zz9absent"] == []
+    assert chains("zz9absent") == []
     old_cap = SegmentSearcher.SEG_CACHE_BYTES
     try:
         SegmentSearcher.SEG_CACHE_BYTES = 1
-        local._term_chains(["t77"], fields)  # miss → insert → evict others
-        local._term_chains(["t88"], fields)
+        chains("t77")  # miss → insert → evict others
+        chains("t88")
         assert len(local._seg_chains) <= 2  # newest entry survives the purge
         # the byte ledger matches the surviving entries exactly (evictions
-        # subtract the same _chain_bytes the insert charged)
-        assert local._seg_bytes == sum(
-            SegmentSearcher._chain_bytes(c) for c in local._seg_chains.values()
-        )
+        # subtract the same charge the insert added)
+        assert set(local._seg_costs) == set(local._seg_chains)
+        assert local._seg_bytes == sum(local._seg_costs.values()) > 0
     finally:
         SegmentSearcher.SEG_CACHE_BYTES = old_cap

@@ -181,12 +181,13 @@ def phrase_search(
 
 
 class PhraseKeysCache:
-    """Bounded LRU of per-(term, field) sorted composite-key arrays for the
-    serving-tier phrase path — the positional analogue of wand.DecodeCache:
-    a static store's sidecar rows build the same key array on every query and
-    head terms recur across phrases, so the read+gather (the dominant phrase
-    cost) is paid once per term. Bounded by the entries' ACTUAL resident
-    bytes (Σ nbytes over every array in an entry — keys/ranks, docs, tfs,
+    """Bounded LRU of per-(term, field) positional entries (see
+    _load_entries) for the serving-tier phrase path — the positional
+    analogue of wand.DecodeCache: a static store's sidecar rows build the
+    same entry on every query and head terms recur across phrases, so the
+    read+gather (the dominant phrase cost) is paid once per term. Bounded by
+    the entries' ACTUAL resident bytes (Σ nbytes over every array in an
+    entry — positions/ranks, docs, tfs,
     doclens AND the rank-form's corpus-sized packed bitmap), so memory stays
     fixed at any corpus/vocabulary size: a rare term whose bitmap alone is
     ~(Σdoclen)/8 bytes is charged that bitmap, not just its handful of keys.
@@ -253,8 +254,8 @@ def phrase_search_local(store_dir: str, terms: list[str], k: int = 10,
     scores and ordering to phrase_search_written: the read touches only the
     phrase terms' row groups, through `files` (the view's StoreFiles; a
     fresh one for this call when None), adjacency is a
-    sorted-key merge ((doc_id << 32) | position composite keys — "a b" holds
-    at start position p iff key(doc,p)+1 is among b's keys), and the
+    sorted-key merge ((doc ordinal << 32) | position composite keys — "a b"
+    holds at start position p iff key(doc,p)+1 is among b's keys), and the
     PhraseQuery pseudo-term BM25 replicates idf_col/tf_norm_col's float op
     order exactly. `dead` (sorted tombstoned ids) removes deleted docs from
     BOTH the match set and the phrase df, as if they were never indexed.
@@ -388,9 +389,10 @@ def _load_entries(files, terms: list[str], field: int, cache,
                   offsets):
     """Per-distinct-term sidecar entries, LRU-cached: cache hits skip the
     read, misses share ONE keyed read of their row groups (`files`, a
-    storefiles.StoreFiles). Key form (offsets is
-    None): (sorted (doc<<32)|pos keys, docs, doclens). Rank form: (sorted
-    token ranks, docs, per-row tfs, doclens, packed rank bitmap) — returns
+    storefiles.StoreFiles). Key form (offsets is None): (positions in doc
+    order, docs, per-row tfs, doclens) — _match_key packs the keys per
+    query. Rank form: (sorted token ranks, docs, per-row tfs, doclens,
+    packed rank bitmap) — returns
     None if any position falls outside its doc's offsets span (docs.doclen
     inconsistent with the analyzer's position space), signalling the caller
     to fall back to key form."""
@@ -439,7 +441,7 @@ def _load_entries(files, terms: list[str], field: int, cache,
         starts = loff[rows]  # row's slice start in the flat values
         n = int(oc.sum())
         if form == "k":
-            dt, base = np.int64, sdocs << 32  # (doc<<32)|pos keys
+            dt, base = np.int64, None  # raw positions; _match_key packs keys
         else:
             span = offsets[sdocs + 1] - offsets[sdocs] - 1  # -1: guard slot
             # positions ascend per doc, so only each row's LAST position
@@ -470,13 +472,12 @@ def _load_entries(files, terms: list[str], field: int, cache,
             idx -= np.repeat(loc, ln)
             idx += np.repeat(starts[c0:c1], ln)
             seg = flat[idx].astype(dt, copy=False)
-            seg += np.repeat(base[c0:c1], ln)
+            if base is not None:
+                seg += np.repeat(base[c0:c1], ln)
             ranks[out_starts[c0]: out_starts[c0] + m] = seg
         if form == "k":
-            entry = (ranks, sdocs, dls)
-        else:
-            entry = (ranks, sdocs, oc, dls, _pack_rank_bits(ranks, total))
-        return entry
+            return ranks, sdocs, oc, dls
+        return ranks, sdocs, oc, dls, _pack_rank_bits(ranks, total)
 
     for t in need:
         e = build(t)
@@ -544,14 +545,23 @@ def _adjacent_starts(keys: list):
 
 
 def _match_key(loaded: dict, terms: list[str]):
-    """Key-form adjacency over the serving entries (_adjacent_starts)."""
+    """Key-form adjacency over the serving entries (_adjacent_starts), on
+    (ordinal << 32) | position keys. As in phrase_match's match_part, the
+    ordinals re-code the phrase terms' doc ids densely before packing: a raw
+    doc_id ≥ 2³¹ shifted left by 32 overflows int64, and one ≥ 2³² aliases
+    a small id. Ordinals keep doc order, so each term's keys stay sorted."""
     import numpy as np
 
-    _, first_docs, first_dls = loaded[terms[0]]
-    cur = _adjacent_starts([loaded[t][0] for t in terms])
+    _, first_docs, _, first_dls = loaded[terms[0]]
+    doc_ids = np.unique(np.concatenate([loaded[t][1] for t in dict.fromkeys(terms)]))
+    keys = {}
+    for t in dict.fromkeys(terms):
+        pos, sdocs, oc, _ = loaded[t]
+        keys[t] = (np.repeat(np.searchsorted(doc_ids, sdocs), oc) << 32) | pos
+    cur = _adjacent_starts([keys[t] for t in terms])
     # cur is a subset of the sorted first-term keys, so docs stay sorted
-    uniq, tf = np.unique(cur >> 32, return_counts=True)
-    return uniq, tf, first_docs, first_dls
+    ords, tf = np.unique(cur >> 32, return_counts=True)
+    return doc_ids[ords], tf, first_docs, first_dls
 
 
 def _probe_bits(cand_r, packed, shift: int, bit_lut):

@@ -49,12 +49,14 @@ UB_EPS = 1e-9
 
 def _default_decode_cache_postings() -> int:
     """Default DecodeCache bound, sized to the serving box like a page cache:
-    ~5% of physical RAM at the ~24 B/cached-posting worst case, floored at
-    16M postings (~400 MB) and hard-capped at 512M (~12 GB). Still a fixed
-    bound independent of corpus/vocabulary — a box serving a 5M-doc shard
-    with 128 GB RAM keeps the four-head-term working set (4 terms × df ×
-    full+scored chains) resident instead of thrashing a cap tuned for 1M-df
-    terms. Override: UCUDDLE_DECODE_CACHE_POSTINGS env var."""
+    ~5% of physical RAM counted at 24 B per cached posting, floored at 16M
+    postings and hard-capped at 512M. A cached posting holds 16 B (an int64
+    doc id and a float64 contribution), so the cache itself stays near
+    ~3.3% of RAM at the cap (16M postings ≈ 256 MB). Still a fixed bound
+    independent of corpus/vocabulary — a box serving a 5M-doc shard with
+    128 GB RAM keeps a head-term working set resident instead of thrashing a
+    cap tuned for 1M-df terms. Override: UCUDDLE_DECODE_CACHE_POSTINGS env
+    var."""
     env = os.environ.get("UCUDDLE_DECODE_CACHE_POSTINGS")
     if env:
         return max(1, int(env))
@@ -65,30 +67,32 @@ def _default_decode_cache_postings() -> int:
     return min(max(16_000_000, ram // 20 // 24), 512_000_000)
 
 
+def _bm25(weight_idf, tfs: np.ndarray, dls: np.ndarray, avgdl) -> np.ndarray:
+    """Per-posting BM25 contributions — the one float expression every
+    scorer uses (scalar or per-posting weight/avgdl: the same IEEE ops per
+    element, so scores are bit-identical across paths)."""
+    return weight_idf * tfs / (tfs + K1 * (1 - B + B * dls / avgdl))
+
+
 class DecodeCache:
-    """Serving-tier cache of DECODED posting blocks — the page-cache analogue
+    """Serving-tier cache of SCORED posting chains — the page-cache analogue
     every on-disk engine keeps: a static store's block bytes decode to the
     same arrays on every query and head terms recur across queries, so the
     varbyte decode (the dominant serving cost at 1M docs: ~230 ms of a
-    ~520 ms head-term query; reads are ~30 ms) is paid once per block.
+    ~520 ms head-term query; reads are ~30 ms) and the per-posting BM25
+    arithmetic (static per store view and boosts) are paid once per chain.
 
-    Keyed (chain_key, block_ordinal); LRU-bounded by TOTAL CACHED POSTINGS,
-    so memory is capped regardless of corpus or vocabulary size. Misses
-    batch-decode through the same concat decoders as the uncached path; each
-    block's slice is COPIED out of the batch buffer before caching, so an
-    evicted block actually frees its memory (a numpy split view would pin the
-    whole batch). Only SegmentSearcher.search_local uses it; distributed
-    executors are stateless per task and keep the plain batched decode. The
-    serving tier is a ThreadingHTTPServer, so all cache state mutates under
-    one lock (decode of misses happens outside it). Cached arrays are
-    unfiltered (tombstones apply after retrieval, exactly where they applied
-    after decode)."""
+    Keyed (chain key, weight_idf, avgdl); each entry is one whole chain's
+    (doc ids, BM25 contributions). LRU-bounded by TOTAL CACHED POSTINGS, so
+    memory is capped regardless of corpus or vocabulary size. Only the
+    serving tier (SegmentSearcher.search_local) uses it; distributed
+    executors are stateless per task and decode only the blocks they
+    select. The serving tier is a ThreadingHTTPServer, so all cache state
+    mutates under one lock (decode of misses happens outside it). Cached
+    arrays are unfiltered (tombstones apply after retrieval)."""
 
     __slots__ = ("max_postings", "_d", "_n", "_lock")
 
-    # 16M cached postings ≈ 400 MB worst case (full + scored chains of four
-    # 1M-df head terms fit together) — still a hard bound independent of
-    # corpus and vocabulary size
     def __init__(self, max_postings: int = 16_000_000):
         import threading
 
@@ -96,6 +100,10 @@ class DecodeCache:
         self._d: dict[tuple, tuple] = {}  # insertion-ordered → LRU via re-insert
         self._n = 0
         self._lock = threading.Lock()
+
+    @staticmethod
+    def _key(L: "_BlockList") -> tuple:
+        return (L._ckey, float(L.weight_idf), float(L.avgdl))
 
     def _put(self, key: tuple, v: tuple) -> None:
         with self._lock:
@@ -113,86 +121,36 @@ class DecodeCache:
                 self._d[key] = v  # re-insert at LRU tail
             return v
 
-    def get_full(self, ckey: tuple, doc_bytes, tf_bytes, dl_bytes):
-        """FULL-CHAIN fast path: one cache entry holding the whole chain's
-        concatenated (docs, tfs, dls). Head-term queries select (nearly) every
-        block — assembling 10⁴+ per-block entries (dict traffic + a 10⁴-way
-        concatenate, ×3 arrays) dominated the warm path at 1M docs; a chain
-        hit is three array refs. Misses decode in ONE vectorized concat pass
-        (same cost as the uncached cold path)."""
-        key = (ckey, "__full__")
-        v = self._touch(key)
-        if v is not None:
-            return v
-        v = (
-            decode_doc_ids_concat(list(doc_bytes))[0].astype(np.int64),
-            vb_decode_concat(list(tf_bytes))[0].astype(np.int64),
-            vb_decode_concat(list(dl_bytes))[0].astype(np.int64),
-        )
-        self._put(key, v)
-        return v
-
-    def get_scored(self, ckey: tuple, weight_idf: float, avgdl: float,
-                   doc_bytes, tf_bytes, dl_bytes):
-        """(docs, BM25 contributions) for the whole chain, memoized — the
-        per-posting scoring arithmetic is also static per (store, boosts), so
-        warm head-term queries skip it too. The expression replicates
-        _BlockList.decode verbatim (same float op order → bit-identical
-        scores, rank parity preserved)."""
-        key = (ckey, "__scored__", float(weight_idf), float(avgdl))
-        v = self._touch(key)
-        if v is not None:
-            return v[0], v[1]
-        full = self._touch((ckey, "__full__"))
-        if full is not None:
-            docs, tfs, dls = full
-        else:
-            # decode WITHOUT retaining the full chain: a wide-OR working set
-            # (fuzzy expansion, ~200 chains) would otherwise hold every chain
-            # twice (full + scored) and thrash the postings cap — the scored
-            # entry alone serves warm OR queries; AND/phrase re-decode full
-            docs = decode_doc_ids_concat(list(doc_bytes))[0].astype(np.int64)
-            tfs = vb_decode_concat(list(tf_bytes))[0].astype(np.int64)
-            dls = vb_decode_concat(list(dl_bytes))[0].astype(np.int64)
-        tfs = tfs.astype(np.float64)
-        dls = dls.astype(np.float64)
-        contrib = weight_idf * tfs / (tfs + K1 * (1 - B + B * dls / avgdl))
-        self._put(key, (docs, contrib, None))
-        return docs, contrib
-
-    def scored_cached_all(self, entries: list) -> bool:
-        """True iff EVERY (ckey, weight_idf, avgdl, ...) entry's scored-chain
-        memo is resident right now. Pure probe — no LRU touch, no decode:
-        lets the query planner pick exhaustive TAAT (a gather + one dense
-        aggregate over memoized chains) over block-max when pruning can't
-        save any decode work because there is none left to save."""
+    def scored_cached_all(self, lists: list) -> bool:
+        """True iff EVERY chain of `lists` (_BlockLists) is resident right
+        now. Pure probe — no LRU touch, no decode: lets the query planner
+        pick exhaustive TAAT (a gather + one dense aggregate over memoized
+        chains) over block-max when pruning can't save any decode work
+        because there is none left to save."""
         with self._lock:
-            return all((e[0], "__scored__", float(e[1]), float(e[2])) in self._d
-                       for e in entries)
+            return all(self._key(L) in self._d for L in lists)
 
-    def get_scored_many(self, entries: list) -> list:
-        """Batched get_scored over MANY whole chains: entries are
-        (ckey, weight_idf, avgdl, doc_bytes, tf_bytes, dl_bytes); returns
-        [(docs, contribs)] aligned with them. Hits come straight from the
-        memo; ALL misses decode in ONE varbyte pass per stream (docs/tfs/dls)
-        and score in ONE vectorized expression with the per-chain weight and
-        avgdl expanded by np.repeat — the same scalar-broadcast IEEE ops as
-        get_scored, so scores are bit-identical. Motivation: a cold 58-term
-        fuzzy fill at 5M docs made 4,176 per-chain decode calls whose Python
-        overhead (bytes.join / fromiter / flag-bit nonzero per call) was
-        GIL-held — 14 s serial OR parallel; batching drops it to 3 calls per
-        scoring group. Per-chain cache entries are sliced out as copies so
-        eviction frees real memory (same contract as get_many).
+    def get_scored_many(self, lists: list) -> list:
+        """[(docs, contribs)] for MANY whole chains (_BlockLists), aligned
+        with them. Hits come straight from the memo; ALL misses decode in
+        ONE varbyte pass per stream (docs/tfs/dls) and score in ONE
+        vectorized _bm25 with the per-chain weight and avgdl expanded by
+        np.repeat — the same IEEE ops as the uncached _BlockList.decode, so
+        scores are bit-identical. Motivation: a cold 58-term fuzzy fill at
+        5M docs made 4,176 per-chain decode calls whose Python overhead
+        (bytes.join / fromiter / flag-bit nonzero per call) was GIL-held —
+        14 s; batching drops it to 3 calls per query. Per-chain entries are
+        sliced out as copies so an evicted chain frees its memory (a view
+        would pin the whole batch buffer).
 
         Misses decode on the calling thread (see the module docstring's
         serving posture)."""
-        out: list = [None] * len(entries)
+        out: list = [None] * len(lists)
         miss: list[int] = []
-        for i, e in enumerate(entries):
-            key = (e[0], "__scored__", float(e[1]), float(e[2]))
-            v = self._touch(key)
+        for i, L in enumerate(lists):
+            v = self._touch(self._key(L))
             if v is not None:
-                out[i] = (v[0], v[1])
+                out[i] = v
             else:
                 miss.append(i)
         if not miss:
@@ -202,11 +160,11 @@ class DecodeCache:
         dl_bufs: list = []
         nblocks = np.empty(len(miss), dtype=np.int64)
         for j, i in enumerate(miss):
-            _, _, _, db, tb, lb = entries[i]
-            doc_bufs.extend(db)
-            tf_bufs.extend(tb)
-            dl_bufs.extend(lb)
-            nblocks[j] = len(db)
+            L = lists[i]
+            doc_bufs.extend(L.doc_bytes)
+            tf_bufs.extend(L.tf_bytes)
+            dl_bufs.extend(L.dl_bytes)
+            nblocks[j] = len(L.doc_bytes)
         docs_all, cnt_blk = decode_doc_ids_concat(doc_bufs)
         tfs_all = vb_decode_concat(tf_bufs)[0].astype(np.float64)
         dls_all = vb_decode_concat(dl_bufs)[0].astype(np.float64)
@@ -215,77 +173,16 @@ class DecodeCache:
         bo = np.concatenate(([0], np.cumsum(nblocks)))
         psum = np.concatenate(([0], np.cumsum(cnt_blk)))
         chain_n = psum[bo[1:]] - psum[bo[:-1]]
-        w = np.repeat(np.array([float(entries[i][1]) for i in miss]), chain_n)
-        adl = np.repeat(np.array([float(entries[i][2]) for i in miss]), chain_n)
-        contrib_all = w * tfs_all / (tfs_all + K1 * (1 - B + B * dls_all / adl))
+        w = np.repeat(np.array([float(lists[i].weight_idf) for i in miss]), chain_n)
+        adl = np.repeat(np.array([float(lists[i].avgdl) for i in miss]), chain_n)
+        contrib_all = _bm25(w, tfs_all, dls_all, adl)
         starts = np.concatenate(([0], np.cumsum(chain_n)))
         for j, i in enumerate(miss):
             a, b = int(starts[j]), int(starts[j + 1])
-            docs = docs_all[a:b].astype(np.int64)  # copy (and int64, as get_scored)
-            contrib = contrib_all[a:b].copy()
-            e = entries[i]
-            self._put((e[0], "__scored__", float(e[1]), float(e[2])),
-                      (docs, contrib, None))
-            out[i] = (docs, contrib)
+            v = (docs_all[a:b].astype(np.int64), contrib_all[a:b].copy())  # copies
+            self._put(self._key(lists[i]), v)
+            out[i] = v
         return out
-
-    def get_many(self, ckey: tuple, ordinals, doc_bytes, tf_bytes, dl_bytes):
-        """(docs, tfs, dls) concatenated over `ordinals` (block ids within one
-        doc-ordered chain, ascending)."""
-        ordinals = [int(i) for i in ordinals]
-        with self._lock:
-            miss = [i for i in ordinals if (ckey, i) not in self._d]
-        decoded: dict[int, tuple] = {}
-        if miss:
-            docs_m, ns_d = decode_doc_ids_concat([doc_bytes[i] for i in miss])
-            tfs_m, ns_t = vb_decode_concat([tf_bytes[i] for i in miss])
-            dls_m, _ = vb_decode_concat([dl_bytes[i] for i in miss])
-            cuts_d = np.cumsum(ns_d)[:-1]
-            cuts_t = np.cumsum(ns_t)[:-1]
-            for i, d, t, l in zip(
-                miss,
-                np.split(docs_m.astype(np.int64), cuts_d),
-                np.split(tfs_m.astype(np.int64), cuts_t),
-                np.split(dls_m.astype(np.int64), cuts_t),
-            ):
-                # .copy(): own the block's memory, don't pin the batch buffer
-                decoded[i] = (d.copy(), t.copy(), l.copy())
-        parts = []
-        with self._lock:
-            for i, v in decoded.items():
-                key = (ckey, i)
-                old = self._d.pop(key, None)
-                if old is not None:
-                    self._n -= len(old[0])
-                self._d[key] = v
-                self._n += len(v[0])
-            self._evict_locked()
-            for i in ordinals:
-                key = (ckey, i)
-                v = self._d.pop(key, None)
-                if v is not None:
-                    self._d[key] = v  # touch: re-insert at LRU tail
-                parts.append((i, v))
-        out = []
-        for i, v in parts:
-            if v is None:
-                # evicted before the touch (cap below the query's own working
-                # set, or a concurrent request's churn) — decode straight
-                # through, don't cache
-                v = decoded.get(i) or (
-                    decode_doc_ids_concat([doc_bytes[i]])[0].astype(np.int64),
-                    vb_decode_concat([tf_bytes[i]])[0].astype(np.int64),
-                    vb_decode_concat([dl_bytes[i]])[0].astype(np.int64),
-                )
-            out.append(v)
-        if not out:
-            z = np.empty(0, np.int64)
-            return z, z, z
-        return (
-            np.concatenate([p[0] for p in out]),
-            np.concatenate([p[1] for p in out]),
-            np.concatenate([p[2] for p in out]),
-        )
 
     def _evict_locked(self) -> None:
         # oldest-first (dicts iterate in insertion order; hits re-insert at
@@ -293,80 +190,40 @@ class DecodeCache:
         # holds self._lock.
         while self._n > self.max_postings and self._d:
             oldest = next(iter(self._d))
-            d, _, _ = self._d.pop(oldest)
-            self._n -= len(d)
-
-
-class _ChainCols:
-    """One (shard[, unit], field) slice of a term's posting chain as plain
-    numpy/list columns, PRE-SORTED by block_no — the serving tier's
-    pandas-free chain frame. _term_chains builds these straight from the
-    Arrow table (one lexsort + boundary slicing, C-side throughout): the
-    pandas groupby-iterate it replaces was ~2/3 of a 5M-doc cold wide-OR
-    fill — 6.5 s of groupby iteration, 2.9 s of per-chain frame ops and
-    3.5 s of Series.map byte accounting across 4640 chains (profiled on a
-    58-term fuzzy expansion) — while the actual varbyte decode was 2 s.
-    nbytes carries the chain's resident-byte charge (compressed postings +
-    per-row overhead), precomputed vectorized at build."""
-
-    __slots__ = ("ns", "max_impact", "min_doc", "max_doc",
-                 "doc_bytes", "tf_bytes", "dl_bytes", "nbytes")
-
-    def __init__(self, ns, max_impact, min_doc, max_doc,
-                 doc_bytes, tf_bytes, dl_bytes, nbytes: int):
-        self.ns = ns
-        self.max_impact = max_impact
-        self.min_doc = min_doc
-        self.max_doc = max_doc
-        self.doc_bytes = doc_bytes
-        self.tf_bytes = tf_bytes
-        self.dl_bytes = dl_bytes
-        self.nbytes = nbytes
-
-    def __len__(self) -> int:
-        return len(self.ns)
+            self._n -= len(self._d.pop(oldest)[0])
 
 
 class _BlockList:
-    """Lazy per-block view of one (term, field[, unit]) posting chain: block
-    metadata (ub, doc range) without decoding — decode happens per selected
-    block. Feeds the vectorized block-max scorer."""
+    """One (shard, term, field[, unit]) posting chain: per-block metadata
+    (ub, doc range, posting count) plus the compressed block bytes, blocks
+    in block_no (= doc) order. Scorers read the metadata without decoding;
+    decode() returns the selected blocks' (doc ids, BM25 contributions).
+    Built by _build_chains for both the serving tier (which attaches its
+    DecodeCache and the chain's cache key) and the distributed path."""
 
     __slots__ = ("ubs", "min_docs", "max_docs", "ns", "weight_idf", "avgdl",
                  "doc_bytes", "tf_bytes", "dl_bytes", "_range_exact", "_sparse",
                  "_cache", "_ckey", "_starts")
 
-    # a selection covering ≥ this fraction of the chain's postings routes
-    # through the full-chain cache + run-gather instead of per-block entries
-    FULL_FRAC = 0.5
-
-    def __init__(self, blocks, weight_idf: float, avgdl: float,
+    def __init__(self, ns, max_impact, min_docs, max_docs,
+                 doc_bytes: list, tf_bytes: list, dl_bytes: list,
+                 weight_idf: float, avgdl: float,
                  cache: "DecodeCache | None" = None, ckey: tuple | None = None):
+        """Per-block arrays (int64 ns/min_docs/max_docs, float64 max_impact)
+        and byte lists, all in block_no order."""
         self._cache = cache
         self._ckey = ckey
-        if isinstance(blocks, _ChainCols):
-            # already block_no-sorted; float op order identical to the
-            # pandas branch (max_impact f64 * weight_idf * (1+eps))
-            self.ubs = blocks.max_impact * weight_idf * (1.0 + UB_EPS)
-            self.min_docs = blocks.min_doc
-            self.max_docs = blocks.max_doc
-            self.ns = blocks.ns
-            self.doc_bytes = blocks.doc_bytes
-            self.tf_bytes = blocks.tf_bytes
-            self.dl_bytes = blocks.dl_bytes
-        else:
-            blocks = blocks.sort_values("block_no")  # doc-ordered, disjoint ranges
-            self.ubs = blocks["max_impact"].to_numpy(np.float64) * weight_idf * (1.0 + UB_EPS)
-            self.min_docs = blocks["min_doc"].to_numpy(np.int64)
-            self.max_docs = blocks["max_doc"].to_numpy(np.int64)
-            self.ns = blocks["n"].to_numpy(np.int64)
-            self.doc_bytes = list(blocks["doc_bytes"])
-            self.tf_bytes = list(blocks["tf_bytes"])
-            self.dl_bytes = list(blocks["dl_bytes"])
+        self.ubs = max_impact * weight_idf * (1.0 + UB_EPS)
+        self.min_docs = min_docs
+        self.max_docs = max_docs
+        self.ns = ns
+        self.doc_bytes = doc_bytes
+        self.tf_bytes = tf_bytes
+        self.dl_bytes = dl_bytes
         self.weight_idf = weight_idf
         self.avgdl = avgdl
         self._sparse = None  # lazy range-max sparse table (range_max_ub_vec)
-        self._starts = None  # lazy posting offsets per block (full-chain gather)
+        self._starts = None  # lazy posting offsets per block (_gather)
         # Defensive: block_no order must be doc order with DISJOINT ranges or
         # range_max_ub's searchsorted silently underestimates bounds and
         # block-max pruning drops true top-k docs (e.g. a store mixing
@@ -432,13 +289,6 @@ class _BlockList:
         out[valid] = res
         return out
 
-    def _covers(self, idxs) -> bool:
-        """True when `idxs` selects ≥ FULL_FRAC of the chain's postings —
-        the head-term shape where per-block cache assembly costs more than
-        slicing the memoized full chain."""
-        sel = int(self.ns[np.asarray(idxs, dtype=np.int64)].sum())
-        return sel >= self.FULL_FRAC * int(self.ns.sum())
-
     def _gather(self, arrs: tuple, idxs) -> tuple:
         """Slice selected blocks out of full-chain arrays: consecutive block
         ids merge into runs, so an all-but-seed selection is a handful of
@@ -456,47 +306,62 @@ class _BlockList:
             return tuple(x[a:b] for x in arrs)
         return tuple(np.concatenate([x[a:b] for a, b in segs]) for x in arrs)
 
-    def decode_raw(self, idxs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Selected blocks → (doc_ids, tfs, dls), through the decoded-block
-        cache when one is attached (serving tier)."""
-        if len(idxs) == 0:
-            z = np.empty(0, np.int64)
-            return z, z, z
-        if self._cache is not None:
-            if self._covers(idxs):
-                full = self._cache.get_full(
-                    self._ckey, self.doc_bytes, self.tf_bytes, self.dl_bytes)
-                if len(idxs) == len(self.ns):
-                    return full
-                return self._gather(full, idxs)
-            return self._cache.get_many(
-                self._ckey, idxs, self.doc_bytes, self.tf_bytes, self.dl_bytes
-            )
-        return (
-            decode_doc_ids_concat([self.doc_bytes[i] for i in idxs])[0].astype(np.int64),
-            vb_decode_concat([self.tf_bytes[i] for i in idxs])[0].astype(np.int64),
-            vb_decode_concat([self.dl_bytes[i] for i in idxs])[0].astype(np.int64),
-        )
-
     def decode(self, idxs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Selected blocks → (doc_ids, exact BM25 contributions)."""
+        """Selected blocks (ascending ids) → (doc_ids, exact BM25
+        contributions). With a cache (serving tier) the chain's memoized
+        scored arrays are sliced to the selection; without one (distributed
+        path) only the selected blocks decode."""
         if len(idxs) == 0:
             return np.empty(0, np.int64), np.empty(0, np.float64)
-        if self._cache is not None and self._covers(idxs):
-            # memoized full-chain contributions (bit-identical arithmetic),
-            # sliced to the selection — warm head-term queries skip both the
-            # per-block assembly AND the per-posting BM25 recompute
-            docs, contrib = self._cache.get_scored(
-                self._ckey, self.weight_idf, self.avgdl,
-                self.doc_bytes, self.tf_bytes, self.dl_bytes)
-            if len(idxs) == len(self.ns):
-                return docs, contrib
-            return self._gather((docs, contrib), idxs)
-        docs, tfs, dls = self.decode_raw(idxs)
-        tfs = tfs.astype(np.float64)
-        dls = dls.astype(np.float64)
-        contrib = self.weight_idf * tfs / (tfs + K1 * (1 - B + B * dls / self.avgdl))
-        return docs, contrib
+        if self._cache is not None:
+            chain = self._cache.get_scored_many([self])[0]
+            return chain if len(idxs) == len(self.ns) else self._gather(chain, idxs)
+        docs = decode_doc_ids_concat([self.doc_bytes[i] for i in idxs])[0].astype(np.int64)
+        tfs = vb_decode_concat([self.tf_bytes[i] for i in idxs])[0].astype(np.float64)
+        dls = vb_decode_concat([self.dl_bytes[i] for i in idxs])[0].astype(np.float64)
+        return docs, _bm25(self.weight_idf, tfs, dls, self.avgdl)
+
+
+def _build_chains(col, terms: list, tid: np.ndarray, unit: np.ndarray | None,
+                  widf: dict, avgdl: dict, cache: "DecodeCache | None" = None) -> list:
+    """Segment block rows → [(term, _BlockList)], one chain per (term,
+    shard[, unit], field), in (term index, shard, unit, field) order with
+    each chain's blocks in block_no order — the one chain builder of the
+    serving tier (_term_chains) and the distributed path
+    (_score_shard_rows). `col(name)` returns a row-aligned numpy column,
+    `tid` each row's index into `terms`, `unit` each row's unit (None for a
+    store without units). ONE numeric lexsort + boundary slicing, C-side
+    throughout: the pandas groupby-iterate it replaces cost ~10 s of a 12 s
+    cold 58-term fuzzy fill at 5M docs (profiled; decode itself was 2 s).
+    Chains whose (term, field) has no weight are skipped; the serving tier
+    passes its cache, and each chain's key is (shard, term, field[, unit])."""
+    shard, field = col("shard"), col("field")
+    keys = ((col("block_no"), field, shard, tid) if unit is None
+            else (col("block_no"), field, unit, shard, tid))
+    idx = np.lexsort(keys)
+    tid, shard, field = tid[idx], shard[idx], field[idx]
+    change = (tid[1:] != tid[:-1]) | (shard[1:] != shard[:-1]) | (field[1:] != field[:-1])
+    if unit is not None:
+        unit = unit[idx]
+        change |= unit[1:] != unit[:-1]
+    ns = col("n")[idx].astype(np.int64, copy=False)
+    mi = col("max_impact")[idx].astype(np.float64, copy=False)
+    mind = col("min_doc")[idx].astype(np.int64, copy=False)
+    maxd = col("max_doc")[idx].astype(np.int64, copy=False)
+    bcols = [col(c)[idx] for c in ("doc_bytes", "tf_bytes", "dl_bytes")]
+    starts = np.concatenate(([0], np.flatnonzero(change) + 1, [len(tid)]))
+    out = []
+    for i0, i1 in zip(starts[:-1].tolist(), starts[1:].tolist()):
+        t, f = terms[int(tid[i0])], int(field[i0])
+        if (t, f) not in widf:
+            continue
+        sh = int(shard[i0])
+        ck = (sh, t, f) if unit is None else (sh, t, f, int(unit[i0]))
+        out.append((t, _BlockList(
+            ns[i0:i1].copy(), mi[i0:i1].copy(), mind[i0:i1].copy(), maxd[i0:i1].copy(),
+            bcols[0][i0:i1].tolist(), bcols[1][i0:i1].tolist(), bcols[2][i0:i1].tolist(),
+            widf[(t, f)], avgdl[(t, f)], cache=cache, ckey=ck)))
+    return out
 
 
 def _read_store_meta(store_dir: str | None) -> dict:
@@ -649,9 +514,7 @@ def _taat_or(lists: list["_BlockList"], k: int,
         # (see DecodeCache.get_scored_many) instead of a Python call chain
         # per (chain, stream) — the wide-OR cold fill was GIL-bound on that
         # overhead (14 s at 5M docs for a 58-term expansion, measured)
-        parts = cache.get_scored_many(
-            [(L._ckey, L.weight_idf, L.avgdl,
-              L.doc_bytes, L.tf_bytes, L.dl_bytes) for L in lists])
+        parts = cache.get_scored_many(lists)
     else:
         parts = [L.decode(np.arange(len(L.ubs))) for L in lists]
     docs_all = np.concatenate([d for d, _ in parts])
@@ -697,7 +560,7 @@ def _blockmax_or_numpy(lists: list[_BlockList], k: int,
         # Very wide disjunctions (fuzzy/prefix expansions): partial seed
         # scores sit far below the true k-th total, so θ prunes almost
         # nothing and the bound bookkeeping dominates. Exhaustive TAAT over
-        # whole chains is both faster and hits the full-chain decode memo.
+        # whole chains is both faster and hits the scored-chain memo.
         return _taat_or(lists, k, dead=dead, stride=stride)
     # ---- seed: globally top-ub blocks until ~4k postings are decoded ------
     owner = np.concatenate([np.full(len(L.ubs), li, np.int64) for li, L in enumerate(lists)])
@@ -820,9 +683,7 @@ def _dense_and(blists_by_term: dict[str, list["_BlockList"]], k: int,
     Returns None (caller falls back to block-interval pruning) when the id
     space disproves the stride assumption or is too sparse for dense
     vectors."""
-    entries = [(L._ckey, L.weight_idf, L.avgdl, L.doc_bytes, L.tf_bytes, L.dl_bytes)
-               for ls in blists_by_term.values() for L in ls]
-    parts = cache.get_scored_many(entries)
+    parts = cache.get_scored_many([L for ls in blists_by_term.values() for L in ls])
     flat: list = []
     i = 0
     mn, mx, total = None, None, 0
@@ -901,7 +762,7 @@ def _intersect_and_blocks(blists_by_term: dict[str, list[_BlockList]], k: int,
             return []
         merged[t] = _merge_intervals(los, his)
 
-    # term → [(docs, tfs, dls, list)] over the surviving blocks
+    # term → [(docs, contribs)] over the surviving blocks
     decoded: dict[str, list] = {}
     for t, ls in blists_by_term.items():
         others = [merged[o] for o in merged if o != t]
@@ -916,20 +777,16 @@ def _intersect_and_blocks(blists_by_term: dict[str, list[_BlockList]], k: int,
                 keep &= ok
                 if not keep.any():
                     break
-            idxs = np.flatnonzero(keep)
-            if len(idxs) == 0:
-                docs = tfs = dls = np.empty(0, np.int64)
-            else:
-                docs, tfs, dls = L.decode_raw(idxs)
-                if dead is not None and len(dead) and len(docs):
-                    alive = ~np.isin(docs, dead)
-                    docs, tfs, dls = docs[alive], tfs[alive], dls[alive]
-                if len(docs) > 1 and not (docs[1:] > docs[:-1]).all():
-                    # defensive: a chain whose block_no order is not doc
-                    # order would break the searchsorted probes below
-                    order = np.argsort(docs, kind="stable")
-                    docs, tfs, dls = docs[order], tfs[order], dls[order]
-            decoded.setdefault(t, []).append((docs, tfs, dls, L))
+            docs, contrib = L.decode(np.flatnonzero(keep))
+            if dead is not None and len(dead) and len(docs):
+                alive = ~np.isin(docs, dead)
+                docs, contrib = docs[alive], contrib[alive]
+            if len(docs) > 1 and not (docs[1:] > docs[:-1]).all():
+                # defensive: a chain whose block_no order is not doc
+                # order would break the searchsorted probes below
+                order = np.argsort(docs, kind="stable")
+                docs, contrib = docs[order], contrib[order]
+            decoded.setdefault(t, []).append((docs, contrib))
     if not decoded:
         return []
     term_docs = [ps[0][0] if len(ps) == 1 else np.unique(np.concatenate([p[0] for p in ps]))
@@ -941,14 +798,12 @@ def _intersect_and_blocks(blists_by_term: dict[str, list[_BlockList]], k: int,
             return []
     scores = np.zeros(len(common), dtype=np.float64)
     for ps in decoded.values():
-        for docs, tfs, dls, L in ps:
+        for docs, contrib in ps:
             if len(docs) == 0:
                 continue
             pos = np.clip(np.searchsorted(docs, common), 0, len(docs) - 1)
             hit = docs[pos] == common
-            tf = tfs[pos[hit]].astype(np.float64)
-            dl = dls[pos[hit]].astype(np.float64)
-            scores[hit] += L.weight_idf * tf / (tf + K1 * (1 - B + B * dl / L.avgdl))
+            scores[hit] += contrib[pos[hit]]
     if round_dp is not None:
         scores = np.round(scores, round_dp)
     order = _topk_order(common, scores, k)
@@ -959,22 +814,26 @@ def _score_shard_rows(pdf: pd.DataFrame, widf: dict, avgdl: dict, mode: str, k: 
                       nterms: int, algorithm: str, dead, round_dp,
                       stride: int = 1) -> list:
     """Block rows of ONE shard → top-k [(doc_id, score)] — the distributed
-    path's applyInPandas body, scoring through the same _score_chains as
-    the driver-side serving path, so both return identical rankings."""
+    path's applyInPandas body, building its chains with the serving tier's
+    _build_chains and scoring through the same _score_chains, so both
+    return identical rankings. Stores written unit-by-unit
+    (plans/build_index.py) reuse block_no ranges across units with
+    overlapping doc ranges; each unit's chain IS doc-sorted, so there is one
+    chain per (term, field, unit) — every scorer handles multiple lists per
+    term."""
     if len(pdf) == 0:
         return []
-    # Stores written unit-by-unit (plans/build_index.py) reuse block_no
-    # ranges across units with overlapping doc ranges; each unit's chain IS
-    # doc-sorted, so build one list per (term, field, unit) — every scorer
-    # handles multiple lists per term.
-    gcols = ["term", "field", "unit"] if "unit" in pdf.columns else ["term", "field"]
-    groups = []
-    for gkey, g in pdf.groupby(gcols, sort=False):
-        key = (gkey[0], int(gkey[1]))
-        if key in widf:
-            groups.append((key[0], _BlockList(g, widf[key], avgdl[key])))
-    return _score_chains(groups, mode, k, nterms, algorithm, dead, round_dp,
-                         stride=stride)
+    return _score_chains(_frame_chains(pdf, widf, avgdl), mode, k, nterms,
+                         algorithm, dead, round_dp, stride=stride)
+
+
+def _frame_chains(pdf: pd.DataFrame, widf: dict, avgdl: dict) -> list:
+    """Block rows as a pandas frame (any row order; a `unit` column when the
+    store has units) → _build_chains' [(term, _BlockList)], uncached."""
+    terms, tid = np.unique(pdf["term"].to_numpy(), return_inverse=True)
+    unit = pdf["unit"].to_numpy() if "unit" in pdf.columns else None
+    return _build_chains(lambda c: pdf[c].to_numpy(), terms.tolist(),
+                         tid, unit, widf, avgdl)
 
 
 def _score_chains(groups: list[tuple[str, _BlockList]], mode: str, k: int,
@@ -982,10 +841,10 @@ def _score_chains(groups: list[tuple[str, _BlockList]], mode: str, k: int,
                   stride: int = 1) -> list:
     """Core scorer over one scoring group's (term, _BlockList) chains. OR
     queries run the kernel the caller resolved through _choose_or_algorithm
-    ("taat" or "wand"); AND queries ignore it. The serving tier feeds
-    MEMOIZED _BlockList views (attached to its DecodeCache) straight from
-    its per-term chain cache, so the block-metadata extraction is paid once
-    per chain instead of once per query."""
+    ("taat" or "wand"); AND queries ignore it. The serving tier feeds the
+    _BlockLists of its per-term chain cache (attached to its DecodeCache),
+    so the block-metadata extraction is paid once per chain instead of once
+    per query."""
     if not groups:
         return []
     if mode == "and":
@@ -1037,12 +896,12 @@ class SegmentSearcher:
         # scoring groups aggregate into DENSE local slots ((id-mn)//S) at
         # any shard count — None/1 keeps the raw-id density test, which is
         # what in-memory and legacy stores get.
-        self.num_shards: int | None = _read_store_meta(store_dir).get("num_shards") \
-            if store_dir is not None else None
+        self.num_shards: int | None = _read_store_meta(store_dir).get("num_shards")
         self._coll: dict | None = None
         self._tstats_cache: dict | None = None
         # per-term memo for the no-prepare() path: repeat queries never
         # re-read the tstats parquet; missing terms are remembered too
+        import collections
         import threading
 
         self._term_memo: dict[tuple[str, int], float | None] = {}
@@ -1050,8 +909,6 @@ class SegmentSearcher:
         self._pds: dict[str, object] = {}
         self.files = StoreFiles(store_dir) if store_dir is not None else None
         self._decode_cache: DecodeCache | None = None  # built on first search_local
-        import collections
-
         self._seg_chains: "collections.OrderedDict[str, list]" = collections.OrderedDict()
         self._seg_bytes = 0
         self._seg_costs: dict[str, int] = {}
@@ -1067,9 +924,16 @@ class SegmentSearcher:
         self._collection()
         return self
 
-    def _collection(self) -> dict:
+    def _collection(self, local: bool = False) -> dict:
+        """field → (n_docs, avgdl), loaded once: from the cstats frame, or
+        (local) from the written store's cstats.json."""
         if self._coll is None:
-            self._coll = {r["field"]: (r["n_docs"], r["avgdl"]) for r in self.cstats.collect()}
+            if local:
+                with open(os.path.join(self.store_dir, "cstats.json")) as fh:
+                    rows = json.load(fh)
+            else:
+                rows = self.cstats.collect()
+            self._coll = {r["field"]: (r["n_docs"], r["avgdl"]) for r in rows}
         return self._coll
 
     # -- bounded per-term dictionary cache (the no-prepare path) --------------
@@ -1077,9 +941,9 @@ class SegmentSearcher:
     # directory- and row-group-pruned read; hot terms hit this LRU. The cap
     # bounds serving-tier memory at ANY vocabulary size (10⁹ terms never load).
     TERM_MEMO_CAP = 200_000
-    # serving-tier decoded-block cache bound (postings; ~24 B each). RAM-
+    # serving-tier scored-chain cache bound (postings; 16 B each). RAM-
     # derived (page-cache sizing, see _default_decode_cache_postings): the
-    # fixed 16M floor covers four 1M-df head terms' full+scored chains, but a
+    # fixed 16M floor covers several 1M-df head terms' scored chains, but a
     # box serving a 5M-doc shard needs ~40M for the same query shape or warm
     # queries re-decode everything (measured: warm == cold at 5M docs with
     # the 16M cap). Instance/class override and env var both respected.
@@ -1153,6 +1017,42 @@ class SegmentSearcher:
     # the retired exact scan: parity at ~0.8M, widening with size)
     WAND_MIN_POSTINGS = 500_000
 
+    def _prologue(self, terms: list[str], mode: str, algorithm: str,
+                  round_dp: int | None, local: bool):
+        """The query prologue search_terms and search_local share, over the
+        sorted, deduplicated query terms: (term, field) stats → BM25 weights
+        `widf` and `avgdl`, the AND early exit, and the OR kernel choice.
+        Returns None when an AND term is absent from every field (nothing
+        can match), else (widf, avgdl, kernel): kernel(warm=None) resolves
+        the query's algorithm once per QUERY — `warm` as in
+        _choose_or_algorithm; AND queries keep `algorithm` as given."""
+        fields = sorted(self.boosts)
+        # tiny lookups: |q|·|fields| df rows + |fields| collection stats
+        if self._tstats_cache is not None:
+            stats = {
+                (t, f): self._tstats_cache[(t, f)]
+                for t in terms for f in fields if (t, f) in self._tstats_cache
+            }
+        else:
+            read = self._read_tstats_local if local else self._read_tstats_spark
+            stats = self._memo_stats(terms, fields, lambda m: read(m, fields))
+        coll = self._collection(local)
+        if mode == "and" and set(terms) - {t for (t, f) in stats}:
+            return None  # a term absent from every field can never satisfy AND
+        widf, avgdl = {}, {}
+        for (t, f), df_ in stats.items():
+            n = float(coll[f][0])
+            widf[(t, f)] = self.boosts[f] * math.log(1.0 + (n - df_ + 0.5) / (df_ + 0.5))
+            avgdl[(t, f)] = float(coll[f][1])
+
+        def kernel(warm=None) -> str:
+            if mode == "and":
+                return algorithm
+            return _choose_or_algorithm(
+                algorithm, sum(stats.values()), len(terms),
+                max((coll[f][0] for f in fields if f in coll), default=0), round_dp, warm)
+        return widf, avgdl, kernel
+
     def search_terms(self, terms: list[str], k: int = 20, mode: str = "and",
                      algorithm: str = "auto", offset: int = 0,
                      round_dp: int | None = None) -> DataFrame:
@@ -1172,44 +1072,20 @@ class SegmentSearcher:
             return inner.orderBy(F.col("score").desc(), F.col("doc_id").asc()).offset(offset).limit(k)
         terms = sorted(set(terms))
         spark = self.segments.sparkSession
-        fields = sorted(self.boosts)
-        # tiny driver lookups: |q|·|fields| idf rows + |fields| collection stats
-        if self._tstats_cache is not None:
-            stats = {
-                (t, f): self._tstats_cache[(t, f)]
-                for t in terms for f in fields if (t, f) in self._tstats_cache
-            }
-        else:
-            stats = self._memo_stats(terms, fields,
-                                     lambda m: self._read_tstats_spark(m, fields))
-        coll = self._collection()
-        if mode == "and":
-            # a term absent from every field can never satisfy AND
-            present = {t for (t, f) in stats}
-            if set(terms) - present:
-                return spark.createDataFrame([], "doc_id long, score double")
-        widf = {}
-        avgdl = {}
-        for (t, f), df_ in stats.items():
-            n = float(coll[f][0])
-            widf[(t, f)] = self.boosts[f] * math.log(1.0 + (n - df_ + 0.5) / (df_ + 0.5))
-            avgdl[(t, f)] = float(coll[f][1])
+        plan = self._prologue(terms, mode, algorithm, round_dp, local=False)
+        if plan is None:
+            return spark.createDataFrame([], "doc_id long, score double")
+        widf, avgdl, kernel = plan
+        algorithm = kernel()  # resolved once per QUERY on the driver
         b_widf = spark.sparkContext.broadcast(widf)
         b_avgdl = spark.sparkContext.broadcast(avgdl)
         b_dead = (
             spark.sparkContext.broadcast(np.asarray(self.tombstones, dtype=np.int64))
             if self.tombstones else None
         )
-        boosts = self.boosts
         nterms = len(terms)
-        if mode != "and":
-            # resolved once per QUERY on the driver, not per shard group
-            algorithm = _choose_or_algorithm(
-                algorithm, sum(stats.values()), nterms,
-                max((coll[f][0] for f in fields if f in coll), default=0), round_dp)
-
         matched = self.segments.filter(
-            F.col("term").isin(terms) & F.col("field").isin(list(boosts))
+            F.col("term").isin(terms) & F.col("field").isin(list(self.boosts))
         )
         if "tb" in self.segments.columns:
             # written stores carry the md5 term-bucket PARTITION column —
@@ -1240,53 +1116,33 @@ class SegmentSearcher:
         only. Startup is file reads, not a JVM."""
         import pyarrow.dataset as pds
 
-        obj = cls.__new__(cls)
-        obj.segments = None
-        obj.tstats = None
-        obj.cstats = None
-        obj.boosts = boosts if boosts is not None else dict(DEFAULT_BOOSTS)
-        obj.store_dir = store_dir
-        obj.num_shards = _read_store_meta(store_dir).get("num_shards")
+        ts_path = os.path.join(store_dir, "tombstones")
+        tombstones = []
+        if os.path.isdir(ts_path):
+            tt = pds.dataset(ts_path).to_table()
+            if "doc_id" in tt.column_names:
+                tombstones = tt["doc_id"].to_pylist()
+            # else: a delete-docs writer is mid-commit (only _temporary files
+            # exist, which pyarrow ignores → empty schema). Serve the
+            # pre-delete view; the serving tier's generation check reopens
+            # the store the moment the committed files land.
+        obj = cls(None, None, None, boosts=boosts, tombstones=tombstones,
+                  store_dir=store_dir)
         tpath = os.path.join(store_dir, "tstats")
-        if any(e.startswith("tb=") for e in os.listdir(tpath)):
-            # vocabulary-scale layout (tb-partitioned, term-sorted): open
-            # WITHOUT materializing the dictionary — each query resolves its
-            # terms through a pruned read + the bounded LRU memo. Serving-tier
-            # RAM is O(memo cap), not O(vocabulary).
-            obj._tstats_cache = None
-        else:
+        if not any(e.startswith("tb=") for e in os.listdir(tpath)):
             # legacy flat layout: no pruned access path exists, so eager-load
-            # once (bounded only by the store's actual vocabulary)
+            # once (bounded only by the store's actual vocabulary). The
+            # vocabulary-scale layout (tb-partitioned, term-sorted) opens
+            # WITHOUT materializing the dictionary — each query resolves its
+            # terms through a pruned read + the bounded LRU memo, so
+            # serving-tier RAM is O(memo cap), not O(vocabulary).
             tt = pds.dataset(tpath).to_table()
             obj._tstats_cache = {
                 (t, int(f)): d
                 for t, f, d in zip(tt["term"].to_pylist(), tt["field"].to_pylist(),
                                    tt["df"].to_pylist())
             }
-        with open(os.path.join(store_dir, "cstats.json")) as fh:
-            obj._coll = {r["field"]: (r["n_docs"], r["avgdl"]) for r in json.load(fh)}
-        ts_path = os.path.join(store_dir, "tombstones")
-        obj.tombstones = []
-        if os.path.isdir(ts_path):
-            tt = pds.dataset(ts_path).to_table()
-            if "doc_id" in tt.column_names:
-                obj.tombstones = sorted(set(tt["doc_id"].to_pylist()))
-            # else: a delete-docs writer is mid-commit (only _temporary files
-            # exist, which pyarrow ignores → empty schema). Serve the
-            # pre-delete view; the serving tier's generation check reopens
-            # the store the moment the committed files land.
-        import threading
-
-        obj._term_memo = {}
-        obj._memo_lock = threading.Lock()
-        obj._pds = {}
-        obj.files = StoreFiles(store_dir)
-        obj._decode_cache = None
-        import collections
-
-        obj._seg_chains = collections.OrderedDict()
-        obj._seg_bytes = 0
-        obj._seg_costs = {}
+        obj._collection(local=True)
         # allocator posture at open, so the serving tier's request threads
         # start under one glibc arena (a Spark-constructed searcher gets it
         # at its first admission instead)
@@ -1341,116 +1197,58 @@ class SegmentSearcher:
         if self.store_dir is None:
             raise ValueError("search_local needs a written store (store_dir)")
         terms = sorted(set(terms))
-        fields = sorted(self.boosts)
-        if self._tstats_cache is not None:
-            stats = {
-                (t, f): self._tstats_cache[(t, f)]
-                for t in terms for f in fields if (t, f) in self._tstats_cache
-            }
-        else:
-            stats = self._memo_stats(terms, fields,
-                                     lambda m: self._read_tstats_local(m, fields))
-        if self._coll is None:
-            with open(os.path.join(self.store_dir, "cstats.json")) as fh:
-                self._coll = {r["field"]: (r["n_docs"], r["avgdl"]) for r in json.load(fh)}
-        coll = self._coll
-        if mode == "and" and set(terms) - {t for (t, f) in stats}:
+        plan = self._prologue(terms, mode, algorithm, round_dp, local=True)
+        if plan is None:
             return []
-        widf, avgdl = {}, {}
-        for (t, f), df_ in stats.items():
-            n = float(coll[f][0])
-            widf[(t, f)] = self.boosts[f] * math.log(1.0 + (n - df_ + 0.5) / (df_ + 0.5))
-            avgdl[(t, f)] = float(coll[f][1])
-
-        chains_by_term = self._term_chains(terms, fields)
-
+        widf, avgdl, kernel = plan
+        if self._decode_cache is None:
+            with self._memo_lock:  # threaded serving: create exactly once
+                if self._decode_cache is None:
+                    self._decode_cache = DecodeCache(self.DECODE_CACHE_POSTINGS)
+        cache = self._decode_cache
+        chains_by_term = self._term_chains(terms, sorted(self.boosts), widf, avgdl)
+        lists = [L for t in terms for L in chains_by_term[t]]
+        if not lists:
+            return []
+        algorithm = kernel(warm=lambda: cache.scored_cached_all(lists))
+        # One scoring group per shard, scored in order on this thread:
+        # shards partition doc_id by hash, and a live doc's postings for a
+        # term live in exactly one unit (updates tombstone the prior unit's
+        # row; summing tf across units would mis-score BM25's nonlinear tf
+        # term anyway) — so per-shard top-(offset+k) heaps merge by a plain
+        # sort, no cross-group score summing. TAAT's dense bincount runs once
+        # per shard over the full doc span.
+        groups: dict = {}
+        for t in terms:
+            for L in chains_by_term[t]:
+                groups.setdefault(L._ckey[0], []).append((t, L))
+        # OR cold prefill: when every group will decode its chains
+        # EXHAUSTIVELY anyway (taat, or a >WIDE_OR_LISTS disjunction that
+        # _blockmax_or_numpy reroutes to taat), fill the scored-chain memo
+        # for ALL groups in ONE batched decode+score pass up front, so the
+        # group scoring below is pure cache hits.
+        if mode != "and" and (
+            algorithm == "taat" or any(len(v) > WIDE_OR_LISTS for v in groups.values())
+        ):
+            cache.get_scored_many(lists)
         dead = np.asarray(self.tombstones, dtype=np.int64) if self.tombstones else None
-        nterms = len(terms)
+        stride = self.num_shards or 1
         tops: list[tuple[int, float]] = []
-        total_sel = sum(n for t in terms
-                        for (_sh, _u, f, _g, n, _s) in chains_by_term.get(t, ())
-                        if (t, f) in widf)
-        if total_sel:
-            if self._decode_cache is None:
-                with self._memo_lock:  # threaded serving: create exactly once
-                    if self._decode_cache is None:
-                        self._decode_cache = DecodeCache(self.DECODE_CACHE_POSTINGS)
-            cache = self._decode_cache
-            if mode != "and":
-                algorithm = _choose_or_algorithm(
-                    algorithm, sum(stats.values()), nterms,
-                    max(coll[f][0] for f in fields if f in coll), round_dp,
-                    warm=lambda: cache.scored_cached_all(
-                        [((sh, t, f) if u is None else (sh, t, f, u),
-                          widf[(t, f)], avgdl[(t, f)])
-                         for t in terms
-                         for (sh, u, f, _g, _n, _s) in chains_by_term.get(t, ())
-                         if (t, f) in widf]))
-            # One scoring group per shard, scored in order on this thread:
-            # shards partition doc_id by hash, and a live doc's postings for
-            # a term live in exactly one unit (updates tombstone the prior
-            # unit's row; summing tf across units would mis-score BM25's
-            # nonlinear tf term anyway) — so per-shard top-(offset+k) heaps
-            # merge by a plain sort, no cross-group score summing. TAAT's
-            # dense bincount runs once per shard over the full doc span.
-            groups: dict = {}
-            for t in terms:
-                for sh, u, f, g, _n, slot in chains_by_term.get(t, ()):
-                    key = (t, f)
-                    if key not in widf:
-                        continue
-                    ck = (sh, t, f) if u is None else (sh, t, f, u)
-                    # memoized chain view (same lifetime/eviction as the
-                    # chain-frame cache entry it rides in): the pandas
-                    # block-metadata extraction is static per chain — widf
-                    # and avgdl derive from stored df/cstats/boosts, all
-                    # fixed for a store view — so pay it once, not per
-                    # query. Benign race: two threads may both build; both
-                    # are correct, one ref wins.
-                    if slot:
-                        L = slot[0]
-                    else:
-                        L = _BlockList(g, widf[key], avgdl[key],
-                                       cache=cache, ckey=ck)
-                        slot.append(L)
-                    groups.setdefault(sh, []).append((t, L))
-
-            # OR cold prefill: when every group will decode its chains
-            # EXHAUSTIVELY anyway (taat, or a >WIDE_OR_LISTS disjunction that
-            # _blockmax_or_numpy reroutes to taat), fill the scored-chain memo
-            # for ALL groups in ONE batched decode+score pass up front, so
-            # the group scoring below is pure cache hits.
-            if mode != "and" and (
-                algorithm == "taat"
-                or any(len(v) > WIDE_OR_LISTS for v in groups.values())
-            ):
-                cache.get_scored_many(
-                    [(L._ckey, L.weight_idf, L.avgdl,
-                      L.doc_bytes, L.tf_bytes, L.dl_bytes)
-                     for v in groups.values() for _, L in v])
-
-            stride = self.num_shards or 1
-            for chains in groups.values():
-                tops.extend(_score_chains(chains, mode, offset + k, nterms,
-                                          algorithm, dead, round_dp, stride=stride))
+        for chains in groups.values():
+            tops.extend(_score_chains(chains, mode, offset + k, len(terms),
+                                      algorithm, dead, round_dp, stride=stride))
         tops.sort(key=lambda x: (-x[1], x[0]))
         return tops[offset:offset + k]
 
-    # per-term segment-metadata chain cache budget, charged in ACTUAL bytes
-    # (compressed postings + ~200 B/row metadata/object overhead — pandas
-    # frame columns, the bytes objects' headers, and the memoized _BlockList
-    # view's numpy metadata arrays). Bounded LRU like the tstats memo:
-    # serving-tier RAM stays fixed at ANY vocabulary size, but the budget is
-    # RAM-derived so a wide-OR working set (fuzzy expansion) stays resident
-    # on a serving box instead of sweeping the LRU cold every query.
+    # per-term chain cache budget, charged in ACTUAL bytes (compressed
+    # postings + ~200 B/block row of metadata/object overhead — the
+    # _BlockList's numpy metadata arrays and the bytes objects' headers).
+    # Bounded LRU like the tstats memo: serving-tier RAM stays fixed at ANY
+    # vocabulary size, but the budget is RAM-derived so a wide-OR working
+    # set (fuzzy expansion) stays resident on a serving box instead of
+    # sweeping the LRU cold every query.
     SEG_CACHE_BYTES = _default_seg_cache_bytes()
     _SEG_ROW_OVERHEAD = 200
-
-    @staticmethod
-    def _chain_bytes(chains: list) -> int:
-        """Resident-byte charge for one term's cached chain list (each
-        _ChainCols precomputes its own at build)."""
-        return sum(g.nbytes for _, _, _, g, _, _ in chains)
 
     def resident(self) -> dict:
         """Occupancy of the serving caches: the view's resident row groups
@@ -1460,15 +1258,19 @@ class SegmentSearcher:
         return {"storefiles_bytes": files["bytes"], "storefiles_groups": files["groups"],
                 "chain_bytes": self._seg_bytes, "decode_postings": dc._n if dc else 0}
 
-    def _term_chains(self, terms: list[str], fields: list[int]) -> dict:
-        """term → [(shard, unit|None, field, chain-frame, n_postings)] from
-        the segments rows (self.files: each row group decoded once, then
-        index lookups plus slices), LRU-cached per term: repeat queries skip
-        the read and the chain build (which together cost ~200 ms/query on a
-        5M-doc store's head terms, when each read still decoded its row
-        groups). Terms absent from the store cache an empty list — absence
-        is an answer too. Frames are immutable once built (threads share
-        them)."""
+    def _term_chains(self, terms: list[str], fields: list[int], widf: dict,
+                     avgdl: dict) -> dict:
+        """term → [_BlockList] (see _build_chains; attached to the view's
+        DecodeCache) from the segments rows (self.files: each row group
+        decoded once, then index lookups plus slices), LRU-cached per term:
+        repeat queries skip the read and the chain build (which together
+        cost ~200 ms/query on a 5M-doc store's head terms, when each read
+        still decoded its row groups). widf/avgdl derive from the view's
+        stored df, cstats and boosts, so a cached chain's weights hold for
+        every later query. Terms absent from the store cache an empty list —
+        absence is an answer too. Chains are immutable once built (threads
+        share them); each term is charged its rows' compressed bytes plus
+        _SEG_ROW_OVERHEAD per row."""
         import pyarrow.compute as pc
 
         out: dict = {}
@@ -1486,67 +1288,27 @@ class SegmentSearcher:
         got = self.files.read("segments", "term", missing, fields=fields)
         tab = got.table
         built: dict[str, list] = {t: [] for t in missing}
+        costs = np.zeros(len(missing), dtype=np.int64)
         if got.num_rows:
-            # group (term, shard[, unit], field) rows into _ChainCols chains
-            # with ONE numeric lexsort + boundary slicing — no pandas: the
-            # groupby-iterate + per-group frame this replaces cost ~10 s of
-            # a 12 s cold 58-term fuzzy fill at 5M docs (profiled; decode
-            # itself was 2 s). The read's key runs give each row its term's
-            # index in `missing`, so the sort keys are all integers.
+            # the read's key runs give each row its term's index in
+            # `missing`, so every sort key is an integer
             ti = {t: i for i, t in enumerate(missing)}
             tid = got.per_row([ti[t] for t in got.keys])
             units = [h.get("unit") for h in got.hive]
             unit = None if None in units else got.per_row(units)
-            shard = tab.column("shard").to_numpy()
-            field = tab.column("field").to_numpy()
-            block_no = tab.column("block_no").to_numpy()
-            # block_no ascending inside each chain (the order every scorer
-            # and DecodeCache ordinal assumes — sort_values("block_no") in
-            # the pandas-frame constructors)
-            keys = ((block_no, field, shard, tid) if unit is None
-                    else (block_no, field, unit, shard, tid))
-            idx = np.lexsort(keys)
-            tid, shard, field = tid[idx], shard[idx], field[idx]
-            if unit is not None:
-                unit = unit[idx]
-            ns = tab.column("n").to_numpy()[idx].astype(np.int64, copy=False)
-            mi = tab.column("max_impact").to_numpy()[idx].astype(np.float64, copy=False)
-            mind = tab.column("min_doc").to_numpy()[idx].astype(np.int64, copy=False)
-            maxd = tab.column("max_doc").to_numpy()[idx].astype(np.int64, copy=False)
-            # resident-byte charge per row, vectorized (compressed postings
-            # + fixed metadata/object overhead)
-            lens = self._SEG_ROW_OVERHEAD + sum(
+            for t, L in _build_chains(
+                    lambda c: tab.column(c).to_numpy(zero_copy_only=False),
+                    missing, tid, unit, widf, avgdl, cache=self._decode_cache):
+                built[t].append(L)
+            np.add.at(costs, tid, self._SEG_ROW_OVERHEAD + sum(
                 pc.binary_length(tab.column(c)).to_numpy().astype(np.int64)
-                for c in ("doc_bytes", "tf_bytes", "dl_bytes"))[idx]
-            bcols = [tab.column(c).to_numpy(zero_copy_only=False)[idx]
-                     for c in ("doc_bytes", "tf_bytes", "dl_bytes")]
-            change = (tid[1:] != tid[:-1]) | (shard[1:] != shard[:-1]) \
-                | (field[1:] != field[:-1])
-            if unit is not None:
-                change |= unit[1:] != unit[:-1]
-            starts = np.concatenate(
-                ([0], np.flatnonzero(change) + 1, [len(tid)]))
-            for j in range(len(starts) - 1):
-                i0, i1 = int(starts[j]), int(starts[j + 1])
-                chain = _ChainCols(
-                    ns[i0:i1].copy(), mi[i0:i1].copy(),
-                    mind[i0:i1].copy(), maxd[i0:i1].copy(),
-                    bcols[0][i0:i1].tolist(), bcols[1][i0:i1].tolist(),
-                    bcols[2][i0:i1].tolist(), int(lens[i0:i1].sum()))
-                # final [] slot: lazily memoized _BlockList view (see
-                # search_local) — rides the cache entry so view and chain
-                # evict together
-                built[missing[int(tid[i0])]].append(
-                    (int(shard[i0]),
-                     int(unit[i0]) if unit is not None else None,
-                     int(field[i0]), chain, int(chain.ns.sum()), []))
-        costs = {t: self._chain_bytes(chains) for t, chains in built.items()}
+                for c in ("doc_bytes", "tf_bytes", "dl_bytes")))
         with self._memo_lock:
-            for t, chains in built.items():
+            for t, cost in zip(missing, costs.tolist()):
                 if t not in self._seg_chains:
-                    self._seg_chains[t] = chains
-                    self._seg_costs[t] = costs[t]
-                    self._seg_bytes += costs[t]
+                    self._seg_chains[t] = built[t]
+                    self._seg_costs[t] = cost
+                    self._seg_bytes += cost
                 out[t] = self._seg_chains[t]
             while self._seg_bytes > self.SEG_CACHE_BYTES and len(self._seg_chains) > 1:
                 old_t, _ = self._seg_chains.popitem(last=False)
