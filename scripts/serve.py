@@ -2,8 +2,8 @@
 (web/app.py:26-43 renders highlighted top-20 over HTTP) re-expressed without
 any Spark job on the hot path:
 
-- open the store Spark-free (SegmentSearcher.open_local: pyarrow term stats,
-  cstats.json, tombstones),
+- open the store Spark-free (SegmentSearcher.open_local: cstats.json,
+  tombstones, and lazily the term stats, through the view's StoreFiles),
 - analyze the query with THE STORE'S analyzer (analyzer.json — the
   search_analyzer == index analyzer pin, crawler/functs_with_elastic.go:85-94),
 - rank via search_local (keyed reads from the view's resident decoded row
@@ -14,7 +14,10 @@ any Spark job on the hot path:
   ids, resident the same way), capitalized like the reference does (C6,
   web/elastic_interaction.py:84).
 
-stdlib http.server only — no framework dependencies.
+stdlib http.server only — no framework dependencies. The process imports
+numpy, pyarrow (compute, parquet) and the package's serving modules (see the
+package docstring), never pyspark, py4j, pandas or pyarrow.dataset: start-up
+is the interpreter plus those imports plus a few footer and JSON reads.
 
     python scripts/serve.py --index DIR [--port 8080]
     GET /search?q=free+text&k=10&mode=or   → JSON hits
@@ -162,10 +165,8 @@ class SearchApp:
         the whole vocabulary (prefix_length=0); otherwise only those
         first-char buckets, each a p1-filtered (row-group-pruned) tstats
         read, cached on THE REQUEST'S view (generation-pinned)."""
-        import pyarrow.dataset as pds
-
-        ds = view.searcher._dataset("tstats")  # memoized handle, per view
-        has_p1 = "p1" in ds.schema.names
+        files = view.searcher.files
+        has_p1 = "p1" in files.columns("tstats")
 
         def merge_rows(tt) -> dict[str, float]:
             out: dict[str, float] = {}
@@ -175,14 +176,14 @@ class SearchApp:
             return out
 
         if firsts is None or not has_p1:
-            # Build the full vocab OUTSIDE the lock (the to_table read can be
+            # Build the full vocab OUTSIDE the lock (the scan can be
             # seconds on a large dictionary — holding the app-wide lock would
             # stall every concurrent request and reload for the duration),
             # then publish under the lock with a re-check so a racing builder
             # wins exactly once and the loser's table is dropped.
             full = view.vocab_full
             if full is None:
-                built = merge_rows(ds.to_table(columns=["term", "df"]))
+                built = merge_rows(files.scan("tstats", ["term", "df"]))
                 with self._lock:
                     if view.vocab_full is None:
                         view.vocab_full = built
@@ -214,8 +215,7 @@ class SearchApp:
         with self._lock:
             missing = [c for c in firsts if c not in view.vocab_buckets]
         if missing:
-            tt = ds.to_table(filter=pds.field("p1").isin(missing),
-                             columns=["term", "df", "p1"])
+            tt = files.scan("tstats", ["term", "df", "p1"], "p1", missing)
             got = {c: {} for c in missing}
             for t, d, c in zip(tt["term"].to_pylist(), tt["df"].to_pylist(),
                                tt["p1"].to_pylist()):
@@ -242,21 +242,28 @@ class SearchApp:
         if got is not None:
             return got
         import numpy as np
-        import pyarrow.dataset as pds
+        import pyarrow.compute as pc
 
+        from ucuddle_search_engine_spark.functions.arrow_np import combine, to_np
         from ucuddle_search_engine_spark.operators.fuzzy import sig_nibbles
 
-        ds = view.searcher._dataset("tstats")
-        flt = (pds.field("p1") == first) if first else None
-        tt = ds.to_table(filter=flt, columns=["term", "df", "tlen", "bagsig"])
-        gp = tt.group_by("term").aggregate(
-            [("df", "max"), ("tlen", "max"), ("bagsig", "max")])
-        built = (
-            gp["term"].combine_chunks(),
-            gp["df_max"].to_numpy().astype(np.float64),
-            gp["tlen_max"].to_numpy().astype(np.int64),
-            sig_nibbles(gp["bagsig_max"].to_numpy()),
-        )
+        cols = ["term", "df", "tlen", "bagsig"]
+        files = view.searcher.files
+        tt = (files.scan("tstats", cols + ["p1"], "p1", [first]) if first
+              else files.scan("tstats", cols))
+        # max of each column per distinct term (a term's rows differ in df
+        # only, one per field)
+        enc = pc.dictionary_encode(combine(tt["term"]))
+        codes = to_np(enc.indices)
+
+        def term_max(c):
+            v = to_np(tt[c]).astype(np.int64)
+            out = np.full(len(enc.dictionary), np.iinfo(np.int64).min)
+            np.maximum.at(out, codes, v)
+            return out
+
+        built = (enc.dictionary, term_max("df").astype(np.float64), term_max("tlen"),
+                 sig_nibbles(term_max("bagsig")))
         with self._lock:
             # racing builders: first publisher wins, the loser's copy drops
             return view.arrow_buckets.setdefault(first, built)
@@ -271,8 +278,8 @@ class SearchApp:
         output; only the survivors (a guaranteed superset of the true ≤d
         set) ever become Python strings for the exact capped levenshtein."""
         import numpy as np
-        import pyarrow as pa
 
+        from ucuddle_search_engine_spark.functions.arrow_np import array
         from ucuddle_search_engine_spark.operators.fuzzy import (
             MAX_EXPANSIONS,
             _lev_capped,
@@ -302,7 +309,7 @@ class SearchApp:
                 continue
             pre = qt[:prefix_length]
             cand = []
-            for j, t in zip(idx, term_arr.take(pa.array(idx)).to_pylist()):
+            for j, t in zip(idx, term_arr.take(array(idx)).to_pylist()):
                 if prefix_length >= 1 and t[:prefix_length] != pre:
                     continue
                 if _lev_capped(t, qt, d) <= d:
@@ -319,11 +326,11 @@ class SearchApp:
     VOCAB_FULL_CAP = 2_000_000
 
     def _vocab_too_big(self, view: _StoreView) -> bool:
-        ds = view.searcher._dataset("tstats")
-        if "p1" not in ds.schema.names:
+        files = view.searcher.files
+        if "p1" not in files.columns("tstats"):
             return False  # legacy flat store: small by construction
         if view.tstats_rows is None:
-            view.tstats_rows = ds.count_rows()  # parquet metadata only
+            view.tstats_rows = files.num_rows("tstats")  # footers only
         return view.tstats_rows > self.VOCAB_FULL_CAP
 
     def search(self, q: str, k: int = 10, mode: str = "or",
@@ -408,7 +415,7 @@ class SearchApp:
                 # must then share the first character), which turns the read
                 # into |q| pruned first-char buckets.
                 prefix_length = 1
-            if "bagsig" in view.searcher._dataset("tstats").schema.names:
+            if "bagsig" in view.searcher.files.columns("tstats"):
                 # stores with the persisted tlen/bagsig prefilter columns:
                 # columnar expansion, no Python pass over the vocabulary
                 terms = self._expand_columnar(view, terms, prefix_length)
@@ -445,11 +452,12 @@ class SearchApp:
             # sidecar read is the query terms' rows, never the corpus
             from ucuddle_search_engine_spark.operators.highlight import _snippet
 
-            import pyarrow as pa
             import pyarrow.compute as pc
 
+            from ucuddle_search_engine_spark.functions.arrow_np import array
+
             pt = files.read("postings", "term", terms, ["doc_id", "positions"], [0]).table
-            pt = pt.filter(pc.is_in(pt["doc_id"], value_set=pa.array(ids)))
+            pt = pt.filter(pc.is_in(pt["doc_id"], value_set=array(ids, pt.schema.field("doc_id").type)))
             pos: dict[int, list[int]] = {}
             for row in pt.to_pylist():
                 pos.setdefault(row["doc_id"], []).extend(row["positions"])

@@ -591,14 +591,21 @@ def test_serve_columnar_fuzzy_expansion_equivalence(spark, tmp_path_factory, bui
     from ucuddle_search_engine_spark.operators.fuzzy import expand_terms_py
     from ucuddle_search_engine_spark.plans.build_index import upgrade_tstats
 
+    import pyarrow.dataset as pds
+
+    def tstats_names(store):
+        return pds.dataset(os.path.join(store, "tstats"), partitioning="hive").schema.names
+
     out = built_store(N_DOCS, 4, n_units=2)
 
     app = SearchApp(out)
     view = app._view
-    assert "bagsig" in view.searcher._dataset("tstats").schema.names
+    assert "bagsig" in tstats_names(out)
+    assert "bagsig" in view.searcher.files.columns("tstats")
 
     # reference dictionary: max df per term across fields (what _vocab serves)
-    tt = view.searcher._dataset("tstats").to_table(columns=["term", "df"])
+    tt = pds.dataset(os.path.join(out, "tstats"), partitioning="hive").to_table(
+        columns=["term", "df"])
     vocab: dict[str, float] = {}
     for t, d in zip(tt["term"].to_pylist(), tt["df"].to_pylist()):
         if d > vocab.get(t, -1):
@@ -625,14 +632,16 @@ def test_serve_columnar_fuzzy_expansion_equivalence(spark, tmp_path_factory, bui
         .repartition("tb").sortWithinPartitions("term", "field") \
         .write.partitionBy("tb").parquet(tpath)
     app2 = SearchApp(legacy)
-    assert "bagsig" not in app2._view.searcher._dataset("tstats").schema.names
+    assert "bagsig" not in tstats_names(legacy)
+    assert "bagsig" not in app2._view.searcher.files.columns("tstats")
     # pre-upgrade: serve falls back to the dict path and still answers
     h_legacy = app2.search("modul t00", k=5, mode="or", fuzzy=True)
     assert upgrade_tstats(spark, legacy) is True
     assert upgrade_tstats(spark, legacy) is False  # idempotent
     app3 = SearchApp(legacy)
     view3 = app3._view
-    assert "bagsig" in view3.searcher._dataset("tstats").schema.names
+    assert "bagsig" in tstats_names(legacy)
+    assert "bagsig" in view3.searcher.files.columns("tstats")
     for pl in (0, 1):
         assert app3._expand_columnar(view3, ["modul", "t00"], pl) == \
             expand_terms_py(vocab, ["modul", "t00"], prefix_length=pl)

@@ -61,8 +61,9 @@ def _answers(store):
 
 def test_hot_path_runs_no_dataset_scan_after_warmup(store, monkeypatch):
     """One query of each class warms the view; then pyarrow dataset
-    discovery and scans raise, and fresh queries over warm tb directories
-    and cold terms still answer exactly like an untouched app."""
+    discovery and the view's transient whole-subdir scans raise, and fresh
+    queries over warm tb directories and cold terms still answer exactly
+    like an untouched app."""
     serve = _serve()
     app, ref = serve.SearchApp(store), serve.SearchApp(store)
     for kw in ({"q": "t0 t1"}, {"q": "t5 t40", "mode": "and"}, {"q": '"t0 t1"'},
@@ -77,15 +78,10 @@ def test_hot_path_runs_no_dataset_scan_after_warmup(store, monkeypatch):
     def scan(*a, **kw):
         raise AssertionError("pyarrow dataset scan on the serving hot path")
 
-    class Handle:  # a memoized dataset handle whose every use raises
-        def __getattr__(self, name):
-            scan()
-
-    # Dataset is an immutable extension type: discovery is patched, and any
-    # memoized handle of the view is swapped for one that raises
+    # Dataset is an immutable extension type: discovery is patched, and the
+    # view's once-per-view scans (StoreFiles.scan) raise too
     monkeypatch.setattr(pds, "dataset", scan)
-    monkeypatch.setattr(app._view.searcher, "_pds", {
-        rel: Handle() for rel in ("segments", "tstats", "postings", "docs")})
+    monkeypatch.setattr(app._view.searcher.files, "scan", scan)
     assert [app.search(**kw) for kw in fresh] == want
 
 
@@ -472,3 +468,134 @@ def test_resident_groups_hold_payload_only_and_charge_exact_bytes(tmp_path):
         assert g.nbytes == _resident_buffer_bytes(g)
     assert files._bytes == sum(g.nbytes for g in files._groups.values())
     assert files.resident() == {"groups": len(files._groups), "bytes": files._bytes}
+
+
+# -- once-per-view scans against a pyarrow dataset read -----------------------
+
+def _vocab_words(rng: random.Random) -> list[str]:
+    """~200 distinct ASCII and Cyrillic terms; none starts with `q`."""
+    abc = "abcdefghijklmnoprstuvwxyz0123456789" + "абвгджзиклмнопрстуфхцчшщюяёєії"
+    words = set(WORDS)
+    while len(words) < 200:
+        words.add("".join(rng.choice(abc) for _ in range(rng.randint(1, 7))))
+    return sorted(words)
+
+
+def _scan_store(root) -> str:
+    """A hand-written store: a tb-layout tstats dictionary (term, field, df,
+    p1, tlen, bagsig; each tb file term-sorted in 2-row row groups, one file
+    written without statistics), docs (doc_id, doclen) in two unit
+    directories, the second without statistics, a tombstone file plus a
+    writer's _temporary leftover, and cstats.json."""
+    from ucuddle_search_engine_spark.functions.hashing import term_buckets
+    from ucuddle_search_engine_spark.operators.fuzzy import bag_signature_py
+
+    rng = random.Random(7)
+    by_tb: dict[int, list] = {}
+    for w in _vocab_words(rng):
+        for f in (0, 1):
+            if f == 0 or rng.random() < 0.5:
+                by_tb.setdefault(term_buckets([w])[0], []).append(
+                    (w, f, rng.randint(1, 50), w[:1], len(w), bag_signature_py(w)))
+    for i, (tb, rows) in enumerate(sorted(by_tb.items())):
+        cols = dict(zip(("term", "field", "df", "p1", "tlen", "bagsig"), zip(*sorted(rows))))
+        _write_rows(os.path.join(root, "tstats", f"tb={tb}", "part-0.parquet"),
+                    {c: list(v) for c, v in cols.items()}, 2, None,
+                    **({"write_statistics": False} if i == 3 else {}))
+    for unit in (0, 1):
+        ids = list(range(unit, 80, 2))
+        _write_rows(os.path.join(root, "docs", f"unit={unit}", "part-0.parquet"),
+                    {"doc_id": ids, "doclen": [rng.randint(0, 30) for _ in ids]}, 7, rng,
+                    **({"write_statistics": False} if unit else {}))
+    _write_rows(os.path.join(root, "tombstones", "part-0.parquet"),
+                {"doc_id": [61, 4, 9, 9]}, 2, None)
+    _write_rows(os.path.join(root, "tombstones", "_temporary", "0", "part-1.parquet"),
+                {"doc_id": [5]}, 2, None)
+    with open(os.path.join(root, "cstats.json"), "w") as fh:
+        fh.write('[{"field": 0, "n_docs": 80, "avgdl": 15.0}, '
+                 '{"field": 1, "n_docs": 80, "avgdl": 3.0}]')
+    return root
+
+
+def _pds_table(root, rel, columns, flt=None) -> pa.Table:
+    return pds.dataset(os.path.join(root, rel), format="parquet",
+                       partitioning="hive").to_table(columns=columns, filter=flt)
+
+
+def _max_df(t: pa.Table) -> dict:
+    out: dict = {}
+    for term, d in zip(t["term"].to_pylist(), t["df"].to_pylist()):
+        out[term] = max(d, out.get(term, -1))
+    return out
+
+
+def test_fuzzy_vocabulary_scans_equal_pyarrow_dataset(tmp_path):
+    """serve.py's fuzzy reads — the full vocabulary, first-char buckets
+    (ASCII, Cyrillic, absent), the columnar prefilter bundles and the row
+    count guard — equal the same reads through a pyarrow dataset, on
+    multi-row-group tb files, one of them without statistics."""
+    from ucuddle_search_engine_spark.operators.fuzzy import sig_nibbles
+
+    root = _scan_store(str(tmp_path))
+    mds = [pq.read_metadata(p) for p in glob.glob(os.path.join(root, "tstats", "tb=*", "*"))]
+    multi = [md for md in mds if md.num_row_groups > 1]
+    assert len(multi) > len(mds) // 2
+    assert sum(not md.row_group(0).column(0).is_stats_set for md in multi) == 1
+    serve = _serve()
+    app = serve.SearchApp(root)
+    view = app._view
+    assert {"p1", "tlen", "bagsig"} <= set(view.searcher.files.columns("tstats"))
+    for firsts in (["a"], ["ж", "a", "ё"], ["q"], ["q", "я"]):
+        want = _max_df(_pds_table(root, "tstats", ["term", "df"], pds.field("p1").isin(firsts)))
+        assert app._vocab(view, firsts) == want, firsts
+    assert app._vocab(view, None) == _max_df(_pds_table(root, "tstats", ["term", "df"]))
+    for first in ("a", "ж", "ё", "q", ""):
+        flt = (pds.field("p1") == first) if first else None
+        gp = _pds_table(root, "tstats", ["term", "df", "tlen", "bagsig"], flt).group_by(
+            "term").aggregate([("df", "max"), ("tlen", "max"), ("bagsig", "max")])
+        want = sorted(zip(gp["term"].to_pylist(), gp["df_max"].to_pylist(),
+                          gp["tlen_max"].to_pylist(),
+                          map(tuple, sig_nibbles(gp["bagsig_max"].to_numpy()).tolist())))
+        terms, df, tlen, nib = app._arrow_bucket(view, first)
+        got = sorted(zip(terms.to_pylist(), df.tolist(), tlen.tolist(), map(tuple, nib.tolist())))
+        assert got == want, first
+    assert not app._vocab_too_big(view)
+    assert view.tstats_rows == pds.dataset(os.path.join(root, "tstats")).count_rows()
+    assert view.searcher.files.resident() == {"groups": 0, "bytes": 0}
+
+
+def test_open_and_offset_scans_equal_pyarrow_dataset(tmp_path):
+    """open_local's tombstone read (a writer's _temporary leftover
+    skipped; a _temporary-only directory reads as no tombstone) and flat
+    tstats read, and the phrase rank engine's token offsets over docs in
+    two unit directories, one without statistics, equal pyarrow dataset
+    reads."""
+    import numpy as np
+
+    from ucuddle_search_engine_spark.operators.phrase import _token_offsets
+
+    root = _scan_store(str(tmp_path))
+    s = SegmentSearcher.open_local(root)
+    want = _pds_table(root, "tombstones", ["doc_id"])["doc_id"].to_pylist()
+    assert s.tombstones == sorted(set(want)) == [4, 9, 61]
+
+    t = _pds_table(root, "docs", ["doc_id", "doclen"])
+    full = np.ones(80, dtype=np.int64)
+    full[t["doc_id"].to_numpy()] += t["doclen"].to_numpy()
+    assert _token_offsets(s.files, None).tolist() == [0] + np.cumsum(full).tolist()
+    assert s.files.resident() == {"groups": 0, "bytes": 0}
+
+    shutil.rmtree(os.path.join(root, "tombstones"))
+    _write_rows(os.path.join(root, "tombstones", "_temporary", "0", "part-1.parquet"),
+                {"doc_id": [5]}, 2, None)
+    assert SegmentSearcher.open_local(root).tombstones == []
+    # legacy flat tstats layout: the dictionary is read whole at open
+    flat = os.path.join(root, "tstats_flat")
+    for i, path in enumerate(sorted(glob.glob(os.path.join(root, "tstats", "tb=*", "*.parquet")))):
+        os.makedirs(flat, exist_ok=True)
+        shutil.copy(path, os.path.join(flat, f"part-{i}.parquet"))
+    shutil.rmtree(os.path.join(root, "tstats"))
+    os.rename(flat, os.path.join(root, "tstats"))
+    t = _pds_table(root, "tstats", ["term", "field", "df"])
+    assert SegmentSearcher.open_local(root)._tstats_cache == {
+        (term, f): d for term, f, d in zip(*t.to_pydict().values())}

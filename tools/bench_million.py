@@ -16,13 +16,14 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from ucuddle_search_engine_spark.plans.build_index import build_index_resumable, load_searcher  # noqa: E402
 from ucuddle_search_engine_spark.session import get_spark  # noqa: E402
 
-CORPUS = "/root/repo/.data/corpus_1000000"
-STORE = "/root/repo/.data/million_store"
+CORPUS = str(ROOT / ".data/corpus_1000000")
+STORE = str(ROOT / ".data/million_store")
 N_DOCS = 1_000_000
 
 QUERIES = [
@@ -123,7 +124,7 @@ def main() -> None:
         out["lazy_serve_p50_ms"] = round(zlats[len(zlats) // 2] * 1000, 1)
         out["lazy_serve_p95_ms"] = round(zlats[int(len(zlats) * 0.95) - 1] * 1000, 1)
 
-    with open("/root/repo/BENCH/million.json", "w") as f:
+    with open(ROOT / "BENCH/million.json", "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
 

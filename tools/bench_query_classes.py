@@ -30,8 +30,9 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "scripts"))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -44,16 +45,16 @@ from ucuddle_search_engine_spark.plans.build_index import (  # noqa: E402
 from ucuddle_search_engine_spark.session import get_spark  # noqa: E402
 
 STORES = {
-    200_000: "/root/repo/.data/store_200k",
-    1_000_000: "/root/repo/.data/million_store",
-    5_000_000: "/root/repo/.data/store_5m",
+    200_000: str(ROOT / ".data/store_200k"),
+    1_000_000: str(ROOT / ".data/million_store"),
+    5_000_000: str(ROOT / ".data/store_5m"),
 }
 CORPORA = {
-    200_000: "/root/repo/.data/corpus_200000",
-    1_000_000: "/root/repo/.data/corpus_1000000",
-    5_000_000: "/root/repo/.data/corpus_5000000",
+    200_000: str(ROOT / ".data/corpus_200000"),
+    1_000_000: str(ROOT / ".data/corpus_1000000"),
+    5_000_000: str(ROOT / ".data/corpus_5000000"),
 }
-ROUTED = {1_000_000: "/root/repo/.data/routed_1m"}
+ROUTED = {1_000_000: str(ROOT / ".data/routed_1m")}
 N_WARM = 7
 
 # deterministic ru transliteration (same letter map the driver queries use)
@@ -239,7 +240,7 @@ def main() -> None:
             os.unlink(tmp)
             print(f"run {r + 1}/{n_runs} done", flush=True)
         merged = {str(n): _merge_runs([p[str(n)] for p in per_run]) for n in sizes}
-        path = "/root/repo/BENCH/query_classes.json"
+        path = str(ROOT / "BENCH/query_classes.json")
         prev = json.loads(Path(path).read_text()) if Path(path).exists() else {}
         prev.setdefault("sizes", {}).update(merged)
         prev["n_warm"] = N_WARM
@@ -265,7 +266,7 @@ def main() -> None:
         with open(out_path, "w") as f:
             json.dump(out["sizes"], f)
         return
-    path = "/root/repo/BENCH/query_classes.json"
+    path = str(ROOT / "BENCH/query_classes.json")
     prev = {}
     if Path(path).exists():
         prev = json.loads(Path(path).read_text())

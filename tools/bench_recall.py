@@ -15,7 +15,8 @@ import json
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -144,7 +145,7 @@ def main() -> None:
         }
     out["planted_ivf_topk"] = planted_ivf
 
-    with open("/root/repo/BENCH/recall.json", "w") as f:
+    with open(ROOT / "BENCH/recall.json", "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
 

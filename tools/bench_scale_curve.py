@@ -19,7 +19,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark import StorageLevel  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -33,14 +34,14 @@ from ucuddle_search_engine_spark.plans.build_index import (  # noqa: E402
 from ucuddle_search_engine_spark.session import get_spark  # noqa: E402
 
 SIZES = {
-    200_000: "/root/repo/.data/corpus_200000",
-    1_000_000: "/root/repo/.data/corpus_1000000",
-    5_000_000: "/root/repo/.data/corpus_5000000",
+    200_000: str(ROOT / ".data/corpus_200000"),
+    1_000_000: str(ROOT / ".data/corpus_1000000"),
+    5_000_000: str(ROOT / ".data/corpus_5000000"),
 }
 STORES = {
-    200_000: "/root/repo/.data/store_200k",
-    1_000_000: "/root/repo/.data/million_store",
-    5_000_000: "/root/repo/.data/store_5m",
+    200_000: str(ROOT / ".data/store_200k"),
+    1_000_000: str(ROOT / ".data/million_store"),
+    5_000_000: str(ROOT / ".data/store_5m"),
 }
 QUERIES = [(["t0", "t1"], "or"), (["t10", "t40"], "and"), (["t50", "t120", "t300"], "or"),
            (["module", "t3"], "or"), (["t33333"], "or")]
@@ -128,7 +129,7 @@ def main() -> None:
         out["q_serve_p95_growth_25x_corpus"] = round(
             h["q_serve_p95_ms"] / s["q_serve_p95_ms"], 2
         )
-    with open("/root/repo/BENCH/scale_curve.json", "w") as f:
+    with open(ROOT / "BENCH/scale_curve.json", "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
 

@@ -21,13 +21,14 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from ucuddle_search_engine_spark.operators.wand import SegmentSearcher  # noqa: E402
 from ucuddle_search_engine_spark.plans.build_index import load_searcher  # noqa: E402
 from ucuddle_search_engine_spark.session import get_spark  # noqa: E402
 
-STORE = "/root/repo/.data/million_store"
+STORE = str(ROOT / ".data/million_store")
 N_DOCS = 1_000_000
 N_WARM = 11
 
@@ -79,7 +80,7 @@ def main() -> None:
         "round-5 scorer work (full-chain + scored-chain memo in DecodeCache, "
         "run-gather slicing) vs the round-4 per-block cache; see BENCH/BASELINE.md"
     )
-    with open("/root/repo/BENCH/serve_latency.json", "w") as f:
+    with open(ROOT / "BENCH/serve_latency.json", "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
 

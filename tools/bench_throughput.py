@@ -32,11 +32,12 @@ import threading
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from ucuddle_search_engine_spark.operators.wand import SegmentSearcher  # noqa: E402
 
-STORE = "/root/repo/.data/million_store"
+STORE = str(ROOT / ".data/million_store")
 LEVELS = [1, 2, 4, 8, 16, 32]
 ROUNDS = 4  # mix passes per thread per level
 
@@ -73,7 +74,7 @@ QUERY_MIX = [
 def main() -> None:
     store = sys.argv[1] if len(sys.argv) > 1 else STORE
     out_path = sys.argv[2] if len(sys.argv) > 2 else \
-        "/root/repo/BENCH/throughput.json"
+        str(ROOT / "BENCH/throughput.json")
     local = SegmentSearcher.open_local(store)
     n_docs = next(iter(local._coll.values()))[0]
 

@@ -28,7 +28,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -36,7 +37,7 @@ from ucuddle_search_engine_spark.functions.hashing import term_buckets  # noqa: 
 from ucuddle_search_engine_spark.plans.build_index import write_tstats  # noqa: E402
 from ucuddle_search_engine_spark.session import get_spark  # noqa: E402
 
-BASE = "/root/repo/.data/vocab_bench"
+BASE = str(ROOT / ".data/vocab_bench")
 
 
 def term_of(i: int) -> str:
@@ -127,7 +128,7 @@ def main() -> None:
 
     out = json.dumps(res)
     print(out)
-    with open("/root/repo/BENCH/vocab_lookup.json", "w") as f:
+    with open(ROOT / "BENCH/vocab_lookup.json", "w") as f:
         f.write(out + "\n")
     shutil.rmtree(BASE, ignore_errors=True)  # 2×~400 MB of synthetic dict
 

@@ -1,7 +1,7 @@
 """Capture .explain('formatted') for round-7-touched queries into
 plans/r07/<name>_<tag>.txt. Run:
 
-    SPARK_GRAFT_SF_DIR=/root/repo/.data/sf0.1x10 python tools/capture_plans_r07.py after
+    SPARK_GRAFT_SF_DIR=.data/sf0.1x10 python tools/capture_plans_r07.py after
 """
 
 from __future__ import annotations
@@ -10,7 +10,8 @@ import os
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -19,8 +20,8 @@ from ucuddle_search_engine_spark.operators.pagerank import pagerank  # noqa: E40
 from ucuddle_search_engine_spark.session import get_spark  # noqa: E402
 from ucuddle_search_engine_spark.sources.testdata import load_table  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/repo/.data/sf0.1x10")
-OUT = Path(__file__).resolve().parents[1] / "plans" / "r07"
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", str(ROOT / ".data/sf0.1x10"))
+OUT = ROOT / "plans" / "r07"
 
 
 def formatted(df) -> str:

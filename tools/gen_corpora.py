@@ -11,15 +11,16 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from ucuddle_search_engine_spark.session import get_spark  # noqa: E402
 from ucuddle_search_engine_spark.synth import synth_corpus  # noqa: E402
 
 SIZES = {
-    200_000: "/root/repo/.data/corpus_200000",
-    1_000_000: "/root/repo/.data/corpus_1000000",
-    5_000_000: "/root/repo/.data/corpus_5000000",
+    200_000: str(ROOT / ".data/corpus_200000"),
+    1_000_000: str(ROOT / ".data/corpus_1000000"),
+    5_000_000: str(ROOT / ".data/corpus_5000000"),
 }
 
 

@@ -24,7 +24,8 @@ import os
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -48,7 +49,7 @@ SHIFT = {
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    dst = sys.argv[3] if len(sys.argv) > 3 else f"/root/repo/.data/sf0.1x{k}"
+    dst = sys.argv[3] if len(sys.argv) > 3 else fstr(ROOT / ".data/sf0.1x{k}")
     spark = get_spark("make_scaled_sf", cores=32, shuffle_partitions=32)
     os.makedirs(dst, exist_ok=True)
     for table, id_cols in SHIFT.items():

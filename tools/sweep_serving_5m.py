@@ -19,14 +19,15 @@ import threading
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from ucuddle_search_engine_spark.functions import mem  # noqa: E402
 from ucuddle_search_engine_spark.operators.wand import SegmentSearcher  # noqa: E402
 from bench_throughput import QUERY_MIX  # noqa: E402  (the 24-query 5M mix)
 
-STORE = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.data/store_5m"
+STORE = sys.argv[1] if len(sys.argv) > 1 else str(ROOT / ".data/store_5m")
 LEVELS = [8, 32]
 ROUNDS = 1
 ADMISSIONS = [1, 2, 4, 8]
@@ -86,7 +87,7 @@ def main() -> None:
         row = {str(c): measure(local, c) for c in LEVELS}
         out["combos"][key] = row
         print(key, json.dumps(row), flush=True)
-    with open("/root/repo/BENCH/serving_sweep_5m.json", "w") as f:
+    with open(ROOT / "BENCH/serving_sweep_5m.json", "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
 

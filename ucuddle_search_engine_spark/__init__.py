@@ -21,8 +21,17 @@ natively on Spark DataFrames:
   embedding-cosine), ANN similarity search, text quality stats, multimodal
   binary-column plumbing.
 
-Everything is DataFrame/Catalyst-first; Python appears only in Arrow-batched
-pandas UDFs (tokenize-with-positions, varbyte codec, WAND).
+The build and the distributed queries are DataFrame/Catalyst-first; Python
+runs in Arrow batches there (the mapInArrow tokenizer and segment encoder,
+the applyInPandas per-shard scorer, the snippet UDF).
+
+The serving tier (scripts/serve.py) is a separate, Spark-free process: its
+import graph is numpy, pyarrow (pyarrow.compute, pyarrow.parquet) and the
+stdlib plus the serving modules — operators.wand, storefiles, phrase, fuzzy,
+highlight, routing, bm25_params; functions.analyze, snowball, textstats,
+hashing, varbyte, mem. Those modules import pyspark and pandas only inside
+their Spark-facing functions, and never import pyarrow.dataset
+(tests/test_serving_imports.py).
 """
 
 __version__ = "0.1.0"

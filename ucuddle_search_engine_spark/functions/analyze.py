@@ -4,15 +4,22 @@ The reference configures this inside Elasticsearch: standard tokenizer +
 lowercase (+ language stop/stem) at crawler/functs_with_elastic.go:136-157, and
 pins search_analyzer == index analyzer (crawler/functs_with_elastic.go:85-94) so
 query terms hit the same token space. We enforce the same parity by exposing a
-single token regex in three strictly-equivalent forms:
+single token regex in strictly-equivalent forms:
 
 1. ``tokenize_col`` — Column expression (JVM regexp_extract_all, codegen'd):
    the hot path for stats and the exact-BM25 oracle queries.
-2. ``tokenize_with_positions_udf`` — Arrow-batched pandas UDF returning
-   array<struct<term,pos>>: the index-build path (positions feed highlight C7
-   and phrase queries; ES retains them for `text` fields).
-3. ``analyze_query`` — plain-Python for the driver-side query string (the
-   reference analyzes the query with the same analyzer, web/app.py:26-35).
+2. ``make_flat_postings_fn`` — a ``mapInArrow`` body emitting
+   (doc_id, term, tf, positions, doclen) rows: the index-build path
+   (positions feed highlight C7 and phrase queries; ES retains them for
+   `text` fields). ``tokenize_with_positions_udf`` (array<struct<term,pos>>)
+   and ``make_termvector_udf`` are the pandas-UDF forms it is tested
+   against.
+3. ``analyze_query`` / ``Analyzer.analyze_py`` — plain-Python for the query
+   string (the reference analyzes the query with the same analyzer,
+   web/app.py:26-35).
+
+The Python forms serve queries in the Spark-free serving tier, so pyspark and
+pandas are imported only inside the Column, UDF and build forms.
 
 The token alphabet is ASCII [a-z0-9]+ over lowercased text — deliberate: it is
 expressible identically in Java regex (Spark), Python re, and RE2 (DuckDB
@@ -23,15 +30,10 @@ reference's russian_stop applies to its web corpus only).
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass
 from typing import Iterator, List
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from ..schema import TOKENS_SCHEMA
 
 TOKEN_PATTERN = "[a-z0-9]+"
 # ASCII + Cyrillic (incl. ё and Ukrainian є і ї ґ) — literal char ranges so the
@@ -92,6 +94,8 @@ class Analyzer:
 
     # -- Column form (index build + exact-BM25 hot path) ---------------------
     def stem_col(self, tok: Column) -> Column:
+        from pyspark.sql import functions as F
+
         if self.snowball:
             from .snowball import snowball_stem_col
 
@@ -104,6 +108,8 @@ class Analyzer:
         return out
 
     def tokens_col(self, col: Column | str) -> Column:
+        from pyspark.sql import functions as F
+
         c = F.col(col) if isinstance(col, str) else col
         toks = F.regexp_extract_all(F.lower(c), F.lit(self.token_pattern), 0)
         if self.stopwords:
@@ -204,6 +210,8 @@ ANALYZERS: dict[str, Analyzer] = {
 
 def tokenize_col(col: Column | str) -> Column:
     """Array-of-terms Column: lowercase + regex extract. Whole-stage codegen."""
+    from pyspark.sql import functions as F
+
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_extract_all(F.lower(c), F.lit(TOKEN_PATTERN), 0)
 
@@ -213,50 +221,56 @@ def analyze_query(query: str) -> List[str]:
     return _PY_TOKEN_RE.findall(query.lower())
 
 
-def _tokenize_series(texts: pd.Series) -> pd.Series:
-    """Vectorized tokenize-with-positions over an Arrow batch."""
-    out = []
-    for text in texts:
-        if text is None:
-            out.append([])
-            continue
-        toks = _PY_TOKEN_RE.findall(text.lower())
-        out.append([{"term": t, "pos": i} for i, t in enumerate(toks)])
-    return pd.Series(out, index=texts.index)
+def _series_udf(fn, return_type):
+    """`fn` (an Iterator[pd.Series] -> Iterator[pd.Series] body) as a scalar
+    iterator pandas UDF. Its hints are set as objects: pandas_udf resolves
+    string hints against this module's globals, which hold no pandas."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    fn.__annotations__ = {"it": Iterator[pd.Series], "return": Iterator[pd.Series]}
+    return F.pandas_udf(fn, return_type)
 
 
-@F.pandas_udf(TOKENS_SCHEMA)
-def tokenize_with_positions_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Scalar-iterator pandas UDF: content -> array<struct<term,pos>>.
+@functools.cache
+def _tokenize_udf():
+    from ..schema import TOKENS_SCHEMA
 
-    Iterator form so per-batch overhead (none here, but e.g. a loaded stemmer)
-    amortizes across Arrow batches within a partition.
-    """
-    for texts in it:
-        yield _tokenize_series(texts)
+    def tokenize(it):
+        import pandas as pd
+
+        for texts in it:
+            yield pd.Series([[] if text is None else
+                             [{"term": t, "pos": i}
+                              for i, t in enumerate(_PY_TOKEN_RE.findall(text.lower()))]
+                             for text in texts], index=texts.index)
+
+    return _series_udf(tokenize, TOKENS_SCHEMA)
 
 
-from pyspark.sql import types as _T
+def tokenize_with_positions_udf(col: Column | str) -> Column:
+    """content -> array<struct<term,pos>>, a scalar-iterator pandas UDF
+    (built on first use). Iterator form so per-batch overhead (none here,
+    but e.g. a loaded stemmer) amortizes across Arrow batches within a
+    partition."""
+    return _tokenize_udf()(col)
 
-TERMVECTOR_SCHEMA = _T.ArrayType(
-    _T.StructType(
-        [
-            _T.StructField("term", _T.StringType(), False),
-            _T.StructField("tf", _T.LongType(), False),
-            _T.StructField("positions", _T.ArrayType(_T.IntegerType()), False),
-            _T.StructField("doclen", _T.LongType(), False),
-        ]
-    )
-)
+
+TERMVECTOR_SCHEMA = ("array<struct<term: string not null, tf: bigint not null, "
+                     "positions: array<int> not null, doclen: bigint not null>>")
 
 
 def make_termvector_udf(analyzer: Analyzer):
-    """Analyzer-parameterized variant of termvector_udf: the SAME Analyzer
-    instance drives index-side tokenization here and query-side analyze_py —
-    the search_analyzer == index analyzer pin (K5). Positions index the
-    post-stopword token sequence (both sides agree, so phrase semantics hold)."""
+    """content -> per-doc term vector [(term, tf, positions, doclen)]: the
+    analysis stage pre-aggregated per document (what ES's analyzer emits).
+    The SAME Analyzer instance drives index-side tokenization here and
+    query-side analyze_py — the search_analyzer == index analyzer pin (K5).
+    Positions index the post-stopword token sequence (both sides agree, so
+    phrase semantics hold)."""
 
-    def impl(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def impl(it):
+        import pandas as pd
+
         pat = re.compile(analyzer.token_pattern)
         stops = set(analyzer.stopwords)
         for texts in it:
@@ -274,7 +288,7 @@ def make_termvector_udf(analyzer: Analyzer):
                             for t, ps in agg.items()])
             yield pd.Series(out, index=texts.index)
 
-    return F.pandas_udf(impl, TERMVECTOR_SCHEMA)
+    return _series_udf(impl, TERMVECTOR_SCHEMA)
 
 
 FLAT_POSTINGS_SCHEMA = "doc_id long, term string, tf long, positions array<int>, doclen long"
@@ -282,8 +296,8 @@ FLAT_POSTINGS_SCHEMA = "doc_id long, term string, tf long, positions array<int>,
 
 def make_flat_postings_fn(analyzer: "Analyzer | None", id_col: str = "doc_id", text_col: str = "content"):
     """mapInArrow body: (doc_id, text) record batches → exploded postings
-    (doc_id, term, tf, positions, doclen) — the SAME rows termvector_udf +
-    explode produces (tested), built without per-doc Python dicts, without the
+    (doc_id, term, tf, positions, doclen) — the SAME rows make_termvector_udf
+    + explode produces (tested), built without per-doc Python dicts, without the
     pandas→Arrow conversion of array<struct>, and without the JVM explode.
 
     Per-token Python work is only the tokenizer itself (regex + optional
@@ -293,6 +307,7 @@ def make_flat_postings_fn(analyzer: "Analyzer | None", id_col: str = "doc_id", t
     ONE ListArray over the sorted position buffer (no per-group lists).
     Measured r7 @sf1.0: 1.30 s → 0.99 s for the postings stage."""
     import numpy as np
+    import pandas as pd
     import pyarrow as pa
 
     pat_src = analyzer.token_pattern if analyzer is not None else TOKEN_PATTERN
@@ -411,27 +426,3 @@ def make_flat_postings_fn(analyzer: "Analyzer | None", id_col: str = "doc_id", t
 
     return fn
 
-
-@F.pandas_udf(TERMVECTOR_SCHEMA)
-def termvector_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """content -> per-doc term vector [(term, tf, positions, doclen)] — the
-    analysis stage pre-aggregated per document (what ES's analyzer emits).
-
-    Doing the per-doc tf/position aggregation inside the Arrow batch removes
-    the (term, doc_id) groupBy shuffle from the index build entirely (explode
-    of this array is narrow), and carrying doclen removes the doc-stats join:
-    the only wide exchange left in the whole build is the final repartition by
-    (shard, term)."""
-    for texts in it:
-        out = []
-        for text in texts:
-            if text is None:
-                out.append([])
-                continue
-            agg: dict[str, list[int]] = {}
-            toks = _PY_TOKEN_RE.findall(text.lower())
-            for i, t in enumerate(toks):
-                agg.setdefault(t, []).append(i)
-            n = len(toks)
-            out.append([{"term": t, "tf": len(ps), "positions": ps, "doclen": n} for t, ps in agg.items()])
-        yield pd.Series(out, index=texts.index)

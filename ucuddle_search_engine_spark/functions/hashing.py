@@ -6,21 +6,20 @@ standardize on md5 hex strings (both engines ship md5()); where an integer is
 needed we take hex prefixes via conv(). sha256 carries the per-row content
 invariant from BASELINE.json input_hint (the reference ships whole documents to
 ES and trusts transport, crawler/functs_with_elastic.go:314-322; we verify).
+
+The Python forms (term_buckets, the *_py mirrors) are what the Spark-free
+serving tier uses, so pyspark is imported only inside the Column forms.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def sha256_col(col: Column | str) -> Column:
     """JVM-side sha256 hex of a string column."""
+    from pyspark.sql import functions as F
+
     c = F.col(col) if isinstance(col, str) else col
     return F.sha2(c, 256)
 
@@ -29,14 +28,9 @@ def sha256_py(text: str) -> str:
     return hashlib.sha256(text.encode("utf-8")).hexdigest()
 
 
-@F.pandas_udf(T.StringType())
-def sha256_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Arrow-batched sha256 (used in tests to cross-check F.sha2)."""
-    for s in it:
-        yield s.map(lambda x: hashlib.sha256(x.encode("utf-8")).hexdigest() if x is not None else None)
-
-
 def md5_col(col: Column | str) -> Column:
+    from pyspark.sql import functions as F
+
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(c)
 
@@ -48,8 +42,10 @@ def md5_prefix_long(col: Column | str, hex_digits: int = 15) -> Column:
     Spark: conv(substring(md5(x),1,15),16,10). DuckDB mirror:
     CAST(('0x' || substring(md5(x),1,15)) AS BIGINT) — verified equivalent.
     """
+    from pyspark.sql import functions as F
+
     c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, hex_digits), 16, 10).cast(T.LongType())
+    return F.conv(F.substring(F.md5(c), 1, hex_digits), 16, 10).cast("long")
 
 
 def md5_prefix_long_py(text: str, hex_digits: int = 15) -> int:
@@ -63,6 +59,8 @@ TERM_BUCKETS = 64
 
 def term_bucket_col(term: Column | str = "term") -> Column:
     """Spark form of the term → `tb` directory mapping (term_buckets)."""
+    from pyspark.sql import functions as F
+
     return F.pmod(md5_prefix_long(term), F.lit(TERM_BUCKETS)).cast("int")
 
 

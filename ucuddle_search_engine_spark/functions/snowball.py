@@ -40,9 +40,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 
 def _bylen(*pairs: tuple[str, int]) -> tuple[tuple[str, int], ...]:
     """Longest-suffix-first, stable within a length (suffixes are distinct, so
@@ -287,16 +284,22 @@ def snowball_stem_py(lang: str):
 def _bind(expr: Column, fn) -> Column:
     """Materialize expr once as a lambda variable (lambda bodies re-evaluate
     outer column references per use — the HOF CSE trap; see operators/dedup)."""
+    from pyspark.sql import functions as F
+
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
 def _strip_col(w: Column, n: int) -> Column:
+    from pyspark.sql import functions as F
+
     return w.substr(F.lit(1), F.length(w) - F.lit(n))
 
 
 def _try_col(w: Column, endings, start: Column) -> Column:
     """First-match-wins suffix chain (built in reverse so the earliest rule is
     the outermost WHEN), returning the stemmed-or-unchanged word."""
+    from pyspark.sql import functions as F
+
     out = w
     for suf, strip in reversed(endings):
         cond = w.endswith(F.lit(suf)) & (F.length(w) - F.lit(len(suf) - 1) >= start)
@@ -305,6 +308,8 @@ def _try_col(w: Column, endings, start: Column) -> Column:
 
 
 def snowball_stem_col(lang: str, tok: Column) -> Column:
+    from pyspark.sql import functions as F
+
     cfg = _CFGS[lang]
     rv_pat, r2_pat = _patterns(cfg)
 

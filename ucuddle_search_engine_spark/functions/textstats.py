@@ -4,15 +4,14 @@ token counting, document fingerprinting.
 Reference analogues: content language detection (crawler/helper_funcs.go:112-142
 chunks text and votes with whatlanggo) and min-length gates (crawler/main.go:107,
 web/app.py:30). All of these are pure Column expressions (whole-stage codegen,
-SQL-oracle-replayable); no Python in the hot path.
+SQL-oracle-replayable); no Python in the hot path. The plain-Python mirrors
+(charset_prior_py, the STOPWORDS vote lists) route queries in the Spark-free
+serving tier, so pyspark is imported only inside the Column forms.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 from .analyze import ANALYZERS, TOKEN_PATTERN_CYRILLIC
 
@@ -37,16 +36,22 @@ STOPWORDS = {
 
 
 def tokens_col(text: Column | str) -> Column:
+    from pyspark.sql import functions as F
+
     c = F.col(text) if isinstance(text, str) else text
     return F.regexp_extract_all(F.lower(c), F.lit(TOKEN_PATTERN), 0)
 
 
 def vote_tokens_col(text: Column | str) -> Column:
+    from pyspark.sql import functions as F
+
     c = F.col(text) if isinstance(text, str) else text
     return F.regexp_extract_all(F.lower(c), F.lit(VOTE_TOKEN_PATTERN), 0)
 
 
 def token_count(text: Column | str) -> Column:
+    from pyspark.sql import functions as F
+
     return F.size(tokens_col(text)).cast("long")
 
 
@@ -60,18 +65,24 @@ def bpe_token_count(text: Column | str) -> Column:
     """Pre-tokenizer piece count — the standard proxy for LLM token budgeting
     at corpus scale (exact BPE merges need the vocab; the piece count bounds
     it and is pure-regex, whole-stage codegen)."""
+    from pyspark.sql import functions as F
+
     c = F.col(text) if isinstance(text, str) else text
     return F.size(F.regexp_extract_all(c, F.lit(BPE_PATTERN), 0)).cast("long")
 
 
 def ws_token_count(text: Column | str) -> Column:
     """Whitespace-split token count (the classic wc -w)."""
+    from pyspark.sql import functions as F
+
     c = F.col(text) if isinstance(text, str) else text
     t = F.trim(c)
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, "\\s+"))).cast("long")
 
 
 def stopword_hits(text: Column | str, lang: str) -> Column:
+    from pyspark.sql import functions as F
+
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     return F.size(F.array_intersect(vote_tokens_col(text), sw))
 
@@ -100,11 +111,15 @@ _RU_RE = re.compile(f"[{RU_MARK_CHARS}]")
 
 
 def _class_count(text: Column, chars: str) -> Column:
+    from pyspark.sql import functions as F
+
     return F.length(F.regexp_replace(text, f"[^{chars}]", ""))
 
 
 def charset_prior(text: Column | str) -> Column:
     """Column form of the script prior: 'uk' / 'ru' / 'und'."""
+    from pyspark.sql import functions as F
+
     c = F.lower(F.col(text) if isinstance(text, str) else text)
     cyr = _class_count(c, CYR_CHARS)
     lat = _class_count(c, LAT_CHARS)
@@ -137,6 +152,8 @@ def lang_id(text: Column | str) -> Column:
     """argmax over per-language stopword hits; ties and zero-hit docs fall
     to the charset prior (Cyrillic script → uk/ru; otherwise 'und') —
     deterministic, SQL-replayable."""
+    from pyspark.sql import functions as F
+
     scores = [(lang, stopword_hits(text, lang)) for lang in sorted(STOPWORDS)]
     best = F.greatest(*[s for _, s in scores])
     # first lang (alphabetical) holding the unique max wins; ties → prior
@@ -150,6 +167,8 @@ def lang_id(text: Column | str) -> Column:
 def quality_score(text: Column | str) -> Column:
     """Deterministic quality heuristic in [0,1]: length band + alpha ratio +
     mean token length band (boilerplate/garbage detector)."""
+    from pyspark.sql import functions as F
+
     c = F.col(text) if isinstance(text, str) else text
     n_tok = token_count(c).cast("double")
     n_chars = F.length(c).cast("double")
@@ -167,10 +186,14 @@ def fingerprint(text: Column | str) -> Column:
     """Canonical content fingerprint: md5 over the sorted distinct token set —
     whitespace/punctuation/ordering-invariant (catches shuffled boilerplate
     that exact md5 misses)."""
+    from pyspark.sql import functions as F
+
     return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens_col(text)))))
 
 
 def text_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    from pyspark.sql import functions as F
+
     return df.select(
         F.col(id_col).alias("doc_id"),
         token_count(text_col).alias("n_tokens"),

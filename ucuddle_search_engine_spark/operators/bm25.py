@@ -27,19 +27,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analyze import analyze_query
+from .bm25_params import B, DEFAULT_BOOSTS, K1
 from .postings import (
     FIELD_CONTENT,
-    FIELD_TITLE,
     build_docs,
     build_postings_fast,
     collection_stats,
     doclens_from_docs,
     term_stats,
 )
-
-K1 = 1.2
-B = 0.75
-DEFAULT_BOOSTS = {FIELD_CONTENT: 1.0, FIELD_TITLE: 5.0}  # title^5: web/elastic_interaction.py:29-32
 
 
 def idf_col(df_col: Column, n_docs: Column) -> Column:

@@ -21,9 +21,6 @@ oracle-checked driver queries run uncapped to stay exactly SQL-replayable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
 MAX_EXPANSIONS = 50  # ES default
 
 # --- persisted character-bag signature ---------------------------------
@@ -58,6 +55,7 @@ def bag_signature_col(term) -> "F.Column":
     arithmetic carry or signed overflow can reach the top nibble. `ascii()`
     returns the full code point of the first character, so binning matches
     ord(c) % 16 on the Python side for Cyrillic as well as ASCII."""
+    from pyspark.sql import functions as F
 
     def bump(acc, c):
         shift = F.pmod(F.ascii(c), F.lit(BAG_BINS)) * 4
@@ -91,6 +89,8 @@ def auto_distance(term: str) -> int:
 
 
 def auto_distance_col(qt) -> "F.Column":
+    from pyspark.sql import functions as F
+
     n = F.length(qt)
     return F.when(n < 3, F.lit(0)).when(n <= 5, F.lit(1)).otherwise(F.lit(2))
 
@@ -108,6 +108,9 @@ def expand_terms(dictionary: DataFrame, query_terms: list[str],
     first prefix_length characters EXACTLY (they carry no edits). The first
     char of that band is applied as a literal isin filter BEFORE the join —
     over a stored dictionary it reaches the parquet scan as a pushed filter."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     spark = dictionary.sparkSession
     qterms = sorted(set(query_terms))
     q = F.broadcast(spark.createDataFrame([(t,) for t in qterms], "qterm string"))
@@ -143,6 +146,8 @@ def prefix_banded_dictionary(tstats: DataFrame, query_terms: list[str],
     `p1` first-char column), the band lands BEFORE the aggregation as a plain
     In(p1, …) filter — pushed to the parquet scan and row-group-pruned by the
     term sort (plan-asserted in tests/test_plans.py)."""
+    from pyspark.sql import functions as F
+
     if prefix_length >= 1 and "p1" in tstats.columns:
         first = sorted({t[:1] for t in set(query_terms) if t})
         tstats = tstats.filter(F.col("p1").isin(first))

@@ -11,17 +11,15 @@ hits and bold the matched tokens.
 Plan shape: the per-hit work is k rows (k ≤ 20) — positions come from a
 broadcast semi-filtered postings scan, the text from a broadcast join with the
 docs table, and the window/bold assembly is one Arrow batch through a pandas
-UDF. Nothing here scales with corpus size at query time.
+UDF. Nothing here scales with corpus size at query time. The serving tier
+calls _snippet directly, so pyspark and pandas are imported only by the Spark
+forms.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.analyze import _PY_TOKEN_RE
 
@@ -31,6 +29,8 @@ SNIPPET_TOKENS = 24
 
 def capitalize_title(col: Column | str) -> Column:
     """C6: upper-case the first letter only (web/elastic_interaction.py:84)."""
+    from pyspark.sql import functions as F
+
     c = F.col(col) if isinstance(col, str) else col
     return F.concat(F.upper(F.substring(c, 1, 1)), c.substr(F.lit(2), F.length(c)))
 
@@ -90,12 +90,27 @@ def _snippet(text: str, match_pos: list[int], window: int = SNIPPET_TOKENS) -> s
     return "".join(out)
 
 
-@F.pandas_udf(T.StringType())
-def snippet_udf(text: pd.Series, positions: pd.Series) -> pd.Series:
-    return pd.Series(
-        [_snippet(t, list(p) if p is not None else []) for t, p in zip(text, positions)],
-        index=text.index,
-    )
+@functools.cache
+def _snippet_udf():
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    def snippets(text, positions):
+        return pd.Series(
+            [_snippet(t, list(p) if p is not None else []) for t, p in zip(text, positions)],
+            index=text.index,
+        )
+
+    # hints as objects: pandas_udf resolves string hints against this
+    # module's globals, which hold no pandas
+    snippets.__annotations__ = {"text": pd.Series, "positions": pd.Series, "return": pd.Series}
+    return F.pandas_udf(snippets, "string")
+
+
+def snippet_udf(text: Column, positions: Column) -> Column:
+    """(content, match positions) -> bolded snippet, a scalar pandas UDF
+    over _snippet (built on first use)."""
+    return _snippet_udf()(text, positions)
 
 
 def highlight_hits(topk: DataFrame, docs: DataFrame, postings: DataFrame, terms: list[str],
@@ -109,6 +124,8 @@ def highlight_hits(topk: DataFrame, docs: DataFrame, postings: DataFrame, terms:
     from the SHARED tokenizer, so they are SQL-oracle-checkable even though
     the rendered snippet text is engine-defined.
     """
+    from pyspark.sql import functions as F
+
     terms = sorted(set(terms))
     hit_ids = F.broadcast(topk.select("doc_id"))
     pos = (

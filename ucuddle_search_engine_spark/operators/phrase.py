@@ -10,6 +10,10 @@ Relational realization (all JVM ops, SQL-oracle-replayable): explode the first
 term's positions, then for each subsequent term a join on doc_id +
 array_contains(positions, p+i) — a chain of hash joins over only the phrase
 terms' postings (pruned scan), never the corpus.
+
+phrase_search_local is the Spark-free serving form (numpy over keyed
+sidecar reads), so pyspark is imported only inside the distributed
+functions.
 """
 
 from __future__ import annotations
@@ -17,10 +21,8 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .bm25 import B, K1, idf_col, tf_norm_col
+from ..functions.arrow_np import combine, to_np
+from .bm25_params import B, K1
 from .storefiles import StoreFiles
 
 
@@ -33,6 +35,8 @@ def phrase_match_join(postings: DataFrame, terms: list[str], field: int = 0) -> 
     phrase_match (below) is the production path — the join chain re-shuffles
     the phrase terms' postings once per phrase POSITION (11.5 s warm
     head-head at 1M docs), the bucketed merge shuffles them once total."""
+    from pyspark.sql import functions as F
+
     if not terms:
         raise ValueError("empty phrase")
     first = (
@@ -69,6 +73,8 @@ def phrase_match(postings: DataFrame, terms: list[str], field: int = 0,
     inside one task, and per-task memory is O(Σ pruned postings /
     num_buckets). Bit-identical phrase_tf to phrase_match_join
     (parity-tested)."""
+    from pyspark.sql import functions as F
+
     if not terms:
         raise ValueError("empty phrase")
     spark = postings.sparkSession
@@ -151,6 +157,10 @@ def phrase_search(
     rounded BEFORE the top-k cut so docs tying at the k-th ROUNDED score
     break by doc_id exactly like a rounded-score SQL oracle (the same
     contract as wand.search_terms' round_dp)."""
+    from pyspark.sql import functions as F
+
+    from .bm25 import idf_col, tf_norm_col
+
     spark = postings.sparkSession
     matches = phrase_match(postings, terms, field=field).persist()
     try:
@@ -269,7 +279,7 @@ def phrase_search_local(store_dir: str, terms: list[str], k: int = 10,
 
     Two adjacency engines, identical results (parity-tested): the content
     field uses token-RANK bitmaps (rank = per-doc token offset + position,
-    from the docs dataset's doclen column; "a b" holds iff bit rank(a)+1 is
+    from the docs files' doclen column; "a b" holds iff bit rank(a)+1 is
     set in b's bitmap — one byte-gather per candidate instead of a binary
     search into the other term's key array), self-validated at fill time
     (every position must fit its doc's span, else the store permanently
@@ -299,7 +309,7 @@ def _phrase_search_local_impl(store_dir: str, terms: list[str], k: int,
     files = files or StoreFiles(store_dir)
     res = None
     if field == 0 and len(terms) < 250 and (store_dir, field) not in _RANK_INVALID:
-        offsets = _token_offsets(store_dir, cache)
+        offsets = _token_offsets(files, cache)
         if offsets is not None:
             loaded = _load_entries(files, terms, field, cache, offsets)
             if loaded is None:  # a position overflowed its doc span
@@ -348,29 +358,24 @@ def _phrase_search_local_impl(store_dir: str, terms: list[str], k: int,
 _RANK_INVALID: set[tuple[str, int]] = set()
 
 
-def _token_offsets(store_dir: str, cache):
+def _token_offsets(files, cache):
     """Global token-rank offsets for the content field: offsets[d] = Σ doclen
-    of docs < d (docs dataset, one 2-column read, cached per view). None if
-    the store's docs dataset lacks a doclen column. Doc ids are dense
-    (operators/ids), so the array is max_id+2 int64 — ~40 MB at 5M docs."""
+    of docs < d (one transient 2-column scan of the docs files through
+    `files`, a storefiles.StoreFiles; cached per view). None if the store's
+    docs files lack a doclen column. Doc ids are dense (operators/ids), so
+    the array is max_id+2 int64 — ~40 MB at 5M docs."""
     import numpy as np
-    import pyarrow.dataset as pds
 
     ck = ("__offsets__", 0)
     if cache is not None:
         hit = cache.get(ck)
         if hit is not None:
             return hit[0]
-    try:
-        d = pds.dataset(os.path.join(store_dir, "docs"), format="parquet",
-                        partitioning="hive")
-    except (OSError, FileNotFoundError):
+    if not {"doc_id", "doclen"} <= set(files.columns("docs")):
         return None
-    if "doclen" not in d.schema.names or "doc_id" not in d.schema.names:
-        return None
-    tab = d.to_table(columns=["doc_id", "doclen"])
-    ids = tab.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    dls = tab.column("doclen").to_numpy(zero_copy_only=False)
+    tab = files.scan("docs", ["doc_id", "doclen"])
+    ids = to_np(tab.column("doc_id")).astype(np.int64)
+    dls = to_np(tab.column("doclen"))
     if not len(ids):
         return None
     n = int(ids.max()) + 1
@@ -378,7 +383,7 @@ def _token_offsets(store_dir: str, cache):
     # after a doc's last token lands on the guard, not the next doc's first
     # token — so distance-1 adjacency needs no boundary mask at all
     full = np.ones(n, dtype=np.int64)
-    full[ids] += np.nan_to_num(dls.astype(np.float64)).astype(np.int64)
+    full[ids] += dls.astype(np.int64)  # a null doclen reads as 0
     offsets = np.concatenate(([0], np.cumsum(full)))
     if cache is not None:
         cache.put(ck, (offsets,))
@@ -411,18 +416,18 @@ def _load_entries(files, terms: list[str], field: int, cache,
         need = [t for t in need if t not in loaded]
     if need:
         got = files.read("postings", "term", need, ["doc_id", "positions", "doclen"], [field])
-        tab = got.table
+        tab = got.table.combine_chunks()
         # NO global sort/take: a (term, doc_id) Table.sort_by gathers the
         # whole 2 GB positions column through Arrow take (measured 8-10 s at
         # 5M docs, the single largest cold stage). Instead each term argsorts
         # its df-sized doc rows (5M int64 ≈ 0.4 s) and a fused, chunked
         # expand+gather below writes the doc-ordered RANK values directly —
         # the positions column is only ever touched once, by the gather.
-        doc_np = tab.column("doc_id").to_numpy(zero_copy_only=False)
-        dl_np = tab.column("doclen").to_numpy(zero_copy_only=False)
-        posl = tab.column("positions").combine_chunks()
-        flat = posl.flatten().to_numpy(zero_copy_only=False)  # stored int32
-        lens_all = pc.list_value_length(posl).to_numpy(zero_copy_only=False)
+        doc_np = to_np(tab.column("doc_id"))
+        dl_np = to_np(tab.column("doclen"))
+        posl = combine(tab.column("positions"))
+        flat = to_np(posl.flatten())  # stored int32
+        lens_all = to_np(pc.list_value_length(posl))
         loff = np.concatenate(([0], np.cumsum(lens_all, dtype=np.int64)))
         # each term's rows: its key runs, in table order
         runs: dict[str, list] = {}

@@ -24,10 +24,8 @@ from pyspark.sql import functions as F
 
 from ..functions.analyze import tokenize_col
 from ..functions.hashing import sha256_col
+from .bm25_params import FIELD_CONTENT, FIELD_TITLE  # noqa: F401 (re-export)
 from .ids import assign_doc_ids_hash, assign_doc_ids_prefix, assign_doc_ids_sort
-
-FIELD_CONTENT = 0
-FIELD_TITLE = 1
 
 _ID_MODES = {
     "sort": assign_doc_ids_sort,       # exact dense rank; single-task sort (test scale)

@@ -15,20 +15,17 @@ query string.
 Scale posture: routing adds no new shuffles — each per-lang index is the
 normal build over a filtered scan (the lang predicate pushes down to parquet
 when docs are stored partitioned-by-lang), and a query touches exactly one
-language's index.
+language's index. detect_lang runs in the Spark-free serving tier
+(scripts/serve.py's RoutedSearchApp), so pyspark is imported only where
+the per-language indexes are built (LangRoutedIndex).
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from ..functions.analyze import ANALYZERS, Analyzer, IDENTITY_ANALYZER
-from ..functions.textstats import (STOPWORDS, VOTE_TOKEN_PATTERN,
-                                   charset_prior_py, lang_id)
-from .bm25 import InvertedIndex
+from ..functions.textstats import STOPWORDS, VOTE_TOKEN_PATTERN, charset_prior_py
 
 _TOKEN_RE = re.compile(VOTE_TOKEN_PATTERN)
 
@@ -61,6 +58,11 @@ class LangRoutedIndex:
     def __init__(self, documents: DataFrame,
                  langs: tuple[str, ...] = ("en", "de", "fr", "es", "ru", "uk"),
                  analyzers: dict[str, Analyzer] | None = None, text_col: str = "text"):
+        from pyspark.sql import functions as F
+
+        from ..functions.textstats import lang_id
+        from .bm25 import InvertedIndex
+
         self.langs = tuple(langs)
         self._analyzers = {**{lang: ANALYZERS.get(lang, IDENTITY_ANALYZER) for lang in langs},
                            **(analyzers or {})}

@@ -24,6 +24,11 @@ row group, not once per request. Resident bytes (Arrow buffers plus the run
 index, exact) are LRU-bounded by the RAM-derived `_default_seg_cache_bytes()`.
 A store swap opens a new view with a new reader, so nothing resident goes
 stale.
+
+Whole-subdir reads that run once per view (tombstones, the legacy flat term
+dictionary, the docs doclen column, the fuzzy vocabularies) go through
+`scan`: transient per-file reads over the same listing and footers, pruned
+by footer statistics, that leave nothing resident.
 """
 
 from __future__ import annotations
@@ -37,6 +42,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+
+from ..functions.arrow_np import array, key_bytes, to_np
 
 
 def _default_seg_cache_bytes() -> int:
@@ -87,7 +94,8 @@ class StoreFiles:
         self.budget = _default_seg_cache_bytes()
         self._lock = threading.Lock()
         self._listed: dict[str, dict] = {}  # rel → {tb | None: [(path, hive)]}
-        self._parsed: dict[tuple, list] = {}  # (rel, tb, key) → [(path, hive, md, names, ranges)]
+        self._parsed: dict[tuple, list] = {}  # (rel, tb) → [(path, hive, md, names)]
+        self._ranged: dict[tuple, list] = {}  # (rel, tb, key) → [(path, hive, md, names, ranges)]
         self._groups: collections.OrderedDict = collections.OrderedDict()  # (path, rg) → _Group
         self._bytes = 0  # Σ _Group.nbytes over self._groups
         self._empty: dict[tuple, pa.Table] = {}
@@ -113,24 +121,73 @@ class StoreFiles:
                         (os.path.join(dirpath, f), hive))
         return groups
 
-    def _footers(self, rel: str, tb, key: str) -> list:
-        """Parsed footers of one tb directory: the disk parse runs outside
-        the reader lock, so concurrent reads never wait behind it; a racing
-        parse of the same directory is dropped at publish."""
-        got = self._parsed.get((rel, tb, key))
-        if got is not None:
-            return got
+    def _listing(self, rel: str) -> dict:
         listed = self._listed.get(rel)
         if listed is None:
             listed = self._list(rel)
             with self._lock:
                 listed = self._listed.setdefault(rel, listed)
-        got = []
-        for path, hive in listed.get(tb, ()):
-            md = pq.read_metadata(path)
-            got.append((path, hive, md, md.schema.to_arrow_schema().names, _key_ranges(md, key)))
-        with self._lock:
-            return self._parsed.setdefault((rel, tb, key), got)
+        return listed
+
+    def _parse(self, rel: str, tb) -> list:
+        """Parsed footers of one tb directory: the disk parse runs outside
+        the reader lock, so concurrent reads never wait behind it; a racing
+        parse of the same directory is dropped at publish."""
+        got = self._parsed.get((rel, tb))
+        if got is None:
+            got = []
+            for path, hive in self._listing(rel).get(tb, ()):
+                md = pq.read_metadata(path)
+                got.append((path, hive, md, md.schema.to_arrow_schema().names))
+            with self._lock:
+                got = self._parsed.setdefault((rel, tb), got)
+        return got
+
+    def _footers(self, rel: str, tb, key: str) -> list:
+        """_parse's footers with each file's per row group [min, max] of
+        `key` (see _key_ranges)."""
+        got = self._ranged.get((rel, tb, key))
+        if got is None:
+            got = [(*f, _key_ranges(f[2], key)) for f in self._parse(rel, tb)]
+            with self._lock:
+                got = self._ranged.setdefault((rel, tb, key), got)
+        return got
+
+    def columns(self, rel: str) -> list[str]:
+        """The file columns of <store>/<rel>, from its first data file's
+        footer ([] when it has none)."""
+        for tb in self._listing(rel):
+            for f in self._parse(rel, tb):
+                return f[3]
+        return []
+
+    def num_rows(self, rel: str) -> int:
+        """Rows of <store>/<rel>, from its footers."""
+        return sum(f[2].num_rows for tb in self._listing(rel) for f in self._parse(rel, tb))
+
+    def scan(self, rel: str, columns: list[str], key: str | None = None,
+             values=None) -> pa.Table | None:
+        """The file columns `columns` of every data file of <store>/<rel>,
+        one transient per-file read each; nothing is kept resident. With
+        `key` (one of `columns`), only the rows whose `key` is in `values`,
+        read from the row groups whose footer [min, max] of `key` can hold
+        one of them. None when the subdir has no data file."""
+        want = None if key is None else sorted(set(values))
+        files = [f for tb in self._listing(rel) for f in self._parse(rel, tb)]
+        if not files:
+            return None
+        pieces = [_empty(files[0][2]).select(columns)]
+        for path, hive, md, _ in files:
+            rgs = list(range(md.num_row_groups))
+            if want is not None:
+                rgs = [rg for rg, r in zip(rgs, _key_ranges(md, key)) if r is None or
+                       bisect.bisect_left(want, r[0]) < bisect.bisect_right(want, r[1])]
+            if rgs:
+                pieces.append(_decode(path, hive, md, rgs, columns))
+        t = pa.concat_tables(pieces, promote_options="default")
+        if want is not None:
+            t = t.filter(pc.is_in(t[key], value_set=array(want, t.schema.field(key).type)))
+        return t
 
     def _group(self, path: str, hive: dict, md, names: list, rg: int, key: str,
                cols: list[str]) -> "_Group":
@@ -209,14 +266,14 @@ class StoreFiles:
         ek = (rel, key, None if columns is None else tuple(columns))
         hit = self._empty.get(ek)
         if hit is None:
-            anyf = next((f for fs in self._listed[rel].values() for f in fs), None)
+            anyf = next((f for fs in self._listing(rel).values() for f in fs), None)
             if anyf is None:
                 hit = pa.table({})
             else:
                 path, hive = anyf
-                schema = pq.read_metadata(path).schema.to_arrow_schema()
-                out = columns if columns is not None else schema.names
-                hit = _prep(schema.empty_table().select(
+                empty = _empty(pq.read_metadata(path))
+                out = columns if columns is not None else empty.column_names
+                hit = _prep(empty.select(
                     [c for c in out if c != key and c not in hive]), None)
             self._empty[ek] = hit
         return hit
@@ -243,8 +300,8 @@ class _Group:
         t = _prep(t.drop_columns([key]), self.order)
         self.t, self.names = t, set(t.schema.names)
         self.keys = _key_array(runs.values)
-        self.starts = np.concatenate(([0], runs.run_ends.to_numpy())).astype(np.int64)
-        self.fld = t.column("field").to_numpy() if "field" in self.names else None
+        self.starts = np.concatenate(([0], to_np(runs.run_ends))).astype(np.int64)
+        self.fld = to_np(t.column("field")) if "field" in self.names else None
         self.fields = set() if self.fld is None else set(pc.unique(t.column("field")).to_pylist())
         self.tables: dict[tuple, pa.Table] = {}
         self.nbytes = t.get_total_buffer_size() + self.keys.nbytes + self.starts.nbytes
@@ -288,7 +345,7 @@ class _Group:
                 if not m.any():
                     continue
             got.append((j, t.slice(a, b - a) if not mask or m.all()
-                        else t.slice(a, b - a).filter(pa.array(m))))
+                        else t.slice(a, b - a).filter(array(m))))
         return got
 
 
@@ -296,8 +353,8 @@ def _key_array(values: pa.Array) -> np.ndarray:
     """Run keys as one compact numpy array that owns its memory: int64, or
     fixed-width UTF-8 bytes (`S`, the longest key's width) for strings."""
     if pa.types.is_string(values.type) or pa.types.is_large_string(values.type):
-        return values.cast(pa.large_binary()).to_numpy(zero_copy_only=False).astype("S")
-    return values.to_numpy(zero_copy_only=False).astype(np.int64)
+        return key_bytes(values)
+    return to_np(values).astype(np.int64)
 
 
 def _encode(vs: list) -> np.ndarray:
@@ -305,6 +362,13 @@ def _encode(vs: list) -> np.ndarray:
     if isinstance(vs[0], str):
         return np.array([v.encode() for v in vs], dtype="S")
     return np.array(vs, dtype=np.int64)
+
+
+def _empty(md) -> pa.Table:
+    """The zero-row table of a file's schema, one empty chunk per column
+    (Schema.empty_table and combining a chunkless column import pandas)."""
+    schema = md.schema.to_arrow_schema()
+    return pa.Table.from_arrays([pa.nulls(0, f.type) for f in schema], schema=schema)
 
 
 def _prep(t: pa.Table, order) -> pa.Table:

@@ -21,7 +21,9 @@ driver-side with no Spark job, and each query runs on the one request thread
 that mem.admission() admitted — shards scored in order, cache misses decoded
 inline. Serving throughput comes from admitting several queries at once (as
 Elasticsearch runs each shard-level search on one search-pool thread), not
-from splitting one query across threads.
+from splitting one query across threads. The serving path imports numpy and
+pyarrow only; pyspark and pandas are imported inside the distributed
+functions (search_terms, tstats_lookup_df).
 """
 
 from __future__ import annotations
@@ -31,12 +33,10 @@ import math
 import os
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from ..functions.arrow_np import to_np
 from ..functions.varbyte import decode_doc_ids_concat, vb_decode_concat
-from .bm25 import B, K1, DEFAULT_BOOSTS
+from .bm25_params import B, DEFAULT_BOOSTS, K1
 from .storefiles import StoreFiles, _default_seg_cache_bytes
 
 # Stored block bounds (max_impact) and live contributions are computed from
@@ -906,7 +906,6 @@ class SegmentSearcher:
 
         self._term_memo: dict[tuple[str, int], float | None] = {}
         self._memo_lock = threading.Lock()
-        self._pds: dict[str, object] = {}
         self.files = StoreFiles(store_dir) if store_dir is not None else None
         self._decode_cache: DecodeCache | None = None  # built on first search_local
         self._seg_chains: "collections.OrderedDict[str, list]" = collections.OrderedDict()
@@ -993,6 +992,8 @@ class SegmentSearcher:
         """The cold-term dictionary lookup as a DataFrame: term + field
         filters pushed to the scan, plus tb directory pruning on written
         stores (plan-asserted in tests/test_plans.py)."""
+        from pyspark.sql import functions as F
+
         q = self.tstats.filter(
             F.col("term").isin(missing) & F.col("field").isin(fields)
         )
@@ -1065,6 +1066,9 @@ class SegmentSearcher:
         (rounding under block-max pruning would need inflated bounds).
         algorithm: "auto", "taat" or "wand" (OR queries; see
         _choose_or_algorithm) — anything else raises ValueError."""
+        import pandas as pd
+        from pyspark.sql import functions as F
+
         _check_algorithm(algorithm)
         if offset:
             inner = self.search_terms(terms, k=offset + k, mode=mode, algorithm=algorithm,
@@ -1096,7 +1100,7 @@ class SegmentSearcher:
 
         stride = self.num_shards or 1
 
-        def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        def run_shard(pdf):
             dead = b_dead.value if b_dead is not None else None
             top = _score_shard_rows(pdf, b_widf.value, b_avgdl.value, mode, k,
                                     nterms, algorithm, dead, round_dp, stride=stride)
@@ -1112,31 +1116,24 @@ class SegmentSearcher:
     def open_local(cls, store_dir: str, boosts: dict[int, float] | None = None) -> "SegmentSearcher":
         """Open a written store WITHOUT a SparkSession — the serving-tier
         constructor (scripts/serve.py): term stats + collection stats +
-        tombstones load via pyarrow/json, queries run through search_local
-        only. Startup is file reads, not a JVM."""
-        import pyarrow.dataset as pds
-
-        ts_path = os.path.join(store_dir, "tombstones")
-        tombstones = []
-        if os.path.isdir(ts_path):
-            tt = pds.dataset(ts_path).to_table()
-            if "doc_id" in tt.column_names:
-                tombstones = tt["doc_id"].to_pylist()
-            # else: a delete-docs writer is mid-commit (only _temporary files
-            # exist, which pyarrow ignores → empty schema). Serve the
-            # pre-delete view; the serving tier's generation check reopens
-            # the store the moment the committed files land.
-        obj = cls(None, None, None, boosts=boosts, tombstones=tombstones,
-                  store_dir=store_dir)
-        tpath = os.path.join(store_dir, "tstats")
-        if not any(e.startswith("tb=") for e in os.listdir(tpath)):
+        tombstones load via pyarrow/json (transient StoreFiles scans),
+        queries run through search_local only. Startup is file reads, not a
+        JVM."""
+        obj = cls(None, None, None, boosts=boosts, store_dir=store_dir)
+        # a delete-docs writer that is mid-commit has only _temporary files,
+        # which the listing skips: serve the pre-delete view; the serving
+        # tier's generation check reopens the store once the files land
+        tt = obj.files.scan("tombstones", ["doc_id"])
+        if tt is not None:
+            obj.tombstones = sorted(set(tt["doc_id"].to_pylist()))
+        if not any(e.startswith("tb=") for e in os.listdir(os.path.join(store_dir, "tstats"))):
             # legacy flat layout: no pruned access path exists, so eager-load
             # once (bounded only by the store's actual vocabulary). The
             # vocabulary-scale layout (tb-partitioned, term-sorted) opens
             # WITHOUT materializing the dictionary — each query resolves its
             # terms through a pruned read + the bounded LRU memo, so
             # serving-tier RAM is O(memo cap), not O(vocabulary).
-            tt = pds.dataset(tpath).to_table()
+            tt = obj.files.scan("tstats", ["term", "field", "df"])
             obj._tstats_cache = {
                 (t, int(f)): d
                 for t, f, d in zip(tt["term"].to_pylist(), tt["field"].to_pylist(),
@@ -1150,19 +1147,6 @@ class SegmentSearcher:
 
         mem.serving_posture()
         return obj
-
-    def _dataset(self, rel: str):
-        """Memoized pyarrow dataset handle for <store>/<rel>, for the
-        once-per-view whole-bucket tstats scans of fuzzy expansion (keyed
-        reads go through self.files). The serving tier reopens the searcher
-        on a store-generation change (scripts/serve.py), so a cached handle
-        can never go stale."""
-        import pyarrow.dataset as pds
-
-        if rel not in self._pds:
-            self._pds[rel] = pds.dataset(os.path.join(self.store_dir, rel),
-                                         partitioning="hive")
-        return self._pds[rel]
 
     def search_local(self, terms: list[str], k: int = 20, mode: str = "and",
                      algorithm: str = "auto", offset: int = 0,
@@ -1286,7 +1270,7 @@ class SegmentSearcher:
         if not missing:
             return out
         got = self.files.read("segments", "term", missing, fields=fields)
-        tab = got.table
+        tab = got.table.combine_chunks()
         built: dict[str, list] = {t: [] for t in missing}
         costs = np.zeros(len(missing), dtype=np.int64)
         if got.num_rows:
@@ -1297,11 +1281,11 @@ class SegmentSearcher:
             units = [h.get("unit") for h in got.hive]
             unit = None if None in units else got.per_row(units)
             for t, L in _build_chains(
-                    lambda c: tab.column(c).to_numpy(zero_copy_only=False),
+                    lambda c: to_np(tab.column(c)),
                     missing, tid, unit, widf, avgdl, cache=self._decode_cache):
                 built[t].append(L)
             np.add.at(costs, tid, self._SEG_ROW_OVERHEAD + sum(
-                pc.binary_length(tab.column(c)).to_numpy().astype(np.int64)
+                to_np(pc.binary_length(tab.column(c))).astype(np.int64)
                 for c in ("doc_bytes", "tf_bytes", "dl_bytes")))
         with self._memo_lock:
             for t, cost in zip(missing, costs.tolist()):
